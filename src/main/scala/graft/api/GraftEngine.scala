@@ -31,6 +31,7 @@ class GraftEngine(spark: SparkSession, warehouse: String) {
   val vertexPath = s"$warehouse/vertices"
   val edgePath = s"$warehouse/edges"
   val albumPath = s"$warehouse/by_user"
+  private val AlbumCols = Encoders.product[AlbumEntry].schema.fieldNames.toSeq
 
   val SearchFields: Seq[(String, Double)] =
     Seq("name" -> 3.0, "company" -> 1.0, "job_title" -> 1.0, "addr" -> 1.0)
@@ -110,33 +111,85 @@ class GraftEngine(spark: SparkSession, warehouse: String) {
   }
 
   /** Batch-ingest card events (envelope columns s3_bucket, s3_key,
-    * owner, addr…created_at): validate → enrich → merge search table,
-    * merge graph, write per-user album partitions. */
+    * owner, addr…created_at): validate → enrich, then fold the batch
+    * into the four tables — search, vertices, edges, album —
+    * concurrently, one thread per table, as the reference's card stream
+    * fans out to independent consumers (ES upsert, Neptune upsert, S3
+    * by-user copy). The merges share no output, and a fold is bound by
+    * job floors and file operations rather than compute, so run one
+    * after another they leave the cores idle. Each table keeps its own
+    * crash-safe swap; there is no cross-table atomicity. Waits for all
+    * four, then rethrows the first failure in table order. The memo is
+    * invalidated either way: a table that did swap must not be shadowed
+    * by results that predate it. */
   def ingest(cards: DataFrame): Unit = {
+    // lazy frames, built once on the caller thread; each fold thread
+    // plans its own write over them
     val enriched = CardStream.validated(cards)
-    CardStream.mergeLww(spark, enriched, searchPath, Seq("doc_id"), "created_at")
     val (v, e) = GraphBuild.buildGraph(enriched)
     val vOrd = enriched
       .withColumn("id", graft.functions.GraftFunctions.personId(col("email")))
       .groupBy("id").agg(max("created_at").as("created_at"))
-    CardStream.mergeLww(spark, v.join(vOrd, "id"), vertexPath, Seq("id"), "created_at")
-    CardStream.mergeLww(spark, e.withColumn("_ord", lit(0)), edgePath,
-      Seq("src", "dst"), "_ord")
-    // A7: per-user album copy — partitionBy(owner) is the Spark-native
-    // bizcard-by-user/{owner}/ layout (get_text_from_s3_image.py:148-159);
-    // keyed by image_id like the S3 object key, so replays overwrite
-    // rather than duplicate
-    val albumNew = enriched.select("owner", "image_id", "doc_id", "s3_bucket", "s3_key")
+    val albumNew = enriched.select(AlbumCols.map(col): _*)
+    try runConcurrently(Seq(
+      "search" -> (() => CardStream.mergeLww(spark, enriched, searchPath,
+        Seq("doc_id"), "created_at")),
+      "vertices" -> (() => CardStream.mergeLww(spark, v.join(vOrd, "id"),
+        vertexPath, Seq("id"), "created_at")),
+      "edges" -> (() => CardStream.mergeLww(spark, e.withColumn("_ord", lit(0)),
+        edgePath, Seq("src", "dst"), "_ord")),
+      "album" -> (() => mergeAlbum(albumNew))))
+    finally invalidateMemos()
+  }
+
+  /** Run each branch on its own fresh thread and wait for all of them —
+    * also when one fails, so no branch is still writing once this
+    * returns or throws. Threads are created here, from the caller, so
+    * each inherits a copy of the caller's Spark local properties as
+    * they are now (job group, description, scheduler pool): the jobs a
+    * branch launches are attributed to the caller's fold. A shared pool
+    * would instead run on whatever properties its threads copied when
+    * they were first created. */
+  private def runConcurrently(branches: Seq[(String, () => Unit)]): Unit = {
+    val failures = new Array[Throwable](branches.size)
+    val threads = branches.zipWithIndex.map { case ((name, body), i) =>
+      val t = new Thread(() => try body() catch { case x: Throwable => failures(i) = x },
+        s"graft-fold-$name")
+      t.start()
+      t
+    }
+    var interrupted = false
+    threads.foreach { t =>
+      while (t.isAlive)
+        try t.join() catch { case _: InterruptedException => interrupted = true }
+    }
+    if (interrupted) Thread.currentThread().interrupt()
+    failures.filter(_ != null) match {
+      case Array() =>
+      case Array(first, rest @ _*) => rest.foreach(first.addSuppressed); throw first
+    }
+  }
+
+  /** A7: per-user album copy — the bizcard-by-user/{owner}/ layout
+    * (get_text_from_s3_image.py:148-159), keyed by (owner, image_id)
+    * like the S3 object key, so replays overwrite rather than
+    * duplicate. Stored as ONE table sorted by (owner, image_id), not a
+    * directory per owner: a per-owner layout rewrites one file per
+    * owner on every fold (cost grows with owners, not with the batch),
+    * and its partition-type inference read numeric owners back as
+    * integers ("0042" → 42). Sorted, a [[userAlbum]] filter still skips
+    * row groups by parquet min/max stats. */
+  private def mergeAlbum(albumNew: DataFrame): Unit = {
     // writer path: recover any crashed swap BEFORE deriving the read —
     // swapInto's own recovery would otherwise rename the __old dir out
     // from under this not-yet-executed DataFrame (first write after a
     // crash would throw FileNotFoundException)
     CardStream.recoverSwap(spark, albumPath)
-    val album = tableOrEmpty(albumPath, albumNew)
-      .unionByName(albumNew)
-      .dropDuplicates("owner", "image_id")
-    CardStream.swapInto(spark, album, albumPath, partitionCols = Seq("owner"))
-    invalidateMemos()
+    CardStream.swapInto(spark,
+      albumTable.unionByName(albumNew)
+        .dropDuplicates("owner", "image_id")
+        .sortWithinPartitions("owner", "image_id"),
+      albumPath)
   }
 
   /** Typed empty table — the fresh-warehouse fallback. A zero-column
@@ -213,10 +266,21 @@ class GraftEngine(spark: SparkSession, warehouse: String) {
     invalidateMemos()
   }
 
-  /** A7 album view for one user — partition-pruned scan. */
+  /** The album read with [[AlbumEntry]]'s schema, never with partition
+    * inference: every column stays a string, and an album in the older
+    * owner-partitioned layout reads the same (its `owner=` directory
+    * values taken verbatim), so the next fold migrates it losslessly. */
+  private def albumTable: DataFrame = {
+    val empty = emptyOf(Encoders.product[AlbumEntry])
+    CardStream.tableOrEmpty(spark, albumPath, empty, Some(empty.schema))
+      .select(AlbumCols.map(col): _*)
+  }
+
+  /** A7 album view for one user — a filter on the owner-sorted album,
+    * which parquet min/max stats prune to the row groups holding that
+    * owner. */
   def userAlbum(owner: String): DataFrame =
-    tableOrEmpty(albumPath, emptyOf(Encoders.product[AlbumEntry]))
-      .filter(col("owner") === owner)
+    albumTable.filter(col("owner") === owner)
 
   /** H3/E5: graph clear — overwrite with empty tables (the bulk
     * replacement of the reference's 200-per-batch OLTP drain loop).

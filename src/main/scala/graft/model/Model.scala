@@ -62,7 +62,10 @@ case class PersonVertex(
 case class KnowsEdge(src: String, dst: String, label: String, weight: Double)
 
 /** Per-user album entry — the bizcard-by-user/{owner}/ S3 copy layout
-  * (get_text_from_s3_image.py:148-159), keyed by image_id. */
+  * (get_text_from_s3_image.py:148-159), keyed by (owner, image_id).
+  * The engine stores all entries as one table sorted by owner, not a
+  * directory per owner, and reads it with this schema: `owner` is a
+  * string, so numeric owners such as "0042" keep their digits. */
 case class AlbumEntry(
     owner: String,
     image_id: String,

@@ -5,6 +5,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.types.StructType
 import graft.model.{ImageStatus, Schemas}
 import graft.operators.{GraphBuild, Parse}
 
@@ -137,9 +138,12 @@ object CardStream {
     * live dir is missing but a crashed swap left `__old` complete, read
     * `__old` in place (the writer restores it on its next swap). Returns
     * `fallbackSchema.limit(0)` when neither exists or the dir is empty
-    * (a parquet read of an empty dir cannot infer a schema). */
+    * (a parquet read of an empty dir cannot infer a schema). With
+    * `readSchema` the files are read with that schema instead of an
+    * inferred one (partition directory values included). */
   def tableOrEmpty(spark: SparkSession, path: String,
-                   fallbackSchema: DataFrame): DataFrame = {
+                   fallbackSchema: DataFrame,
+                   readSchema: Option[StructType] = None): DataFrame = {
     val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val live = new Path(path)
     val old = new Path(path + "__old")
@@ -148,7 +152,7 @@ object CardStream {
               else None
     src match {
       case Some(p) =>
-        try spark.read.parquet(p.toString)
+        try readSchema.fold(spark.read)(spark.read.schema).parquet(p.toString)
         catch { case _: org.apache.spark.sql.AnalysisException =>
           fallbackSchema.limit(0) }
       case None => fallbackSchema.limit(0)

@@ -1,10 +1,11 @@
 package graft
 
 import java.nio.file.Files
+import org.apache.spark.sql.{DataFrame, Encoders}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.api.GraftEngine
-import graft.model.Schemas
+import graft.model.{AlbumEntry, Schemas}
 
 /** End-to-end facade test: the full reference API surface over the
   * 11-record corpus — ingest (idempotent), search with boosts + owner
@@ -102,11 +103,106 @@ class GraftEngineSpec extends AnyFunSuite with SparkSpec {
     assert(engine.cacheKey("a", "b") != engine.cacheKey("a b"))
   }
 
-  test("per-user album is partition-pruned by owner") {
+  test("userAlbum returns exactly one owner's cards from the single album table") {
     val album = engine.userAlbum("edy")
     assert(album.count() == 4) // edy uploaded 4 cards
     assert(album.select("owner").distinct().collect()
       .map(_.getString(0)).toSeq == Seq("edy"))
+    assert(album.columns.toSeq == Seq("owner", "image_id", "doc_id", "s3_bucket", "s3_key"))
+    // one table, no directory per owner
+    assert(!new java.io.File(engine.albumPath).list().exists(_.startsWith("owner=")))
+  }
+
+  test("album keeps numeric owners as strings; lookups never throw") {
+    val numeric = renameOwners(cards, Map("edy" -> "0042", "poby" -> "007", "pororo" -> "007"))
+    val e = new GraftEngine(spark, Files.createTempDirectory("graft_wh_num").toString)
+    e.ingest(numeric)
+    val a42 = e.userAlbum("0042").collect()
+    assert(a42.length == 4 && a42.forall(_.getAs[String]("owner") == "0042"))
+    assert(e.userAlbum("007").collect().map(_.getAs[String]("owner")).distinct.toSeq ==
+      Seq("007"))
+    assert(e.userAlbum("42").isEmpty && e.userAlbum("7").isEmpty)
+    assert(e.userAlbum("").isEmpty)
+    assert(e.userAlbum("poby").isEmpty)
+    val before = sortedRows(albumOf(e.albumPath))
+    assert(before.length == 11)
+    e.ingest(numeric.filter(col("owner") === "0042")) // replay: a no-op
+    assert(sortedRows(albumOf(e.albumPath)) == before)
+  }
+
+  test("an album in the owner-partitioned layout migrates losslessly on the next fold") {
+    val wh = Files.createTempDirectory("graft_wh_legacy").toString
+    val legacy = renameOwners(cards, Map("edy" -> "0042"))
+    sequentialIngest(wh, legacy)
+    val e = new GraftEngine(spark, wh)
+    assert(e.userAlbum("0042").collect().map(_.getAs[String]("owner")).toSeq ==
+      Seq.fill(4)("0042"))
+    val before = sortedRows(albumOf(e.albumPath))
+    e.ingest(legacy.limit(3)) // replayed cards: the rewrite changes no row
+    assert(sortedRows(albumOf(e.albumPath)) == before)
+    assert(!new java.io.File(e.albumPath).list().exists(_.startsWith("owner=")))
+  }
+
+  test("a failed ingest still invalidates the memo") {
+    val e = new GraftEngine(spark, Files.createTempDirectory("graft_wh_fail").toString)
+    e.ingest(cards.filter(col("owner") =!= "pororo"))
+    val warm = e.search("crong lee")
+    assert(e.search("crong lee") eq warm)
+    plantCorruptFile(e.vertexPath)
+    val err = intercept[Exception](e.ingest(cards))
+    assert(String.valueOf(err.getMessage).contains("part-99999-corrupt"))
+    // the search table did swap in pororo's cards; the memo must not
+    // keep serving the answer computed before it
+    assert(e.searchTable.count() == 11)
+    val after = e.search("crong lee")
+    assert(!(after eq warm))
+    assert(after.collect().map(_.getAs[String]("owner")).contains("pororo"))
+  }
+
+  test("concurrent fold holds the same rows as the sequential fold, table by table") {
+    val later = cards.filter(col("s3_key").endsWith("edy_bizcard_0046.jpg"))
+      .withColumn("job_title", lit("Principal Solutions Architect"))
+      .withColumn("created_at", lit("2019-11-01T00:00:00Z"))
+    val batches = Seq(
+      cards.filter(col("owner") === "edy"),
+      cards.filter(col("owner") =!= "edy"),
+      cards.filter(col("owner") === "poby"), // replayed
+      later)
+    val e = new GraftEngine(spark, Files.createTempDirectory("graft_wh_conc").toString)
+    val wh = Files.createTempDirectory("graft_wh_seq").toString
+    batches.foreach { b =>
+      e.ingest(b)
+      assert(foldThreads.isEmpty)
+      sequentialIngest(wh, b)
+    }
+    val seq = new GraftEngine(spark, wh)
+    assert(sortedRows(e.searchTable) == sortedRows(seq.searchTable))
+    assert(sortedRows(e.vertices) == sortedRows(seq.vertices))
+    assert(sortedRows(e.edges) == sortedRows(seq.edges))
+    assert(sortedRows(albumOf(e.albumPath)) == sortedRows(albumOf(seq.albumPath)))
+    assert(e.vertices.filter(col("job_title") === "Principal Solutions Architect")
+      .count() == 1)
+
+    // a failure in one branch propagates; every branch has finished
+    plantCorruptFile(e.edgePath)
+    val err = intercept[Exception](e.ingest(cards))
+    assert(String.valueOf(err.getMessage).contains("edges/part-99999-corrupt"))
+    assert(foldThreads.isEmpty)
+    assert(spark.sparkContext.statusTracker.getActiveJobIds().isEmpty)
+  }
+
+  test("fold jobs carry the caller's job group; a fold writes one file per table") {
+    val e = new GraftEngine(spark, Files.createTempDirectory("graft_wh_props").toString)
+    val sc = spark.sparkContext
+    try {
+      for (group <- Seq("fold-a", "fold-b")) {
+        sc.setJobGroup(group, s"ingest under $group")
+        val (groups, writes) = captured(e.ingest(cards))
+        assert(groups.nonEmpty && groups.forall(_ == group), groups)
+        // four tables, one write each, one file each — not one per owner
+        assert(writes.length == 4 && writes.sum <= 4, writes)
+      }
+    } finally sc.clearJobGroup()
   }
 
   test("extension surface: pymkAll, dedupByContent, pageRank, communities") {
@@ -320,7 +416,7 @@ class GraftEngineSpec extends AnyFunSuite with SparkSpec {
     val r = Seq(
       (10L, "the quick brown fox jumps over the lazy dog tonight yes"),
       (20L, "another unrelated document mentioning duckdb oracles")).toDF("id", "text")
-    def pairs(df: org.apache.spark.sql.DataFrame) = df.collect()
+    def pairs(df: DataFrame) = df.collect()
       .map(x => (x.getLong(0), x.getLong(1)) -> x.getDouble(2)).toMap
     val banded = pairs(engine.fuzzyJoin(l, "id", "text", r, "id", "text",
       n = 2, minJaccard = 0.5))
@@ -663,5 +759,110 @@ class GraftEngineSpec extends AnyFunSuite with SparkSpec {
     // and a fresh ingest after clear rebuilds from scratch
     engine.ingest(cards)
     assert(engine.vertices.count() == 6 && engine.edges.count() == 8)
+  }
+
+  // -------------------------------------------------------- helpers
+
+  private def foldThreads: Seq[String] = {
+    import scala.jdk.CollectionConverters._
+    Thread.getAllStackTraces.keySet.asScala.toSeq.map(_.getName)
+      .filter(_.startsWith("graft-fold-"))
+  }
+
+  /** The cards with owners renamed. The engine derives `owner` from the
+    * s3 key's file-name prefix, so the key is renamed too. */
+  private def renameOwners(df: DataFrame,
+                           rename: Map[String, String]): DataFrame =
+    rename.foldLeft(df) { case (d, (from, to)) =>
+      d.withColumn("s3_key", regexp_replace(col("s3_key"), s"/${from}_", s"/${to}_"))
+        .withColumn("owner", when(col("owner") === from, to).otherwise(col("owner")))
+    }
+
+  private def plantCorruptFile(dir: String): Unit =
+    Files.write(java.nio.file.Paths.get(dir, "part-99999-corrupt.snappy.parquet"),
+      "not a parquet file".getBytes("UTF-8"))
+
+  private def sortedRows(df: DataFrame): Seq[String] =
+    df.select(df.columns.sorted.map(col): _*).collect().map(_.mkString("|")).toSeq.sorted
+
+  private def albumOf(path: String): DataFrame =
+    spark.read.schema(Encoders.product[AlbumEntry].schema).parquet(path)
+
+  /** `GraftEngine.ingest` as it was before its table merges ran
+    * concurrently: the four merges one after another, with the album
+    * written one directory per owner. The reference fold. */
+  private def sequentialIngest(wh: String, cards: DataFrame): Unit = {
+    import graft.operators.GraphBuild
+    import graft.streaming.CardStream
+    val enriched = CardStream.validated(cards)
+    CardStream.mergeLww(spark, enriched, s"$wh/search_table", Seq("doc_id"), "created_at")
+    val (v, e) = GraphBuild.buildGraph(enriched)
+    val vOrd = enriched
+      .withColumn("id", graft.functions.GraftFunctions.personId(col("email")))
+      .groupBy("id").agg(max("created_at").as("created_at"))
+    CardStream.mergeLww(spark, v.join(vOrd, "id"), s"$wh/vertices", Seq("id"), "created_at")
+    CardStream.mergeLww(spark, e.withColumn("_ord", lit(0)), s"$wh/edges",
+      Seq("src", "dst"), "_ord")
+    val albumNew = enriched.select("owner", "image_id", "doc_id", "s3_bucket", "s3_key")
+    CardStream.recoverSwap(spark, s"$wh/by_user")
+    val album = CardStream.tableOrEmpty(spark, s"$wh/by_user", albumNew)
+      .unionByName(albumNew)
+      .dropDuplicates("owner", "image_id")
+    CardStream.swapInto(spark, album, s"$wh/by_user", partitionCols = Seq("owner"))
+  }
+
+  /** Run `f` and return the job group of every Spark job it launched,
+    * and the file count of every write it committed. A marker job
+    * launched after `f` drains the listener queue: events arrive in
+    * order, so once the marker's start is seen every earlier event has
+    * been delivered. */
+  private def captured(f: => Unit): (Seq[String], Seq[Long]) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.execution.{CommandResultExec, QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.command.DataWritingCommandExec
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val sc = spark.sparkContext
+    val marker = s"marker-${System.nanoTime()}"
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val files = new java.util.concurrent.ConcurrentLinkedQueue[Long]
+    val markerSeen = new java.util.concurrent.CountDownLatch(1)
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p +: ((p match {
+      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+      case q: QueryStageExec => Seq(q.plan)
+      case c: CommandResultExec => Seq(c.commandPhysicalPlan)
+      case _ => Nil
+    }) ++ p.children).flatMap(nodes)
+    val jobs = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit = {
+        val g = String.valueOf(Option(j.properties)
+          .map(_.getProperty("spark.jobGroup.id")).orNull)
+        if (g == marker) markerSeen.countDown() else groups.add(g)
+      }
+    }
+    val writes = new QueryExecutionListener {
+      override def onSuccess(fn: String, qe: QueryExecution, ns: Long): Unit =
+        nodes(qe.executedPlan).collect { case w: DataWritingCommandExec =>
+          files.add(w.metrics.get("numFiles").fold(0L)(_.value)) }
+      override def onFailure(fn: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    sc.addSparkListener(jobs)
+    spark.listenerManager.register(writes)
+    try {
+      f
+      // on its own thread, so the caller's job group stays as it is
+      val drain = new Thread(() => {
+        sc.setJobGroup(marker, "listener drain")
+        spark.range(1).count()
+      })
+      drain.start()
+      drain.join()
+      assert(markerSeen.await(60, java.util.concurrent.TimeUnit.SECONDS))
+    } finally {
+      sc.removeSparkListener(jobs)
+      spark.listenerManager.unregister(writes)
+    }
+    import scala.jdk.CollectionConverters._
+    (groups.asScala.toSeq, files.asScala.toSeq)
   }
 }
