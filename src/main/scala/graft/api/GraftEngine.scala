@@ -3,6 +3,7 @@ package graft.api
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import graft.model.{AlbumEntry, Bizcard, KnowsEdge, PersonVertex, PymkResponse}
 import graft.operators.{GraphBuild, Parse, Pymk, Search, SearchIndex}
 import graft.streaming.CardStream
@@ -36,11 +37,27 @@ class GraftEngine(spark: SparkSession, warehouse: String) {
   val SearchFields: Seq[(String, Double)] =
     Seq("name" -> 3.0, "company" -> 1.0, "job_title" -> 1.0, "addr" -> 1.0)
 
+  // Schema of each engine table, as the engine last wrote it or as the
+  // first read of a table it has not written inferred it. A read with a
+  // known schema launches no Spark job; inference launches one every
+  // time. The file listing still happens per read, so a swapped table
+  // is always seen; a stale schema can only hide a column that an
+  // external writer added, until refresh().
+  private val schemas = new java.util.concurrent.ConcurrentHashMap[String, StructType]
+
+  private def written(path: String)(schema: StructType): Unit = schemas.put(path, schema)
+
   // reader path: non-mutating — a crash mid-swap leaves live missing but
-  // <path>__old complete; CardStream.tableOrEmpty reads __old in place
-  // (restoration happens only in the writer's next swap)
-  private def tableOrEmpty(path: String, like: => DataFrame): DataFrame =
-    CardStream.tableOrEmpty(spark, path, like)
+  // <path>__old complete; CardStream.readTable reads __old in place
+  // (restoration happens only in the writer's next swap). An empty
+  // fallback's schema is never remembered.
+  private def table(path: String, like: => DataFrame): DataFrame = {
+    val known = Option(schemas.get(path))
+    CardStream.readTable(spark, path, known).fold(like.limit(0)) { df =>
+      if (known.isEmpty) schemas.putIfAbsent(path, df.schema)
+      df
+    }
+  }
 
   // ------------------------------------------------- serving-layer memo
   // The in-engine analogue of the reference's TTL result cache (I1/I2,
@@ -57,6 +74,8 @@ class GraftEngine(spark: SparkSession, warehouse: String) {
   // pins localCheckpoint blocks, so an unbounded read-heavy session
   // would otherwise grow storage memory without limit — evicted
   // entries' blocks are freed by the ContextCleaner once unreferenced.
+  // Only results are memoized, no table statistic: a cold search counts
+  // its idf N in its own statistics pass.
   private val MemoMaxEntries = 256
   private val resultMemo =
     new java.util.LinkedHashMap[String, DataFrame](64, 0.75f, true) {
@@ -64,7 +83,6 @@ class GraftEngine(spark: SparkSession, warehouse: String) {
           e: java.util.Map.Entry[String, DataFrame]): Boolean =
         size() > MemoMaxEntries
     }
-  private var nDocsMemo: Option[Long] = None
 
   private[graft] def cacheKey(parts: String*): String =
     java.security.MessageDigest.getInstance("MD5")
@@ -73,9 +91,7 @@ class GraftEngine(spark: SparkSession, warehouse: String) {
       .digest(parts.mkString("\u0000").getBytes("UTF-8"))
       .map("%02x".format(_)).mkString
 
-  private def invalidateMemos(): Unit = resultMemo.synchronized {
-    resultMemo.clear(); nDocsMemo = None
-  }
+  private def invalidateMemos(): Unit = resultMemo.synchronized(resultMemo.clear())
 
   /** External-writer fence: drop every serving memo so the next read
     * sees the warehouse as it is NOW. The engine invalidates its own
@@ -85,14 +101,12 @@ class GraftEngine(spark: SparkSession, warehouse: String) {
     * calls this after each committed micro-batch, the engine-side
     * analogue of the reference's write-side `refresh=True` bulk
     * (upsert_bizcard_to_es.py:90: the upsert forces an index refresh
-    * precisely so the next search reads its writes). */
-  def refresh(): Unit = invalidateMemos()
-
-  /** Memoized live-doc count — the idf N served without a per-query
-    * counting pass (ES semantics: index-wide N, not filtered-set N). */
-  private def nLiveDocs: Long = nDocsMemo.getOrElse {
-    val c = searchTable.filter(col("is_alive") === 1).count()
-    nDocsMemo = Some(c); c
+    * precisely so the next search reads its writes). Also forgets the
+    * tables' known schemas, so a column an external writer added is
+    * read from the next request on. */
+  def refresh(): Unit = {
+    invalidateMemos()
+    schemas.clear()
   }
 
   private def memoized(key: String)(compute: => DataFrame): DataFrame = {
@@ -132,12 +146,12 @@ class GraftEngine(spark: SparkSession, warehouse: String) {
       .groupBy("id").agg(max("created_at").as("created_at"))
     val albumNew = enriched.select(AlbumCols.map(col): _*)
     try runConcurrently(Seq(
-      "search" -> (() => CardStream.mergeLww(spark, enriched, searchPath,
-        Seq("doc_id"), "created_at")),
-      "vertices" -> (() => CardStream.mergeLww(spark, v.join(vOrd, "id"),
-        vertexPath, Seq("id"), "created_at")),
-      "edges" -> (() => CardStream.mergeLww(spark, e.withColumn("_ord", lit(0)),
-        edgePath, Seq("src", "dst"), "_ord")),
+      "search" -> (() => written(searchPath)(CardStream.mergeLww(spark, enriched,
+        searchPath, Seq("doc_id"), "created_at"))),
+      "vertices" -> (() => written(vertexPath)(CardStream.mergeLww(spark,
+        v.join(vOrd, "id"), vertexPath, Seq("id"), "created_at"))),
+      "edges" -> (() => written(edgePath)(CardStream.mergeLww(spark,
+        e.withColumn("_ord", lit(0)), edgePath, Seq("src", "dst"), "_ord"))),
       "album" -> (() => mergeAlbum(albumNew))))
     finally invalidateMemos()
   }
@@ -200,17 +214,18 @@ class GraftEngine(spark: SparkSession, warehouse: String) {
   private def emptyOf[T: Encoder]: DataFrame = spark.emptyDataset[T].toDF()
 
   def searchTable: DataFrame =
-    tableOrEmpty(searchPath, emptyOf(Encoders.product[Bizcard]))
+    table(searchPath, emptyOf(Encoders.product[Bizcard]))
   def vertices: DataFrame =
-    tableOrEmpty(vertexPath, emptyOf(Encoders.product[PersonVertex]))
+    table(vertexPath, emptyOf(Encoders.product[PersonVertex]))
   def edges: DataFrame =
-    tableOrEmpty(edgePath, emptyOf(Encoders.product[KnowsEdge]))
+    table(edgePath, emptyOf(Encoders.product[KnowsEdge]))
 
   /** Boosted multi-field search with optional owner term filter;
     * is_alive guard always applied (B15). Returns rows + `_score`,
     * ranked desc — the `hits.hits` shape. Memoized per request key
-    * (I1 analogue); idf N served from the memoized live-doc count
-    * instead of a per-query counting pass.
+    * (I1 analogue). The idf N is the live-doc count, owner filter
+    * ignored (ES's index-wide N), which [[Search.search]] counts in its
+    * statistics pass at no extra job.
     *
     * Default scorer is BM25 with best_fields combination — what ES
     * actually runs under the reference's `multi_match`
@@ -229,7 +244,7 @@ class GraftEngine(spark: SparkSession, warehouse: String) {
       scorer, combine)) {
       Search.search(searchTable, "doc_id", SearchFields, query, limit,
         ownerFilter = owner.map("owner" -> _), aliveCol = Some("is_alive"),
-        numDocs = Some(nLiveDocs), scorer = scorer, combine = combine)
+        scorer = scorer, combine = combine)
     }
 
   /** PYMK by case-insensitive user name. Response reproduces the
@@ -259,10 +274,10 @@ class GraftEngine(spark: SparkSession, warehouse: String) {
   def softDelete(docId: String): Unit = {
     // writer path: recover before reading (see ingest's album branch)
     CardStream.recoverSwap(spark, searchPath)
-    CardStream.swapInto(spark,
+    written(searchPath)(CardStream.swapInto(spark,
       searchTable.withColumn("is_alive",
         when(col("doc_id") === docId, 0).otherwise(col("is_alive"))),
-      searchPath)
+      searchPath))
     invalidateMemos()
   }
 
@@ -292,6 +307,7 @@ class GraftEngine(spark: SparkSession, warehouse: String) {
     for (base <- Seq(vertexPath, edgePath);
          suffix <- Seq("", "__old", "__stage"))
       fs.delete(new Path(base + suffix), true)
+    Seq(vertexPath, edgePath).foreach(p => schemas.remove(p))
     invalidateMemos()
   }
 

@@ -79,10 +79,13 @@ object GraftFunctions {
   /** Case-insensitive whitespace tokenization shared by search scoring,
     * token counting and shingling. Declared semantic refinement of the
     * reference's ES-internal analyzer (SURVEY §7.3): lowercase, split on
-    * whitespace runs, drop empty tokens.
+    * whitespace runs, drop empty tokens (a leading or trailing run
+    * splits off one ""). `array_remove`, not a `filter` lambda: both
+    * give the same array (null text stays null; `split` emits no null
+    * element), but a lambda is CodegenFallback and runs interpreted.
     */
   def tokenize(text: Column): Column =
-    filter(split(lower(text), "\\s+"), t => t =!= lit(""))
+    array_remove(split(lower(text), "\\s+"), lit(""))
 
   /** ISO-8601 `created_at` format of the reference
     * (get_text_from_s3_image.py:186). */

@@ -618,11 +618,13 @@ object TextExprUtil {
     * basket marker `(null, null)` — the tagged union that lets a
     * market-basket miner count pair supports, item supports and the
     * basket total in ONE aggregation pass (null-ness of j / i is the
-    * tag). Same one-loop codegen shape. */
+    * tag). Null elements are skipped: as a pair side or a single they
+    * would forge a tag, e.g. a second `(null, null)` marker. Same
+    * one-loop codegen shape. */
   def arrayCombosTagged(arr: org.apache.spark.sql.catalyst.util.ArrayData,
                         et: DataType): org.apache.spark.sql.catalyst.util.ArrayData = {
-    val n = arr.numElements()
-    val elems = arr.toObjectArray(et)
+    val elems = arr.toObjectArray(et).filter(_ != null)
+    val n = elems.length
     val out = new Array[Any](n * (n - 1) / 2 + n + 1)
     var k = 0
     var a = 0
@@ -967,8 +969,8 @@ case class HashedMarginExpr(child: Expression, w: Array[Long])
   * PLUS the `(e, null)` single-item rows and one `(null, null)` basket
   * marker — so one explode + one aggregation count pair supports, item
   * supports and the basket total together (the j/i null-ness is the
-  * tag; array elements are non-null by construction in the basket
-  * fold, so the tag is unambiguous). One primitive loop, codegen. */
+  * tag; null elements are skipped, so the tag is unambiguous for any
+  * input). One primitive loop, codegen. */
 case class ArrayCombosTaggedExpr(child: Expression) extends UnaryExpression {
   private def elemOf(t: DataType): org.apache.spark.sql.types.ArrayType =
     t.asInstanceOf[org.apache.spark.sql.types.ArrayType]
@@ -1032,8 +1034,29 @@ case class JaroWinklerExpr(left: Expression, right: Expression)
       l: Expression, r: Expression): JaroWinklerExpr = copy(left = l, right = r)
 }
 
+/** `double_param(v)`: the constant `v`, read by the generated code from
+  * its reference array instead of inlined into the source as a literal.
+  * Queries that differ only in such values then share one compiled
+  * stage — a per-query statistic (an idf, an avgdl) as a `lit` makes
+  * every query compile its own ([[HashedMarginExpr]]'s lesson). Not
+  * foldable, so constant folding leaves it a leaf. */
+case class DoubleParamExpr(v: Double)
+    extends org.apache.spark.sql.catalyst.expressions.LeafExpression {
+  override def foldable: Boolean = false
+  override def nullable: Boolean = false
+  override def dataType: DataType = org.apache.spark.sql.types.DoubleType
+  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = v
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+    val ref = ctx.addReferenceObj("param", java.lang.Double.valueOf(v), "java.lang.Double")
+    ev.copy(code = code"final double ${ev.value} = $ref.doubleValue();",
+      isNull = org.apache.spark.sql.catalyst.expressions.codegen.FalseLiteral)
+  }
+}
+
 object TextExprs {
   import ColumnBridge.{toColumn, toExpr}
+  def double_param(v: Double): Column = toColumn(DoubleParamExpr(v))
   def jaro_winkler(a: Column, b: Column): Column =
     toColumn(JaroWinklerExpr(toExpr(a), toExpr(b)))
 

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.functions.GraftFunctions.tokenize
+import graft.functions.expr.TextExprs.double_param
 
 /** Full-text relevance search — the Spark-native re-expression of the
   * reference's Elasticsearch query surface (SURVEY §2.G).
@@ -23,11 +24,15 @@ import graft.functions.GraftFunctions.tokenize
   * reference's boost intent (name 3×) with fully reproducible scores
   * that a SQL oracle can recompute.
   *
-  * Scale posture: the scoring pipeline is explode → two hash
-  * aggregations (df per term, tf per doc) → one join on the term — all
-  * key-partitioned shuffles. The per-term document-frequency table is
-  * tiny (≤ |query terms|) and is broadcast into the tf join. The final
-  * top-k is `TakeOrderedAndProject` (no global sort materialization).
+  * Scale posture: [[search]] reads the corpus twice and shuffles no
+  * postings. One global aggregate collects N, the filtered count, Σdl
+  * per field and df per (field, term) — a few dozen numbers at any
+  * corpus size. One scoring scan then scores each row on its own and
+  * feeds a `TakeOrderedAndProject` top-k, so there is no explode, no
+  * join and no hash exchange. Precondition: `idCol` is a key — each
+  * row is scored as its own document, so rows sharing an id would be
+  * ranked apart, not as one doc. Every table the engine serves is
+  * LWW-merged on its id, which makes the id a key.
   */
 object Search {
 
@@ -121,11 +126,11 @@ object Search {
     *                 (es_search_bizcard.py:72-73 `term` in filter context)
     * @param aliveCol optional soft-delete guard: is_alive = 1
     *                 (upsert_bizcard_to_es.py:71, README.md:97)
-    * @param numDocs  corpus size N for the idf — pass a precomputed
-    *                 value (index stats / memoized table count) to skip
-    *                 the per-query counting job; this is also ES's
-    *                 semantics (idf over the whole index, unaffected by
-    *                 filter context). Default: count the filtered set.
+    * @param numDocs  corpus size N for the idf. Default: the number of
+    *                 live docs (`aliveCol` applied, `ownerFilter` not),
+    *                 counted in the statistics pass at no extra job —
+    *                 ES's semantics, idf over the whole index, unaffected
+    *                 by filter context. Pass a value to override it.
     * @param scorer   "tfidf" (the declared reproducible scorer, qG1/qG3)
     *                 or "bm25" — the scorer ES actually runs under the
     *                 reference's multi_match (es_search_bizcard.py:62-70;
@@ -161,99 +166,91 @@ object Search {
     val queryTerms = query.toLowerCase.split("\\s+").filter(_.nonEmpty).toSeq
     require(queryTerms.nonEmpty || ownerFilter.nonEmpty,
       "at least one of query / owner filter required (es_search_bizcard.py:75)")
-
-    val filtered0 = ownerFilter.fold(docs) { case (c, v) => docs.filter(col(c) === v) }
-    val filtered = aliveCol.fold(filtered0)(c => filtered0.filter(col(c) === 1))
+    require(fields.nonEmpty, "at least one scored field required")
+    val alive = aliveCol.fold(docs)(c => docs.filter(col(c) === 1))
+    val inFilter = ownerFilter.fold(lit(true)) { case (c, v) => col(c) === v }
 
     // owner-filter-only query: same schema as the scored path (_score
     // present, 0.0 — ES filter-context semantics) and a deterministic
     // order so limit() is stable across runs/engines
     if (queryTerms.isEmpty)
-      return filtered.withColumn("_score", lit(0.0))
+      return alive.filter(inFilter).withColumn("_score", lit(0.0))
         .orderBy(asc(idCol)).limit(limit)
 
-    // ONE scan for every scored field: stack (field, boost, tokens)
-    // structs per row and explode, instead of re-scanning the table per
-    // field (the per-field formulation costs 2·|fields|+1 scans — the
-    // difference between one pass and five over a 100 TB corpus).
-    // Scoring is identical: Σ_field boost · Σ_term tf·idf with idf
-    // computed per (field, term).
-    // N for idf: precomputed when the caller has stats (one fewer job
-    // per query); the fallback counting pass is metadata-only when
-    // unfiltered.
-    val n = numDocs.getOrElse(filtered.count())
-    val stacked = array(fields.map { case (f, bst) =>
-      struct(lit(f).as("field"), lit(bst).as("boost"),
-        tokenize(col(f)).as("toks"))
-    }: _*)
-    // per-(doc, field) token lists — the one wide explode; dl rides
-    // along so BM25's length norm costs no extra scan of the corpus
-    val fieldRows = filtered
-      .select(col(idCol).as("_doc"), explode(stacked).as("ft"))
-      .select(col("_doc"), col("ft.field").as("field"),
-        col("ft.boost").as("boost"), col("ft.toks").as("toks"))
-    val posts = fieldRows
-      .select(col("_doc"), col("field"), col("boost"),
-        size(col("toks")).cast("double").as("dl"),
-        explode(col("toks")).as("term"))
-      .filter(col("term").isin(queryTerms: _*))
-    // dl is functionally dependent on (_doc, field); max() just carries it
-    val tf = posts.groupBy("field", "boost", "term", "_doc")
-      .agg(count(lit(1)).as("tf"), max(col("dl")).as("dl"))
-    val idfs = broadcast(
-      tf.groupBy("field", "term").agg(count(lit(1)).as("df"))
-        .select(col("field"), col("term"),
-          log(lit(1.0) + (lit(n.toDouble) - col("df") + lit(0.5)) / (col("df") + lit(0.5)))
-            .as("idf")))
-    // per-(field, term, doc) partial score
-    val termScored = scorer match {
-      case "tfidf" =>
-        tf.join(idfs, Seq("field", "term"))
-          .withColumn("tscore", col("tf") * col("idf"))
-      case "bm25" =>
-        // per-field avgdl over ALL docs of the filtered corpus (not just
-        // term-matching ones) — |fields| rows, broadcast. Needs its own
-        // narrow (field, dl) aggregation pass; the all-empty-field guard
-        // (Σdl = 0 → avgdl 1.0) mirrors [[bm25]]'s.
-        val avgdls = broadcast(
-          fieldRows.groupBy("field")
-            .agg(sum(size(col("toks"))).as("s"), count(lit(1)).as("c"))
-            .select(col("field"),
-              when(col("s") === 0 || col("c") === 0, lit(1.0))
-                .otherwise(col("s").cast("double") / col("c")).as("avgdl")))
-        tf.join(idfs, Seq("field", "term")).join(avgdls, Seq("field"))
-          .withColumn("tscore",
-            col("idf") * (col("tf") * lit(k1 + 1.0)) /
-              (col("tf") + lit(k1) *
-                (lit(1.0 - b) + lit(b) * col("dl") / col("avgdl"))))
+    // Two scans, no join and no posting shuffle. Pass 1 is ONE global
+    // aggregate that brings the corpus statistics to the driver: N,
+    // the filtered count c, Σdl per field, df per (field, term). Pass 2
+    // scores each row on its own, with idf and avgdl as constants built
+    // by the same formulas, and keeps the top-k. tf is the number of
+    // array elements that `array_remove` drops, so no explode is needed.
+    // The constants are `double_param`s, not literals: the scoring stage
+    // compiles once per query shape, not once per query.
+    val terms = queryTerms.distinct
+    val tokCols = fields.indices.map(i => s"_toks$i")
+    val tokens = fields.zip(tokCols).map { case ((f, _), t) => tokenize(col(f)).as(t) }
+    val pairs = for (t <- tokCols; term <- terms) yield (t, term)
+    val stats = alive.select(inFilter.as("_in") +: tokens: _*)
+      .agg(count(lit(1)), count(when(col("_in"), 1)) +:
+        (tokCols.map(t => sum(when(col("_in"), size(col(t))))) ++
+          pairs.map { case (t, term) =>
+            count(when(col("_in") && array_contains(col(t), term), 1)) }): _*)
+      .head()
+    val n = numDocs.getOrElse(stats.getLong(0))
+    val c = stats.getLong(1)
+    val dlSums = tokCols.indices.map(i => if (stats.isNullAt(2 + i)) 0L else stats.getLong(2 + i))
+    val df = pairs.indices.map(i => stats.getLong(2 + tokCols.size + i))
+    // idf(t, f) = ln(1 + (N − df + 0.5) / (df + 0.5)) with the operation
+    // order and the StrictMath.log of Spark's `log` column, so it equals
+    // the idf column of [[scoreField]] / [[bm25]] bit for bit
+    def idf(d: Long): Double =
+      StrictMath.log(1.0 + (n.toDouble - d + 0.5) / (d + 0.5))
+    // per-field avgdl over the filtered corpus; the all-empty-field
+    // guard (Σdl = 0 → avgdl 1.0) mirrors [[bm25]]'s
+    val avgdl = dlSums.map(s => if (s == 0L || c == 0L) 1.0 else s.toDouble / c)
+
+    // Σ of the present values, null when none is present — SQL SUM's
+    // null rule within one row. A field without a hit is null, not 0,
+    // so `greatest` skips it even when every present score is negative.
+    def sumPresent(xs: Seq[Column]): Column =
+      when(xs.map(_.isNotNull).reduce(_ || _), xs.map(coalesce(_, lit(0.0))).reduce(_ + _))
+    val perField = fields.zip(tokCols).zipWithIndex.map { case (((_, boost), t), i) =>
+      val toks = col(t)
+      val dl = size(toks).cast("double")
+      val termScores = terms.zipWithIndex.map { case (term, j) =>
+        val tf = size(toks) - size(array_remove(toks, term))
+        val w = double_param(idf(df(i * terms.size + j)))
+        val tscore = scorer match {
+          case "tfidf" => tf * w
+          case "bm25" =>
+            w * (tf * lit(k1 + 1.0)) /
+              (tf + lit(k1) * (lit(1.0 - b) + lit(b) * dl / double_param(avgdl(i))))
+        }
+        when(tf > 0, tscore)
+      }
+      lit(boost) * sumPresent(termScores)
     }
-    val perField = termScored
-      .groupBy("_doc", "field", "boost")
-      .agg(sum(col("tscore")).as("fsum"))
-      .withColumn("wscore", col("boost") * col("fsum"))
-    val combined = combine match {
-      case "sum" => perField.groupBy("_doc").agg(sum(col("wscore")).as("_score"))
-      case "max" if tieBreaker == 0.0 =>
-        perField.groupBy("_doc").agg(max(col("wscore")).as("_score"))
-      case "max" =>
-        // best + tb·(sum − best): same single aggregation, two partials
-        perField.groupBy("_doc")
-          .agg(max(col("wscore")).as("_best"), sum(col("wscore")).as("_sum"))
-          .select(col("_doc"),
-            (col("_best") + lit(tieBreaker) * (col("_sum") - col("_best")))
-              .as("_score"))
+    val best = if (perField.size == 1) perField.head else greatest(perField: _*)
+    val score = combine match {
+      case "sum" => sumPresent(perField)
+      case "max" if tieBreaker == 0.0 => best
+      case "max" => best + lit(tieBreaker) * (sumPresent(perField) - best)
     }
 
     // rank on the score ROUNDED to the engine's 4-decimal precision
     // (raw `_score` stays in the output — callers own its precision):
-    // the raw float sum's partition order varies with the thread
-    // count, so a rounded-score tie at the limit boundary would
-    // otherwise flip which doc survives run-to-run (the
-    // qG5/SearchIndex.query lesson — same fixed total order the
-    // oracles replay)
-    filtered.join(combined, filtered(idCol) === combined("_doc"))
-      .drop("_doc")
+    // the raw float sum's order of terms can vary between plans, so a
+    // rounded-score tie at the limit boundary would otherwise flip
+    // which doc survives run-to-run (the qG5/SearchIndex.query lesson
+    // — same fixed total order the oracles replay). A doc without a hit
+    // scores null and sorts last, so dropping it after the top-k keeps
+    // exactly the top-k hits; a filter before it would be pushed below
+    // the projection and score every row twice.
+    alive.filter(inFilter)
+      .select(col("*") +: tokens: _*)
+      .withColumn("_score", score)
+      .drop(tokCols: _*)
       .orderBy(round(col("_score"), 4).desc, col(idCol).asc)
       .limit(limit)
+      .filter(col("_score").isNotNull)
   }
 }

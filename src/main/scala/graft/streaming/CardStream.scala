@@ -55,10 +55,10 @@ object CardStream {
     * remaining columns — deterministic). Plain parquet + atomic
     * directory swap (SURVEY §7.5-2): write to `<path>__stage`, then
     * rename over the live dir, so readers see either the old or the new
-    * table, never a partial write.
+    * table, never a partial write. Returns the schema it wrote.
     */
   def mergeLww(spark: SparkSession, batch: DataFrame, path: String,
-               keyCols: Seq[String], ordCol: String): Unit = {
+               keyCols: Seq[String], ordCol: String): StructType = {
     recoverSwap(spark, path) // writer path — recovery serialized with the swap
     val existing = tableOrEmpty(spark, path, batch)
     val all = existing.unionByName(batch, allowMissingColumns = true)
@@ -82,15 +82,17 @@ object CardStream {
     * re-merges the interrupted batch idempotently (LWW keys), so no
     * accumulated history is lost. Every rename result is checked — a
     * failed rename aborts the swap with `__old` still intact rather
-    * than deleting the only complete copy of the table. */
+    * than deleting the only complete copy of the table. Returns the
+    * schema it wrote, which a reader can pass to [[tableOrEmpty]]. */
   def swapInto(spark: SparkSession, df: DataFrame, path: String,
-               partitionCols: Seq[String] = Nil): Unit = {
+               partitionCols: Seq[String] = Nil): StructType = {
     recoverSwap(spark, path)
     val stage = new Path(path + "__stage")
     val writer = if (partitionCols.isEmpty) df.write
       else df.write.partitionBy(partitionCols: _*)
     writer.mode("overwrite").parquet(stage.toString)
     swapStaged(spark, path)
+    df.schema
   }
 
   /** The rename tail of the swap protocol: promote an already-written
@@ -140,22 +142,23 @@ object CardStream {
     * `fallbackSchema.limit(0)` when neither exists or the dir is empty
     * (a parquet read of an empty dir cannot infer a schema). With
     * `readSchema` the files are read with that schema instead of an
-    * inferred one (partition directory values included). */
+    * inferred one (partition directory values included), which also
+    * skips the Spark job that schema inference launches. */
   def tableOrEmpty(spark: SparkSession, path: String,
                    fallbackSchema: DataFrame,
-                   readSchema: Option[StructType] = None): DataFrame = {
+                   readSchema: Option[StructType] = None): DataFrame =
+    readTable(spark, path, readSchema).getOrElse(fallbackSchema.limit(0))
+
+  /** [[tableOrEmpty]] without the fallback: None when there is no table
+    * to read. */
+  private[graft] def readTable(spark: SparkSession, path: String,
+                                readSchema: Option[StructType] = None): Option[DataFrame] = {
     val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val live = new Path(path)
     val old = new Path(path + "__old")
-    val src = if (fs.exists(live)) Some(live)
-              else if (fs.exists(old)) Some(old)
-              else None
-    src match {
-      case Some(p) =>
-        try readSchema.fold(spark.read)(spark.read.schema).parquet(p.toString)
-        catch { case _: org.apache.spark.sql.AnalysisException =>
-          fallbackSchema.limit(0) }
-      case None => fallbackSchema.limit(0)
+    Seq(live, old).find(fs.exists).flatMap { p =>
+      try Some(readSchema.fold(spark.read)(spark.read.schema).parquet(p.toString))
+      catch { case _: org.apache.spark.sql.AnalysisException => None }
     }
   }
 
@@ -203,6 +206,7 @@ object CardStream {
       .foreachBatch { (batch: DataFrame, _: Long) =>
         mergeLww(batch.sparkSession, batch, tablePath,
           Seq("doc_id"), "created_at")
+        ()
       }
       .start()
 
@@ -280,6 +284,7 @@ object CardStream {
           Seq("id"), "created_at")
         mergeLww(batch.sparkSession, e.withColumn("_ord", lit(0)), ePath,
           Seq("src", "dst"), "_ord")
+        ()
       }
       .start()
 

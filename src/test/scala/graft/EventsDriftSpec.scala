@@ -210,6 +210,16 @@ class EventsDriftSpec extends AnyFunSuite with SparkSpec {
     assert(dl.count() == 62) // codegen path compiles
   }
 
+  test("array_combos_tagged skips null elements: one basket marker, no null-sided pair") {
+    import graft.functions.expr.TextExprs
+    val rows = Seq(Seq[java.lang.Long](1L, null, 2L)).toDF("items")
+      .select(explode(TextExprs.array_combos_tagged(col("items"))).as("p"))
+      .select(col("p.i"), col("p.j"))
+    val got = rows.collect().map(r => (Option(r.get(0)), Option(r.get(1)))).toSeq
+    assert(got.sortBy(_.toString) == Seq((Some(1L), Some(2L)), (Some(1L), None),
+      (Some(2L), None), (None, None)).sortBy(_.toString), got)
+  }
+
   test("assoc rules: the set-table exchange is reused, not checkpointed") {
     import graft.operators.Assoc
     val b = Seq((1L, "x"), (1L, "y"), (2L, "x"), (2L, "y"))

@@ -205,6 +205,46 @@ class GraftEngineSpec extends AnyFunSuite with SparkSpec {
     } finally sc.clearJobGroup()
   }
 
+  test("table reads launch no job after a fold; a cold request runs few jobs") {
+    val e = new GraftEngine(spark, Files.createTempDirectory("graft_wh_jobs").toString)
+    e.ingest(cards)
+    val reads = Seq[(String, () => DataFrame)]("searchTable" -> (() => e.searchTable),
+      "vertices" -> (() => e.vertices), "edges" -> (() => e.edges))
+    for ((name, read) <- reads) {
+      assert(captured(read())._1.isEmpty, s"$name launched a job")
+      // the schema the fold remembered is the one inference gives
+      val path = Map("searchTable" -> e.searchPath, "vertices" -> e.vertexPath,
+        "edges" -> e.edgePath)(name)
+      assert(read().schema == spark.read.parquet(path).schema, name)
+    }
+    // a search is a statistics aggregate (2 jobs under AQE) and the
+    // scoring top-k: 3 jobs here, where a posting explode/join plan
+    // runs 11–14
+    val searchJobs = captured(e.search("poby kim", owner = Some("poby")))._1.size
+    assert(searchJobs <= 4, searchJobs)
+    val pymkJobs = captured(e.pymk("poby kim"))._1.size
+    assert(pymkJobs <= 8, pymkJobs)
+  }
+
+  test("an external write is seen without refresh; refresh reads its new column") {
+    import graft.streaming.CardStream
+    val e = new GraftEngine(spark, Files.createTempDirectory("graft_wh_ext").toString)
+    e.ingest(cards)
+    assert(e.search("kim").collect().nonEmpty)
+    val extra = CardStream.validated(cards).limit(1)
+      .withColumn("doc_id", lit("ext-1"))
+      .withColumn("name", lit("Zelda Quux"))
+      .withColumn("note", lit("external"))
+    CardStream.mergeLww(spark, extra, e.searchPath, Seq("doc_id"), "created_at")
+    val before = e.search("zelda quux").collect()
+    assert(before.map(_.getAs[String]("doc_id")).toSeq == Seq("ext-1"))
+    assert(e.searchTable.count() == 12)
+    e.refresh()
+    val after = e.search("zelda quux").collect()
+    assert(after.map(_.getAs[String]("doc_id")).toSeq == Seq("ext-1"))
+    assert(after.head.getAs[String]("note") == "external")
+  }
+
   test("extension surface: pymkAll, dedupByContent, pageRank, communities") {
     // all-pairs PYMK agrees with the single-anchor golden for poby
     val pobyId = "6f371694" // md5("poby")[:8] — CardPipelineSpec golden

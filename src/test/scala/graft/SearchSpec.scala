@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.Search
@@ -228,5 +229,165 @@ class SearchSpec extends AnyFunSuite with SparkSpec {
     // a query term absent from the corpus has no likelihood: drops
     assert(SearchIndex.dirichletQL(docs, "doc_id", "text",
       Seq("zzz"), mu = 1.0, limit = 10).isEmpty)
+  }
+
+  test("native tokenize gives the lambda form's array on every input") {
+    val inputs = Seq(null, "", " ", "\t\n", "  lead", "trail  ", "a  b\t\tc\nd",
+      "MiXeD Case", " \t Both  Ends \n", "one")
+    val got = inputs.toDF("x")
+      .select(col("x"), graft.functions.GraftFunctions.tokenize(col("x")).as("n"),
+        seedTokenize(col("x")).as("h"))
+    assert(got.filter(not(col("n") <=> col("h"))).isEmpty)
+    assert(got.filter(col("x").isNull && col("n").isNull).count() == 1)
+    assert(got.filter(col("x") === " \t Both  Ends \n").head().getSeq[String](1) ==
+      Seq("both", "ends"))
+  }
+
+  test("queries that differ only in their statistics share one compiled scoring stage") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    def compiles(q: String): Long = {
+      val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      Search.search(docs, "doc_id", Fields, q, 10, aliveCol = Some("is_alive"),
+        scorer = "bm25", combine = "max").collect()
+      CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+    }
+    compiles("kim")
+    // "seoul" has another df, so other idf and score constants
+    assert(compiles("seoul") == 0)
+  }
+
+  test("two-scan kernel equals the explode/join search on random corpora") {
+    val rnd = new scala.util.Random(7)
+    val vocab = Seq("kim", "lee", "park", "choi", "aws", "seoul")
+    val blanks = Seq(null, "", " ", "\t\n")
+    def text(): String =
+      if (rnd.nextInt(5) == 0) blanks(rnd.nextInt(blanks.size))
+      else Seq.fill(1 + rnd.nextInt(4)) {
+        val w = vocab(rnd.nextInt(vocab.size))
+        if (rnd.nextBoolean()) w.toUpperCase else w
+      }.mkString(Seq(" ", "  ", "\t")(rnd.nextInt(3)), " ", Seq("", " ", "\n")(rnd.nextInt(3)))
+    def corpus(n: Int) = {
+      val texts = Seq.fill(n)((text(), text(), text()))
+      texts.indices.map { i =>
+        // every fourth doc copies an earlier one's text: tied scores
+        val (a, b, c) = texts(if (i % 4 == 3) i - 3 else i)
+        (f"d$i%03d", Seq("o1", "o2", null)(rnd.nextInt(3)),
+          if (rnd.nextInt(6) == 0) 0 else 1, a, b, c) // 1 in 6 soft-deleted
+      }.toDF("doc_id", "owner", "is_alive", "f1", "f2", "f3")
+    }
+    val flds = Seq("f1" -> 3.0, "f2" -> 1.0, "f3" -> 1.0)
+    val configs = for (scorer <- Seq("tfidf", "bm25"); combine <- Seq("sum", "max");
+                       tb <- Seq(0.0, 0.3, 1.0)) yield (scorer, combine, tb)
+    val blank = Seq(("a", "o1", 1, "", " ", null), ("b", "o1", 1, "\t", "", "  "))
+      .toDF("doc_id", "owner", "is_alive", "f1", "f2", "f3")
+    val empty = blank.limit(0)
+    val cases = Seq(
+      (corpus(40), "kim lee kim", None, 7),      // repeated query term
+      (corpus(40), "Park AWS zzz", Some("o1"), 5), // owner filter, absent term
+      (corpus(24), "seoul", Some("o2"), 3),
+      (blank, "kim", None, 5),                   // all-blank: avgdl guard
+      (empty, "kim lee", None, 5))
+    for ((docs, q, owner, limit) <- cases;
+         nAlive = docs.filter(col("is_alive") === 1).count();
+         (scorer, combine, tb) <- configs) {
+      val ctx = s"q=$q owner=$owner $scorer/$combine/$tb"
+      val got = Search.search(docs, "doc_id", flds, q, limit,
+        ownerFilter = owner.map("owner" -> _), aliveCol = Some("is_alive"),
+        scorer = scorer, combine = combine, tieBreaker = tb).collect()
+      val want = seedSearch(docs, "doc_id", flds, q, limit,
+        ownerFilter = owner.map("owner" -> _), aliveCol = Some("is_alive"),
+        numDocs = Some(nAlive), scorer = scorer, combine = combine,
+        tieBreaker = tb).collect()
+      assert(got.headOption.map(_.schema) == want.headOption.map(_.schema), ctx)
+      assert(got.map(_.getAs[String]("doc_id")).toSeq ==
+        want.map(_.getAs[String]("doc_id")).toSeq, ctx)
+      for ((g, w) <- got.zip(want)) {
+        val (a, b) = (g.getAs[Double]("_score"), w.getAs[Double]("_score"))
+        assert(math.abs(a - b) <= 1e-9 * math.max(math.abs(a), math.abs(b)), s"$ctx: $a vs $b")
+        assert(BigDecimal(a).setScale(4, BigDecimal.RoundingMode.HALF_UP) ==
+          BigDecimal(b).setScale(4, BigDecimal.RoundingMode.HALF_UP), ctx)
+        assert(g.toSeq.init == w.toSeq.init, ctx)
+      }
+    }
+    assert(Search.search(corpus(40), "doc_id", flds, "kim", 40).count() > 7,
+      "the random corpora hit more docs than the limits keep")
+  }
+
+  /** `GraftFunctions.tokenize` in its earlier `filter`-lambda form. */
+  private def seedTokenize(text: Column): Column =
+    filter(split(lower(text), "\\s+"), t => t =!= lit(""))
+
+  /** `Search.search` as it was before the two-scan kernel: stack the
+    * fields, explode the postings, aggregate tf, df and avgdl, join the
+    * statistics back, combine per doc, join the scores back to the
+    * rows. The reference the kernel is checked against. */
+  private def seedSearch(docs: DataFrame, idCol: String, fields: Seq[(String, Double)],
+                         query: String, limit: Int,
+                         ownerFilter: Option[(String, String)] = None,
+                         aliveCol: Option[String] = None,
+                         numDocs: Option[Long] = None,
+                         scorer: String = "tfidf",
+                         combine: String = "sum",
+                         k1: Double = 1.2, b: Double = 0.75,
+                         tieBreaker: Double = 0.0): DataFrame = {
+    val queryTerms = query.toLowerCase.split("\\s+").filter(_.nonEmpty).toSeq
+    val filtered0 = ownerFilter.fold(docs) { case (c, v) => docs.filter(col(c) === v) }
+    val filtered = aliveCol.fold(filtered0)(c => filtered0.filter(col(c) === 1))
+    val n = numDocs.getOrElse(filtered.count())
+    val stacked = array(fields.map { case (f, bst) =>
+      struct(lit(f).as("field"), lit(bst).as("boost"), seedTokenize(col(f)).as("toks"))
+    }: _*)
+    val fieldRows = filtered
+      .select(col(idCol).as("_doc"), explode(stacked).as("ft"))
+      .select(col("_doc"), col("ft.field").as("field"),
+        col("ft.boost").as("boost"), col("ft.toks").as("toks"))
+    val posts = fieldRows
+      .select(col("_doc"), col("field"), col("boost"),
+        size(col("toks")).cast("double").as("dl"),
+        explode(col("toks")).as("term"))
+      .filter(col("term").isin(queryTerms: _*))
+    val tf = posts.groupBy("field", "boost", "term", "_doc")
+      .agg(count(lit(1)).as("tf"), max(col("dl")).as("dl"))
+    val idfs = broadcast(
+      tf.groupBy("field", "term").agg(count(lit(1)).as("df"))
+        .select(col("field"), col("term"),
+          log(lit(1.0) + (lit(n.toDouble) - col("df") + lit(0.5)) / (col("df") + lit(0.5)))
+            .as("idf")))
+    val termScored = scorer match {
+      case "tfidf" =>
+        tf.join(idfs, Seq("field", "term"))
+          .withColumn("tscore", col("tf") * col("idf"))
+      case "bm25" =>
+        val avgdls = broadcast(
+          fieldRows.groupBy("field")
+            .agg(sum(size(col("toks"))).as("s"), count(lit(1)).as("c"))
+            .select(col("field"),
+              when(col("s") === 0 || col("c") === 0, lit(1.0))
+                .otherwise(col("s").cast("double") / col("c")).as("avgdl")))
+        tf.join(idfs, Seq("field", "term")).join(avgdls, Seq("field"))
+          .withColumn("tscore",
+            col("idf") * (col("tf") * lit(k1 + 1.0)) /
+              (col("tf") + lit(k1) *
+                (lit(1.0 - b) + lit(b) * col("dl") / col("avgdl"))))
+    }
+    val perField = termScored
+      .groupBy("_doc", "field", "boost")
+      .agg(sum(col("tscore")).as("fsum"))
+      .withColumn("wscore", col("boost") * col("fsum"))
+    val combined = combine match {
+      case "sum" => perField.groupBy("_doc").agg(sum(col("wscore")).as("_score"))
+      case "max" if tieBreaker == 0.0 =>
+        perField.groupBy("_doc").agg(max(col("wscore")).as("_score"))
+      case "max" =>
+        perField.groupBy("_doc")
+          .agg(max(col("wscore")).as("_best"), sum(col("wscore")).as("_sum"))
+          .select(col("_doc"),
+            (col("_best") + lit(tieBreaker) * (col("_sum") - col("_best")))
+              .as("_score"))
+    }
+    filtered.join(combined, filtered(idCol) === combined("_doc"))
+      .drop("_doc")
+      .orderBy(round(col("_score"), 4).desc, col(idCol).asc)
+      .limit(limit)
   }
 }
