@@ -1,11 +1,11 @@
 package graft.api
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoder, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 import graft.model.{AlbumEntry, Bizcard, KnowsEdge, PersonVertex, PymkResponse}
-import graft.operators.{GraphBuild, Parse, Pymk, Search, SearchIndex}
+import graft.operators.{GraphAnalytics, GraphBuild, Packing, Pymk, Search, SearchIndex}
 import graft.streaming.CardStream
 
 /** The user-facing engine facade — the complete query surface of the
@@ -21,6 +21,13 @@ import graft.streaming.CardStream
   *                      README.md:182-219, SURVEY §7.5-5)
   *  - [[userAlbum]]   = the by-user S3 copy layout (A7)
   *  - [[clearGraph]] / [[dumpGraph]] = the admin operations (H3/H4/E5)
+  *
+  * Beyond that surface it keeps only what needs engine state: reads
+  * served from its memo ([[phraseSearch]], [[fuzzySearch]],
+  * [[linkPredict]], [[node2vec]]) and the PYMK variants that resolve a
+  * user name ([[pymkPpr]], [[pymkSalsa]]). Every other operator in
+  * `graft.operators` is called directly on [[searchTable]] /
+  * [[vertices]] / [[edges]].
   *
   * Tables live as parquet under a warehouse directory; all writes go
   * through the replay-idempotent LWW merges, so re-ingesting any batch
@@ -212,6 +219,8 @@ class GraftEngine(spark: SparkSession, warehouse: String) {
     * been written; the model case-class schemas keep `search()` /
     * `pymk()` / `userAlbum()` total (empty result, correct shape). */
   private def emptyOf[T: Encoder]: DataFrame = spark.emptyDataset[T].toDF()
+  private def emptyOf(ddl: String): DataFrame =
+    spark.createDataFrame(java.util.Collections.emptyList[Row](), StructType.fromDDL(ddl))
 
   def searchTable: DataFrame =
     table(searchPath, emptyOf(Encoders.product[Bizcard]))
@@ -253,19 +262,22 @@ class GraftEngine(spark: SparkSession, warehouse: String) {
   def pymk(user: String, limit: Int = 10): DataFrame =
     memoized(cacheKey("pymk", user, limit.toString)) { pymkUncached(user, limit) }
 
-  private def pymkUncached(user: String, limit: Int): DataFrame = {
-    val anchors = Pymk.anchorByName(vertices, user).collect()
-    if (anchors.isEmpty) return emptyOf(Encoders.product[PymkResponse])
-    val scored = Pymk.recommendWithProps(vertices, edges,
-      lit(anchors.head.getString(0)), limit)
-    scored.select(
-      array(col("name")).as("name"),
-      array(col("email")).as("email"),
-      array(col("phone_number")).as("phone_number"),
-      array(col("company")).as("company"),
-      array(col("job_title")).as("job_title"),
-      col("score").cast("double").as("score"))
-  }
+  private def pymkUncached(user: String, limit: Int): DataFrame =
+    anchorOf(user).fold(emptyOf(Encoders.product[PymkResponse])) { anchor =>
+      Pymk.recommendWithProps(vertices, edges, lit(anchor), limit).select(
+        array(col("name")).as("name"),
+        array(col("email")).as("email"),
+        array(col("phone_number")).as("phone_number"),
+        array(col("company")).as("company"),
+        array(col("job_title")).as("job_title"),
+        col("score").cast("double").as("score"))
+    }
+
+  /** The anchor vertex id of a case-insensitive user name
+    * ([[Pymk.anchorByName]]: the smallest matching id); None for a name
+    * no vertex has. */
+  private def anchorOf(user: String): Option[String] =
+    Pymk.anchorByName(vertices, user).collect().headOption.map(_.getString(0))
 
   /** Soft delete: flip is_alive to 0 for a doc id (B15; README.md:97).
     * A direct table overwrite (atomic swap), NOT an LWW merge — the
@@ -312,356 +324,9 @@ class GraftEngine(spark: SparkSession, warehouse: String) {
   }
 
   /** H4: full-graph debug dump (driver-side, admin-only). */
-  def dumpGraph(): Array[org.apache.spark.sql.Row] = vertices.collect()
+  def dumpGraph(): Array[Row] = vertices.collect()
 
-  // --------------------------------------------- extension surface
-  // (the training-data-pipeline operators, exposed with the engine's
-  // own tables pre-wired; each delegates to the operator module)
-
-  /** All-users PYMK (batch serving shape): top-`limit` per anchor. */
-  /** PYMK with the "you both know …" explanation
-    * ([[graft.operators.Pymk.recommendWithReasons]]): (id, score,
-    * reasons) for an anchor vertex id — the top mutual friends each
-    * suggestion rides on, comma-joined ascending. */
-  def pymkExplained(vertexId: String, limit: Int = 10,
-                    nReasons: Int = 3): DataFrame =
-    Pymk.recommendWithReasons(edges, lit(vertexId), limit, nReasons)
-
-  def pymkAll(limit: Int = 10): DataFrame =
-    Pymk.recommendAll(edges, limit)
-
-  /** Exact dedup of the search table by content_id (the declared-
-    * but-never-used dedup intent of the reference, realized — B9). */
-  def dedupByContent(): DataFrame =
-    graft.operators.Dedup.exact(searchTable, "content_id", "doc_id")
-
-  /** Near-duplicate card pairs by MinHash+LSH over a text column. */
-  def nearDuplicates(df: DataFrame, textCol: String, idCol: String,
-                     minJaccard: Double = 0.8): DataFrame =
-    graft.operators.Dedup.minhashLshPairs(df, textCol, idCol,
-      minJaccard = minJaccard)
-
-  /** ANN cosine top-k of `corpus` for `queries` (exact; see
-    * [[graft.operators.Similarity]] for the LSH/IVF scale paths). */
-  def annTopK(queries: DataFrame, corpus: DataFrame, k: Int,
-              qidCol: String = "vec_id", qvecCol: String = "embedding",
-              idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
-    graft.operators.Similarity.bruteForceTopK(
-      queries, corpus, qidCol, qvecCol, idCol, vecCol, k)
-
-  /** Product-quantization index over an embedding table: train
-    * per-subspace codebooks and compress the corpus to m-code rows —
-    * the index is bytes instead of float vectors (64 dims at m=8 →
-    * 32× smaller), which is what keeps a 100 TB corpus's ANN index
-    * executor-resident. Query with [[pqSearch]].
-    * @return (codebook (sub, cid, cvec), encoded (id, codes, cnorm2)) */
-  def pqIndex(df: DataFrame, idCol: String, vecCol: String,
-              m: Int = 8, ksub: Int = 256): (DataFrame, DataFrame) = {
-    val cb = graft.operators.Pq.pqTrain(df, idCol, vecCol, m, ksub)
-    (cb, graft.operators.Pq.pqEncode(df, cb, idCol, vecCol))
-  }
-
-  /** ADC top-k over a [[pqIndex]] — per-query lookup tables, no
-    * float-vector math against the corpus (see
-    * [[graft.operators.Pq.pqTopK]]). */
-  def pqSearch(queries: DataFrame, encoded: DataFrame, codebook: DataFrame,
-               k: Int, qidCol: String = "vec_id",
-               qvecCol: String = "embedding"): DataFrame =
-    graft.operators.Pq.pqTopK(queries, encoded, codebook, qidCol, qvecCol, k)
-
-  /** Two-level IVF-PQ index: k-means coarse cells
-    * ([[graft.operators.Similarity.kmeansFit]]) over the corpus, PQ
-    * codes inside them — nprobe bounds which rows a query scans, codes
-    * bound row cost and index size (the FAISS IVFPQ layout as parquet
-    * tables; see [[graft.operators.Pq.ivfPqEncode]]).
-    * @return (centroids (cid, cvec), codebook (sub, cid, cvec),
-    *         encoded (id, cell, codes, cnorm2)) */
-  def ivfPqIndex(df: DataFrame, idCol: String, vecCol: String,
-                 nCells: Int = 64, m: Int = 8, ksub: Int = 256): (DataFrame, DataFrame, DataFrame) = {
-    val (_, cents) = graft.operators.Similarity.kmeansFit(df, idCol, vecCol, nCells)
-    val cb = graft.operators.Pq.pqTrain(df, idCol, vecCol, m, ksub)
-    (cents, cb, graft.operators.Pq.ivfPqEncode(df, cents, cb, idCol, vecCol))
-  }
-
-  /** Cell-pruned ADC top-k over an [[ivfPqIndex]]. */
-  def ivfPqSearch(queries: DataFrame, encoded: DataFrame, codebook: DataFrame,
-                  centroids: DataFrame, k: Int, nprobe: Int = 4,
-                  qidCol: String = "vec_id",
-                  qvecCol: String = "embedding"): DataFrame =
-    graft.operators.Pq.ivfPqTopK(queries, encoded, codebook, centroids,
-      qidCol, qvecCol, k, nprobe)
-
-  /** Point-in-interval (BETWEEN) join as a binned equi-join — no
-    * nested-loop pair blowup (see [[graft.operators.RangeJoin]]).
-    * `binWidth` is in axis units (days for dates, micros for
-    * timestamps); pick it near the median interval length. */
-  def rangeJoin(points: DataFrame, intervals: DataFrame,
-                ptCol: String, startCol: String, endCol: String,
-                valueCols: Seq[String], binWidth: Long): DataFrame =
-    graft.operators.RangeJoin.pointInInterval(
-      points, intervals, ptCol, startCol, endCol, valueCols, binWidth)
-
-  /** Interval-overlap join (closed intervals), binned with arithmetic
-    * first-shared-bin dedup (see [[graft.operators.RangeJoin]]). */
-  def intervalOverlap(left: DataFrame, right: DataFrame,
-                      lStart: String, lEnd: String, lCols: Seq[String],
-                      rStart: String, rEnd: String, rCols: Seq[String],
-                      binWidth: Long): DataFrame =
-    graft.operators.RangeJoin.intervalOverlap(
-      left, right, lStart, lEnd, lCols, rStart, rEnd, rCols, binWidth)
-
-  /** Train a bigram reference LM over a clean corpus — the
-    * CCNet-style quality-filter model (see
-    * [[graft.operators.NgramLm]]). */
-  def lmTrain(docs: DataFrame, textCol: String, minCount: Long = 1): DataFrame =
-    graft.operators.NgramLm.train(docs, textCol, minCount)
-
-  /** Perplexity-score documents against an [[lmTrain]]ed model:
-    * (id, n_bigrams, lp_micros, ppl_milli) — filter on `ppl_milli`
-    * to keep fluent text. */
-  def lmScore(docs: DataFrame, idCol: String, textCol: String,
-              model: DataFrame): DataFrame =
-    graft.operators.NgramLm.score(docs, idCol, textCol, model)
-
-  /** Train the fasttext/GPT-3-style quality classifier: logistic
-    * regression over hashed n-gram buckets, positives = curated
-    * target docs, negatives = raw crawl — deterministic full-batch GD
-    * (see [[graft.operators.QualityLr]]). */
-  def qualityTrain(labeled: DataFrame, idCol: String, textCol: String,
-                   labelCol: String, buckets: Int = 65536, iters: Int = 3,
-                   lr: Double = 1.0): DataFrame =
-    graft.operators.QualityLr.train(labeled, idCol, textCol, labelCol,
-      buckets, iters, lr)
-
-  /** Keep-probability `p = σ(x·w)` per document under a
-    * [[qualityTrain]]ed model — threshold or Pareto-sample on
-    * `p_micros` to filter a crawl (GPT-3 filters exactly this way). */
-  def qualityScore(docs: DataFrame, idCol: String, textCol: String,
-                   model: DataFrame, buckets: Int = 65536): DataFrame =
-    graft.operators.QualityLr.score(docs, idCol, textCol, model, buckets)
-
-  /** GPT-3's Pareto keep-rule over [[qualityScore]] output: keep a
-    * doc iff `pareto(α) > 1 − p` with a replayable id-hash draw —
-    * quality-weighted selection with a deliberate long tail. */
-  def qualitySelect(scored: DataFrame, idCol: String,
-                    alpha: Double = 9.0): DataFrame =
-    graft.operators.QualityLr.paretoSelect(scored, idCol, alpha)
-
-  /** Platt-scale a trained [[qualityTrain]] model's margins
-    * ([[graft.operators.QualityLr.plattFit]]) — FIT the calibration
-    * [[evalCalibration]] only measures; apply with
-    * [[graft.operators.QualityLr.plattApply]]. */
-  def calibrateFit(margins: DataFrame, marginCol: String,
-                   labelCol: String, iters: Int = 3,
-                   lr: Double = 0.3): DataFrame =
-    graft.operators.QualityLr.plattFit(margins, marginCol, labelCol,
-      iters, lr)
-
-  /** Top distinctive terms per class/cluster
-    * ([[graft.operators.TextAnalysis.classTfidf]], the BERTopic
-    * labeling score) — name kmeans/LPA clusters or corpus slices. */
-  def labelClusters(docs: DataFrame, classCol: String, textCol: String,
-                    topN: Int = 5): DataFrame =
-    graft.operators.TextAnalysis.classTfidf(docs, classCol, textCol, topN)
-
-  /** Multinomial naive Bayes — the counting-only generative second
-    * opinion next to [[qualityTrain]]: the fit is one aggregation
-    * pass (see [[graft.operators.NaiveBayes]]). Returns
-    * (model, priors); feed both to [[naiveBayesScore]]. */
-  def naiveBayesTrain(labeled: DataFrame, idCol: String, textCol: String,
-                      labelCol: String): (DataFrame, DataFrame) =
-    (graft.operators.NaiveBayes.train(labeled, idCol, textCol, labelCol),
-      graft.operators.NaiveBayes.priors(labeled, idCol, textCol, labelCol))
-
-  /** Class log-posteriors + argmax prediction per doc under a
-    * [[naiveBayesTrain]]ed (model, priors) pair. */
-  def naiveBayesScore(docs: DataFrame, idCol: String, textCol: String,
-                      model: DataFrame, priors: DataFrame): DataFrame =
-    graft.operators.NaiveBayes.score(docs, idCol, textCol, model, priors)
-
-  /** DSIR data selection in one call: fit target and raw feature
-    * histograms, weigh every raw doc by the target/raw log-ratio, and
-    * Gumbel-sample `k` docs ∝ exp(weight) without replacement — all
-    * deterministic (see [[graft.operators.Dsir]]). */
-  def dsirSelect(raw: DataFrame, target: DataFrame, idCol: String,
-                 textCol: String, k: Int, buckets: Int = 65536): DataFrame = {
-    val d = graft.operators.Dsir
-    d.gumbelTopK(
-      d.importanceWeights(raw, idCol, textCol,
-        d.fitFeatures(target, textCol, buckets),
-        d.fitFeatures(raw, textCol, buckets), buckets),
-      idCol, k)
-  }
-
-  /** GraphX analytics over the engine's graph: PageRank centrality. */
-  def pageRank(iters: Int = 10): DataFrame =
-    graft.operators.GraphAnalytics.pageRank(vertices,
-      edges.withColumn("weight", coalesce(col("weight"), lit(1.0))), iters)
-
-  /** GraphX analytics: connected components (community seeds). */
-  def communities(): DataFrame =
-    graft.operators.GraphAnalytics.connectedComponents(vertices,
-      edges.withColumn("weight", coalesce(col("weight"), lit(1.0))))
-
-  /** Modularity-greedy communities — one-level synchronous Louvain
-    * ([[graft.operators.GraphAnalytics.louvainSync]]); the
-    * quality-driven alternative to the frequency-driven LPA labels
-    * [[communityQuality]] defaults to. */
-  def communitiesLouvain(rounds: Int = 2): DataFrame =
-    graft.operators.GraphAnalytics.louvainSync(edges, rounds)
-
-  /** Per-person triangle count — the clustering/cohesion signal
-    * (degree-oriented DataFrame plan; string ids ride the GraphX
-    * mapping). */
-  def triangles(): DataFrame =
-    graft.operators.GraphAnalytics.triangleCounts(vertices,
-      edges.withColumn("weight", coalesce(col("weight"), lit(1.0))))
-
-  /** SemDeDup semantic dedup over an embedding table (cluster with
-    * deterministic k-means, prune near-identical members per cluster);
-    * returns (survivors, ivfTopK-ready centroids). */
-  def semanticDedup(df: DataFrame, idCol: String, vecCol: String,
-                    k: Int, threshold: Double = 0.95): (DataFrame, DataFrame) =
-    graft.operators.Similarity.semDeDup(df, idCol, vecCol, k, threshold)
-
-  /** Sampled harmonic centrality over the knows graph — the
-    * distance-based influence signal (multi-source truncated BFS;
-    * string person ids need no arithmetic, so the DF plan applies
-    * directly). */
-  def centrality(numSources: Int = 8, maxDepth: Int = 4): DataFrame =
-    graft.operators.GraphAnalytics.harmonicCentrality(edges,
-      numSources, maxDepth)
-
-  /** Sampled betweenness centrality over the knows graph — the
-    * brokerage signal (who sits BETWEEN communities), complementing
-    * [[centrality]]'s closeness: Brandes forward/backward passes from
-    * the same hash-spread source sample. */
-  def betweenness(numSources: Int = 8, maxDepth: Int = 3): DataFrame =
-    graft.operators.GraphAnalytics.betweennessSampled(edges,
-      numSources, maxDepth)
-
-  /** HITS hubs & authorities over the knows graph — who broadcasts
-    * (hub) vs who is followed (authority); the directed complement to
-    * [[pageRank]]. */
-  def hits(iters: Int = 3): DataFrame =
-    graft.operators.GraphAnalytics.hits(edges, iters)
-
-  /** SALSA hubs & authorities over the knows graph — the
-    * degree-normalized [[hits]] (the Twitter-WTF people-rec scorer):
-    * walk mass splits across a vertex's edges, removing HITS's bias
-    * toward dense clusters. */
-  def salsa(iters: Int = 3): DataFrame =
-    graft.operators.GraphAnalytics.salsa(edges, iters)
-
-  /** Edge reciprocity of the knows graph — the fraction of directed
-    * edges whose reverse exists (mutual card exchange), one row. */
-  def reciprocity(): DataFrame =
-    graft.operators.GraphAnalytics.reciprocity(edges)
-
-  /** Power-law degree-exponent MLE of the knows graph's degree tail
-    * (`d ≥ dmin`) — the scale-free-ness health readout; α drifting
-    * low flags hub blowup before a wedge join does. */
-  def degreeExponent(dmin: Int = 2): DataFrame =
-    graft.operators.GraphAnalytics.powerLawAlpha(edges, dmin)
-
-  /** Personalized-SALSA PYMK (the Twitter-WTF scorer): [[salsa]]
-    * restricted to `user`'s circle-of-trust bipartite view, with the
-    * same self/friend exclusion contract as [[pymk]] — the
-    * link-analysis alternative to the 2-hop path-count ranking.
-    * `user` is a case-insensitive name, resolved like [[pymk]];
-    * unknown names return the empty frame. */
-  def pymkSalsa(user: String, limit: Int = 10, iters: Int = 3): DataFrame = {
-    val anchors = Pymk.anchorByName(vertices, user).collect()
-    if (anchors.isEmpty)
-      return spark.createDataFrame(
-        java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("id",
-            org.apache.spark.sql.types.StringType),
-          org.apache.spark.sql.types.StructField("score_micros",
-            org.apache.spark.sql.types.LongType))))
-    graft.operators.GraphAnalytics.salsaPersonalized(
-      edges, lit(anchors.head.getString(0)), iters, limit)
-  }
-
-  /** Rich-club coefficient of the knows graph at degree threshold
-    * `k` — density of the hub-induced subgraph; φ rising toward 1
-    * warns that hub-hub wedges will dominate neighborhood joins. */
-  def richClub(k: Int): DataFrame =
-    graft.operators.GraphAnalytics.richClub(edges, k)
-
-  /** Multi-hop PYMK via personalized PageRank: random walk with
-    * restart from the user's vertex; excludes the user and their
-    * direct friends (the same `neq`/`without` contract as [[pymk]]),
-    * ranked by walk mass. Where [[pymk]] counts exactly-2-hop paths,
-    * this folds in longer paths with geometric damping — the
-    * "distant but strongly connected" candidates the reference's
-    * traversal can't see. */
-  def pymkPpr(user: String, limit: Int = 10, iters: Int = 10): DataFrame = {
-    val anchors = Pymk.anchorByName(vertices, user).collect()
-    if (anchors.isEmpty)
-      return spark.createDataFrame(
-        java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("id",
-            org.apache.spark.sql.types.StringType),
-          org.apache.spark.sql.types.StructField("rank",
-            org.apache.spark.sql.types.DoubleType))))
-    val anchor = anchors.head.getString(0)
-    // walk the UNDIRECTED view — the reference's both('knows') contract
-    // (a directed walk from a vertex with only in-edges goes nowhere)
-    val undirected = Pymk.undirected(edges)
-      .select(col("from").as("src"), col("to").as("dst"))
-    val ranks = graft.operators.GraphAnalytics.personalizedPageRankDF(
-      undirected, lit(anchor), iters)
-    val friends = Pymk.undirected(edges)
-      .filter(col("from") === anchor).select(col("to").as("id")).distinct()
-    ranks.filter(col("rank") > 0 && col("id") =!= anchor)
-      .join(friends, Seq("id"), "left_anti")
-      .orderBy(desc("rank"), asc("id"))
-      .limit(limit)
-  }
-
-  /** Top-`k` most central people by PageRank — the "influencers" view.
-    * Global top-k: `orderBy.limit` plans as TakeOrderedAndProject
-    * (per-partition heaps + driver merge — no global sort; the grouped
-    * sibling is [[graft.operators.TopK.grouped]]). */
-  def influencers(k: Int = 10, iters: Int = 10): DataFrame =
-    pageRank(iters).orderBy(desc("rank"), asc("id")).limit(k)
-
-  /** As-of join on the serving surface — align an event/metric frame
-    * to the latest (or next, or nearest) state row per key; the
-    * point-in-time enrichment step of a training pipeline (features
-    * as-of label time — no leakage from the future). Delegates to
-    * [[graft.operators.AsOfJoin.asOf]]: one shuffle on `keyCol`,
-    * direction ∈ backward | forward | nearest. Not memoized — inputs
-    * are caller frames, not engine tables, so there is no
-    * write-invalidation fence to key a cache on. */
-  def asOf(left: DataFrame, right: DataFrame, keyCol: String, tsCol: String,
-           valueCols: Seq[String],
-           direction: String = "backward"): DataFrame =
-    graft.operators.AsOfJoin.asOf(left, right, keyCol, tsCol,
-      valueCols, direction)
-
-  /** Length-bucketed batch assembly: assign each document an
-    * equal-frequency bucket by token count (pads to the bucket max,
-    * not the corpus max). Distributed exact-rank form by default
-    * ([[graft.operators.Packing.lengthBucketsScalable]]); the global-
-    * window `ntile` spec form is reachable with `scalable = false`
-    * for toy-scale cross-checks. */
-  def lengthBuckets(df: DataFrame, idCol: String, tokenCol: String,
-                    buckets: Int, scalable: Boolean = true): DataFrame =
-    if (scalable)
-      graft.operators.Packing.lengthBucketsScalable(df, idCol, tokenCol, buckets)
-    else graft.operators.Packing.lengthBuckets(df, idCol, tokenCol, buckets)
-
-  /** Sequence packing: concatenate documents (in id order) into
-    * fixed-token-budget training slots — returns (row, slot, offset)
-    * via the distributed prefix-scan
-    * ([[graft.operators.Packing.packScalable]]). */
-  def packSequences(df: DataFrame, idCol: String, tokenCol: String,
-                    budget: Long): DataFrame =
-    graft.operators.Packing.packScalable(df, idCol, tokenCol, budget)
+  // ------------- memo-backed reads, and PYMK variants by user name
 
   /** match_phrase over one search field: exact consecutive-token
     * matches ranked by phrase frequency, soft-deleted docs excluded
@@ -689,79 +354,20 @@ class GraftEngine(spark: SparkSession, warehouse: String) {
   /** Link prediction over the knows graph: top-k non-friend candidates
     * per person under a classic local index (`resource_allocation` |
     * `jaccard` | `common_neighbors` | `preferential_attachment`) —
-    * the tunable-scorer generalization of [[pymkAll]] (raw path
-    * counts) and the Adamic-Adar upgrade. Memoized per (k, measure). */
+    * the tunable-scorer generalization of [[Pymk.recommendAll]] (raw
+    * path counts) and the Adamic-Adar upgrade. Memoized per
+    * (k, measure). */
   def linkPredict(k: Int = 10,
                   measure: String = "resource_allocation"): DataFrame =
     memoized(cacheKey("linkpred", k.toString, measure)) {
-      graft.operators.GraphAnalytics.linkPredict(
-        edges.select(col("src"), col("dst")), k, measure)
+      GraphAnalytics.linkPredict(edges.select(col("src"), col("dst")), k, measure)
     }
 
-  /** Sliding token-window chunking of a caller document frame —
-    * overlapping fixed-size passages for RAG/pretraining prep (not
-    * memoized: caller frames have no write-invalidation fence). */
-  def chunk(df: DataFrame, idCol: String, textCol: String,
-            window: Int, stride: Int): DataFrame =
-    graft.operators.TextAnalysis.chunkDocuments(df, idCol, textCol,
-      window, stride)
-
-  /** BPE subword tokenizer on caller frames: learn `numMerges` merges
-    * ([[graft.operators.Bpe.train]]), then encode with
-    * [[bpeEncode]]. */
-  def bpeTrain(df: DataFrame, textCol: String,
-               numMerges: Int): Seq[(String, String)] =
-    graft.operators.Bpe.train(df, textCol, numMerges)
-
-  /** Encode a text column into BPE pieces under a learned merge table
-    * (one narrow codegen scan; decode via
-    * [[graft.operators.Bpe.decode]]). */
-  def bpeEncode(df: DataFrame, textCol: String,
-                merges: Seq[(String, String)]): DataFrame =
-    df.withColumn("pieces",
-      graft.operators.Bpe.encode(col(textCol), merges))
-
-  /** C4-recipe line+page cleaning of a caller document frame
-    * ([[graft.operators.TextAnalysis.c4Clean]]) — one narrow HOF
-    * scan, no shuffle; not memoized (caller frames have no
-    * write-invalidation fence). */
-  def c4Clean(df: DataFrame, idCol: String, textCol: String,
-              minWords: Int = 5, requireTerminal: Boolean = true,
-              bannedLine: Seq[String] = Seq("javascript"),
-              bannedDoc: Seq[String] = Seq("lorem ipsum", "{"),
-              minKeptLines: Int = 1): DataFrame =
-    graft.operators.TextAnalysis.c4Clean(df, idCol, textCol, minWords,
-      requireTerminal, bannedLine, bannedDoc, minKeptLines)
-
-  /** Domain-provenance curation of a caller frame with a URL column:
-    * parse, blocklist, per-domain cap
-    * ([[graft.operators.UrlOps.curateByDomain]]). */
-  def curateByDomain(df: DataFrame, idCol: String, urlCol: String,
-                     blockedDomains: Seq[String] = Nil,
-                     maxPerDomain: Int = 0): DataFrame =
-    graft.operators.UrlOps.curateByDomain(df, idCol, urlCol,
-      blockedDomains, maxPerDomain)
-
-  /** Fit a k-component PCA basis over an embedding column (one moment
-    * scan + driver Jacobi; [[graft.operators.Pca.pcaFit]]), returning
-    * (basis, explained variance, mean) for [[pcaProject]]. */
-  def pcaFit(df: DataFrame, vecCol: String, k: Int):
-      (Array[Array[Double]], Array[Double], Array[Double]) =
-    graft.operators.Pca.pcaFit(df, vecCol, k)
-
-  /** Project an embedding column onto a fitted basis — narrow codegen
-    * mat-vec scan ([[graft.operators.Pca.project]]). */
-  def pcaProject(df: DataFrame, vecCol: String, outCol: String,
-                 basis: Array[Array[Double]],
-                 mean: Array[Double]): DataFrame =
-    graft.operators.Pca.project(df, vecCol, outCol, basis, mean)
-
   /** node2vec biased walk corpus over the ENGINE's graph (memoized,
-    * write-invalidated like [[pageRank]]): p/q-biased second-order
-    * walks, bit-replayable ([[graft.operators.GraphAnalytics
-    * .node2vecWalks]]). The walk operator's arithmetic coin needs
-    * NUMERIC vertex ids; the engine's are md5-8 strings, so the facade
-    * assigns dense longs with [[graft.operators.Packing.globalRank]]
+    * write-invalidated): p/q-biased second-order walks, bit-replayable
+    * ([[GraphAnalytics.node2vecWalks]]). The walk operator's arithmetic
+    * coin needs NUMERIC vertex ids; the engine's are md5-8 strings, so
+    * this assigns dense longs with [[Packing.globalRank]]
     * (range-partition + per-partition row_number + prefix-sum lift —
     * one shuffle, NO single-partition global window: a serving graph
     * can still be 10⁹ vertices) and maps the corpus back to string
@@ -771,7 +377,7 @@ class GraftEngine(spark: SparkSession, warehouse: String) {
     memoized(cacheKey("node2vec", walksPerVertex.toString,
       length.toString, p.toString, q.toString)) {
       val e = edges.select(col("src"), col("dst"))
-      val (ranked, _) = graft.operators.Packing.globalRank(
+      val (ranked, _) = Packing.globalRank(
         e.select(col("src").as("v"))
           .unionAll(e.select(col("dst").as("v"))).distinct(),
         Seq("v"))
@@ -782,1368 +388,43 @@ class GraftEngine(spark: SparkSession, warehouse: String) {
         .join(verts.withColumnRenamed("v", "dst")
           .withColumnRenamed("vid", "dst_id"), "dst")
         .select(col("src_id").as("src"), col("dst_id").as("dst"))
-      graft.operators.GraphAnalytics
-        .node2vecWalks(eNum, walksPerVertex, length, p, q)
+      GraphAnalytics.node2vecWalks(eNum, walksPerVertex, length, p, q)
         .join(verts.withColumnRenamed("vid", "vertex"), "vertex")
         .select(col("walk_id"), col("step"), col("v").as("vertex"))
     }
 
-  /** Cross-corpus fuzzy join (record linkage / train-vs-eval overlap):
-    * pairs of rows whose texts meet the `minJaccard` n-gram similarity
-    * bar. Scale form by default — both sides MinHash-banded with exact
-    * verification on same-bucket candidates only
-    * ([[graft.operators.Dedup.fuzzyJoin]]); `exact = true` runs the
-    * shared-shingle equi-join oracle form for toy-scale cross-checks.
-    * Not memoized: caller frames, no write-invalidation fence. */
-  def fuzzyJoin(left: DataFrame, leftId: String, leftText: String,
-                right: DataFrame, rightId: String, rightText: String,
-                n: Int = 3, minJaccard: Double = 0.5,
-                exact: Boolean = false): DataFrame =
-    if (exact)
-      graft.operators.Dedup.fuzzyJoinExact(left, leftId, leftText,
-        right, rightId, rightText, n, minJaccard)
-    else
-      graft.operators.Dedup.fuzzyJoin(left, leftId, leftText,
-        right, rightId, rightText, n, minJaccard = minJaccard)
-
-  /** Watermarked stream-stream interval join on the streaming surface:
-    * rows of two event streams matched per key when their event times
-    * fall within `joinWindow`, state bounded by `lateness`
-    * ([[graft.streaming.CardStream.streamIntervalJoin]] — right-side
-    * columns come back `r_`-prefixed). */
-  def streamIntervalJoin(left: DataFrame, right: DataFrame, keyCol: String,
-                         leftTs: String, rightTs: String,
-                         lateness: String = "10 minutes",
-                         joinWindow: String = "1 hour",
-                         joinType: String = "inner"): DataFrame =
-    CardStream.streamIntervalJoin(left, right, keyCol, leftTs, rightTs,
-      lateness, joinWindow, joinType)
-
-  /** Trailing event-time window features ("events / spend in the last
-    * `windowUnits` micros" per key): one keyed range-frame window, no
-    * self-join ([[graft.operators.Features.trailingWindow]] — adds
-    * `w_cnt`, `w_sum`). */
-  def trailingWindow(df: DataFrame, keyCol: String, tsCol: String,
-                     valueCol: String, windowUnits: Long): DataFrame =
-    graft.operators.Features.trailingWindow(df, keyCol, tsCol,
-      valueCol, windowUnits)
-
-  /** Leakage-safe leave-one-out target encoding of a categorical
-    * column: each row gets the mean target of the OTHER same-category
-    * rows, singletons NULL with the global mean alongside
-    * ([[graft.operators.Features.targetEncodeLoo]]). */
-  def targetEncodeLoo(df: DataFrame, catCol: String,
-                      targetCol: String): DataFrame =
-    graft.operators.Features.targetEncodeLoo(df, catCol, targetCol)
-
-  /** Perceptual image near-dup pairs over caller media (the card-image
-    * dedup the reference's upload path implies — re-uploaded/resized
-    * business-card photos): real-codec perceptual-hash thumbnails
-    * banded through the shared Hamming pigeonhole join. `algo` picks
-    * the signature: "dhash" (neighbor brightness order — survives
-    * re-encoding/resizing) or "phash" (DCT low-frequency structure —
-    * additionally survives blur and brightness/contrast moves).
-    * @return (id1, id2, dist). */
-  def imageDedup(media: org.apache.spark.sql.Dataset[
-                   graft.operators.Multimodal.MediaRecord],
-                 maxDist: Int = 3, algo: String = "dhash"): DataFrame = {
-    val hashed = algo match {
-      case "dhash" => graft.operators.Multimodal.imageDHash(media)
-      case "phash" => graft.operators.Multimodal.imagePHash(media)
-      case other => throw new IllegalArgumentException(
-        s"unknown image hash algo: $other (dhash | phash)")
+  /** Multi-hop PYMK via personalized PageRank: random walk with
+    * restart from the user's vertex; excludes the user and their
+    * direct friends (the same `neq`/`without` contract as [[pymk]]),
+    * ranked by walk mass. Where [[pymk]] counts exactly-2-hop paths,
+    * this folds in longer paths with geometric damping — the
+    * "distant but strongly connected" candidates the reference's
+    * traversal can't see. `user` is resolved like [[pymk]]; unknown
+    * names return the empty (id, rank) frame. */
+  def pymkPpr(user: String, limit: Int = 10, iters: Int = 10): DataFrame =
+    anchorOf(user).fold(emptyOf("id STRING, rank DOUBLE")) { anchor =>
+      // walk the UNDIRECTED view — the reference's both('knows') contract
+      // (a directed walk from a vertex with only in-edges goes nowhere)
+      val undirected = Pymk.undirected(edges)
+      val ranks = GraphAnalytics.personalizedPageRankDF(
+        undirected.select(col("from").as("src"), col("to").as("dst")),
+        lit(anchor), iters)
+      val friends = undirected
+        .filter(col("from") === anchor).select(col("to").as("id")).distinct()
+      ranks.filter(col("rank") > 0 && col("id") =!= anchor)
+        .join(friends, Seq("id"), "left_anti")
+        .orderBy(desc("rank"), asc("id"))
+        .limit(limit)
     }
-    graft.operators.Dedup.hammingBandPairs(hashed, maxDist)
-  }
 
-  /** Audio near-dup pairs over caller media: energy-envelope
-    * fingerprints (real PCM decode) banded through the same Hamming
-    * join — catches re-encoded/gain-shifted duplicate clips.
-    * @return (id1, id2, dist). */
-  def audioDedup(media: org.apache.spark.sql.Dataset[
-                   graft.operators.Multimodal.MediaRecord],
-                 maxDist: Int = 3): DataFrame =
-    graft.operators.Dedup.hammingBandPairs(
-      graft.operators.Multimodal.audioDHash(media), maxDist)
-
-  /** Video near-dup pairs over caller media: per-frame dHash through
-    * the real multi-frame decode (animated GIF), clips paired when
-    * ≥ `minMatchFrac` of aligned frames match within `maxDist`.
-    * @return (id1, id2, matched, frac). */
-  def videoDedup(media: org.apache.spark.sql.Dataset[
-                   graft.operators.Multimodal.MediaRecord],
-                 maxDist: Int = 3, minMatchFrac: Double = 0.8,
-                 everyN: Int = 1): DataFrame =
-    graft.operators.Dedup.frameHammingPairs(
-      graft.operators.Multimodal.videoDHash(media, everyN),
-      maxDist, minMatchFrac)
-
-  /** Trending leaderboard over an additive rollup store
-    * ([[graft.streaming.CardStream.trendingTopK]]) — rank freshness
-    * equals rollup freshness, no extra state. */
-  def trending(storeDir: String, groupCols: Seq[String], itemCol: String,
-               sumCol: String, k: Int = 10): DataFrame =
-    graft.streaming.CardStream.trendingTopK(spark, storeDir, groupCols,
-      itemCol, sumCol, k)
-
-  /** Shot-cut detection over a frame-hash table
-    * ([[graft.operators.Multimodal.sceneCuts]]) — keyframe selection
-    * and edit detection for video clips. */
-  def shotCuts(frameHashes: DataFrame, maxDist: Int = 3): DataFrame =
-    graft.operators.Multimodal.sceneCuts(frameHashes, maxDist)
-
-  /** Batch search over caller frames: a (qid, term) query WORKLOAD
-    * served by one postings join — no per-query jobs (see
-    * [[graft.operators.SearchIndex.batchQuery]]).
-    * @return (qid, id, score) — integer-milli tf·idf, top-k per qid. */
-  def batchSearch(docs: DataFrame, idCol: String, field: String,
-                  queries: DataFrame, k: Int = 10,
-                  excludeSelf: Boolean = false): DataFrame = {
-    val (postings, stats, n) =
-      graft.operators.SearchIndex.build(docs, idCol, Seq(field))
-    graft.operators.SearchIndex.batchQuery(postings, stats, n, field,
-      queries, k, excludeSelf)
-  }
-
-  /** Reciprocal-rank-fuse ranked runs (each (qid, id, score), already
-    * top-k per query) — the lexical+dense hybrid-retrieval stage
-    * ([[graft.operators.Hybrid.rrf]]). */
-  def hybridFuse(runs: Seq[DataFrame], k: Int = 10,
-                 k0: Int = 60): DataFrame =
-    graft.operators.Hybrid.rrf(runs, k, k0)
-
-  /** MMR diversified top-k per query over an embedding corpus —
-    * relevance-vs-novelty greedy selection
-    * ([[graft.operators.Similarity.mmr]]). */
-  def diversify(queries: DataFrame, corpus: DataFrame,
-                qidCol: String, qvecCol: String, idCol: String,
-                vecCol: String, nCand: Int = 20, k: Int = 5,
-                lambda: Double = 0.5): DataFrame =
-    graft.operators.Similarity.mmr(queries, corpus, qidCol, qvecCol,
-      idCol, vecCol, nCand, k, lambda)
-
-  /** [[diversify]] with IVF-sourced candidates
-    * ([[graft.operators.Similarity.mmrIndexed]]) — the corpus-scale
-    * path: candidate generation probes `nprobe` cells of the centroid
-    * index instead of scanning the corpus per query; `nprobe = #cells`
-    * reproduces [[diversify]] exactly (spec + oracle pinned). */
-  def diversifyIndexed(queries: DataFrame, corpus: DataFrame,
-                       centroids: DataFrame, qidCol: String, qvecCol: String,
-                       idCol: String, vecCol: String, nCand: Int = 20,
-                       k: Int = 5, lambda: Double = 0.5,
-                       nprobe: Int = 8): DataFrame =
-    graft.operators.Similarity.mmrIndexed(queries, corpus, centroids,
-      qidCol, qvecCol, idCol, vecCol, nCand, k, lambda, nprobe)
-
-  /** Rank-based ROC-AUC of a scored frame (0/1 `labelCol`, integer
-    * `scoreCol`) — gate a [[qualityTrain]]ed filter before it deletes
-    * terabytes ([[graft.operators.Eval.aucRank]]). */
-  def evalAuc(scored: DataFrame, labelCol: String,
-              scoreCol: String): DataFrame =
-    graft.operators.Eval.aucRank(scored, labelCol, scoreCol)
-
-  /** Average precision @k per query
-    * ([[graft.operators.Eval.averagePrecisionAtK]]) — MAP's per-query
-    * term, the position-sensitive companion to [[evalRankMetrics]]. */
-  def evalAveragePrecision(run: DataFrame, qrels: DataFrame,
-                           k: Int = 10): DataFrame =
-    graft.operators.Eval.averagePrecisionAtK(run, qrels, k)
-
-  /** Jensen–Shannon divergence between two categorical distributions
-    * ([[graft.operators.Drift.jsDivergence]]) — vocabulary/label drift
-    * where PSI's fixed bins don't apply. */
-  def vocabularyDrift(a: DataFrame, b: DataFrame,
-                      keyCol: String): DataFrame =
-    graft.operators.Drift.jsDivergence(a, b, keyCol)
-
-  /** Winnowing fingerprints
-    * ([[graft.operators.TextAnalysis.winnow]]) — positions of shared
-    * token runs, the MOSS selection rule. */
-  def winnowFingerprints(docs: DataFrame, idCol: String, textCol: String,
-                         k: Int = 3, w: Int = 4): DataFrame =
-    graft.operators.TextAnalysis.winnow(docs, idCol, textCol, k, w)
-
-  /** Blocking-quality report
-    * ([[graft.operators.EntityResolution.blockingQuality]]) — reduction
-    * ratio + pair completeness of a linkage blocking key. */
-  def blockingReport(records: DataFrame, idCol: String, blockCol: String,
-                     entityCol: String): DataFrame =
-    graft.operators.EntityResolution.blockingQuality(records, idCol,
-      blockCol, entityCol)
-
-  /** Team-draft interleaving of two ranked runs
-    * ([[graft.operators.Hybrid.teamDraft]]) — the online paired
-    * ranker comparison next to [[hybridFuse]]. */
-  def interleave(runA: DataFrame, runB: DataFrame, k: Int = 10): DataFrame =
-    graft.operators.Hybrid.teamDraft(runA, runB, k)
-
-  /** Per-user Markov sequence likelihood
-    * ([[graft.operators.Events.sequenceScore]]) — the behavioral
-    * anomaly score over the interaction log. */
-  def sequenceScore(events: DataFrame, userCol: String, tsCol: String,
-                    typeCol: String, tieCols: Seq[String]): DataFrame =
-    graft.operators.Events.sequenceScore(events, userCol, tsCol,
-      typeCol, tieCols)
-
-  /** UCB1 bandit scores per arm
-    * ([[graft.operators.Events.ucbScores]]) — the deterministic
-    * explore/exploit readout over an interaction log. */
-  def banditScores(events: DataFrame, armCol: Column,
-                   rewardCol: Column): DataFrame =
-    graft.operators.Events.ucbScores(events, armCol, rewardCol)
-
-  /** Wilson 95% score interval per group
-    * ([[graft.operators.Stats.wilsonInterval]]) — the conversion-rate
-    * CI next to [[banditScores]]. */
-  def conversionInterval(df: DataFrame, groupCol: Column,
-                         successCol: Column, z: Double = 1.96): DataFrame =
-    graft.operators.Stats.wilsonInterval(df, groupCol, successCol, z)
-
-  /** Reciprocal best matches of a ranked rec table
-    * ([[graft.operators.Pymk.mutualBest]]) — the mutual-rank-1
-    * high-precision cut. */
-  def mutualMatches(recs: DataFrame, itemCol: String, recCol: String,
-                    scoreCol: String): DataFrame =
-    graft.operators.Pymk.mutualBest(recs, itemCol, recCol, scoreCol)
-
-  /** Reliability bins + ECE-ready table for a scored frame
-    * ([[graft.operators.Eval.calibrationBins]]). */
-  def evalCalibration(scored: DataFrame, labelCol: String,
-                      scoreMicrosCol: String, bins: Int = 10): DataFrame =
-    graft.operators.Eval.calibrationBins(scored, labelCol,
-      scoreMicrosCol, bins)
-
-  /** Expected calibration error — the one-number summary of
-    * [[evalCalibration]]'s reliability table
-    * ([[graft.operators.Eval.ece]]): alert when a filter model's
-    * confidence drifts from its accuracy. */
-  def evalEce(scored: DataFrame, labelCol: String,
-              scoreMicrosCol: String, bins: Int = 10): DataFrame =
-    graft.operators.Eval.ece(graft.operators.Eval.calibrationBins(
-      scored, labelCol, scoreMicrosCol, bins))
-
-  /** nDCG@k of a ranked run (qid, id, score) against graded judgments
-    * (qid, id, rel) ([[graft.operators.Eval.ndcgAtK]]) — the metric
-    * that gates a retriever or fusion change before it ships. */
-  def evalNdcg(run: DataFrame, qrels: DataFrame, k: Int = 10): DataFrame =
-    graft.operators.Eval.ndcgAtK(run, qrels, k)
-
-  /** Truncated rank-biased overlap of two ranked runs
-    * ([[graft.operators.Eval.rbo]]) — how much two rankers agree,
-    * top-weighted; the ranker-comparison metric next to
-    * [[evalNdcg]]'s ground-truth scoring. */
-  def compareRankers(runA: DataFrame, runB: DataFrame,
-                     k: Int = 10): DataFrame =
-    graft.operators.Eval.rbo(runA, runB, k)
-
-  /** Brier score of a probabilistic classifier
-    * ([[graft.operators.Eval.brierScore]]) — the strictly proper
-    * companion to [[evalCalibration]]. */
-  def evalBrier(scored: DataFrame, labelCol: String,
-                pCol: String): DataFrame =
-    graft.operators.Eval.brierScore(scored, labelCol, pCol)
-
-  /** Step-wise PR-AUC ([[graft.operators.Eval.prAuc]]) — the
-    * imbalanced-class companion to [[evalAuc]]. */
-  def evalPrAuc(scored: DataFrame, labelCol: String,
-                scoreCol: String): DataFrame =
-    graft.operators.Eval.prAuc(scored, labelCol, scoreCol)
-
-  /** Cohen's κ chance-corrected agreement between two label columns
-    * ([[graft.operators.Eval.cohenKappa]]) — raters, or two
-    * classifiers' predictions. */
-  def raterAgreement(df: DataFrame, aCol: String,
-                     bCol: String): DataFrame =
-    graft.operators.Eval.cohenKappa(df, aCol, bCol)
-
-  /** Per-user behavioral entropy over event types
-    * ([[graft.operators.Events.behaviorEntropy]]) — the diversity
-    * feature next to the Markov sequence anomaly score. */
-  def userEntropy(events: DataFrame, userCol: String,
-                  typeCol: String): DataFrame =
-    graft.operators.Events.behaviorEntropy(events, userCol, typeCol)
-
-  /** Matryoshka truncation ablation
-    * ([[graft.operators.Similarity.truncationRecall]]) — per-query
-    * overlap of the truncated-dimension exact top-k with the
-    * full-dimension one. */
-  def embeddingAblation(emb: DataFrame, queries: DataFrame, idCol: String,
-                        vecCol: String, dims: Int,
-                        k: Int = 10): DataFrame =
-    graft.operators.Similarity.truncationRecall(emb, queries, idCol,
-      vecCol, dims, k)
-
-  /** Kendall τ of two ranked runs over their common items
-    * ([[graft.operators.Eval.kendallTau]]) — the pairwise
-    * concordance companion to [[compareRankers]]'s top-weighted
-    * overlap. */
-  def rankCorrelation(runA: DataFrame, runB: DataFrame,
-                      k: Int = 10): DataFrame =
-    graft.operators.Eval.kendallTau(runA, runB, k)
-
-  /** MRR / precision / recall @k of a ranked run against binary
-    * judgments ([[graft.operators.Eval.rankMetricsAtK]]) — the
-    * ungraded sibling of [[evalNdcg]]. */
-  def evalRankMetrics(run: DataFrame, qrels: DataFrame,
-                      k: Int = 10): DataFrame =
-    graft.operators.Eval.rankMetricsAtK(run, qrels, k)
-
-  /** Cost-optimal decision threshold for a scored filter model
-    * ([[graft.operators.Eval.bestThreshold]]) — turn an economic
-    * judgment (FP vs FN cost) into an operating point. */
-  def evalThreshold(scored: DataFrame, labelCol: String, scoreCol: String,
-                    costFpMicros: Long, costFnMicros: Long): DataFrame =
-    graft.operators.Eval.bestThreshold(scored, labelCol, scoreCol,
-      costFpMicros, costFnMicros)
-
-  /** Split-conformal calibration of a scored filter model
-    * ([[graft.operators.Eval.conformal]]) — the distribution-free
-    * coverage guarantee before the model deletes terabytes. */
-  def evalConformal(scored: DataFrame, idCol: String, labelCol: String,
-                    scoreCol: String,
-                    alphaMicros: Long = 100000L): DataFrame =
-    graft.operators.Eval.conformal(scored, idCol, labelCol, scoreCol,
-      alphaMicros)
-
-  /** Confusion matrix + P/R/F1 at a fixed threshold
-    * ([[graft.operators.Eval.confusionAtThreshold]]). */
-  def evalConfusion(scored: DataFrame, labelCol: String, scoreCol: String,
-                    threshold: Long): DataFrame =
-    graft.operators.Eval.confusionAtThreshold(scored, labelCol, scoreCol,
-      threshold)
-
-  /** Market-basket association rules
-    * ([[graft.operators.Assoc.rules]]) — directed confidence/lift
-    * co-purchase mining, the rule form of [[alsoViewed]]. */
-  def basketRules(baskets: DataFrame, basketCol: String, itemCol: String,
-                  minSupport: Long = 2L, topN: Int = 20): DataFrame =
-    graft.operators.Assoc.rules(baskets, basketCol, itemCol, minSupport,
-      topN)
-
-  /** Item–item co-occurrence recommendations over a (user, item)
-    * interaction frame ([[graft.operators.Pymk.itemItemTopK]]) — the
-    * "also viewed" surface next to the social 2-hop. */
-  def alsoViewed(interactions: DataFrame, userCol: String, itemCol: String,
-                 k: Int = 5, userCap: Int = 1000): DataFrame =
-    graft.operators.Pymk.itemItemTopK(interactions, userCol, itemCol,
-      k, userCap)
-
-  /** Windowed PMI collocations over a text column
-    * ([[graft.operators.TextAnalysis.pmiPairs]]) — surface the
-    * phrases a corpus over-represents (Levy–Goldberg co-occurrence
-    * statistics; boilerplate and template detection). */
-  def collocations(docs: DataFrame, textCol: String, window: Int = 3,
-                   minCount: Long = 2L): DataFrame =
-    graft.operators.TextAnalysis.pmiPairs(docs, textCol, window, minCount)
-
-  /** Newman modularity of a community assignment over the engine's
-    * knows graph ([[graft.operators.GraphAnalytics.modularity]]);
-    * communities default to LPA labels. */
-  def communityQuality(communities: Option[DataFrame] = None): DataFrame = {
-    val c = communities.getOrElse(
-      graft.operators.GraphAnalytics.labelPropagationDF(edges))
-    graft.operators.GraphAnalytics.modularity(edges, c)
-  }
-
-  /** Per-community conductance over the engine's knows graph
-    * ([[graft.operators.GraphAnalytics.conductance]]) — the local
-    * leak readout beside [[communityQuality]]'s global Q;
-    * communities default to LPA labels. */
-  def communityConductance(
-      communities: Option[DataFrame] = None): DataFrame = {
-    val c = communities.getOrElse(
-      graft.operators.GraphAnalytics.labelPropagationDF(edges))
-    graft.operators.GraphAnalytics.conductance(edges, c)
-  }
-
-  /** Flesch reading-ease per document
-    * ([[graft.operators.TextAnalysis.readability]]) — the
-    * education-level filter next to the Gopher-style signals. */
-  def readabilityScores(docs: DataFrame, idCol: String,
-                        textCol: String): DataFrame =
-    graft.operators.TextAnalysis.readability(docs, idCol, textCol)
-
-  /** RFM customer segmentation over an event log
-    * ([[graft.operators.Events.rfm]]) — recency/frequency/monetary
-    * quintiles on the exact distributed rank. */
-  def customerSegments(events: DataFrame, userCol: String, tsCol: String,
-                       valueCol: String): DataFrame =
-    graft.operators.Events.rfm(events, userCol, tsCol, valueCol)
-
-  /** Monthly DAU/MAU stickiness of an event log
-    * ([[graft.operators.Events.stickiness]]). */
-  def engagement(events: DataFrame, userCol: String,
-                 tsCol: String): DataFrame =
-    graft.operators.Events.stickiness(events, userCol, tsCol)
-
-  /** Kaplan–Meier churn-survival curve of an event log
-    * ([[graft.operators.Events.kaplanMeier]]) — last-active-day churn
-    * with final-day censoring. */
-  def churnCurve(events: DataFrame, userCol: String,
-                 tsCol: String): DataFrame =
-    graft.operators.Events.kaplanMeier(events, userCol, tsCol)
-
-  /** Corpus type–token ratio + hapax fraction
-    * ([[graft.operators.TextAnalysis.lexicalRichness]]) — the
-    * vocabulary-health readout beside [[corpusZipf]]. */
-  def lexicalHealth(docs: DataFrame, textCol: String): DataFrame =
-    graft.operators.TextAnalysis.lexicalRichness(docs, textCol)
-
-  /** Landmark hop-distance table over the engine's knows graph — the
-    * structural-feature / distance-estimation primitive
-    * ([[graft.operators.GraphAnalytics.landmarkDistances]]). */
-  def landmarks(numSources: Int = 8, maxDepth: Int = 4): DataFrame =
-    graft.operators.GraphAnalytics.landmarkDistances(edges,
-      numSources, maxDepth)
-
-  /** Recency-aware PYMK over a weighted edge frame
-    * ([[graft.operators.Pymk.recommendAllWeighted]]) — feed
-    * [[decayedWeights]] output so yesterday's mutual friend outranks
-    * last month's. */
-  def pymkWeighted(wEdges: DataFrame, limit: Int = 10): DataFrame =
-    graft.operators.Pymk.recommendAllWeighted(wEdges, limit)
-
-  /** Edge embeddedness (neighborhood Jaccard) of the engine's knows
-    * graph ([[graft.operators.Pymk.edgeEmbeddedness]]) — tie
-    * strength per friendship. */
-  def tieStrength(): DataFrame =
-    graft.operators.Pymk.edgeEmbeddedness(edges)
-
-  /** Local bridges (Granovetter weak ties) of the engine's knows
-    * graph ([[graft.operators.GraphAnalytics.weakTies]]) — the links
-    * a diversity-aware recommender should protect. */
-  def weakTies(): DataFrame =
-    graft.operators.GraphAnalytics.weakTies(edges)
-
-  /** l-diversity report ([[graft.operators.Profile.lDiversity]]) —
-    * the [[anonymityReport]] companion over a sensitive column. */
-  def diversityReport(df: DataFrame, quasiCols: Seq[String],
-                      sensitiveCol: String, l: Long = 3L): DataFrame =
-    graft.operators.Profile.lDiversity(df, quasiCols, sensitiveCol, l)
-
-  /** t-closeness report ([[graft.operators.Profile.tCloseness]]) —
-    * the [[diversityReport]] companion that also catches skewed
-    * sensitive distributions (TVD vs the table-wide marginal). */
-  def closenessReport(df: DataFrame, quasiCols: Seq[String],
-                      sensitiveCol: String, t: Double = 0.2): DataFrame =
-    graft.operators.Profile.tCloseness(df, quasiCols, sensitiveCol, t)
-
-  /** Popularity-bias Gini of a recommendation table
-    * ([[graft.operators.Eval.exposureGini]]). */
-  def recExposure(recs: DataFrame, itemCol: String): DataFrame =
-    graft.operators.Eval.exposureGini(recs, itemCol)
-
-  /** Catalog coverage + mean novelty of a recommendation table
-    * ([[graft.operators.Eval.coverageNovelty]]) — the aggregate
-    * diversity dials next to [[recExposure]]. */
-  def recDiversity(recs: DataFrame, recItemCol: String,
-                   interactions: DataFrame, userCol: String,
-                   itemCol: String): DataFrame =
-    graft.operators.Eval.coverageNovelty(recs, recItemCol, interactions,
-      userCol, itemCol)
-
-  /** Difference-in-differences estimator
-    * ([[graft.operators.Stats.diffInDiff]]) — the rollout readout
-    * when there is no randomized holdout. */
-  def didEstimate(df: DataFrame, treat: Column, post: Column,
-                  valueCol: String): DataFrame =
-    graft.operators.Stats.diffInDiff(df, treat, post, valueCol)
-
-  /** Truncated Katz centrality of the engine's knows graph
-    * ([[graft.operators.GraphAnalytics.katzMicros]]). */
-  def katzCentrality(rounds: Int = 3): DataFrame =
-    graft.operators.GraphAnalytics.katzMicros(edges, rounds)
-
-  /** Eigenvector centrality over the engine's graph
-    * ([[graft.operators.GraphAnalytics.eigenvectorCentrality]]) —
-    * the symmetric prestige score next to [[pageRank]]/[[hits]]. */
-  def eigenvector(iters: Int = 3): DataFrame =
-    graft.operators.GraphAnalytics.eigenvectorCentrality(edges, iters)
-
-  /** Luby maximal independent set over the engine's graph
-    * ([[graft.operators.GraphAnalytics.maximalIndependentSet]]) —
-    * mutually non-adjacent exemplar selection. */
-  def independentSet(rounds: Int = 4): DataFrame =
-    graft.operators.GraphAnalytics.maximalIndependentSet(edges, rounds)
-
-  /** Connected components by large-star/small-star
-    * ([[graft.operators.GraphAnalytics.ccTwoStar]]) — the log²-round
-    * scale path behind [[communities]]. */
-  def communitiesTwoStar(): DataFrame =
-    graft.operators.GraphAnalytics.ccTwoStar(edges)
-
-  /** Seeded label spreading over the engine's graph
-    * ([[graft.operators.GraphAnalytics.labelSpread]]) — clamped-seed
-    * semi-supervised node classification. */
-  def spreadLabels(seeds: DataFrame, rounds: Int = 3): DataFrame =
-    graft.operators.GraphAnalytics.labelSpread(edges, seeds, rounds)
-
-  /** Equal-frequency quantile binning on the distributed global-rank
-    * primitive ([[graft.operators.Features.quantileBins]]). */
-  def quantileBins(df: DataFrame, valueCol: String, tieCol: String,
-                   nBins: Int = 10): DataFrame =
-    graft.operators.Features.quantileBins(df, valueCol, tieCol, nBins)
-
-  /** Sparse random projection
-    * ([[graft.operators.Pca.randomProject]]) — data-free JL
-    * dimensionality reduction. */
-  def randomProject(df: DataFrame, idCol: String, vecCol: String,
-                    outDim: Int, inDim: Int): DataFrame =
-    graft.operators.Pca.randomProject(df, idCol, vecCol, outDim, inDim)
-
-  /** KMV theta-sketch distinct estimate
-    * ([[graft.operators.Sketches.kmvEstimate]]). */
-  def distinctSketch(df: DataFrame, valueCol: String,
-                     k: Int = 256): DataFrame =
-    graft.operators.Sketches.kmvEstimate(df, valueCol, k)
-
-  /** Theta-sketch overlap: intersection/union distinct estimates +
-    * Jaccard between two keyed frames
-    * ([[graft.operators.Sketches.kmvIntersectEstimate]]) — the
-    * audience-overlap question HLL cannot answer. */
-  def overlapSketch(a: DataFrame, aCol: String, b: DataFrame, bCol: String,
-                    k: Int = 256): DataFrame =
-    graft.operators.Sketches.kmvIntersectEstimate(a, aCol, b, bCol, k)
-
-  /** Welch's t statistic between two samples
-    * ([[graft.operators.Stats.welchT]]) — the A/B readout. */
-  def abTest(a: DataFrame, b: DataFrame, valueCol: String): DataFrame =
-    graft.operators.Stats.welchT(a, b, valueCol)
-
-  /** CUPED variance reduction for an experiment metric given a
-    * pre-period covariate ([[graft.operators.Stats.cuped]]) — θ, ρ²
-    * and the adjusted-variance readout. */
-  def varianceReduction(df: DataFrame, preCol: String,
-                        metricCol: String): DataFrame =
-    graft.operators.Stats.cuped(df, preCol, metricCol)
-
-  /** Language-model document ranking with Dirichlet smoothing
-    * ([[graft.operators.SearchIndex.dirichletQL]]). */
-  def searchQL(docs: DataFrame, idCol: String, field: String,
-               terms: Seq[String], mu: Double = 2000.0,
-               limit: Int = 10): DataFrame =
-    graft.operators.SearchIndex.dirichletQL(docs, idCol, field, terms,
-      mu, limit)
-
-  /** Murphy reliability/resolution/uncertainty decomposition of the
-    * Brier score ([[graft.operators.Eval.brierDecomposition]]). */
-  def brierBreakdown(scored: DataFrame, labelCol: String,
-                     pCol: String): DataFrame =
-    graft.operators.Eval.brierDecomposition(scored, labelCol, pCol)
-
-  /** Per-user inter-event burstiness — the bot-screen timing feature
-    * ([[graft.operators.Events.burstiness]]). */
-  def userBurstiness(events: DataFrame, userCol: String, tsCol: String,
-                     tieCol: String): DataFrame =
-    graft.operators.Events.burstiness(events, userCol, tsCol, tieCol)
-
-  /** Rank-monotone association between two metrics
-    * ([[graft.operators.Eval.spearman]]). */
-  def rankCorrelation(df: DataFrame, xCol: String, yCol: String,
-                      tieCol: String): DataFrame =
-    graft.operators.Eval.spearman(df, xCol, yCol, tieCol)
-
-  /** Coreness (k-shell) of every vertex of the knows graph
-    * ([[graft.operators.GraphAnalytics.corenessHIndex]]). */
-  def coreness(rounds: Int = 4): DataFrame =
-    graft.operators.GraphAnalytics.corenessHIndex(edges, rounds)
-
-  /** Distinct-count estimate per key in one sketch pass
-    * ([[graft.operators.Sketches.portableHllDistinctBy]]). */
-  def distinctBy(df: DataFrame, keyCol: String,
-                 valueCol: String): DataFrame =
-    graft.operators.Sketches.portableHllDistinctBy(df, keyCol, valueCol)
-
-  /** Gap-based batch sessionization
-    * ([[graft.operators.Events.sessionize]]). */
-  def sessions(events: DataFrame, userCol: String, tsCol: String,
-               tieCol: String, gapUs: Long = 30L * 60L * 1000000L)
-      : DataFrame =
-    graft.operators.Events.sessionize(events, userCol, tsCol, tieCol,
-      gapUs)
-
-  /** Winsorized (tail-clamped) robust mean
-    * ([[graft.operators.Stats.winsorizedMean]]). */
-  def clampedMean(df: DataFrame, valueCol: String, tieCol: String,
-                  frac: Double = 0.05): DataFrame =
-    graft.operators.Stats.winsorizedMean(df, valueCol, tieCol, frac)
-
-  /** Offline policy value under clipped inverse-propensity weighting
-    * ([[graft.operators.Eval.ipsEval]]). */
-  def policyValue(logged: DataFrame, rewardCol: String, propCol: String,
-                  k: Int, clipMicros: Long = 1000L): DataFrame =
-    graft.operators.Eval.ipsEval(logged, rewardCol, propCol, k,
-      clipMicros)
-
-  /** Pairwise preference strengths by Bradley–Terry MM
-    * ([[graft.operators.Stats.bradleyTerry]]). */
-  def preferenceStrengths(wins: DataFrame, aCol: String, bCol: String,
-                          winsCol: String, rounds: Int = 3): DataFrame =
-    graft.operators.Stats.bradleyTerry(wins, aCol, bCol, winsCol, rounds)
-
-  /** Heaps'-law vocabulary-growth fit across slices
-    * ([[graft.operators.TextAnalysis.heapsFit]]). */
-  def vocabGrowth(docs: DataFrame, textCol: String,
-                  groupCol: String): DataFrame =
-    graft.operators.TextAnalysis.heapsFit(docs, textCol, groupCol)
-
-  /** Per-cohort cumulative-LTV curves
-    * ([[graft.operators.Events.ltvCurves]]). */
-  def ltv(events: DataFrame, userCol: String, tsCol: String,
-          valueCol: String, maxOffset: Int = 8): DataFrame =
-    graft.operators.Events.ltvCurves(events, userCol, tsCol, valueCol,
-      maxOffset)
-
-  /** Funnel-latency quantiles
-    * ([[graft.operators.Events.timeToConvert]]). */
-  def conversionLatency(events: DataFrame, userCol: String, tsCol: String,
-                        typeCol: String, fromType: String,
-                        toType: String): DataFrame =
-    graft.operators.Events.timeToConvert(events, userCol, tsCol, typeCol,
-      fromType, toType)
-
-  /** Isotonic (monotone) probability calibration over bins
-    * ([[graft.operators.Eval.isotonicBins]]). */
-  def calibrateIsotonic(scored: DataFrame, labelCol: String,
-                        pCol: String, bins: Int = 10): DataFrame =
-    graft.operators.Eval.isotonicBins(scored, labelCol, pCol, bins)
-
-  /** Nonparametric two-sample test
-    * ([[graft.operators.Stats.mannWhitneyU]]). */
-  def abTestRanks(a: DataFrame, b: DataFrame, valueCol: String,
-                  tieCol: String): DataFrame =
-    graft.operators.Stats.mannWhitneyU(a, b, valueCol, tieCol)
-
-  /** WOE / information-value feature screen
-    * ([[graft.operators.Features.woeIv]]). */
-  def featureValue(df: DataFrame, valueCol: String, tieCol: String,
-                   labelCol: String, nBins: Int = 10): DataFrame =
-    graft.operators.Features.woeIv(df, valueCol, tieCol, labelCol, nBins)
-
-  /** Weekday-baselined daily anomaly screen
-    * ([[graft.operators.Events.seasonalOutliers]]). */
-  def dailyAnomalies(events: DataFrame, tsCol: String): DataFrame =
-    graft.operators.Events.seasonalOutliers(events, tsCol)
-
-  /** Canonical-URL dedup before content dedup
-    * ([[graft.operators.UrlOps.canonicalUrlDedup]]). */
-  def dedupByUrl(docs: DataFrame, idCol: String,
-                 urlCol: String): DataFrame =
-    graft.operators.UrlOps.canonicalUrlDedup(docs, idCol, urlCol)
-
-  /** Whole-graph transitivity of the knows graph
-    * ([[graft.operators.GraphAnalytics.transitivity]]). */
-  def graphTransitivity(): DataFrame =
-    graft.operators.GraphAnalytics.transitivity(edges)
-
-  /** Robustness curve of the knows graph under edge failure
-    * ([[graft.operators.GraphAnalytics.percolation]]). */
-  def robustness(rates: Seq[Double] = Seq(0.25, 0.5, 0.75)): DataFrame =
-    graft.operators.GraphAnalytics.percolation(edges, rates)
-
-  /** Per-doc n-gram novelty against a reference corpus
-    * ([[graft.operators.Dedup.ngramNovelty]]). */
-  def noveltyScores(docs: DataFrame, idCol: String, textCol: String,
-                    ref: DataFrame, refTextCol: String,
-                    n: Int = 3): DataFrame =
-    graft.operators.Dedup.ngramNovelty(docs, idCol, textCol, ref,
-      refTextCol, n)
-
-  /** Intra-list diversity of recommendation lists
-    * ([[graft.operators.Similarity.intraListDiversity]]). */
-  def recDiversity(recs: DataFrame, emb: DataFrame, qidCol: String,
-                   idCol: String, embIdCol: String,
-                   vecCol: String): DataFrame =
-    graft.operators.Similarity.intraListDiversity(recs, emb, qidCol,
-      idCol, embIdCol, vecCol)
-
-  /** IVF cell-balance health report
-    * ([[graft.operators.Similarity.ivfBalance]]). */
-  def indexBalance(assigned: DataFrame, cellCol: String): DataFrame =
-    graft.operators.Similarity.ivfBalance(assigned, cellCol)
-
-  /** Simplified per-cluster silhouette
-    * ([[graft.operators.Similarity.silhouetteSimplified]]). */
-  def clusterQuality(assigned: DataFrame, centroids: DataFrame,
-                     idCol: String, vecCol: String,
-                     cellCol: String): DataFrame =
-    graft.operators.Similarity.silhouetteSimplified(assigned, centroids,
-      idCol, vecCol, cellCol)
-
-  /** Regularized μ + b_u + b_i rating baseline
-    * ([[graft.operators.Pymk.biasBaseline]]). */
-  def ratingBaseline(ratings: DataFrame, userCol: String, itemCol: String,
-                     ratingCol: String, lambda: Long = 10L): DataFrame =
-    graft.operators.Pymk.biasBaseline(ratings, userCol, itemCol,
-      ratingCol, lambda)
-
-  /** Weekly churn-label training set
-    * ([[graft.operators.Events.churnLabels]]). */
-  def churnDataset(events: DataFrame, userCol: String,
-                   tsCol: String): DataFrame =
-    graft.operators.Events.churnLabels(events, userCol, tsCol)
-
-  /** Per-quantile shift between two samples
-    * ([[graft.operators.Drift.quantileShift]]). */
-  def quantileDrift(base: DataFrame, curr: DataFrame, valueCol: String,
-                    tieCol: String): DataFrame =
-    graft.operators.Drift.quantileShift(base, curr, valueCol, tieCol)
-
-  /** Metric-coupling correlation matrix of per-type daily activity
-    * ([[graft.operators.Events.typeCorrelationMatrix]]). */
-  def metricCoupling(events: DataFrame, tsCol: String,
-                     typeCol: String): DataFrame =
-    graft.operators.Events.typeCorrelationMatrix(events, tsCol, typeCol)
-
-  /** Systematic every-k-th eval sample
-    * ([[graft.operators.Sampling.systematicSample]]). */
-  def evalSample(df: DataFrame, sortCols: Seq[String], k: Int): DataFrame =
-    graft.operators.Sampling.systematicSample(df, sortCols, k)
-
-  /** Poisson-bootstrap CI of a mean
-    * ([[graft.operators.Stats.bootstrapCI]]) — uncertainty in one
-    * scan, no resampling passes. */
-  def bootstrapMean(df: DataFrame, idCol: String, valueCol: String,
-                    b: Int = 32): DataFrame =
-    graft.operators.Stats.bootstrapCI(df, idCol, valueCol, b)
-
-  /** k-truss cohesion membership of the engine's knows graph
-    * ([[graft.operators.GraphAnalytics.kTruss]]) — the
-    * triangle-backed core a community must share. */
-  def trussMembership(k: Int = 3, rounds: Int = 4): DataFrame =
-    graft.operators.GraphAnalytics.kTruss(edges, k, rounds)
-
-  /** Time-decayed interaction weights
-    * ([[graft.operators.Features.decayedCounts]]) — recency-aware
-    * edge/feature weights for the rankers. */
-  def decayedWeights(df: DataFrame, keyCols: Seq[String], tsCol: String,
-                     refTs: String, halfLifeDays: Double): DataFrame =
-    graft.operators.Features.decayedCounts(df, keyCols, tsCol, refTs,
-      halfLifeDays)
-
-  /** k-anonymity risk report
-    * ([[graft.operators.Profile.kAnonymity]]) — run before a dataset
-    * leaves the pipeline. */
-  def anonymityReport(df: DataFrame, quasiCols: Seq[String],
-                      k: Long = 10L): DataFrame =
-    graft.operators.Profile.kAnonymity(df, quasiCols, k)
-
-  /** HyperBall neighborhood function of the engine's knows graph
-    * ([[graft.operators.GraphAnalytics.hyperBall]]) — how many
-    * (source, vertex) pairs sit within each radius, at |V|·m sketch
-    * cost. */
-  def neighborhoodFunction(maxR: Int = 4): DataFrame =
-    graft.operators.GraphAnalytics.hyperBall(edges, maxR)
-
-  /** Effective diameter (90% pair mass) of the engine's knows graph
-    * ([[graft.operators.GraphAnalytics.effectiveDiameter]]). */
-  def effectiveDiameter(maxR: Int = 4): DataFrame =
-    graft.operators.GraphAnalytics.effectiveDiameter(edges, maxR)
-
-  /** Exact weighted shortest paths from `sources` over a weighted
-    * edge frame ([[graft.operators.GraphAnalytics.weightedSssp]]) —
-    * distributed Bellman–Ford; `rounds` must cover the hop
-    * diameter. */
-  def shortestPaths(weightedEdges: DataFrame, sources: Seq[Long],
-                    rounds: Int = 10): DataFrame =
-    graft.operators.GraphAnalytics.weightedSssp(weightedEdges, sources,
-      rounds)
-
-  /** Corpus BLEU of candidate vs reference text columns
-    * ([[graft.operators.Eval.corpusBleu]]) — gate augmented /
-    * machine-generated text before it enters a training mix. */
-  def evalBleu(pairs: DataFrame, idCol: String, candCol: String,
-               refCol: String, maxN: Int = 4): DataFrame =
-    graft.operators.Eval.corpusBleu(pairs, idCol, candCol, refCol, maxN)
-
-  /** Validate a declarative data-quality constraint suite
-    * ([[graft.operators.Profile.checkConstraints]]; one fold pass +
-    * one grouped pass per Uniqueness check) — the ingest admission
-    * gate. */
-  def validate(df: DataFrame,
-               checks: Seq[graft.operators.Profile.Check]): DataFrame =
-    graft.operators.Profile.checkConstraints(df, checks)
-
-  /** Near-dup-cluster-aware train/test split
-    * ([[graft.operators.Sampling.leakageSafeSplit]]): no two
-    * near-duplicates ever straddle the eval boundary. `clusters` is
-    * REQUIRED: pass [[semanticDedup]] / Dedup.clusters output for the
-    * corpus being split (an empty frame degrades to a plain hash
-    * split with no leakage guarantee). */
-  def leakageSafeSplit(df: DataFrame, idCol: String, clusters: DataFrame,
-                       splits: Seq[(String, Double)]): DataFrame =
-    graft.operators.Sampling.leakageSafeSplit(df, idCol, clusters, splits)
-
-  /** Stratified k-fold CV assignment
-    * ([[graft.operators.Sampling.kFold]]) — deterministic md5 folds,
-    * uniform within every stratum. */
-  def crossValFolds(df: DataFrame, idCol: String, k: Int = 5): DataFrame =
-    graft.operators.Sampling.kFold(df, idCol, k)
-
-  /** Per-label prototype vectors + nearest-prototype accuracy
-    * ([[graft.operators.Similarity.classPrototypes]] /
-    * [[graft.operators.Similarity.prototypeAccuracy]]) — the cheapest
-    * embedding-quality probe. */
-  def embeddingProbe(points: DataFrame, idCol: String, vecCol: String,
-                     labelCol: String): DataFrame =
-    graft.operators.Similarity.prototypeAccuracy(points, idCol, vecCol,
-      labelCol)
-
-  /** k-NN graph construction by NN-descent
-    * ([[graft.operators.Similarity.nnDescent]]) — the index-building
-    * primitive under semantic dedup and graph-ANN. */
-  def knnGraph(points: DataFrame, idCol: String, vecCol: String,
-               k: Int = 5, rounds: Int = 2): DataFrame =
-    graft.operators.Similarity.nnDescent(points, idCol, vecCol, k, rounds)
-
-  /** Density-based clustering in cosine space
-    * ([[graft.operators.Similarity.dbscan]]) — the density sibling of
-    * k-means: cores, borders, and noise over the ≥ minSim similarity
-    * graph. */
-  def densityClusters(points: DataFrame, idCol: String, vecCol: String,
-                      minSim: Double = 0.9, minPts: Int = 3): DataFrame =
-    graft.operators.Similarity.dbscan(points, idCol, vecCol, minSim,
-      minPts)
-
-  /** Binary-quantization two-stage ANN
-    * ([[graft.operators.Similarity.bqTopK]]): sign-code Hamming
-    * shortlist (d/8 bytes per corpus row) reranked by exact cosine —
-    * the cheap-scan retrieval tier between brute force and IVF-PQ. */
-  def bqSearch(queries: DataFrame, corpus: DataFrame, qidCol: String,
-               qvecCol: String, idCol: String, vecCol: String,
-               shortlist: Int = 50, k: Int = 10): DataFrame =
-    graft.operators.Similarity.bqTopK(queries, corpus, qidCol, qvecCol,
-      idCol, vecCol, shortlist, k)
-
-  /** Windowed ordered conversion funnel over an event frame
-    * ([[graft.operators.Events.funnel]]) — per-step converted-user
-    * counts for a step sequence anchored at each user's first
-    * `steps.head` event. */
-  def funnel(events: DataFrame, userCol: String, tsCol: String,
-             typeCol: String, steps: Seq[String],
-             window: String = "7 DAYS"): DataFrame =
-    graft.operators.Events.funnel(events, userCol, tsCol, typeCol,
-      steps, window)
-
-  /** Weekly cohort retention of an event frame
-    * ([[graft.operators.Events.retentionCohorts]]). */
-  def retention(events: DataFrame, userCol: String, tsCol: String,
-                maxOffset: Int = 8): DataFrame =
-    graft.operators.Events.retentionCohorts(events, userCol, tsCol,
-      maxOffset)
-
-  /** Sequential a→b journey patterns with user support + confidence
-    * ([[graft.operators.Events.sequentialPairs]]). */
-  def journeyPatterns(events: DataFrame, userCol: String, tsCol: String,
-                      typeCol: String, minSupport: Long = 2L): DataFrame =
-    graft.operators.Events.sequentialPairs(events, userCol, tsCol,
-      typeCol, minSupport)
-
-  /** First-order behavior transition matrix
-    * ([[graft.operators.Events.transitionMatrix]]). */
-  def transitions(events: DataFrame, userCol: String, tsCol: String,
-                  typeCol: String,
-                  tieCols: Seq[String] = Seq.empty): DataFrame =
-    graft.operators.Events.transitionMatrix(events, userCol, tsCol,
-      typeCol, tieCols)
-
-  /** Median/MAD (Hampel) outlier screen per group
-    * ([[graft.operators.Events.robustOutliers]]). */
-  def outlierScreen(df: DataFrame, groupCol: String,
-                    valueCol: String): DataFrame =
-    graft.operators.Events.robustOutliers(df, groupCol, valueCol)
-
-  /** Snapshot diff between two dataset versions
-    * ([[graft.operators.Cdc.snapshotDiff]]) — |Δ|-sized
-    * added/removed/changed audit. */
-  def diffSnapshots(base: DataFrame, curr: DataFrame, keyCols: Seq[String],
-                    compareCols: Seq[String]): DataFrame =
-    graft.operators.Cdc.snapshotDiff(base, curr, keyCols, compareCols)
-
-  /** Row-level rule violations ([[graft.operators.Profile.violations]])
-    * — the offending ids the quarantine step pulls. */
-  def ruleViolations(df: DataFrame, idCol: String,
-                     rules: Seq[(String, org.apache.spark.sql.Column)])
-      : DataFrame =
-    graft.operators.Profile.violations(df, idCol, rules)
-
-  /** Fellegi–Sunter record linkage within blocks
-    * ([[graft.operators.EntityResolution.scorePairs]]) — the person
-    * de-duplication the card pipeline needs when OCR noise forks a
-    * contact. */
-  def linkRecords(records: DataFrame, idCol: String, blockCol: String,
-                  comparisons: Seq[(String, Long, Long)],
-                  threshold: Long): DataFrame =
-    graft.operators.EntityResolution.scorePairs(records, idCol, blockCol,
-      comparisons, threshold)
-
-  /** Golden-record survivorship over linkage output
-    * ([[graft.operators.EntityResolution.goldenRecords]]) — match →
-    * cluster → elect one representative per cluster. */
-  def goldenRecords(records: DataFrame, idCol: String, links: DataFrame,
-                    orderCol: String): DataFrame =
-    graft.operators.EntityResolution.goldenRecords(records, idCol, links,
-      orderCol)
-
-  /** [[linkRecords]] with caller-supplied fuzzy agreement predicates
-    * ([[graft.operators.EntityResolution.scorePairsFuzzy]]) — e.g.
-    * Jaro–Winkler name matching for typo'd duplicates. */
-  def linkRecordsFuzzy(records: DataFrame, idCol: String, blockCol: String,
-                       comparisons: Seq[(String,
-                         (org.apache.spark.sql.Column,
-                          org.apache.spark.sql.Column) =>
-                           org.apache.spark.sql.Column, Long, Long)],
-                       threshold: Long): DataFrame =
-    graft.operators.EntityResolution.scorePairsFuzzy(records, idCol,
-      blockCol, comparisons, threshold)
-
-  /** Last-touch attribution over an event frame
-    * ([[graft.operators.Events.lastTouchAttribution]]). */
-  def attribute(events: DataFrame, userCol: String, tsCol: String,
-                typeCol: String, idCol: String, convType: String,
-                touchTypes: Seq[String], windowMicros: Long): DataFrame =
-    graft.operators.Events.lastTouchAttribution(events, userCol, tsCol,
-      typeCol, idCol, convType, touchTypes, windowMicros)
-
-  /** Linear multi-touch attribution
-    * ([[graft.operators.Events.linearAttribution]]) — every
-    * qualifying touch splits the credit; per-conversion credits sum
-    * to exactly 1e6 micros. */
-  def attributeLinear(events: DataFrame, userCol: String, tsCol: String,
-                      typeCol: String, idCol: String, convType: String,
-                      touchTypes: Seq[String],
-                      windowMicros: Long): DataFrame =
-    graft.operators.Events.linearAttribution(events, userCol, tsCol,
-      typeCol, idCol, convType, touchTypes, windowMicros)
-
-  /** 4-cycle motif count of the engine's knows graph
-    * ([[graft.operators.GraphAnalytics.c4Count]]) — the co-citation
-    * signature beside the triangle count. */
-  def quadCount(): DataFrame =
-    graft.operators.GraphAnalytics.c4Count(edges)
-
-  /** Unbiased wedge-sampled 4-cycle estimate
-    * ([[graft.operators.GraphAnalytics.c4CountSampled]]) — the scale
-    * form of [[quadCount]]: per-middle md5-spread cap with
-    * Horvitz–Thompson weights; exact for every sub-cap middle and
-    * equal to [[quadCount]] when `maxDegree` exceeds the max degree. */
-  def quadCountSampled(maxDegree: Int = 64,
-                       unit: Long = 1000000L): DataFrame =
-    graft.operators.GraphAnalytics.c4CountSampled(edges, maxDegree, unit)
-
-  /** Log-binned degree histogram of the knows graph
-    * ([[graft.operators.GraphAnalytics.degreeHistogram]]) — the
-    * distribution behind [[degreeExponent]]'s single-number fit. */
-  def degreeProfile(): DataFrame =
-    graft.operators.GraphAnalytics.degreeHistogram(edges)
-
-  /** Asymmetric shingle-containment near-dup pairs
-    * ([[graft.operators.Dedup.containmentPairs]]) — catches the
-    * quote-inclusion duplicates Jaccard's union denominator
-    * suppresses. */
-  def containmentDuplicates(docs: DataFrame, idCol: String,
-                            textCol: String, n: Int = 2,
-                            minContainment: Double = 0.8): DataFrame =
-    graft.operators.Dedup.containmentPairs(docs, textCol, idCol, n,
-      minContainment)
-
-  /** PSI drift report between a baseline and a current sample
-    * ([[graft.operators.Drift.psi]]) — run before trusting a new
-    * ingest batch against last week's distribution. */
-  def driftPsi(base: DataFrame, curr: DataFrame, valueCol: String,
-               lo: Double, hi: Double, bins: Int = 10): DataFrame =
-    graft.operators.Drift.psi(base, curr, valueCol, lo, hi, bins)
-
-  /** CUSUM change-point over daily means
-    * ([[graft.operators.Drift.cusum]]) — the sequential-drift alarm
-    * next to [[driftPsi]]'s batch comparison. */
-  def changePoints(df: DataFrame, tsCol: String, valueCol: String,
-                   slackMicros: Long = 0L,
-                   thresholdMicros: Long = 50000000L): DataFrame =
-    graft.operators.Drift.cusum(df, tsCol, valueCol, slackMicros,
-      thresholdMicros)
-
-  /** Two-sample KS statistic ([[graft.operators.Drift.ksStatistic]])
-    * — the bin-free sibling of [[driftPsi]]. */
-  def driftKs(base: DataFrame, curr: DataFrame,
-              valueCol: String): DataFrame =
-    graft.operators.Drift.ksStatistic(base, curr, valueCol)
-
-  /** Embedding-centroid drift between two corpus slices
-    * ([[graft.operators.Drift.centroidDrift]]) — the vector-space
-    * face of [[driftPsi]]: centroid cosine + squared gap. */
-  def driftEmbeddings(a: DataFrame, b: DataFrame,
-                      vecCol: String): DataFrame =
-    graft.operators.Drift.centroidDrift(a, b, vecCol)
-
-  /** Quality-aware survivorship over near-dup clusters
-    * ([[graft.operators.Dedup.keepBest]]) — per cluster keep the
-    * best-scored copy; the decision step after [[semanticDedup]] /
-    * Dedup.clusters. */
-  def dedupSurvivors(clusters: DataFrame, scored: DataFrame,
-                     idCol: String, scoreCol: String): DataFrame =
-    graft.operators.Dedup.keepBest(clusters, scored, idCol, scoreCol)
-
-  /** Daily-series autocorrelation at lags 1..maxLag
-    * ([[graft.operators.Drift.acf]]) — tells whether a
-    * [[changePoints]] alarm is a level shift or the weekly cycle. */
-  def seasonality(df: DataFrame, tsCol: String,
-                  maxLag: Int = 7): DataFrame =
-    graft.operators.Drift.acf(df, tsCol, maxLag)
-
-  /** EWMA control chart over daily means
-    * ([[graft.operators.Drift.ewma]], λ = ½) — the small-shift
-    * detector between [[changePoints]] and a plain threshold. */
-  def controlChart(df: DataFrame, tsCol: String, valueCol: String,
-                   thresholdMicros: Long): DataFrame =
-    graft.operators.Drift.ewma(df, tsCol, valueCol, thresholdMicros)
-
-  /** Two-sided trimmed mean ([[graft.operators.Stats.trimmedMean]])
-    * — the robust location estimate on the exact distributed rank. */
-  def robustMean(df: DataFrame, valueCol: String, tieCol: String,
-                 trimFrac: Double = 0.05): DataFrame =
-    graft.operators.Stats.trimmedMean(df, valueCol, tieCol, trimFrac)
-
-  /** Zipf-law slope of a corpus's token frequency curve
-    * ([[graft.operators.TextAnalysis.zipfFit]]) — the corpus health
-    * check (natural text ≈ −1). */
-  def corpusZipf(docs: DataFrame, textCol: String,
-                 topN: Int = 200): DataFrame =
-    graft.operators.TextAnalysis.zipfFit(docs, textCol, topN)
-
-  /** TF-IDF keyword extraction per document
-    * ([[graft.operators.SearchIndex.keywords]]) — the tagging
-    * primitive over the postings index. */
-  def extractKeywords(docs: DataFrame, idCol: String, field: String,
-                      topK: Int = 5): DataFrame =
-    graft.operators.SearchIndex.keywords(docs, idCol, field, topK)
-
-  /** χ² token–label feature selection
-    * ([[graft.operators.TextAnalysis.chiSquareTokens]]) — the tokens
-    * most associated with a 0/1 document label. */
-  def featureSelect(docs: DataFrame, textCol: String, labelCol: String,
-                    minDocs: Long = 5L, topN: Int = 50): DataFrame =
-    graft.operators.TextAnalysis.chiSquareTokens(docs, textCol,
-      labelCol, minDocs, topN)
-
-  /** CMS-sketch equi-join cardinality estimate
-    * ([[graft.operators.Sketches.cmsJoinSize]]) — size a join from
-    * two KB-scale sketches without running it. */
-  def estimateJoinSize(a: DataFrame, keyA: String, b: DataFrame,
-                       keyB: String, width: Int = 2048,
-                       depth: Int = 4): DataFrame =
-    graft.operators.Sketches.cmsJoinSize(a, keyA, b, keyB, width, depth)
-
-  /** Kneser–Ney perplexity scoring under a [[graft.operators.NgramLm]]
-    * model — the KenLM/CCNet smoothing for quality filtering. */
-  def perplexityKn(docs: DataFrame, idCol: String, textCol: String,
-                   model: DataFrame): DataFrame =
-    graft.operators.NgramLm.scoreKneserNey(docs, idCol, textCol, model)
-
-  /** Lorenz curve over weight deciles
-    * ([[graft.operators.Eval.lorenzCurve]]) — the distribution behind
-    * [[recExposure]]'s single number. */
-  def lorenzCurve(df: DataFrame, weightCol: String, tieCol: String,
-                  bins: Int = 10): DataFrame =
-    graft.operators.Eval.lorenzCurve(df, weightCol, tieCol, bins)
-
-  /** One-way ANOVA F across ≥2 arms
-    * ([[graft.operators.Stats.anovaF]]) — the k-arm readout beside
-    * [[abTest]]. */
-  def anovaF(df: DataFrame, valueCol: String, groupCol: String): DataFrame =
-    graft.operators.Stats.anovaF(df, valueCol, groupCol)
-
-  /** Expected reciprocal rank @k ([[graft.operators.Eval.errAtK]]) —
-    * the cascade-model retrieval metric beside [[evalNdcg]]. */
-  def errAtK(run: DataFrame, qrels: DataFrame, k: Int = 10,
-             maxGrade: Int = 3): DataFrame =
-    graft.operators.Eval.errAtK(run, qrels, k, maxGrade)
-
-  /** Blocked edit-distance candidate pairs
-    * ([[graft.operators.EntityResolution.editDistancePairs]]) — the
-    * Levenshtein typo-tolerance sibling of the Jaro–Winkler fuzzy
-    * linkage. */
-  def editDistancePairs(records: DataFrame, idCol: String,
-                        blockCol: String, strCol: String,
-                        maxDist: Int = 2): DataFrame =
-    graft.operators.EntityResolution.editDistancePairs(records, idCol,
-      blockCol, strCol, maxDist)
-
-  /** Page–Hinkley mean-shift alarm over daily means
-    * ([[graft.operators.Drift.pageHinkley]]) — the running-mean
-    * sequential detector beside CUSUM/EWMA. */
-  def pageHinkley(df: DataFrame, tsCol: String, valueCol: String,
-                  slackMicros: Long, thresholdMicros: Long): DataFrame =
-    graft.operators.Drift.pageHinkley(df, tsCol, valueCol, slackMicros,
-      thresholdMicros)
-
-  /** Stationary distribution of the behavioral Markov chain
-    * ([[graft.operators.Events.stationaryDistribution]]). */
-  def stationaryDistribution(events: DataFrame, userCol: String,
-                             tsCol: String, typeCol: String,
-                             tieCols: Seq[String],
-                             rounds: Int = 4): DataFrame =
-    graft.operators.Events.stationaryDistribution(events, userCol,
-      tsCol, typeCol, tieCols, rounds)
-
-  /** Cumulative gains / lift curve by score decile
-    * ([[graft.operators.Eval.gainCurve]]) — the campaign-targeting
-    * readout beside AUC. */
-  def gainCurve(df: DataFrame, scoreCol: String, labelCol: String,
-                tieCol: String, bins: Int = 10): DataFrame =
-    graft.operators.Eval.gainCurve(df, scoreCol, labelCol, tieCol, bins)
-
-  /** Benjamini–Hochberg FDR screen over per-cell mean shifts
-    * ([[graft.operators.Stats.bhFdr]]) — the multiple-comparisons
-    * gate for metric dashboards. */
-  def bhFdr(df: DataFrame, valueCol: String, groupCols: Seq[String],
-            alphaMicros: Long = 100000L): DataFrame =
-    graft.operators.Stats.bhFdr(df, valueCol, groupCols, alphaMicros)
-
-  /** Fleiss' kappa over ≥2 binary raters
-    * ([[graft.operators.Eval.fleissKappa]]) — multi-rater
-    * chance-corrected agreement. */
-  def fleissKappa(df: DataFrame, raterCols: Seq[String]): DataFrame =
-    graft.operators.Eval.fleissKappa(df, raterCols)
-
-  /** Neyman optimal stratified-sampling allocation
-    * ([[graft.operators.Sampling.neymanAllocation]]). */
-  def neymanAllocation(df: DataFrame, strataCols: Seq[String],
-                       valueCol: String, totalN: Long): DataFrame =
-    graft.operators.Sampling.neymanAllocation(df, strataCols, valueCol,
-      totalN)
-
-  /** Mutual information between two categorical columns
-    * ([[graft.operators.Stats.categoricalMi]]) — the dependence
-    * screen for feature selection and leakage hunts. */
-  def categoricalMi(df: DataFrame, xCol: String, yCol: String): DataFrame =
-    graft.operators.Stats.categoricalMi(df, xCol, yCol)
-
-  /** Cramér's V effect size over an r×c contingency
-    * ([[graft.operators.Stats.cramersV]]). */
-  def cramersV(df: DataFrame, xCol: String, yCol: String): DataFrame =
-    graft.operators.Stats.cramersV(df, xCol, yCol)
-
-  /** Herfindahl–Hirschman concentration + effective unit count
-    * ([[graft.operators.Eval.hhi]]) — the market-concentration face
-    * of [[recExposure]]. */
-  def hhi(df: DataFrame, keyCol: String): DataFrame =
-    graft.operators.Eval.hhi(df, keyCol)
-
-  /** McNemar's paired-classifier test
-    * ([[graft.operators.Stats.mcnemar]]) — compare two models scored
-    * on the same items by their discordant errors. */
-  def mcnemar(df: DataFrame, labelCol: String, aCol: String,
-              bCol: String): DataFrame =
-    graft.operators.Stats.mcnemar(df, labelCol, aCol, bCol)
-
-  /** Cohen's d standardized effect size
-    * ([[graft.operators.Stats.cohensD]]) — practical significance
-    * beside [[abTest]]'s t. */
-  def cohensD(a: DataFrame, b: DataFrame, valueCol: String): DataFrame =
-    graft.operators.Stats.cohensD(a, b, valueCol)
-
-  /** Theil T inequality over per-key mass
-    * ([[graft.operators.Eval.theilIndex]]) — the decomposable
-    * inequality number beside [[hhi]]. */
-  def theilIndex(df: DataFrame, keyCol: String): DataFrame =
-    graft.operators.Eval.theilIndex(df, keyCol)
-
-  /** Per-document character entropy
-    * ([[graft.operators.TextAnalysis.charEntropy]]) — the gibberish
-    * screen beside the lexical-richness signals. */
-  def charEntropy(docs: DataFrame, idCol: String,
-                  textCol: String): DataFrame =
-    graft.operators.TextAnalysis.charEntropy(docs, idCol, textCol)
-
-  /** Audience Jaccard between categorical segments
-    * ([[graft.operators.Events.typeOverlap]]). */
-  def typeOverlap(events: DataFrame, typeCol: String,
-                  userCol: String): DataFrame =
-    graft.operators.Events.typeOverlap(events, typeCol, userCol)
-
-  /** Information gain of a quantile-bin split against a binary label
-    * ([[graft.operators.Features.infoGain]]) — the decision-tree
-    * split criterion. */
-  def infoGain(df: DataFrame, valueCol: String, tieCol: String,
-               labelCol: String, nBins: Int = 10): DataFrame =
-    graft.operators.Features.infoGain(df, valueCol, tieCol, labelCol,
-      nBins)
-
-  /** Session health report (bounce rate, depth, dwell)
-    * ([[graft.operators.Events.sessionStats]]). */
-  def sessionStats(events: DataFrame, userCol: String, tsCol: String,
-                   tieCol: String, gapUs: Long): DataFrame =
-    graft.operators.Events.sessionStats(events, userCol, tsCol, tieCol,
-      gapUs)
-
-  /** Component-size histogram of the social graph
-    * ([[graft.operators.GraphAnalytics.componentSizes]]) — the
-    * fragmentation readout beside the degree histogram. */
-  def componentSizes(edges: DataFrame): DataFrame =
-    graft.operators.GraphAnalytics.componentSizes(edges)
-
-  /** Two-sample Poisson rate test
-    * ([[graft.operators.Stats.rateTest]]) — the error-budget
-    * monitor's statistic. */
-  def rateTest(a: DataFrame, b: DataFrame): DataFrame =
-    graft.operators.Stats.rateTest(a, b)
-
-  /** Benford leading-digit screen
-    * ([[graft.operators.Stats.benford]]) — the fabricated-data
-    * detector. */
-  def benford(df: DataFrame, valueCol: String): DataFrame =
-    graft.operators.Stats.benford(df, valueCol)
-
-  /** Wald–Wolfowitz runs test over daily means
-    * ([[graft.operators.Stats.runsTest]]) — oscillation vs trend. */
-  def runsTest(df: DataFrame, tsCol: String,
-               valueCol: String): DataFrame =
-    graft.operators.Stats.runsTest(df, tsCol, valueCol)
-
-  /** Corpus conditional character-bigram entropy
-    * ([[graft.operators.TextAnalysis.bigramCondEntropy]]) — the
-    * second-order gibberish screen beside [[charEntropy]]. */
-  def bigramCondEntropy(docs: DataFrame, textCol: String): DataFrame =
-    graft.operators.TextAnalysis.bigramCondEntropy(docs, textCol)
-
-  /** Log–log OLS (constant-elasticity) fit
-    * ([[graft.operators.Stats.olsLogLog]]). */
-  def olsLogLog(df: DataFrame, xCol: String, yCol: String): DataFrame =
-    graft.operators.Stats.olsLogLog(df, xCol, yCol)
-
-  /** Inter-event gap p50/p90/p99 per segment
-    * ([[graft.operators.Events.gapQuantiles]]) — exact rank-selected
-    * behavioral SLOs. */
-  def gapQuantiles(events: DataFrame, userCol: String, tsCol: String,
-                   typeCol: String, tieCol: String): DataFrame =
-    graft.operators.Events.gapQuantiles(events, userCol, tsCol,
-      typeCol, tieCol)
-
-  /** Chao1 vocabulary-richness estimate + Good–Turing unseen mass
-    * ([[graft.operators.TextAnalysis.chao1Richness]]). */
-  def chao1Richness(docs: DataFrame, textCol: String): DataFrame =
-    graft.operators.TextAnalysis.chao1Richness(docs, textCol)
-
-  /** Held-out word-bigram coverage of a train/test split
-    * ([[graft.operators.TextAnalysis.bigramCoverage]]). */
-  def bigramCoverage(docs: DataFrame, textCol: String,
-                     trainCol: String): DataFrame =
-    graft.operators.TextAnalysis.bigramCoverage(docs, textCol, trainCol)
-
-  /** Embedding-norm health report
-    * ([[graft.operators.Similarity.normStats]]) — the first check
-    * when a similarity index misbehaves. */
-  def normStats(emb: DataFrame, idCol: String,
-                vecCol: String): DataFrame =
-    graft.operators.Similarity.normStats(emb, idCol, vecCol)
-
-  /** A/B sample-size and MDE planner
-    * ([[graft.operators.Stats.powerMde]]) — "how long must this
-    * test run". */
-  def powerMde(a: DataFrame, b: DataFrame, valueCol: String): DataFrame =
-    graft.operators.Stats.powerMde(a, b, valueCol)
-
-  /** Retrospective best change-point over daily means
-    * ([[graft.operators.Drift.changepoint]]). */
-  def changepoint(df: DataFrame, tsCol: String,
-                  valueCol: String): DataFrame =
-    graft.operators.Drift.changepoint(df, tsCol, valueCol)
-
-  /** Per-landmark eccentricity
-    * ([[graft.operators.GraphAnalytics.landmarkEccentricity]]). */
-  def landmarkEccentricity(edges: DataFrame, numSources: Int = 8,
-                           maxDepth: Int = 4): DataFrame =
-    graft.operators.GraphAnalytics.landmarkEccentricity(edges,
-      numSources, maxDepth)
-
-  /** Daily-count dispersion (overdispersion) index
-    * ([[graft.operators.Events.dispersionIndex]]). */
-  def dispersionIndex(events: DataFrame, tsCol: String): DataFrame =
-    graft.operators.Events.dispersionIndex(events, tsCol)
-
-  /** 1-D earth mover's distance between two slices
-    * ([[graft.operators.Drift.emd1d]]) — drift with magnitude. */
-  def emd1d(base: DataFrame, curr: DataFrame, valueCol: String,
-            lo: Double, hi: Double, bins: Int = 10): DataFrame =
-    graft.operators.Drift.emd1d(base, curr, valueCol, lo, hi, bins)
-
-  /** Within-session categorical co-occurrence lift
-    * ([[graft.operators.Events.sessionCooccur]]). */
-  def sessionCooccur(events: DataFrame, userCol: String, tsCol: String,
-                     typeCol: String, tieCol: String,
-                     gapUs: Long): DataFrame =
-    graft.operators.Events.sessionCooccur(events, userCol, tsCol,
-      typeCol, tieCol, gapUs)
-
-  /** Audience churn across a time split
-    * ([[graft.operators.Events.audienceChurn]]). */
-  def audienceChurn(events: DataFrame, userCol: String, tsCol: String,
-                    cutUs: Long): DataFrame =
-    graft.operators.Events.audienceChurn(events, userCol, tsCol, cutUs)
-
-  /** Day-over-day movers report
-    * ([[graft.operators.Events.dailyMovers]]). */
-  def dailyMovers(events: DataFrame, tsCol: String, typeCol: String,
-                  k: Int = 10): DataFrame =
-    graft.operators.Events.dailyMovers(events, tsCol, typeCol, k)
-
-  /** One-row graph summary
-    * ([[graft.operators.GraphAnalytics.graphSummary]]). */
-  def graphSummary(edges: DataFrame): DataFrame =
-    graft.operators.GraphAnalytics.graphSummary(edges)
-
-  /** Gini of the degree distribution
-    * ([[graft.operators.GraphAnalytics.degreeGini]]) — connectivity
-    * inequality. */
-  def degreeGini(edges: DataFrame): DataFrame =
-    graft.operators.GraphAnalytics.degreeGini(edges)
-
-  /** Lead–lag cross-correlation between two event-type day series
-    * ([[graft.operators.Events.leadLagCorr]]). */
-  def leadLagCorr(events: DataFrame, tsCol: String, typeCol: String,
-                  typeA: String, typeB: String,
-                  maxLag: Int = 7): DataFrame =
-    graft.operators.Events.leadLagCorr(events, tsCol, typeCol, typeA,
-      typeB, maxLag)
-
-  /** First-touch event-type distribution
-    * ([[graft.operators.Events.firstTouch]]). */
-  def firstTouch(events: DataFrame, userCol: String, tsCol: String,
-                 typeCol: String, tieCol: String): DataFrame =
-    graft.operators.Events.firstTouch(events, userCol, tsCol, typeCol,
-      tieCol)
-
-  /** Weekday × hour activity heatmap
-    * ([[graft.operators.Events.activityGrid]]). */
-  def activityGrid(events: DataFrame, tsCol: String): DataFrame =
-    graft.operators.Events.activityGrid(events, tsCol)
-
-  /** Week-over-week growth table
-    * ([[graft.operators.Events.weekOverWeek]]). */
-  def weekOverWeek(events: DataFrame, tsCol: String): DataFrame =
-    graft.operators.Events.weekOverWeek(events, tsCol)
-
-  /** Relative risk + odds ratio of an outcome given an exposure
-    * ([[graft.operators.Events.relativeRisk]]). */
-  def relativeRisk(df: DataFrame, exposedCol: String,
-                   outcomeCol: String): DataFrame =
-    graft.operators.Events.relativeRisk(df, exposedCol, outcomeCol)
-
-  /** Friendship-paradox readout
-    * ([[graft.operators.GraphAnalytics.friendshipParadox]]). */
-  def friendshipParadox(edges: DataFrame): DataFrame =
-    graft.operators.GraphAnalytics.friendshipParadox(edges)
-
-  /** Western Electric control rules over daily means
-    * ([[graft.operators.Drift.westernElectric]]). */
-  def westernElectric(df: DataFrame, tsCol: String,
-                      valueCol: String): DataFrame =
-    graft.operators.Drift.westernElectric(df, tsCol, valueCol)
-
-  /** Longest consecutive-day activity streaks
-    * ([[graft.operators.Events.longestStreaks]]). */
-  def longestStreaks(events: DataFrame, userCol: String, tsCol: String,
-                     k: Int = 20): DataFrame =
-    graft.operators.Events.longestStreaks(events, userCol, tsCol, k)
+  /** Personalized-SALSA PYMK (the Twitter-WTF scorer):
+    * [[GraphAnalytics.salsa]] restricted to `user`'s circle-of-trust
+    * bipartite view, with the same self/friend exclusion contract as
+    * [[pymk]] — the link-analysis alternative to the 2-hop path-count
+    * ranking. `user` is resolved like [[pymk]]; unknown names return
+    * the empty (id, score_micros) frame. */
+  def pymkSalsa(user: String, limit: Int = 10, iters: Int = 3): DataFrame =
+    anchorOf(user).fold(emptyOf("id STRING, score_micros BIGINT")) { anchor =>
+      GraphAnalytics.salsaPersonalized(edges, lit(anchor), iters, limit)
+    }
 }

@@ -2592,7 +2592,7 @@ object GraphAnalytics {
     * `(md5("r:id"), id)` — md5-portable and collision-free (the id
     * component breaks the 2⁻³² hash-tie case deterministically); the
     * operator compares the pair as a STRUCT, so any orderable id type
-    * works (the engine facade passes string vertex keys); the SQL
+    * works (the engine graph has string vertex keys); the SQL
     * oracle replays it as the arithmetic key `hash · 2²⁰ + id`,
     * order-identical for the gate's sub-2²⁰ numeric ids. A vertex
     * joins the MIS iff its priority beats every active neighbor's;

@@ -534,11 +534,17 @@ object Pymk {
 
   /** Anchor lookup by case-insensitive name — the `_name` shadow
     * property (upsert_bizcard_to_graph_db.py:94, queried at
-    * neptune_recommend_bizcard.py:59). Returns the id column of the
-    * first match; caller feeds it to [[recommend]].
+    * neptune_recommend_bizcard.py:59). Returns one id column row: the
+    * smallest id among the matches, so a name two people share always
+    * resolves to the same vertex, whatever the file or partition order;
+    * caller feeds it to [[recommend]]. The reference anchors EVERY
+    * same-named vertex (SURVEY C2; the §3.3 traversal starts from all of
+    * them); multi-anchor PYMK is out of scope here. `orderBy.limit`
+    * plans as TakeOrderedAndProject: one job, no global sort.
     */
   def anchorByName(vertices: DataFrame, user: String): DataFrame =
-    vertices.filter(lower(col("name")) === user.toLowerCase).select("id").limit(1)
+    vertices.filter(lower(col("name")) === user.toLowerCase).select("id")
+      .orderBy("id").limit(1)
 
   /** Item–item collaborative filtering over a (user, item) interaction
     * frame — the co-occurrence recommender next to the social 2-hop

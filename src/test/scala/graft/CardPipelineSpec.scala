@@ -64,6 +64,16 @@ class CardPipelineSpec extends AnyFunSuite with SparkSpec {
     assert(got.map(_._1).toSeq == Seq(Ids("crong"), Ids("harry")).sorted)
   }
 
+  test("anchorByName: a name two people share resolves to the smallest id") {
+    import spark.implicits._
+    // one partition, the larger id first: an unordered limit(1) takes it
+    val namesakes = Seq(("ffffffff", "Kim Lee"), ("12345678", "Ann Park"),
+      ("00000001", "kim lee")).toDF("id", "name").coalesce(1)
+    assert(Pymk.anchorByName(namesakes, "KIM LEE").collect().map(_.getString(0)).toSeq ==
+      Seq("00000001"))
+    assert(Pymk.anchorByName(namesakes, "nobody").isEmpty)
+  }
+
   test("PYMK never recommends self or a direct friend (all users)") {
     val adj = edges.select("src", "dst").collect()
       .flatMap(r => Seq(r.getString(0) -> r.getString(1), r.getString(1) -> r.getString(0)))

@@ -6,6 +6,10 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.api.GraftEngine
 import graft.model.{AlbumEntry, Schemas}
+import graft.operators.{AsOfJoin, Bpe, Dedup, Drift, EntityResolution, Eval, Events,
+  Features, GraphAnalytics, Hybrid, Packing, Pca, Pq, Profile, Pymk, QualityLr, Sampling,
+  Sketches, Stats, TextAnalysis, UrlOps}
+import graft.streaming.CardStream
 
 /** End-to-end facade test: the full reference API surface over the
   * 11-record corpus — ingest (idempotent), search with boosts + owner
@@ -86,12 +90,40 @@ class GraftEngineSpec extends AnyFunSuite with SparkSpec {
     assert(!(engine.search("harry jang", limit = 6) eq hits1))
     val recs1 = engine.pymk("poby kim")
     assert(engine.pymk("poby kim") eq recs1)
+    // the other memo-backed reads: a repeat is the same frame
+    val reads = Seq[(String, () => DataFrame)](
+      "phraseSearch" -> (() => engine.phraseSearch("edy kim")),
+      "fuzzySearch" -> (() => engine.fuzzySearch("edi", maxEdits = 1)),
+      "linkPredict" -> (() => engine.linkPredict(5)),
+      "node2vec" -> (() => engine.node2vec(1, 2)))
+    val warm = reads.map { case (name, read) =>
+      val first = read()
+      assert(read() eq first, s"$name: repeat call not served from the memo")
+      first
+    }
     // a write invalidates: the next call recomputes (and sees the write)
     val doc = engine.search("harry jang").collect().head.getAs[String]("doc_id")
     engine.softDelete(doc)
     val after = engine.search("harry jang", limit = 5)
     assert(!(after eq hits1))
     assert(!after.collect().map(_.getAs[String]("doc_id")).contains(doc))
+    for (((name, read), before) <- reads.zip(warm))
+      assert(!(read() eq before), s"$name: served a memo entry from before the write")
+  }
+
+  test("the public surface is the serving core plus the memo-backed reads") {
+    // a one-line forwarder to an operator adds no engine state: callers
+    // use the operator over engine.searchTable / vertices / edges
+    val kept = Set("ingest", "search", "pymk", "softDelete", "userAlbum",
+      "clearGraph", "dumpGraph", "refresh", "searchTable", "vertices", "edges",
+      "searchPath", "vertexPath", "edgePath", "albumPath", "SearchFields", "cacheKey",
+      "phraseSearch", "fuzzySearch", "linkPredict", "node2vec", "pymkPpr", "pymkSalsa")
+    // compiler-made names (default arguments, accessors) contain '$'
+    val declared = classOf[GraftEngine].getDeclaredMethods.toSeq
+      .filter(m => java.lang.reflect.Modifier.isPublic(m.getModifiers))
+      .map(_.getName).filterNot(_.contains("$")).toSet
+    assert(declared -- kept == Set.empty, "public methods beyond the serving surface")
+    assert(kept -- declared == Set.empty, "serving surface methods missing")
   }
 
   test("memo cache key is the full digest (no truncation collisions)") {
@@ -227,7 +259,6 @@ class GraftEngineSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("an external write is seen without refresh; refresh reads its new column") {
-    import graft.streaming.CardStream
     val e = new GraftEngine(spark, Files.createTempDirectory("graft_wh_ext").toString)
     e.ingest(cards)
     assert(e.search("kim").collect().nonEmpty)
@@ -248,23 +279,24 @@ class GraftEngineSpec extends AnyFunSuite with SparkSpec {
   test("extension surface: pymkAll, dedupByContent, pageRank, communities") {
     // all-pairs PYMK agrees with the single-anchor golden for poby
     val pobyId = "6f371694" // md5("poby")[:8] — CardPipelineSpec golden
-    val all = engine.pymkAll(10)
+    val all = Pymk.recommendAll(engine.edges, 10)
       .filter(col("anchor") === pobyId)
       .collect().map(r => r.getString(1) -> r.getLong(2)).toMap
     val single = graft.operators.Pymk.recommend(engine.edges, lit(pobyId), 10)
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(all == single && single.nonEmpty)
     // dedup by content_id keeps one row per distinct card content
-    val deduped = engine.dedupByContent()
+    val deduped = Dedup.exact(engine.searchTable, "content_id", "doc_id")
     assert(deduped.count() ==
       engine.searchTable.select("content_id").distinct().count())
     // GraphX analytics run over the engine graph
-    assert(engine.pageRank(5).count() == 6)
-    val comps = engine.communities().select("component").distinct().count()
+    assert(GraphAnalytics.pageRank(engine.vertices, weightedEdges, 5).count() == 6)
+    val comps = GraphAnalytics.connectedComponents(engine.vertices, weightedEdges)
+      .select("component").distinct().count()
     assert(comps >= 1 && comps <= 6)
     // triangles: every vertex counted; DF plan agrees with the engine's
     // GraphX-mapped ids
-    val tri = engine.triangles().collect()
+    val tri = GraphAnalytics.triangleCounts(engine.vertices, weightedEdges).collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(tri.size == 6 && tri.values.forall(_ >= 0))
     // PPR-based PYMK: excludes self + direct friends, positive mass,
@@ -283,16 +315,17 @@ class GraftEngineSpec extends AnyFunSuite with SparkSpec {
     assert(engine.pymkPpr("nosuchuser").isEmpty)
 
     // influencers = top-k of pageRank, rank desc, id asc
-    val inf = engine.influencers(3, iters = 5).collect()
+    val inf = GraphAnalytics.pageRank(engine.vertices, weightedEdges, 5)
+      .orderBy(desc("rank"), asc("id")).limit(3).collect()
       .map(r => (r.getString(0), r.getDouble(1)))
-    val pr = engine.pageRank(5).collect()
+    val pr = GraphAnalytics.pageRank(engine.vertices, weightedEdges, 5).collect()
       .map(r => (r.getString(0), r.getDouble(1)))
       .sortBy { case (id, rank) => (-rank, id) }.take(3)
     assert(inf.toList == pr.toList)
   }
 
   test("centrality: harmonic over the knows graph covers every person, hubs lead") {
-    val h = engine.centrality(numSources = 6, maxDepth = 4).collect()
+    val h = GraphAnalytics.harmonicCentrality(engine.edges, numSources = 6, maxDepth = 4).collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(h.size == 6, "every graph vertex scored")
     assert(h.values.forall(_ > 0), "6 sources on a connected 6-vertex graph reach all")
@@ -309,16 +342,16 @@ class GraftEngineSpec extends AnyFunSuite with SparkSpec {
 
   test("graph facade: salsa, reciprocity, degreeExponent") {
     // SALSA scores every vertex; each side's mass sums to ~1e6
-    val sal = engine.salsa(3).collect()
+    val sal = GraphAnalytics.salsa(engine.edges, 3).collect()
     assert(sal.length == 6)
     assert(math.abs(sal.map(_.getLong(1)).sum - 1000000L) <= 6L)
     assert(math.abs(sal.map(_.getLong(2)).sum - 1000000L) <= 6L)
     // reciprocity is a single well-formed ratio row
-    val rec = engine.reciprocity().head()
+    val rec = GraphAnalytics.reciprocity(engine.edges).head()
     assert(rec.getLong(1) <= rec.getLong(0) &&
       rec.getLong(2) >= 0L && rec.getLong(2) <= 1000000L)
     // degree-exponent readout: α > 1 by construction on any tail
-    val alpha = engine.degreeExponent(2).head()
+    val alpha = GraphAnalytics.powerLawAlpha(engine.edges, 2).head()
     assert(alpha.getLong(1) > 0L && alpha.getLong(3) > 1000000L)
   }
 
@@ -338,7 +371,7 @@ class GraftEngineSpec extends AnyFunSuite with SparkSpec {
     // unknown user → typed empty frame, not an exception
     assert(engine.pymkSalsa("nobody special").isEmpty)
     // rich club at k=0 covers every vertex that has an edge
-    val rc = engine.richClub(0).head()
+    val rc = GraphAnalytics.richClub(engine.edges, 0).head()
     assert(rc.getLong(1) > 0L && rc.getLong(3) > 0L &&
       rc.getLong(3) <= 1000000L)
   }
@@ -347,13 +380,13 @@ class GraftEngineSpec extends AnyFunSuite with SparkSpec {
     import spark.implicits._
     // eigenvector over string vertex keys: every vertex scored, mass
     // sums to ~1e6 (rounding slack ≤ #vertices micros)
-    val eig = engine.eigenvector(3).collect()
+    val eig = GraphAnalytics.eigenvectorCentrality(engine.edges, 3).collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(eig.size == 6)
     assert(math.abs(eig.values.sum - 1000000L) <= 6L)
     // MIS on string ids (struct-ordered priorities): independent and
     // maximal on the 6-person knows graph
-    val mis = engine.independentSet(4).collect()
+    val mis = GraphAnalytics.maximalIndependentSet(engine.edges, 4).collect()
       .map(r => r.getString(0) -> r.getBoolean(1)).toMap
     val und = graft.operators.Pymk.undirected(engine.edges)
       .select("from", "to").collect()
@@ -364,9 +397,9 @@ class GraftEngineSpec extends AnyFunSuite with SparkSpec {
     assert(mis.filter(!_._2).keys.forall(v =>
       und.exists { case (a, b) => a == v && mis(b) }), "not maximal")
     // two-star CC groups vertices exactly like min-label communities
-    val two = engine.communitiesTwoStar().collect()
+    val two = GraphAnalytics.ccTwoStar(engine.edges).collect()
       .map(r => r.getString(0) -> r.getString(1)).toMap
-    val lab = engine.communities().collect()
+    val lab = GraphAnalytics.connectedComponents(engine.vertices, weightedEdges).collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(two.keySet == lab.keySet)
     assert(two.groupBy(_._2).values.map(_.keySet).toSet ==
@@ -375,9 +408,9 @@ class GraftEngineSpec extends AnyFunSuite with SparkSpec {
     // theta-sketch overlap on two overlapping id frames
     val a = (1 to 300).map(i => s"id-$i").toDF("v")
     val b = (201 to 500).map(i => s"id-$i").toDF("v")
-    val ov = engine.overlapSketch(a, "v", b, "v", 64).collect().head
+    val ov = Sketches.kmvIntersectEstimate(a, "v", b, "v", 64).collect().head
     assert(ov.getAs[Long]("est_union") > 0)
-    val ds = engine.distinctSketch(a, "v", 64).collect().head
+    val ds = Sketches.kmvEstimate(a, "v", 64).collect().head
     assert(math.abs(ds.getAs[Long]("est") - 300L) <= 120L)
   }
 
@@ -391,7 +424,7 @@ class GraftEngineSpec extends AnyFunSuite with SparkSpec {
     // ts=25: nothing after it — forward NULL, backward/nearest pick 20
     val obs = Seq(("k", 16L), ("k", 25L)).toDF("key", "ts")
     def vals(direction: String): Seq[String] =
-      engine.asOf(obs, state, "key", "ts", Seq("v"), direction)
+      AsOfJoin.asOf(obs, state, "key", "ts", Seq("v"), direction)
         .orderBy("ts").collect().map(_.getAs[String]("asof_v")).toSeq
     assert(vals("backward") == Seq("old", "new"))
     assert(vals("forward") == Seq("new", null))
@@ -402,16 +435,16 @@ class GraftEngineSpec extends AnyFunSuite with SparkSpec {
     val lens = engine.searchTable
       .select(col("doc_id"),
         length(coalesce(col("addr"), lit(""))).cast("long").as("tok"))
-    val scalable = engine.lengthBuckets(lens, "doc_id", "tok", 3)
+    val scalable = Packing.lengthBucketsScalable(lens, "doc_id", "tok", 3)
       .collect().map(r => r.getString(0) -> r.getInt(2)).toMap
-    val spec = engine.lengthBuckets(lens, "doc_id", "tok", 3, scalable = false)
+    val spec = Packing.lengthBuckets(lens, "doc_id", "tok", 3)
       .collect().map(r => r.getString(0) -> r.getInt(2)).toMap
     assert(scalable == spec && scalable.values.toSet == Set(1, 2, 3))
 
     // packSequences: 11 docs land in contiguous bins, and the packed
     // output matches the global-window spec form bit-for-bit
-    val packed = engine.packSequences(lens, "doc_id", "tok", budget = 60L)
-    val specPack = graft.operators.Packing.pack(lens, "doc_id", "tok", 60L)
+    val packed = Packing.packScalable(lens, "doc_id", "tok", budget = 60L)
+    val specPack = Packing.pack(lens, "doc_id", "tok", 60L)
     assert(packed.count() == 11)
     assert(packed.orderBy("doc_id").collect().toSeq ==
       specPack.orderBy("doc_id").collect().toSeq)
@@ -437,12 +470,12 @@ class GraftEngineSpec extends AnyFunSuite with SparkSpec {
     intercept[IllegalArgumentException] { engine.linkPredict(5, "katz") }
     // chunk + bpe roundtrip on a caller frame
     val df = Seq((1L, "alpha beta gamma delta")).toDF("id", "text")
-    assert(engine.chunk(df, "id", "text", 2, 2).count() == 2)
+    assert(TextAnalysis.chunkDocuments(df, "id", "text", 2, 2).count() == 2)
     // (a,</w>)×4 then (t,a</w>)×2, then no pair reaches 2 — early stop
-    val merges = engine.bpeTrain(df, "text", 3)
+    val merges = Bpe.train(df, "text", 3)
     assert(merges == Seq(("a", "</w>"), ("t", "a</w>")))
-    val dec = engine.bpeEncode(df, "text", merges)
-      .select(graft.operators.Bpe.decode(col("pieces"))).head().getString(0)
+    val dec = df.withColumn("pieces", Bpe.encode(col("text"), merges))
+      .select(Bpe.decode(col("pieces"))).head().getString(0)
     assert(dec == "alpha beta gamma delta")
   }
 
@@ -458,10 +491,10 @@ class GraftEngineSpec extends AnyFunSuite with SparkSpec {
       (20L, "another unrelated document mentioning duckdb oracles")).toDF("id", "text")
     def pairs(df: DataFrame) = df.collect()
       .map(x => (x.getLong(0), x.getLong(1)) -> x.getDouble(2)).toMap
-    val banded = pairs(engine.fuzzyJoin(l, "id", "text", r, "id", "text",
+    val banded = pairs(Dedup.fuzzyJoin(l, "id", "text", r, "id", "text",
       n = 2, minJaccard = 0.5))
-    val exact = pairs(engine.fuzzyJoin(l, "id", "text", r, "id", "text",
-      n = 2, minJaccard = 0.5, exact = true))
+    val exact = pairs(Dedup.fuzzyJoinExact(l, "id", "text", r, "id", "text",
+      n = 2, minJaccard = 0.5))
     assert(banded.keySet == Set((1L, 10L)) && banded == exact)
 
     // stream-stream interval join facade, batch-equivalence form:
@@ -470,7 +503,7 @@ class GraftEngineSpec extends AnyFunSuite with SparkSpec {
     val clicks = Seq((1L, "u1", ts(60))).toDF("event_id", "user_id", "ts")
     val views = Seq((100L, "u1", ts(10)), (101L, "u1", ts(30)),
       (102L, "u1", ts(120))).toDF("event_id", "user_id", "ts")
-    val joined = engine.streamIntervalJoin(clicks, views, "user_id", "ts", "ts")
+    val joined = CardStream.streamIntervalJoin(clicks, views, "user_id", "ts", "ts")
       .select(col("event_id"), col("r_event_id"))
       .collect().map(x => (x.getLong(0), x.getLong(1))).toSet
     assert(joined == Set((1L, 100L), (1L, 101L)))
@@ -478,14 +511,14 @@ class GraftEngineSpec extends AnyFunSuite with SparkSpec {
     // trailing window: 10-minute frame counts only in-window history
     val ev = Seq(("u1", ts(0), 1.0), ("u1", ts(5), 2.0), ("u1", ts(20), 4.0))
       .toDF("user_id", "ts", "v")
-    val tw = engine.trailingWindow(ev, "user_id", "ts", "v", 10L * 60 * 1000000)
+    val tw = Features.trailingWindow(ev, "user_id", "ts", "v", 10L * 60 * 1000000)
       .collect().map(x => x.getTimestamp(1).getTime / 60000 ->
         ((x.getLong(3), x.getDouble(4)))).toMap
     assert(tw == Map(0L -> ((1L, 1.0)), 5L -> ((2L, 3.0)), 20L -> ((1L, 4.0))))
 
     // leave-one-out target encoding: each row sees only the others'
     // mean; the singleton category is NULL with the global fallback
-    val te = engine.targetEncodeLoo(
+    val te = Features.targetEncodeLoo(
       Seq(("a", 1.0), ("a", 3.0), ("b", 5.0)).toDF("cat", "y"),
       "cat", "y")
     val rows = te.orderBy(col("cat"), col("y")).collect()
@@ -501,10 +534,10 @@ class GraftEngineSpec extends AnyFunSuite with SparkSpec {
       (2L, "lorem ipsum dolor sit amet here.", "https://b.d1.com/y"),
       (3L, "six seven eight nine ten eleven.", "https://c.d2.com/z"))
       .toDF("id", "text", "url")
-    val clean = engine.c4Clean(docs, "id", "text")
+    val clean = TextAnalysis.c4Clean(docs, "id", "text")
       .collect().map(r => r.getLong(0) -> r.getInt(2)).toMap
     assert(clean == Map(1L -> 1, 3L -> 1)) // doc 2 killed by lorem ipsum
-    val cur = engine.curateByDomain(docs, "id", "url",
+    val cur = UrlOps.curateByDomain(docs, "id", "url",
         blockedDomains = Seq("d2.com"), maxPerDomain = 1)
       .collect().map(r => (r.getLong(0), r.getAs[String]("domain")))
     assert(cur.toSet == Set((1L, "d1.com"))) // d2 blocked, d1 capped to 1
@@ -512,9 +545,9 @@ class GraftEngineSpec extends AnyFunSuite with SparkSpec {
     val emb = (1 to 50).map(i =>
         (i.toLong, Array(i.toFloat, 0f, (51 - i).toFloat, 1f)))
       .toDF("id", "embedding")
-    val (basis, evar, mean) = engine.pcaFit(emb, "embedding", 1)
+    val (basis, evar, mean) = Pca.pcaFit(emb, "embedding", 1)
     assert(evar(0) > 100.0 && basis(0).length == 4)
-    assert(engine.pcaProject(emb, "embedding", "y", basis, mean)
+    assert(Pca.project(emb, "embedding", "y", basis, mean)
       .select(col("y")).head().getSeq[Double](0).length == 1)
     // node2vec over the engine graph: memoized, string ids round-trip
     val w1 = engine.node2vec(1, 2)
@@ -539,10 +572,11 @@ class GraftEngineSpec extends AnyFunSuite with SparkSpec {
       .map(i => (i.toLong, atoms(i % 2) ++ atoms((i / 2) % 2)))
       .toDF("vec_id", "embedding")
       .select(col("vec_id"), col("embedding").cast("array<float>").as("embedding"))
-    val (cb, enc) = engine.pqIndex(pts, "vec_id", "embedding", m = 2, ksub = 2)
+    val cb = Pq.pqTrain(pts, "vec_id", "embedding", m = 2, ksub = 2)
+    val enc = Pq.pqEncode(pts, cb, "vec_id", "embedding")
     val q = pts.filter(col("vec_id") < 2)
       .select((col("vec_id") + 1000).as("vec_id"), col("embedding"))
-    val hits = engine.pqSearch(q, enc, cb, k = 3)
+    val hits = Pq.pqTopK(q, enc, cb, "vec_id", "embedding", k = 3)
       .filter(col("sim") === 1.0)
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     // every 1.0 hit shares its query's atom combination (id ≡ qid mod 4)
@@ -556,23 +590,23 @@ class GraftEngineSpec extends AnyFunSuite with SparkSpec {
     // each bin, so ECE = 400000 exactly; all-tied scores pin AUC = ½
     val scored = Seq((1, 900000L), (0, 900000L), (1, 100000L), (0, 100000L))
       .toDF("y", "p")
-    val e = engine.evalEce(scored, "y", "p", bins = 2).head()
+    val e = Eval.ece(Eval.calibrationBins(scored, "y", "p", bins = 2)).head()
     assert(e.getAs[Long]("n") === 4L)
     assert(e.getAs[Long]("ece_micros") === 400000L)
-    assert(engine.evalAuc(scored, "y", "p").head()
+    assert(Eval.aucRank(scored, "y", "p").head()
       .getAs[Long]("auc_micros") === 500000L)
     // one query: run order (rel 2, rel 0, rel 1); dcg = 2e6 + 0 +
     // floor(1e6/log2(4)); idcg ranks rel desc = 2e6 + floor(1e6/log2(3))
     val run = Seq((1L, 10L, 3.0), (1L, 20L, 2.0), (1L, 30L, 1.0))
       .toDF("qid", "id", "score")
     val qrels = Seq((1L, 10L, 2L), (1L, 30L, 1L)).toDF("qid", "id", "rel")
-    val nd = engine.evalNdcg(run, qrels, k = 3).head()
+    val nd = Eval.ndcgAtK(run, qrels, k = 3).head()
     assert(nd.getAs[Long]("dcg_micros") === 2500000L)
     assert(nd.getAs[Long]("idcg_micros") === 2630929L)
     assert(nd.getAs[Long]("ndcg_micros") === 950234L)
     // collocations: "x y" ×8, "z w" ×2 → pmi(x,y) = ln 1.25 micros
     val corpus = (Seq.fill(8)("x y") ++ Seq.fill(2)("z w")).toDF("text")
-    val pmi = engine.collocations(corpus, "text", window = 3, minCount = 2L)
+    val pmi = TextAnalysis.pmiPairs(corpus, "text", window = 3, minCount = 2L)
       .collect().map(r => (r.getAs[String]("a"), r.getAs[String]("b")) ->
         r.getAs[Long]("pmi_micros")).toMap
     assert(pmi(("x", "y")) === math.round(1e6 * math.log(1.25)))
@@ -587,23 +621,23 @@ class GraftEngineSpec extends AnyFunSuite with SparkSpec {
       (1L, ts("2024-01-02 10:00:00"), "view", 2L, 3.0),
       (2L, ts("2024-01-01 10:00:00"), "signup", 3L, 4.0)
     ).toDF("user_id", "ts", "event_type", "event_id", "value")
-    val f = engine.funnel(ev, "user_id", "ts", "event_type",
-        Seq("signup", "view")).collect()
+    val f = Events.funnel(ev, "user_id", "ts", "event_type",
+        Seq("signup", "view"), "7 DAYS").collect()
     assert(f.map(r => r.getLong(2)).toSeq == Seq(2L, 1L))
-    val tr = engine.transitions(ev, "user_id", "ts", "event_type",
+    val tr = Events.transitionMatrix(ev, "user_id", "ts", "event_type",
         Seq("event_id")).collect()
     assert(tr.map(r => (r.getString(0), r.getString(1), r.getLong(2)))
       .toSeq == Seq(("signup", "view", 1L)))
-    assert(engine.abTest(Seq(1.0, 2.0).toDF("value"),
+    assert(Stats.welchT(Seq(1.0, 2.0).toDF("value"),
       Seq(1.0, 2.0).toDF("value"), "value").head().getAs[Long]("t_micros")
       == 0L)
-    val ci = engine.bootstrapMean(
+    val ci = Stats.bootstrapCI(
       (1 to 50).map(i => (i.toLong, 1.0)).toDF("id", "value"),
       "id", "value", b = 8).head()
     // constant values: every replicate mean is exactly 1e6
     assert((ci.getLong(1), ci.getLong(2), ci.getLong(3)) ==
       ((1000000L, 1000000L, 1000000L)))
-    val folds = engine.crossValFolds(
+    val folds = Sampling.kFold(
         (1L to 100L).toDF("id"), "id", k = 5)
       .groupBy("fold").count().collect()
     assert(folds.length == 5 && folds.map(_.getLong(1)).sum == 100L)
@@ -616,53 +650,53 @@ class GraftEngineSpec extends AnyFunSuite with SparkSpec {
     val anyId = engine.vertices.select("id").orderBy("id")
       .head().getString(0)
     val seeds = Seq((anyId, 7L)).toDF("id", "label")
-    val spread = engine.spreadLabels(seeds, rounds = 6).collect()
+    val spread = GraphAnalytics.labelSpread(engine.edges, seeds, rounds = 6).collect()
     assert(spread.nonEmpty && spread.forall(_.getLong(1) == 7L))
     // quantileBins: 100 rows into 4 exact bins
-    val qb = engine.quantileBins((1L to 100L).map(i => (i, i % 37))
+    val qb = Features.quantileBins((1L to 100L).map(i => (i, i % 37))
         .toDF("id", "v"), "v", "id", 4)
       .groupBy("bin").count().collect().map(_.getLong(1))
     assert(qb.toSet == Set(25L))
     // randomProject emits outDim rows per input
-    val rp = engine.randomProject(
+    val rp = Pca.randomProject(
       Seq((1L, Array.fill(8)(0.5f))).toDF("id", "v"), "id", "v", 4, 8)
     assert(rp.count() == 4)
     // interleave: 2 runs of 2 → 4 balanced positions
     val ra = Seq((1L, "x", 2L), (1L, "y", 1L)).toDF("qid", "id", "score")
     val rb = Seq((1L, "p", 2L), (1L, "q", 1L)).toDF("qid", "id", "score")
-    val il = engine.interleave(ra, rb, 4).collect()
+    val il = Hybrid.teamDraft(ra, rb, 4).collect()
     assert(il.length == 4 && il.map(_.getString(3)).count(_ == "A") == 2)
     // sequenceScore + banditScores + conversionInterval on a tiny log
     def ts(s: String) = java.sql.Timestamp.valueOf(s)
     val ev = Seq((1L, ts("2024-01-01 10:00:00"), "a", 1L),
       (1L, ts("2024-01-01 11:00:00"), "b", 2L))
       .toDF("user_id", "ts", "event_type", "event_id")
-    assert(engine.sequenceScore(ev, "user_id", "ts", "event_type",
+    assert(Events.sequenceScore(ev, "user_id", "ts", "event_type",
       Seq("event_id")).count() == 1)
-    val bandit = engine.banditScores(ev, col("user_id"),
+    val bandit = Events.ucbScores(ev, col("user_id"),
       (col("event_type") === "b").cast("int")).collect()
     assert(bandit.length == 1 && bandit.head.getLong(1) == 2L)
-    val ciw = engine.conversionInterval(ev, col("user_id"),
+    val ciw = Stats.wilsonInterval(ev, col("user_id"),
       (col("event_type") === "b").cast("int")).head()
     assert(ciw.getLong(4) <= 500000L && ciw.getLong(5) >= 500000L)
     // mutualMatches on a 2-cycle
-    val mm = engine.mutualMatches(
+    val mm = Pymk.mutualBest(
       Seq((1L, 2L, 5L), (2L, 1L, 4L)).toDF("item", "rec", "s"),
       "item", "rec", "s").collect()
     assert(mm.length == 1 && mm.head.getLong(0) == 1L)
     // evalAveragePrecision: single relevant at rank 1 → AP 1.0
-    val ap = engine.evalAveragePrecision(ra,
+    val ap = Eval.averagePrecisionAtK(ra,
       Seq((1L, "x")).toDF("qid", "id"), 2).head()
     assert(ap.getLong(3) == 1000000L)
     // vocabularyDrift of identical frames is 0
-    val vd = engine.vocabularyDrift(Seq("t").toDF("k"),
+    val vd = Drift.jsDivergence(Seq("t").toDF("k"),
       Seq("t").toDF("k"), "k").head()
     assert(vd.getLong(3) == 0L)
     // winnowFingerprints + blockingReport smoke through the facade
-    assert(engine.winnowFingerprints(
+    assert(TextAnalysis.winnow(
       Seq((1L, "a b c d e f g h")).toDF("doc_id", "text"),
       "doc_id", "text").count() > 0)
-    val br = engine.blockingReport(
+    val br = EntityResolution.blockingQuality(
       Seq((1L, "b", "e"), (2L, "b", "e")).toDF("id", "blk", "ent"),
       "id", "blk", "ent").head()
     assert(br.getLong(5) == 1000000L) // the one truth pair co-blocks
@@ -676,41 +710,41 @@ class GraftEngineSpec extends AnyFunSuite with SparkSpec {
       (1L, ts("2024-01-02 10:00:00"), "a", 3.0))
       .toDF("user_id", "t", "etype", "v")
     // engagement: one month, dau (2,1), mau 2 → 750000
-    assert(engine.engagement(ev, "user_id", "t").head().getLong(4) == 750000L)
+    assert(Events.stickiness(ev, "user_id", "t").head().getLong(4) == 750000L)
     // churnCurve: u2 churns day 1 of 2 users → S(d1) = 500000
-    assert(engine.churnCurve(ev, "user_id", "t").head().getLong(4) == 500000L)
+    assert(Events.kaplanMeier(ev, "user_id", "t").head().getLong(4) == 500000L)
     // customerSegments emits one coded row per user
-    val rfm = engine.customerSegments(ev, "user_id", "t", "v").collect()
+    val rfm = Events.rfm(ev, "user_id", "t", "v").collect()
     assert(rfm.length == 2 && rfm.forall(r => r.getLong(7) >= 111L))
     // userEntropy: single-type users read exactly 0
-    assert(engine.userEntropy(ev, "user_id", "etype")
+    assert(Events.behaviorEntropy(ev, "user_id", "etype")
       .collect().forall(_.getLong(3) == 0L))
     // controlChart + seasonality + robustMean over a tiny series
-    assert(engine.controlChart(ev, "t", "v", 100000000L).count() == 2)
-    assert(engine.seasonality(ev, "t", 1).head().getLong(1) == 1L)
-    assert(engine.robustMean(ev.select(col("user_id").as("id"), col("v")),
+    assert(Drift.ewma(ev, "t", "v", 100000000L).count() == 2)
+    assert(Drift.acf(ev, "t", 1).head().getLong(1) == 1L)
+    assert(Stats.trimmedMean(ev.select(col("user_id").as("id"), col("v")),
       "v", "id", 0.0).head().getLong(3) == 2000000L)
     // eval family: brier/prAuc/kappa on tiny frames
     val sc = Seq((1000000L, 1), (0L, 0)).toDF("p", "y")
-    assert(engine.evalBrier(sc, "y", "p").head().getLong(1) == 0L)
-    assert(engine.evalPrAuc(sc, "y", "p").head().getLong(2) == 1000000L)
-    assert(engine.raterAgreement(Seq((1L, 1L), (0L, 0L)).toDF("a", "b"),
+    assert(Eval.brierScore(sc, "y", "p").head().getLong(1) == 0L)
+    assert(Eval.prAuc(sc, "y", "p").head().getLong(2) == 1000000L)
+    assert(Eval.cohenKappa(Seq((1L, 1L), (0L, 0L)).toDF("a", "b"),
       "a", "b").head().getLong(2) == 1000000L)
     // calibrateFit returns the (n, A, B) params row
-    val pf = engine.calibrateFit(Seq((2000000L, 1), (-2000000L, 0))
+    val pf = QualityLr.plattFit(Seq((2000000L, 1), (-2000000L, 0))
       .toDF("m_micros", "y"), "m_micros", "y", iters = 1).head()
     assert(pf.getLong(0) == 2L && pf.getLong(1) > 1000000L)
     // labelClusters: distinctive term per slice
-    val lc = engine.labelClusters(Seq(("A", "apple apple"),
+    val lc = TextAnalysis.classTfidf(Seq(("A", "apple apple"),
       ("B", "banana")).toDF("cls", "text"), "cls", "text", 1).collect()
     assert(lc.map(r => (r.getString(0), r.getString(1))).toSet ==
       Set(("A", "apple"), ("B", "banana")))
     // driftEmbeddings: identical slices cos 1e6 gap 0
     val em = Seq(Seq(1f, 0f)).toDF("embedding")
-    val de = engine.driftEmbeddings(em, em, "embedding").head()
+    val de = Drift.centroidDrift(em, em, "embedding").head()
     assert((de.getLong(2), de.getLong(3)) == ((1000000L, 0L)))
     // dedupSurvivors: best score survives
-    val surv = engine.dedupSurvivors(
+    val surv = Dedup.keepBest(
       Seq((1L, 10L), (2L, 10L)).toDF("doc_id", "cluster"),
       Seq((1L, 3L), (2L, 9L)).toDF("doc_id", "sc"),
       "doc_id", "sc").head()
@@ -718,39 +752,40 @@ class GraftEngineSpec extends AnyFunSuite with SparkSpec {
     // recDiversity + didEstimate + attributeLinear + quadCount +
     // communityConductance smoke with real shapes
     val inter = Seq((1L, "a"), (2L, "a"), (1L, "b")).toDF("u", "item")
-    val rd = engine.recDiversity(Seq("a").toDF("rec"), "rec",
+    val rd = Eval.coverageNovelty(Seq("a").toDF("rec"), "rec",
       inter, "u", "item").head()
     assert(rd.getLong(3) == 500000L) // 1 of 2 catalog items covered
-    val did = engine.didEstimate(Seq(("t", false, 1.0), ("t", true, 2.0),
+    val did = Stats.diffInDiff(Seq(("t", false, 1.0), ("t", true, 2.0),
         ("c", false, 1.0), ("c", true, 1.0)).toDF("g", "post", "v"),
       col("g") === "t", col("post"), "v").head()
     assert(did.getLong(4) == 1000000L)
     val ev2 = Seq((1L, ts("2024-01-01 10:00:00"), "purchase", 9L),
       (1L, ts("2024-01-01 09:00:00"), "click", 1L))
       .toDF("user_id", "t", "etype", "eid")
-    val la = engine.attributeLinear(ev2, "user_id", "t", "etype", "eid",
+    val la = Events.linearAttribution(ev2, "user_id", "t", "etype", "eid",
       "purchase", Seq("click"), 86400000000L).head()
     assert(la.getLong(3) == 1000000L)
-    assert(engine.quadCount().head().getLong(1) >= 0L)
+    assert(GraphAnalytics.c4Count(engine.edges).head().getLong(1) >= 0L)
     // sampled twin at a cap above any test-graph degree == exact
-    assert(engine.quadCountSampled(maxDegree = 1024).head().getLong(2) ==
-      engine.quadCount().head().getLong(1))
-    val cc = engine.communityConductance().collect()
+    assert(GraphAnalytics.c4CountSampled(engine.edges, maxDegree = 1024).head().getLong(2) ==
+      GraphAnalytics.c4Count(engine.edges).head().getLong(1))
+    val cc = GraphAnalytics.conductance(engine.edges,
+      GraphAnalytics.labelPropagationDF(engine.edges)).collect()
     assert(cc.nonEmpty && cc.forall(_.getLong(4) <= 1000000L))
   }
 
   test("governance + graph-quality facade: anonymityReport, diversityReport, recExposure, weakTies-shape") {
     import spark.implicits._
     val df = Seq(("a", "s1"), ("a", "s1"), ("b", "s2")).toDF("q", "s")
-    assert(engine.anonymityReport(df, Seq("q"), 2L).head()
+    assert(Profile.kAnonymity(df, Seq("q"), 2L).head()
       .getAs[Long]("n_violating_groups") == 1L)
-    assert(engine.diversityReport(df, Seq("q"), "s", 2L).head()
+    assert(Profile.lDiversity(df, Seq("q"), "s", 2L).head()
       .getAs[Long]("n_violating_groups") == 2L)
     val recs = (Seq.fill(3)("a") ++ Seq.fill(1)("b")).toDF("rec")
-    assert(engine.recExposure(recs, "rec").head()
+    assert(Eval.exposureGini(recs, "rec").head()
       .getAs[Long]("gini_micros") == 250000L)
     // the knows graph is tiny + triangle-free → every edge is a weak tie
-    val wt = engine.weakTies()
+    val wt = GraphAnalytics.weakTies(engine.edges)
     assert(wt.columns.toSeq == Seq("u", "v"))
   }
 
@@ -759,31 +794,31 @@ class GraftEngineSpec extends AnyFunSuite with SparkSpec {
     def ts(s: String) = java.sql.Timestamp.valueOf(s)
     val ev = Seq((1L, ts("2024-01-01 00:00:00"), 1L),
       (1L, ts("2024-01-01 01:00:00"), 2L)).toDF("u", "ts", "eid")
-    assert(engine.sessions(ev, "u", "ts", "eid").count() == 2L)
-    assert(engine.dailyAnomalies(ev, "ts").count() == 1L)
+    assert(Events.sessionize(ev, "u", "ts", "eid", 30L * 60L * 1000000L).count() == 2L)
+    assert(Events.seasonalOutliers(ev, "ts").count() == 1L)
     val vals = (1 to 10).map(i => (i.toDouble, i.toLong)).toDF("v", "id")
-    assert(engine.clampedMean(vals, "v", "id", 0.1)
+    assert(Stats.winsorizedMean(vals, "v", "id", 0.1)
       .head().getAs[Long]("n_clamped_each") == 1L)
     val logged = Seq((1L, 500000L)).toDF("r", "p")
-    assert(engine.policyValue(logged, "r", "p", k = 2)
+    assert(Eval.ipsEval(logged, "r", "p", k = 2, clipMicros = 1000L)
       .head().getAs[Long]("ips_micros") == 1000000L)
     val wins = Seq(("a", "b", 3L), ("b", "a", 1L)).toDF("a", "b", "w")
-    assert(engine.preferenceStrengths(wins, "a", "b", "w")
+    assert(Stats.bradleyTerry(wins, "a", "b", "w")
       .collect().map(_.getLong(1)).toSet == Set(1500000L, 500000L))
     // knows-graph readouts: shapes + sane ranges on the tiny fixture
-    assert(engine.graphTransitivity().head().getAs[Long]("n_wedges") >= 0L)
-    assert(engine.robustness(Seq(1.0)).head()
+    assert(GraphAnalytics.transitivity(engine.edges).head().getAs[Long]("n_wedges") >= 0L)
+    assert(GraphAnalytics.percolation(engine.edges, Seq(1.0)).head()
       .getAs[Long]("giant_frac_micros") > 0L)
-    assert(engine.coreness().count() > 0L)
-    assert(engine.communitiesLouvain().count() > 0L)
+    assert(GraphAnalytics.corenessHIndex(engine.edges).count() > 0L)
+    assert(GraphAnalytics.louvainSync(engine.edges).count() > 0L)
     val docs = Seq((1L, "a b c d e")).toDF("doc_id", "text")
-    assert(engine.vocabGrowth(docs, "text", "doc_id").head()
+    assert(TextAnalysis.heapsFit(docs, "text", "doc_id").head()
       .getAs[Long]("n_groups") == 1L)
-    assert(engine.noveltyScores(docs, "doc_id", "text", docs, "text")
+    assert(Dedup.ngramNovelty(docs, "doc_id", "text", docs, "text", 3)
       .head().getAs[Long]("novelty_micros") == 0L)
     val urls = Seq((1L, "https://a.com/x?q=1"), (2L, "https://a.com/x"))
       .toDF("id", "url")
-    assert(engine.dedupByUrl(urls, "id", "url").count() == 1L)
+    assert(UrlOps.canonicalUrlDedup(urls, "id", "url").count() == 1L)
   }
 
   test("graph admin: dump then clear") {
@@ -802,6 +837,11 @@ class GraftEngineSpec extends AnyFunSuite with SparkSpec {
   }
 
   // -------------------------------------------------------- helpers
+
+  /** The engine's edges with a null weight read as 1.0, the form its
+    * weighted graph operators take. */
+  private def weightedEdges: DataFrame =
+    engine.edges.withColumn("weight", coalesce(col("weight"), lit(1.0)))
 
   private def foldThreads: Seq[String] = {
     import scala.jdk.CollectionConverters._
@@ -833,7 +873,6 @@ class GraftEngineSpec extends AnyFunSuite with SparkSpec {
     * written one directory per owner. The reference fold. */
   private def sequentialIngest(wh: String, cards: DataFrame): Unit = {
     import graft.operators.GraphBuild
-    import graft.streaming.CardStream
     val enriched = CardStream.validated(cards)
     CardStream.mergeLww(spark, enriched, s"$wh/search_table", Seq("doc_id"), "created_at")
     val (v, e) = GraphBuild.buildGraph(enriched)
