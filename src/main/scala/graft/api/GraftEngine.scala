@@ -77,10 +77,17 @@ class GraftEngine(spark: SparkSession, warehouse: String) {
   // requests and would silently serve each other's results).
   // TTL-less: instead of serving stale up to N seconds, every write
   // (ingest / softDelete / clearGraph) invalidates the memo, which a
-  // single-writer engine can do exactly. Size-bounded LRU: each entry
-  // pins localCheckpoint blocks, so an unbounded read-heavy session
-  // would otherwise grow storage memory without limit — evicted
-  // entries' blocks are freed by the ContextCleaner once unreferenced.
+  // single-writer engine can do exactly. Two kinds of entry:
+  //  - top-k reads (search, pymk, phraseSearch, fuzzySearch) return at
+  //    most `limit` rows, which the caller collects anyway. A miss
+  //    collects them once and memoizes a local-relation frame over the
+  //    rows, so a hit (the same frame, `eq`) and its collect run no
+  //    Spark job and pin no block.
+  //  - bulk reads (linkPredict, node2vec) grow with the graph; they are
+  //    memoized as eager localCheckpoint blocks, which the
+  //    ContextCleaner frees once an entry is dropped and unreferenced.
+  // Size-bounded LRU of 256 entries, so the memo holds at most
+  // 256 × `limit` rows plus the bulk entries' blocks.
   // Only results are memoized, no table statistic: a cold search counts
   // its idf N in its own statistics pass.
   private val MemoMaxEntries = 256
@@ -116,20 +123,28 @@ class GraftEngine(spark: SparkSession, warehouse: String) {
     schemas.clear()
   }
 
-  private def memoized(key: String)(compute: => DataFrame): DataFrame = {
+  // Computed outside the lock — a Spark job under a monitor would
+  // serialize every cold request behind it; the rare double-compute
+  // race just wastes one request's jobs.
+  private def memoized(key: String)(materialize: => DataFrame): DataFrame = {
     val hit = resultMemo.synchronized(Option(resultMemo.get(key)))
     hit.getOrElse {
-      // eager localCheckpoint: the memo stores materialized blocks, so
-      // a repeated request replays nothing (ContextCleaner frees the
-      // blocks when the entry is dropped by invalidation or LRU
-      // eviction). Computed outside the lock — a Spark job under a
-      // monitor would serialize every cold request behind it; the rare
-      // double-compute race just wastes one job.
-      val df = compute.localCheckpoint(true)
+      val df = materialize
       resultMemo.synchronized(Option(resultMemo.putIfAbsent(key, df)))
         .getOrElse(df)
     }
   }
+
+  /** A top-k read: its rows, collected once, as a local frame. */
+  private def memoRows(key: String)(compute: => DataFrame): DataFrame =
+    memoized(key) {
+      val df = compute
+      spark.createDataFrame(java.util.Arrays.asList(df.collect(): _*), df.schema)
+    }
+
+  /** A bulk read: eager localCheckpoint blocks. */
+  private def memoBlocks(key: String)(compute: => DataFrame): DataFrame =
+    memoized(key)(compute.localCheckpoint(true))
 
   /** Batch-ingest card events (envelope columns s3_bucket, s3_key,
     * owner, addr…created_at): validate → enrich, then fold the batch
@@ -248,7 +263,7 @@ class GraftEngine(spark: SparkSession, warehouse: String) {
     // owner encoded with a presence marker: None and Some("") are
     // different requests (no filter vs. filter on empty owner) and must
     // not share a memo entry
-    memoized(cacheKey("search", query,
+    memoRows(cacheKey("search", query,
       owner.map("o:" + _).getOrElse("<none>"), limit.toString,
       scorer, combine)) {
       Search.search(searchTable, "doc_id", SearchFields, query, limit,
@@ -258,9 +273,13 @@ class GraftEngine(spark: SparkSession, warehouse: String) {
 
   /** PYMK by case-insensitive user name. Response reproduces the
     * reference's Gremlin `valueMap()` quirk: every property is an
-    * array<string>, score is double (README.md:182-219). */
+    * array<string>, score is double (README.md:182-219). Memoized on
+    * the name as the anchor lookup matches it ([[Pymk.canonicalName]]),
+    * so "Poby Kim" and "poby kim" share one entry. */
   def pymk(user: String, limit: Int = 10): DataFrame =
-    memoized(cacheKey("pymk", user, limit.toString)) { pymkUncached(user, limit) }
+    memoRows(cacheKey("pymk", Pymk.canonicalName(user), limit.toString)) {
+      pymkUncached(user, limit)
+    }
 
   private def pymkUncached(user: String, limit: Int): DataFrame =
     anchorOf(user).fold(emptyOf(Encoders.product[PymkResponse])) { anchor =>
@@ -334,7 +353,7 @@ class GraftEngine(spark: SparkSession, warehouse: String) {
     * writes invalidate, same as every serving read. */
   def phraseSearch(phrase: String, field: String = "name",
                    limit: Int = 10): DataFrame =
-    memoized(cacheKey("phrase", field, phrase, limit.toString)) {
+    memoRows(cacheKey("phrase", field, phrase, limit.toString)) {
       SearchIndex.phraseSearch(searchTable.filter(col("is_alive") === 1),
         "doc_id", field, phrase, limit)
     }
@@ -345,7 +364,7 @@ class GraftEngine(spark: SparkSession, warehouse: String) {
     * Lucene fade-out boost. Memoized; soft-deleted docs excluded. */
   def fuzzySearch(term: String, field: String = "name",
                   maxEdits: Int = 2, limit: Int = 10): DataFrame =
-    memoized(cacheKey("fuzzy", field, term, maxEdits.toString,
+    memoRows(cacheKey("fuzzy", field, term, maxEdits.toString,
       limit.toString)) {
       SearchIndex.fuzzySearch(searchTable.filter(col("is_alive") === 1),
         "doc_id", field, term, maxEdits, limit)
@@ -359,7 +378,7 @@ class GraftEngine(spark: SparkSession, warehouse: String) {
     * (k, measure). */
   def linkPredict(k: Int = 10,
                   measure: String = "resource_allocation"): DataFrame =
-    memoized(cacheKey("linkpred", k.toString, measure)) {
+    memoBlocks(cacheKey("linkpred", k.toString, measure)) {
       GraphAnalytics.linkPredict(edges.select(col("src"), col("dst")), k, measure)
     }
 
@@ -374,7 +393,7 @@ class GraftEngine(spark: SparkSession, warehouse: String) {
     * ids. Returns (walk_id, step, vertex). */
   def node2vec(walksPerVertex: Int = 2, length: Int = 4,
                p: Double = 4.0, q: Double = 0.25): DataFrame =
-    memoized(cacheKey("node2vec", walksPerVertex.toString,
+    memoBlocks(cacheKey("node2vec", walksPerVertex.toString,
       length.toString, p.toString, q.toString)) {
       val e = edges.select(col("src"), col("dst"))
       val (ranked, _) = Packing.globalRank(

@@ -1,7 +1,12 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.collection.mutable
+import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.expressions.{Literal, Lower}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import graft.functions.expr.KeyWeightExpr
 
 /** "People You May Know" — the reference's flagship graph query,
   * re-expressed as relational algebra on (vertices, edges) DataFrames.
@@ -31,14 +36,17 @@ import org.apache.spark.sql.functions._
   *  - ties: Gremlin leaves equal-count order unspecified; we declare the
   *    deterministic tiebreak `asc(id)` (SURVEY §7.3).
   *
-  * Scale posture (100 TB): both hops are equi-joins on the vertex id —
-  * shuffle-partitioned by key, no driver collection. The undirected
-  * adjacency is built once and reused by both hops so the exchange is
-  * reusable (ReusedExchange under AQE). For a single-anchor query the
-  * anchor side is tiny after the first semi-join, so AQE demotes the
-  * second join to broadcast automatically; for the all-pairs variant the
-  * joins stay shuffle hash joins keyed on id, which is the right plan.
-  * Skewed hub vertices are handled by AQE skew-join splitting.
+  * Scale posture (100 TB): in the relational form ([[recommend]]) both
+  * hops are equi-joins on the vertex id — shuffle-partitioned by key, no
+  * driver collection; the all-pairs variants keep that shape, which is
+  * the right plan when every anchor is served. The serving form
+  * ([[recommendWithProps]]) is an eager point query: it collects the
+  * anchor's friend bag (deg(anchor) entries), gathers the 2-hop
+  * candidates in one scan with a hash probe per edge, and returns a
+  * local frame of ≤ `limit` rows — driver state bounded by the anchor's
+  * degree, never by the graph. Skewed hub vertices are handled by AQE
+  * skew-join splitting in the relational form; a hub anchor costs the
+  * serving form a deg(anchor)-entry map.
   */
 object Pymk {
 
@@ -153,15 +161,77 @@ object Pymk {
       .limit(limit)
   }
 
-  /** Recommend joined back to vertex properties — replaces the
-    * reference's N+1 per-candidate `valueMap()` round trips
-    * (neptune_recommend_bizcard.py:69-72) with one equi-join.
+  /** [[recommend]] joined back to vertex properties, served as a point
+    * query from the anchor: the reference's traversal starts at the
+    * anchor vertex and visits only its 2-hop neighbourhood
+    * (neptune_recommend_bizcard.py:56-73), and so does this. Eager —
+    * it runs its jobs here and returns a local frame:
+    *
+    *  1. collect the anchor's incident edges as its friend bag, friend
+    *     → multiplicity (the reference's `aggregate('friends')`; under
+    *     `both('knows')` a reciprocal pair and a self-loop count 2);
+    *  1. one scan over the edges incident to a friend: each emits its
+    *     far endpoint weighted by its friend's multiplicity (an O(1)
+    *     hash probe, [[graft.functions.expr.KeyWeightExpr]]), the
+    *     anchor and the friends are dropped row by row, and a grouped
+    *     sum feeds the top-`limit`;
+    *  1. fetch the properties of the ≤ `limit` ids — one filter in
+    *     place of the reference's N+1 per-candidate `valueMap()` round
+    *     trips (neptune_recommend_bizcard.py:69-72).
+    *
+    * The answer equals `recommend(edges, anchorId, limit)` left-joined
+    * to `vertices` on id, ordered score desc, id asc, with that join's
+    * schema: (id, score, every other vertex column; null properties for
+    * a candidate with no vertex row). Driver state is the deg(anchor)
+    * friend bag plus ≤ `limit` result rows; nothing is shuffled but
+    * the candidates' partial sums.
+    *
+    * @param anchorId a literal (it is evaluated once, as a constant)
     */
   def recommendWithProps(vertices: DataFrame, edges: DataFrame,
                          anchorId: Column, limit: Int): DataFrame = {
-    val scored = recommend(edges, anchorId, limit)
-    scored.join(vertices, Seq("id"), "left")
-      .orderBy(desc("score"), asc("id"))
+    // the id column recommend's adjacency gives (type and nullability)
+    val idField = undirected(edges).schema("to").copy(name = "id")
+    val ends = edges.select(col("src").cast(idField.dataType).as("s"),
+      col("dst").cast(idField.dataType).as("d"))
+    val s = col("s")
+    val d = col("d")
+
+    val bag = mutable.HashMap.empty[Any, Long].withDefaultValue(0L)
+    ends.filter(s === anchorId || d === anchorId)
+      .select(s, d, s <=> anchorId, d <=> anchorId)
+      .collect().foreach { r =>
+        if (r.getBoolean(2) && !r.isNullAt(1)) bag(r.get(1)) += 1
+        if (r.getBoolean(3) && !r.isNullAt(0)) bag(r.get(0)) += 1
+      }
+
+    val top = if (bag.isEmpty) Array.empty[Row] else {
+      val weight = KeyWeightExpr.keyWeight(bag)
+      ends.filter(weight(s).isNotNull || weight(d).isNotNull)
+        .select(inline(array(struct(d.as("id"), weight(s).as("w")),
+          struct(s.as("id"), weight(d).as("w")))))
+        .filter(col("w").isNotNull && col("id") =!= anchorId &&
+          weight(col("id")).isNull)
+        .groupBy("id").agg(sum("w").as("score"))
+        .orderBy(desc("score"), asc("id"))
+        .limit(limit)
+        .collect()
+    }
+
+    val vid = vertices.schema.fieldIndex("id")
+    val props = vertices.schema.fields.indices.filterNot(_ == vid)
+    val byId = if (top.isEmpty) Map.empty[Any, Array[Row]] else
+      vertices.filter(col("id").isInCollection(top.map(_.get(0))))
+        .withColumn("id", col("id").cast(idField.dataType))
+        .collect().groupBy(_.get(vid))
+    val noProps = Array(Row.fromSeq(Seq.fill(vertices.schema.size)(null)))
+    val rows = top.toSeq.flatMap { t =>
+      byId.getOrElse(t.get(0), noProps).toSeq.map(v =>
+        Row.fromSeq(t.get(0) +: t.getLong(1) +: props.map(v.get)))
+    }
+    val schema = StructType(idField +: StructField("score", LongType, nullable = false) +:
+      props.map(i => vertices.schema(i).copy(nullable = true)))
+    edges.sparkSession.createDataFrame(rows.asJava, schema)
   }
 
   /** [[recommend]] with the EXPLANATION a PYMK surface renders next to
@@ -540,11 +610,19 @@ object Pymk {
     * caller feeds it to [[recommend]]. The reference anchors EVERY
     * same-named vertex (SURVEY C2; the §3.3 traversal starts from all of
     * them); multi-anchor PYMK is out of scope here. `orderBy.limit`
-    * plans as TakeOrderedAndProject: one job, no global sort.
+    * plans as TakeOrderedAndProject: one job, no global sort. Both sides
+    * go through Spark's `lower`: the driver's `String.toLowerCase`
+    * follows the JVM's default locale (Turkish: "IRENE" → "ırene") where
+    * Spark lower-cases ASCII to "irene".
     */
   def anchorByName(vertices: DataFrame, user: String): DataFrame =
-    vertices.filter(lower(col("name")) === user.toLowerCase).select("id")
+    vertices.filter(lower(col("name")) === lower(lit(user))).select("id")
       .orderBy("id").limit(1)
+
+  /** `user` as [[anchorByName]] matches it: Spark's `lower`, evaluated
+    * on the driver as the optimizer folds `lower(lit(user))`. Two names
+    * with one canonical name resolve to the same anchor. */
+  def canonicalName(user: String): String = Lower(Literal(user)).eval().toString
 
   /** Item–item collaborative filtering over a (user, item) interaction
     * frame — the co-occurrence recommender next to the social 2-hop

@@ -74,6 +74,21 @@ class CardPipelineSpec extends AnyFunSuite with SparkSpec {
     assert(Pymk.anchorByName(namesakes, "nobody").isEmpty)
   }
 
+  test("anchorByName finds the anchor under a Turkish default locale") {
+    import spark.implicits._
+    val people = Seq(("0000000a", "Irene Adler"), ("0000000b", "Ivan Ilyin"))
+      .toDF("id", "name")
+    val default = java.util.Locale.getDefault
+    java.util.Locale.setDefault(java.util.Locale.forLanguageTag("tr"))
+    try {
+      // "IRENE".toLowerCase is "ırene" here; Spark lowers ASCII to "irene"
+      assert("IRENE ADLER".toLowerCase != "irene adler")
+      assert(Pymk.anchorByName(people, "IRENE ADLER").collect().map(_.getString(0))
+        .toSeq == Seq("0000000a"))
+      assert(Pymk.canonicalName("IRENE ADLER") == "irene adler")
+    } finally java.util.Locale.setDefault(default)
+  }
+
   test("PYMK never recommends self or a direct friend (all users)") {
     val adj = edges.select("src", "dst").collect()
       .flatMap(r => Seq(r.getString(0) -> r.getString(1), r.getString(1) -> r.getString(0)))

@@ -250,12 +250,37 @@ class GraftEngineSpec extends AnyFunSuite with SparkSpec {
       assert(read().schema == spark.read.parquet(path).schema, name)
     }
     // a search is a statistics aggregate (2 jobs under AQE) and the
-    // scoring top-k: 3 jobs here, where a posting explode/join plan
-    // runs 11–14
-    val searchJobs = captured(e.search("poby kim", owner = Some("poby")))._1.size
-    assert(searchJobs <= 4, searchJobs)
-    val pymkJobs = captured(e.pymk("poby kim"))._1.size
-    assert(pymkJobs <= 8, pymkJobs)
+    // scoring top-k, whose rows the memo collects: 3 jobs with the
+    // caller's collect, where a posting explode/join plan runs 11–14
+    val pinnedBefore = spark.sparkContext.getPersistentRDDs.keySet
+    val search = () => e.search("poby kim", owner = Some("poby"))
+    val searchJobs = captured(search().collect())._1.size
+    assert(searchJobs <= 3, searchJobs)
+    // a PYMK is the anchor lookup, the friend bag, the 2-hop aggregate
+    // (2 jobs under AQE) and the candidates' properties
+    val pymk = () => e.pymk("poby kim")
+    val pymkJobs = captured(pymk().collect())._1.size
+    assert(pymkJobs <= 5, pymkJobs)
+    val phrase = () => e.phraseSearch("poby kim")
+    val fuzzy = () => e.fuzzySearch("pobi", maxEdits = 1)
+    phrase().collect()
+    fuzzy().collect()
+    // a memo hit is the rows the miss collected: no job to read them
+    for ((name, read) <- Seq("search" -> search, "pymk" -> pymk,
+        "phraseSearch" -> phrase, "fuzzySearch" -> fuzzy)) {
+      val hitJobs = captured(assert(read().collect().nonEmpty, name))._1
+      assert(hitJobs.isEmpty, s"$name: a memo hit launched ${hitJobs.size} jobs")
+    }
+    // and no top-k read pinned a block (the shared session may still
+    // hold other suites' checkpoints until they are collected)
+    assert((spark.sparkContext.getPersistentRDDs.keySet -- pinnedBefore).isEmpty)
+  }
+
+  test("the pymk memo keys on the name as the anchor lookup matches it") {
+    val first = engine.pymk("Poby Kim", limit = 7)
+    assert(engine.pymk("poby kim", limit = 7) eq first)
+    assert(engine.pymk("POBY KIM", limit = 7) eq first)
+    assert(!(engine.pymk("poby kim", limit = 8) eq first))
   }
 
   test("an external write is seen without refresh; refresh reads its new column") {

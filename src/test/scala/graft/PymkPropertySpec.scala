@@ -36,6 +36,55 @@ class PymkPropertySpec extends AnyFunSuite with SparkSpec {
     }
   }
 
+  test("recommendWithProps (the anchor gather) equals recommend left-joined to the vertices") {
+    val rnd = new scala.util.Random(5)
+    val n = 14
+    // the friend bag collapsed to a set: the answer a multiplicity-1
+    // gather would give. Some trial must tell it from the bag answer.
+    def setCollapsed(edges: Seq[(Long, Long)], anchor: Long): Map[Long, Long] = {
+      val adj = edges.flatMap { case (s, d) => Seq(s -> d, d -> s) }
+      val friends = adj.filter(_._1 == anchor).map(_._2).toSet
+      friends.toSeq.flatMap(f => adj.filter(_._1 == f).map(_._2))
+        .filter(c => c != anchor && !friends.contains(c))
+        .groupBy(identity).map { case (k, v) => k -> v.length.toLong }
+    }
+    var bagMatters, tiesAtLimit, withoutRow = 0
+    for (trial <- 1 to 6) {
+      val random = (1 to 36).map(_ => (rnd.nextInt(n).toLong, rnd.nextInt(n).toLong))
+      // planted: reciprocal pairs, self-loops (at the anchor and at a
+      // friend), and two friends of anchor 0 who know each other
+      val planted = Seq((0L, 1L), (1L, 0L), (0L, 0L), (1L, 1L), (0L, 2L), (1L, 2L),
+        (2L, 3L), (3L, 2L))
+      val edges = (planted ++ random).distinct
+      // vertex rows for some ids only, one with a null property
+      val vertices = (0L until n.toLong).filter(_ % 3 != 2)
+        .map(i => (i, if (i == 4L) null else s"name$i", s"co${i % 4}"))
+        .toDF("id", "name", "company")
+      val edgeDf = edges.toDF("src", "dst")
+      // anchor n + 1 has no edges
+      for (anchor <- Seq(0L, 1L, rnd.nextInt(n).toLong, n + 1L); limit <- Seq(1, 3, 1000)) {
+        val scores = brute(edges, anchor).values.toSeq.sorted.reverse
+        if (limit == 1000 && setCollapsed(edges, anchor) != brute(edges, anchor)) bagMatters += 1
+        if (scores.size > limit && scores(limit - 1) == scores(limit)) tiesAtLimit += 1
+        for ((e, v, a) <- Seq((edgeDf, vertices, lit(anchor)),
+            (edgeDf.select(col("src").cast("string").as("src"),
+              col("dst").cast("string").as("dst")),
+              vertices.withColumn("id", col("id").cast("string")), lit(anchor.toString)))) {
+          val want = Pymk.recommend(e, a, limit).join(v, Seq("id"), "left")
+            .orderBy(desc("score"), asc("id"))
+          val got = Pymk.recommendWithProps(v, e, a, limit)
+          val what = s"trial $trial anchor $anchor limit $limit ${e.schema("src").dataType}"
+          assert(got.schema == want.schema, what)
+          val rows = got.collect().toSeq
+          assert(rows == want.collect().toSeq, what)
+          withoutRow += rows.count(_.isNullAt(3))
+        }
+      }
+    }
+    assert(bagMatters > 0, "no graph tells the friend bag from the friend set")
+    assert(tiesAtLimit > 0 && withoutRow > 0)
+  }
+
   test("capped all-pairs PYMK: cap >= max degree is exact; hub output bounded") {
     // random graphs: cap above any degree ⇒ the sampled wedge bag IS
     // the full bag, so the capped twin must equal recommendAll row for
