@@ -4,6 +4,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Encoder, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
+import graft.functions.GraftFunctions.{lowerText, textTokens}
 import graft.model.{AlbumEntry, Bizcard, KnowsEdge, PersonVertex, PymkResponse}
 import graft.operators.{GraphAnalytics, GraphBuild, Packing, Pymk, Search, SearchIndex}
 import graft.streaming.CardStream
@@ -256,14 +257,18 @@ class GraftEngine(spark: SparkSession, warehouse: String) {
     * (es_search_bizcard.py:62-70: no `type`, so best_fields; default
     * similarity BM25 since ES 5.0). `scorer = "tfidf"` /
     * `combine = "sum"` select the declared reproducible variants
-    * (qG1/qG3); both knobs are part of the memo key. */
+    * (qG1/qG3); both knobs are part of the memo key. The query part of
+    * the key is its canonical terms — lowered and split as the documents
+    * are, distinct, in query order — so "Ivan  Lee" and "ivan lee" share
+    * one entry. */
   def search(query: String, owner: Option[String] = None,
              limit: Int = 10, scorer: String = "bm25",
              combine: String = "max"): DataFrame =
     // owner encoded with a presence marker: None and Some("") are
     // different requests (no filter vs. filter on empty owner) and must
-    // not share a memo entry
-    memoRows(cacheKey("search", query,
+    // not share a memo entry; a term holds no whitespace, so the
+    // space-joined terms are unambiguous
+    memoRows(cacheKey("search", textTokens(query).distinct.mkString(" "),
       owner.map("o:" + _).getOrElse("<none>"), limit.toString,
       scorer, combine)) {
       Search.search(searchTable, "doc_id", SearchFields, query, limit,
@@ -274,10 +279,11 @@ class GraftEngine(spark: SparkSession, warehouse: String) {
   /** PYMK by case-insensitive user name. Response reproduces the
     * reference's Gremlin `valueMap()` quirk: every property is an
     * array<string>, score is double (README.md:182-219). Memoized on
-    * the name as the anchor lookup matches it ([[Pymk.canonicalName]]),
-    * so "Poby Kim" and "poby kim" share one entry. */
+    * the name as the anchor lookup matches it (Spark's `lower`,
+    * [[graft.functions.GraftFunctions.lowerText]]), so "Poby Kim" and
+    * "poby kim" share one entry. */
   def pymk(user: String, limit: Int = 10): DataFrame =
-    memoRows(cacheKey("pymk", Pymk.canonicalName(user), limit.toString)) {
+    memoRows(cacheKey("pymk", lowerText(user), limit.toString)) {
       pymkUncached(user, limit)
     }
 

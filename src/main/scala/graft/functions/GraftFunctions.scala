@@ -1,6 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.expressions.{Literal, Lower}
 import org.apache.spark.sql.functions._
 
 /** Scalar column functions of the engine — the re-expression of the
@@ -86,6 +87,19 @@ object GraftFunctions {
     */
   def tokenize(text: Column): Column =
     array_remove(split(lower(text), "\\s+"), lit(""))
+
+  /** `text` as Spark's `lower` gives it, evaluated without a job (the
+    * optimizer folds `lower(lit(text))` the same way). Query text is
+    * lower-cased with this, never with `String.toLowerCase`, which
+    * follows the JVM's default locale (Turkish: "IVAN" → "ıvan") where
+    * the documents' `lower` gives "ivan". */
+  def lowerText(text: String): String = Lower(Literal(text)).eval().toString
+
+  /** The tokens [[tokenize]] gives `text`, computed without a job, in
+    * text order: `\s+` in Java's regex is the six ASCII separators
+    * `split` splits on. */
+  def textTokens(text: String): Seq[String] =
+    lowerText(text).split("\\s+").filter(_.nonEmpty).toSeq
 
   /** ISO-8601 `created_at` format of the reference
     * (get_text_from_s3_image.py:186). */

@@ -1034,29 +1034,8 @@ case class JaroWinklerExpr(left: Expression, right: Expression)
       l: Expression, r: Expression): JaroWinklerExpr = copy(left = l, right = r)
 }
 
-/** `double_param(v)`: the constant `v`, read by the generated code from
-  * its reference array instead of inlined into the source as a literal.
-  * Queries that differ only in such values then share one compiled
-  * stage — a per-query statistic (an idf, an avgdl) as a `lit` makes
-  * every query compile its own ([[HashedMarginExpr]]'s lesson). Not
-  * foldable, so constant folding leaves it a leaf. */
-case class DoubleParamExpr(v: Double)
-    extends org.apache.spark.sql.catalyst.expressions.LeafExpression {
-  override def foldable: Boolean = false
-  override def nullable: Boolean = false
-  override def dataType: DataType = org.apache.spark.sql.types.DoubleType
-  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = v
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-    val ref = ctx.addReferenceObj("param", java.lang.Double.valueOf(v), "java.lang.Double")
-    ev.copy(code = code"final double ${ev.value} = $ref.doubleValue();",
-      isNull = org.apache.spark.sql.catalyst.expressions.codegen.FalseLiteral)
-  }
-}
-
 object TextExprs {
   import ColumnBridge.{toColumn, toExpr}
-  def double_param(v: Double): Column = toColumn(DoubleParamExpr(v))
   def jaro_winkler(a: Column, b: Column): Column =
     toColumn(JaroWinklerExpr(toExpr(a), toExpr(b)))
 

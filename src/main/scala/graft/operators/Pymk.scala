@@ -3,7 +3,6 @@ package graft.operators
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{Column, DataFrame, Row}
-import org.apache.spark.sql.catalyst.expressions.{Literal, Lower}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import graft.functions.expr.KeyWeightExpr
@@ -613,16 +612,12 @@ object Pymk {
     * plans as TakeOrderedAndProject: one job, no global sort. Both sides
     * go through Spark's `lower`: the driver's `String.toLowerCase`
     * follows the JVM's default locale (Turkish: "IRENE" → "ırene") where
-    * Spark lower-cases ASCII to "irene".
+    * Spark lower-cases ASCII to "irene"
+    * ([[graft.functions.GraftFunctions.lowerText]] is its local twin).
     */
   def anchorByName(vertices: DataFrame, user: String): DataFrame =
     vertices.filter(lower(col("name")) === lower(lit(user))).select("id")
       .orderBy("id").limit(1)
-
-  /** `user` as [[anchorByName]] matches it: Spark's `lower`, evaluated
-    * on the driver as the optimizer folds `lower(lit(user))`. Two names
-    * with one canonical name resolve to the same anchor. */
-  def canonicalName(user: String): String = Lower(Literal(user)).eval().toString
 
   /** Item–item collaborative filtering over a (user, item) interaction
     * frame — the co-occurrence recommender next to the social 2-hop

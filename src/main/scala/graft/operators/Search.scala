@@ -1,9 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.functions.GraftFunctions.tokenize
-import graft.functions.expr.TextExprs.double_param
+import graft.functions.GraftFunctions.{textTokens, tokenize}
+import graft.functions.expr.SearchExprs.{search_features, search_score, search_stats}
 
 /** Full-text relevance search — the Spark-native re-expression of the
   * reference's Elasticsearch query surface (SURVEY §2.G).
@@ -29,10 +29,15 @@ import graft.functions.expr.TextExprs.double_param
   * per field and df per (field, term) — a few dozen numbers at any
   * corpus size. One scoring scan then scores each row on its own and
   * feeds a `TakeOrderedAndProject` top-k, so there is no explode, no
-  * join and no hash exchange. Precondition: `idCol` is a key — each
-  * row is scored as its own document, so rows sharing an id would be
-  * ranked apart, not as one doc. Every table the engine serves is
-  * LWW-merged on its id, which makes the id a key.
+  * join and no hash exchange. Each scan evaluates one native expression
+  * ([[graft.functions.expr.SearchExprs]]) that tokenizes every field
+  * once per row, with the query's terms and statistics held in the
+  * expression object: the plans, their generated code and their explain
+  * strings are the same for every query over the same fields, so the
+  * planning cost does not grow with the query's terms. Precondition:
+  * `idCol` is a key — each row is scored as its own document, so rows
+  * sharing an id would be ranked apart, not as one doc. Every table the
+  * engine serves is LWW-merged on its id, which makes the id a key.
   */
 object Search {
 
@@ -163,7 +168,7 @@ object Search {
     require(Set("sum", "max")(combine), s"unknown combine $combine")
     require(tieBreaker >= 0.0 && tieBreaker <= 1.0,
       s"tie_breaker must be in [0, 1], got $tieBreaker")
-    val queryTerms = query.toLowerCase.split("\\s+").filter(_.nonEmpty).toSeq
+    val queryTerms = textTokens(query)
     require(queryTerms.nonEmpty || ownerFilter.nonEmpty,
       "at least one of query / owner filter required (es_search_bizcard.py:75)")
     require(fields.nonEmpty, "at least one scored field required")
@@ -181,24 +186,20 @@ object Search {
     // aggregate that brings the corpus statistics to the driver: N,
     // the filtered count c, Σdl per field, df per (field, term). Pass 2
     // scores each row on its own, with idf and avgdl as constants built
-    // by the same formulas, and keeps the top-k. tf is the number of
-    // array elements that `array_remove` drops, so no explode is needed.
-    // The constants are `double_param`s, not literals: the scoring stage
-    // compiles once per query shape, not once per query.
+    // by the same formulas, and keeps the top-k. Each pass evaluates one
+    // native expression that tokenizes every field once per row; the
+    // query's constants ride in the expression object, so both stages
+    // compile once per field list, not once per query or term count.
     val terms = queryTerms.distinct
-    val tokCols = fields.indices.map(i => s"_toks$i")
-    val tokens = fields.zip(tokCols).map { case ((f, _), t) => tokenize(col(f)).as(t) }
-    val pairs = for (t <- tokCols; term <- terms) yield (t, term)
-    val stats = alive.select(inFilter.as("_in") +: tokens: _*)
-      .agg(count(lit(1)), count(when(col("_in"), 1)) +:
-        (tokCols.map(t => sum(when(col("_in"), size(col(t))))) ++
-          pairs.map { case (t, term) =>
-            count(when(col("_in") && array_contains(col(t), term), 1)) }): _*)
+    val texts = fields.map { case (f, _) => col(f) }
+    val stats = alive
+      .agg(count(lit(1)), count(when(inFilter, 1)),
+        search_stats(when(inFilter, search_features(texts, terms)), fields.size, terms.size))
       .head()
     val n = numDocs.getOrElse(stats.getLong(0))
     val c = stats.getLong(1)
-    val dlSums = tokCols.indices.map(i => if (stats.isNullAt(2 + i)) 0L else stats.getLong(2 + i))
-    val df = pairs.indices.map(i => stats.getLong(2 + tokCols.size + i))
+    val sums = stats.getSeq[Long](2)
+    val (dlSums, df) = sums.splitAt(fields.size)
     // idf(t, f) = ln(1 + (N − df + 0.5) / (df + 0.5)) with the operation
     // order and the StrictMath.log of Spark's `log` column, so it equals
     // the idf column of [[scoreField]] / [[bm25]] bit for bit
@@ -207,34 +208,8 @@ object Search {
     // per-field avgdl over the filtered corpus; the all-empty-field
     // guard (Σdl = 0 → avgdl 1.0) mirrors [[bm25]]'s
     val avgdl = dlSums.map(s => if (s == 0L || c == 0L) 1.0 else s.toDouble / c)
-
-    // Σ of the present values, null when none is present — SQL SUM's
-    // null rule within one row. A field without a hit is null, not 0,
-    // so `greatest` skips it even when every present score is negative.
-    def sumPresent(xs: Seq[Column]): Column =
-      when(xs.map(_.isNotNull).reduce(_ || _), xs.map(coalesce(_, lit(0.0))).reduce(_ + _))
-    val perField = fields.zip(tokCols).zipWithIndex.map { case (((_, boost), t), i) =>
-      val toks = col(t)
-      val dl = size(toks).cast("double")
-      val termScores = terms.zipWithIndex.map { case (term, j) =>
-        val tf = size(toks) - size(array_remove(toks, term))
-        val w = double_param(idf(df(i * terms.size + j)))
-        val tscore = scorer match {
-          case "tfidf" => tf * w
-          case "bm25" =>
-            w * (tf * lit(k1 + 1.0)) /
-              (tf + lit(k1) * (lit(1.0 - b) + lit(b) * dl / double_param(avgdl(i))))
-        }
-        when(tf > 0, tscore)
-      }
-      lit(boost) * sumPresent(termScores)
-    }
-    val best = if (perField.size == 1) perField.head else greatest(perField: _*)
-    val score = combine match {
-      case "sum" => sumPresent(perField)
-      case "max" if tieBreaker == 0.0 => best
-      case "max" => best + lit(tieBreaker) * (sumPresent(perField) - best)
-    }
+    val score = search_score(texts, terms, fields.map(_._2), df.map(idf), avgdl,
+      scorer, combine, k1, b, tieBreaker)
 
     // rank on the score ROUNDED to the engine's 4-decimal precision
     // (raw `_score` stays in the output — callers own its precision):
@@ -246,9 +221,7 @@ object Search {
     // exactly the top-k hits; a filter before it would be pushed below
     // the projection and score every row twice.
     alive.filter(inFilter)
-      .select(col("*") +: tokens: _*)
       .withColumn("_score", score)
-      .drop(tokCols: _*)
       .orderBy(round(col("_score"), 4).desc, col(idCol).asc)
       .limit(limit)
       .filter(col("_score").isNotNull)

@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.functions.GraftFunctions.tokenize
+import graft.functions.GraftFunctions.{lowerText, textTokens, tokenize}
 
 /** Materialized inverted index — the scale path for the search surface
   * (§2.G): tokenize the corpus ONCE into a postings table, precompute
@@ -182,7 +182,7 @@ object SearchIndex {
   def query(postings: DataFrame, stats: DataFrame, n: Long,
             boosts: Seq[(String, Double)], queryText: String,
             limit: Int): DataFrame = {
-    val terms = queryText.toLowerCase.split("\\s+").filter(_.nonEmpty).toSeq
+    val terms = textTokens(queryText)
     require(terms.nonEmpty, "empty query")
     val boostMap = boosts.toMap
     val boostCol = boosts.foldLeft(lit(1.0)) { case (acc, (f, b)) =>
@@ -208,7 +208,7 @@ object SearchIndex {
                   boosts: Seq[(String, Double)], queryText: String,
                   limit: Int): DataFrame = {
     val d = readableDir(spark, dir)
-    val terms = queryText.toLowerCase.split("\\s+").filter(_.nonEmpty).toSeq
+    val terms = textTokens(queryText)
     val postings = spark.read.parquet(s"$d/postings")
       .filter(col("bucket").isin(terms.map(bucketOf(_, IndexBuckets)): _*))
     val stats = spark.read.parquet(s"$d/stats")
@@ -290,7 +290,7 @@ object SearchIndex {
   def fuzzyQuery(postings: DataFrame, stats: DataFrame, n: Long,
                  field: String, term: String, maxEdits: Int,
                  limit: Int): DataFrame = {
-    val q = term.toLowerCase.trim
+    val q = lowerText(term).trim
     require(q.nonEmpty && !q.contains(" "), s"need one non-empty term, got '$term'")
     require(maxEdits >= 0, s"need maxEdits >= 0, got $maxEdits")
     val expanded = stats.filter(col("field") === field)
@@ -385,7 +385,7 @@ object SearchIndex {
   def phraseMatches(posPostings: DataFrame, phrase: String): DataFrame = {
     val spark = posPostings.sparkSession
     import spark.implicits._
-    val terms = phrase.toLowerCase.split("\\s+").filter(_.nonEmpty).toSeq
+    val terms = textTokens(phrase)
     require(terms.nonEmpty, "empty phrase")
     val qt = terms.zipWithIndex.toDF("term", "i")
     posPostings
@@ -462,7 +462,7 @@ object SearchIndex {
   def phraseSearchStored(spark: SparkSession, dir: String, phrase: String,
                          limit: Int): DataFrame = {
     val d = readableDir(spark, dir)
-    val terms = phrase.toLowerCase.split("\\s+").filter(_.nonEmpty).toSeq
+    val terms = textTokens(phrase)
     require(terms.nonEmpty, "empty phrase")
     val pos = spark.read.parquet(s"$d/pos_postings")
       .filter(col("bucket")

@@ -13,5 +13,8 @@ import org.apache.spark.sql.classic.ExpressionUtils
 object ColumnBridge {
   def toExpr(c: Column): Expression = ExpressionUtils.expression(c)
   def toColumn(e: Expression): Column = ExpressionUtils.column(e)
+  /** The error Spark's `/` raises for x / 0 under ANSI mode. */
+  def divideByZeroError(): ArithmeticException =
+    org.apache.spark.sql.errors.QueryExecutionErrors.divideByZeroError(null)
 }
 

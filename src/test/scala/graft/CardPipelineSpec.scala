@@ -85,7 +85,7 @@ class CardPipelineSpec extends AnyFunSuite with SparkSpec {
       assert("IRENE ADLER".toLowerCase != "irene adler")
       assert(Pymk.anchorByName(people, "IRENE ADLER").collect().map(_.getString(0))
         .toSeq == Seq("0000000a"))
-      assert(Pymk.canonicalName("IRENE ADLER") == "irene adler")
+      assert(graft.functions.GraftFunctions.lowerText("IRENE ADLER") == "irene adler")
     } finally java.util.Locale.setDefault(default)
   }
 

@@ -283,6 +283,30 @@ class GraftEngineSpec extends AnyFunSuite with SparkSpec {
     assert(!(engine.pymk("poby kim", limit = 8) eq first))
   }
 
+  test("search, phraseSearch and fuzzySearch find an upper-case query under a Turkish default locale") {
+    val e = new GraftEngine(spark, Files.createTempDirectory("graft_wh_tr").toString)
+    e.ingest(cards.limit(1).withColumn("name", lit("Ivan Lee")))
+    val default = java.util.Locale.getDefault
+    java.util.Locale.setDefault(java.util.Locale.forLanguageTag("tr"))
+    try {
+      // "IVAN".toLowerCase is "ıvan" here; Spark lowers ASCII to "ivan"
+      assert("IVAN".toLowerCase != "ivan")
+      val doc = e.searchTable.select("doc_id").head().getString(0)
+      assert(e.search("IVAN").collect().map(_.getAs[String]("doc_id")).toSeq == Seq(doc))
+      assert(e.phraseSearch("IVAN LEE").collect().map(_.getString(0)).toSeq == Seq(doc))
+      assert(e.fuzzySearch("IVAN", maxEdits = 0).collect().map(_.getString(0)).toSeq == Seq(doc))
+    } finally java.util.Locale.setDefault(default)
+  }
+
+  test("the search memo keys on the query's canonical terms") {
+    val first = engine.search("Ivan  Lee", limit = 7)
+    // lowered and split as the documents are, repeats dropped
+    for (q <- Seq("ivan lee", "IVAN\tlee", " ivan lee ivan "))
+      assert(engine.search(q, limit = 7) eq first, q)
+    // term order is kept: it orders the score's float sum
+    assert(!(engine.search("lee ivan", limit = 7) eq first))
+  }
+
   test("an external write is seen without refresh; refresh reads its new column") {
     val e = new GraftEngine(spark, Files.createTempDirectory("graft_wh_ext").toString)
     e.ingest(cards)

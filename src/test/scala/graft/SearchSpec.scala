@@ -243,48 +243,146 @@ class SearchSpec extends AnyFunSuite with SparkSpec {
       Seq("both", "ends"))
   }
 
+  /** [[docs]] read back from parquet: a scan the optimizer cannot fold
+    * into a local relation, so the kernels run in generated code. */
+  private lazy val storedDocs: DataFrame = {
+    val dir = java.nio.file.Files.createTempDirectory("search_docs").toString + "/docs"
+    docs.write.parquet(dir)
+    spark.read.parquet(dir)
+  }
+
+  private def servingSearch(q: String): DataFrame =
+    Search.search(storedDocs, "doc_id", Fields, q, 10, aliveCol = Some("is_alive"),
+      scorer = "bm25", combine = "max")
+
   test("queries that differ only in their statistics share one compiled scoring stage") {
     import org.apache.spark.metrics.source.CodegenMetrics
     def compiles(q: String): Long = {
       val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
-      Search.search(docs, "doc_id", Fields, q, 10, aliveCol = Some("is_alive"),
-        scorer = "bm25", combine = "max").collect()
+      servingSearch(q).collect()
       CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
     }
     compiles("kim")
     // "seoul" has another df, so other idf and score constants
     assert(compiles("seoul") == 0)
+    // nor do the term count or the terms change the generated code
+    for (q <- Seq("aws", "kim seoul architect", "kim lee seoul aws busan engineer"))
+      assert(compiles(q) == 0, q)
+  }
+
+  test("the scoring plan does not grow with the query's terms") {
+    def nodes(q: String): Int = servingSearch(q).queryExecution.optimizedPlan
+      .collect { case p => p.expressions.map(_.collect { case e => e }.size).sum }.sum
+    assert(nodes("kim") == nodes("kim lee seoul aws busan engineer"))
+  }
+
+  test("the kernels' interpreted eval equals their generated code") {
+    val queries = Seq("kim", "Kim Seoul aws", "architect zzz kim")
+    val configs = for (scorer <- Seq("tfidf", "bm25"); combine <- Seq("sum", "max");
+                       tb <- Seq(0.0, 0.3)) yield (scorer, combine, tb)
+    def run(): Seq[Seq[org.apache.spark.sql.Row]] =
+      for (q <- queries; owner <- Seq(None, Some("poby")); (scorer, combine, tb) <- configs)
+        yield Search.search(storedDocs, "doc_id", Fields, q, 10,
+          ownerFilter = owner.map("owner" -> _), aliveCol = Some("is_alive"),
+          scorer = scorer, combine = combine, tieBreaker = tb).collect().toSeq
+    val generated = run()
+    assert(generated.exists(_.nonEmpty))
+    spark.conf.set("spark.sql.codegen.wholeStage", "false")
+    spark.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
+    try assert(run() == generated)
+    finally {
+      spark.conf.unset("spark.sql.codegen.wholeStage")
+      spark.conf.unset("spark.sql.codegen.factoryMode")
+    }
+  }
+
+  test("search_features gives tokenize's dl and tf on adversarial text") {
+    import graft.functions.GraftFunctions.tokenize
+    import graft.functions.expr.SearchExprs.search_features
+    val rnd = new scala.util.Random(17)
+    val rows = Seq.fill(400)((adversarialText(rnd), adversarialText(rnd))) ++
+      Seq((null, ""), ("", null), (" \t\n\u000B\f\r", "\u00A0"))
+    val texts = frame(rows).toDF("s", "u")
+    val seen = texts.select(explode(tokenize(col("s")))).distinct().as[String].collect().sorted
+    assert(seen.length > 12, seen.toSeq)
+    val terms = rnd.shuffle(seen.toSeq).take(12) :+ "zzz"
+    for (ansi <- Seq("true", "false")) {
+      spark.conf.set("spark.sql.ansi.enabled", ansi)
+      try {
+        val fields = Seq("s", "u")
+        val want = fields.map(f => size(tokenize(col(f)))) ++ fields.flatMap(f =>
+          terms.map(t => when(col(f).isNotNull,
+            size(tokenize(col(f))) - size(array_remove(tokenize(col(f)), t)))))
+        val got = texts.select(search_features(fields.map(col), terms).as("k"),
+          array(want: _*).as("w"))
+        val diff = got.filter(not(col("k") <=> col("w")))
+        assert(diff.isEmpty, s"ansi=$ansi: ${diff.take(3).toSeq}")
+        // the null field's dl follows `size`: null, or -1 under legacy size-of-null
+        assert(got.filter(element_at(col("k"), 1) === -1).isEmpty == (ansi == "true"))
+      } finally spark.conf.unset("spark.sql.ansi.enabled")
+    }
   }
 
   test("two-scan kernel equals the explode/join search on random corpora") {
+    kernelEqualsSeed()
+  }
+
+  test("two-scan kernel equals the explode/join search under legacy size-of-null") {
+    spark.conf.set("spark.sql.ansi.enabled", "false")
+    try kernelEqualsSeed()
+    finally spark.conf.unset("spark.sql.ansi.enabled")
+  }
+
+  /** Words, case variants, the six `\s` separators, Unicode spaces that
+    * are not separators, `İ`, final and medial `Σ`, multi-byte tokens. */
+  private val Pieces = Seq("kim", "KIM", "Lee", "park", "AWS", "seoul", "", " ", "\t", "\n",
+    "\u000B", "\f", "\r", "\u00A0", "\u2003", "\u3000", "\u0130", "\u0130van",
+    "\u039F\u0394\u039F\u03A3", "\u03A3\u0391\u03A3", "\u0391\u03A3\u0391",
+    "\uC11C\uC6B8", "\u6771\u4EAC", "\uD83D\uDE00", "kim\u00A0lee")
+
+  private def adversarialText(rnd: scala.util.Random): String =
+    if (rnd.nextInt(12) == 0) null
+    else Seq.fill(rnd.nextInt(8))(Pieces(rnd.nextInt(Pieces.size)))
+      .mkString(Seq("", " ", "\t ")(rnd.nextInt(3)))
+
+  /** `rows` as a frame the optimizer cannot fold into a local relation,
+    * so its plans run generated code. */
+  private def frame[T <: Product : org.apache.spark.sql.Encoder : scala.reflect.ClassTag](
+      rows: Seq[T]): DataFrame =
+    spark.createDataset(spark.sparkContext.parallelize(rows, 2)).toDF()
+
+  private def kernelEqualsSeed(): Unit = {
     val rnd = new scala.util.Random(7)
     val vocab = Seq("kim", "lee", "park", "choi", "aws", "seoul")
     val blanks = Seq(null, "", " ", "\t\n")
     def text(): String =
       if (rnd.nextInt(5) == 0) blanks(rnd.nextInt(blanks.size))
+      else if (rnd.nextInt(4) == 0) adversarialText(rnd)
       else Seq.fill(1 + rnd.nextInt(4)) {
         val w = vocab(rnd.nextInt(vocab.size))
         if (rnd.nextBoolean()) w.toUpperCase else w
       }.mkString(Seq(" ", "  ", "\t")(rnd.nextInt(3)), " ", Seq("", " ", "\n")(rnd.nextInt(3)))
     def corpus(n: Int) = {
       val texts = Seq.fill(n)((text(), text(), text()))
-      texts.indices.map { i =>
+      frame(texts.indices.map { i =>
         // every fourth doc copies an earlier one's text: tied scores
         val (a, b, c) = texts(if (i % 4 == 3) i - 3 else i)
         (f"d$i%03d", Seq("o1", "o2", null)(rnd.nextInt(3)),
           if (rnd.nextInt(6) == 0) 0 else 1, a, b, c) // 1 in 6 soft-deleted
-      }.toDF("doc_id", "owner", "is_alive", "f1", "f2", "f3")
+      }).toDF("doc_id", "owner", "is_alive", "f1", "f2", "f3")
     }
     val flds = Seq("f1" -> 3.0, "f2" -> 1.0, "f3" -> 1.0)
     val configs = for (scorer <- Seq("tfidf", "bm25"); combine <- Seq("sum", "max");
                        tb <- Seq(0.0, 0.3, 1.0)) yield (scorer, combine, tb)
-    val blank = Seq(("a", "o1", 1, "", " ", null), ("b", "o1", 1, "\t", "", "  "))
+    val blank = frame(Seq[(String, String, Int, String, String, String)](
+        ("a", "o1", 1, "", " ", null), ("b", "o1", 1, "\t", "", "  ")))
       .toDF("doc_id", "owner", "is_alive", "f1", "f2", "f3")
     val empty = blank.limit(0)
     val cases = Seq(
       (corpus(40), "kim lee kim", None, 7),      // repeated query term
       (corpus(40), "Park AWS zzz", Some("o1"), 5), // owner filter, absent term
       (corpus(24), "seoul", Some("o2"), 3),
+      (corpus(40), "\u03BF\u03B4\u03BF\u03C2 kim \uC11C\uC6B8", None, 6), // multi-byte terms
       (blank, "kim", None, 5),                   // all-blank: avgdl guard
       (empty, "kim lee", None, 5))
     for ((docs, q, owner, limit) <- cases;
