@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 import graft.functions.GraftFunctions.{lowerText, textTokens}
 import graft.model.{AlbumEntry, Bizcard, KnowsEdge, PersonVertex, PymkResponse}
-import graft.operators.{GraphAnalytics, GraphBuild, Packing, Pymk, Search, SearchIndex}
+import graft.operators.{GraphAnalytics, Packing, Pymk, Search, SearchIndex}
 import graft.streaming.CardStream
 
 /** The user-facing engine facade — the complete query surface of the
@@ -46,11 +46,13 @@ class GraftEngine(spark: SparkSession, warehouse: String) {
     Seq("name" -> 3.0, "company" -> 1.0, "job_title" -> 1.0, "addr" -> 1.0)
 
   // Schema of each engine table, as the engine last wrote it or as the
-  // first read of a table it has not written inferred it. A read with a
-  // known schema launches no Spark job; inference launches one every
-  // time. The file listing still happens per read, so a swapped table
-  // is always seen; a stale schema can only hide a column that an
-  // external writer added, until refresh().
+  // first read of a table it has not written found it. A read with a
+  // known schema opens no file; without one, CardStream.readTable reads
+  // a parquet footer itself, with no Spark job, or, where that rule does
+  // not apply, runs Spark's inference job. The file listing still
+  // happens per read, so a swapped table is always seen; a stale schema
+  // can only hide a column that an external writer added, until
+  // refresh().
   private val schemas = new java.util.concurrent.ConcurrentHashMap[String, StructType]
 
   private def written(path: String)(schema: StructType): Unit = schemas.put(path, schema)
@@ -154,27 +156,28 @@ class GraftEngine(spark: SparkSession, warehouse: String) {
     * fans out to independent consumers (ES upsert, Neptune upsert, S3
     * by-user copy). The merges share no output, and a fold is bound by
     * job floors and file operations rather than compute, so run one
-    * after another they leave the cores idle. Each table keeps its own
-    * crash-safe swap; there is no cross-table atomicity. Waits for all
-    * four, then rethrows the first failure in table order. The memo is
-    * invalidated either way: a table that did swap must not be shadowed
-    * by results that predate it. */
+    * after another they leave the cores idle. Each table is one shuffle
+    * and one write — 8 Spark jobs under AQE: search, vertices and edges
+    * one [[CardStream.mergeLww]] window each over table ∪ batch (the
+    * graph's from [[CardStream.graphFold]], with no batch dedup before
+    * it), the album one dropDuplicates; each table read takes its schema
+    * from a parquet footer, with no inference job. Each table keeps its
+    * own crash-safe swap; there is no cross-table atomicity. Waits for
+    * all four, then rethrows the first failure in table order. The memo
+    * is invalidated either way: a table that did swap must not be
+    * shadowed by results that predate it. */
   def ingest(cards: DataFrame): Unit = {
     // lazy frames, built once on the caller thread; each fold thread
     // plans its own write over them
     val enriched = CardStream.validated(cards)
-    val (v, e) = GraphBuild.buildGraph(enriched)
-    val vOrd = enriched
-      .withColumn("id", graft.functions.GraftFunctions.personId(col("email")))
-      .groupBy("id").agg(max("created_at").as("created_at"))
+    val (foldVertices, foldEdges) =
+      CardStream.graphFold(spark, enriched, vertexPath, edgePath)
     val albumNew = enriched.select(AlbumCols.map(col): _*)
     try runConcurrently(Seq(
       "search" -> (() => written(searchPath)(CardStream.mergeLww(spark, enriched,
         searchPath, Seq("doc_id"), "created_at"))),
-      "vertices" -> (() => written(vertexPath)(CardStream.mergeLww(spark,
-        v.join(vOrd, "id"), vertexPath, Seq("id"), "created_at"))),
-      "edges" -> (() => written(edgePath)(CardStream.mergeLww(spark,
-        e.withColumn("_ord", lit(0)), edgePath, Seq("src", "dst"), "_ord"))),
+      "vertices" -> (() => written(vertexPath)(foldVertices())),
+      "edges" -> (() => written(edgePath)(foldEdges())),
       "album" -> (() => mergeAlbum(albumNew))))
     finally invalidateMemos()
   }
@@ -242,8 +245,10 @@ class GraftEngine(spark: SparkSession, warehouse: String) {
     table(searchPath, emptyOf(Encoders.product[Bizcard]))
   def vertices: DataFrame =
     table(vertexPath, emptyOf(Encoders.product[PersonVertex]))
+  /** The knows edges, without the `_ord` helper column an older fold
+    * may have stored (the next fold drops it). */
   def edges: DataFrame =
-    table(edgePath, emptyOf(Encoders.product[KnowsEdge]))
+    table(edgePath, emptyOf(Encoders.product[KnowsEdge])).drop("_ord")
 
   /** Boosted multi-field search with optional owner term filter;
     * is_alive guard always applied (B15). Returns rows + `_score`,

@@ -21,10 +21,39 @@ import graft.functions.GraftFunctions._
   * reference, which silently drops edges when the owner's own card
   * arrives late (README.md:711-713) — order-independent.
   *
-  * Scale posture: both merges are single key-partitioned shuffles
-  * (window by id / dropDuplicates by (src,dst)); no driver collection.
+  * Scale posture: [[vertexRows]] and [[edgeRows]] are row-local
+  * projections; [[buildGraph]] dedups them with one key-partitioned
+  * shuffle each (window by id / dropDuplicates by (src,dst)); nothing
+  * is collected. The engine's fold does not run that dedup: it hands the
+  * raw rows to [[graft.streaming.CardStream.mergeLww]], whose one window
+  * over table ∪ batch, in the same order, resolves the batch's
+  * duplicates and the stored rows together
+  * ([[graft.streaming.CardStream.graphFold]]).
   */
 object GraphBuild {
+
+  /** One vertex row per card, `created_at` kept: id, label, name,
+    * `_name`, email, phone_number, company, job_title, created_at.
+    * A card without an e-mail gives a null id. */
+  def vertexRows(cards: DataFrame): DataFrame =
+    cards.select(
+      personId(col("email")).as("id"),
+      lit("person").as("label"),
+      col("name"),
+      lower(col("name")).as("_name"), // B11 shadow prop for ci lookup
+      col("email"), col("phone_number"), col("company"), col("job_title"),
+      col("created_at"))
+
+  /** One `knows` edge row per card, owner → person, weight 1.0 (written
+    * but never read by PYMK — kept for fidelity); self-loops and cards
+    * without an e-mail dropped. Duplicates kept. */
+  def edgeRows(cards: DataFrame): DataFrame =
+    cards.select(
+        md5_8(col("owner")).as("src"),
+        personId(col("email")).as("dst"),
+        lit("knows").as("label"),
+        lit(1.0).as("weight"))
+      .filter(col("src") =!= col("dst"))
 
   /** Build (vertices, edges) from enriched card events.
     *
@@ -33,37 +62,21 @@ object GraphBuild {
     *              Parse.enrich or the fixture envelope flattened).
     */
   def buildGraph(cards: DataFrame): (DataFrame, DataFrame) = {
-    val withIds = cards
-      .withColumn("person_id", personId(col("email")))
-      .withColumn("owner_id", md5_8(col("owner")))
-
     // H1 vertex upsert: last-write-wins per id, ordered by created_at
     // (tie → arbitrary in the reference's sequential replay; we fix the
-    //  deterministic tiebreak max created_at, then max name).
+    //  deterministic tiebreak max created_at, then max name, then every
+    //  other column descending — CardStream.mergeLww's order, so the
+    //  engine's fold of the raw rows picks the same winner).
+    val rows = vertexRows(cards)
     val w = Window.partitionBy("id")
-      .orderBy(desc("created_at"), desc("name"))
-    val vertices = withIds
-      .select(
-        col("person_id").as("id"),
-        lit("person").as("label"),
-        col("name"),
-        lower(col("name")).as("_name"), // B11 shadow prop for ci lookup
-        col("email"), col("phone_number"), col("company"), col("job_title"),
-        col("created_at"))
+      .orderBy(desc("created_at") +: rows.columns.filter(_ != "id").map(desc): _*)
+    val vertices = rows
       .withColumn("_rn", row_number().over(w))
       .filter(col("_rn") === 1)
       .drop("_rn", "created_at")
 
-    // H2 edge upsert: distinct (src,dst), self-loops dropped, weight 1.0
-    // (weight is written but never read by PYMK — kept for fidelity).
-    val edges = withIds
-      .filter(col("owner_id") =!= col("person_id"))
-      .select(
-        col("owner_id").as("src"),
-        col("person_id").as("dst"),
-        lit("knows").as("label"),
-        lit(1.0).as("weight"))
-      .dropDuplicates("src", "dst")
+    // H2 edge upsert: distinct (src,dst)
+    val edges = edgeRows(cards).dropDuplicates("src", "dst")
 
     (vertices, edges)
   }

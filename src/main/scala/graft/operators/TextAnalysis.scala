@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.functions.GraftFunctions.tokenize
+import graft.functions.GraftFunctions.{lowerText, tokenize}
 
 /** Text-analysis operators for large-scale training-data pipelines
   * (builder brief: language-ID, quality scoring, token counting,
@@ -367,9 +367,10 @@ object TextAnalysis {
       val term =
         if (requireTerminal) rtrim(l).rlike("[.!?\"]$") else lit(true)
       // lowercase the TERM too: the rules are case-insensitive, and
-      // lower(l) can never contain an uppercase banned string
+      // lower(l) can never contain an uppercase banned string; lowered
+      // by Spark's `lower` as the line is, whatever the JVM locale
       val ban = bannedLine.foldLeft(lit(true))((acc, b) =>
-        acc && !lower(l).contains(lit(b.toLowerCase)))
+        acc && !lower(l).contains(lit(lowerText(b))))
       words >= lit(minWords) && term && ban
     }
     val kept = filter(lines, keep _)
@@ -393,7 +394,7 @@ object TextAnalysis {
               bannedDoc: Seq[String] = Seq("lorem ipsum", "{"),
               minKeptLines: Int = 1): DataFrame = {
     val docOk = bannedDoc.foldLeft(lit(true))((acc, b) =>
-      acc && !lower(col(textCol)).contains(lit(b.toLowerCase)))
+      acc && !lower(col(textCol)).contains(lit(lowerText(b))))
     docs
       .withColumn("_lc",
         lineClean(col(textCol), minWords, requireTerminal, bannedLine))

@@ -52,15 +52,20 @@ object CardStream {
 
   /** Replay-idempotent last-write-wins merge of `batch` into the parquet
     * table at `path`, keyed by `keyCols`, newest by `ordCol` (ties: all
-    * remaining columns — deterministic). Plain parquet + atomic
-    * directory swap (SURVEY §7.5-2): write to `<path>__stage`, then
-    * rename over the live dir, so readers see either the old or the new
-    * table, never a partial write. Returns the schema it wrote.
+    * remaining columns — deterministic). One window over table ∪ batch,
+    * so `batch` may hold several rows per key: they are resolved with
+    * the stored rows in the same shuffle. Columns only the table has are
+    * kept (null in new rows), except the `retired` ones, which the merge
+    * drops. Plain parquet + atomic directory swap (SURVEY §7.5-2): write
+    * to `<path>__stage`, then rename over the live dir, so readers see
+    * either the old or the new table, never a partial write. Returns the
+    * schema it wrote.
     */
   def mergeLww(spark: SparkSession, batch: DataFrame, path: String,
-               keyCols: Seq[String], ordCol: String): StructType = {
+               keyCols: Seq[String], ordCol: String,
+               retired: Seq[String] = Nil): StructType = {
     recoverSwap(spark, path) // writer path — recovery serialized with the swap
-    val existing = tableOrEmpty(spark, path, batch)
+    val existing = tableOrEmpty(spark, path, batch).drop(retired: _*)
     val all = existing.unionByName(batch, allowMissingColumns = true)
     val w = Window.partitionBy(keyCols.map(col): _*)
       .orderBy(desc(ordCol) +: all.columns.filterNot(keyCols.contains)
@@ -69,6 +74,29 @@ object CardStream {
       .filter(col("_rn") === 1).drop("_rn")
     swapInto(spark, merged, path)
   }
+
+  /** The graph fold (upsert_bizcard_to_graph_db.py:89-113): the cards'
+    * [[GraphBuild.vertexRows]] LWW-merged into `vPath` by id, newest
+    * `created_at` first, and their [[GraphBuild.edgeRows]] into `ePath`
+    * by (src, dst) — one [[mergeLww]] window per table, no batch dedup
+    * before it. Its order (created_at desc, then every other column
+    * desc) is [[GraphBuild.buildGraph]]'s, and the winner's created_at
+    * is the batch maximum, so the tables equal buildGraph's dedup
+    * merged with its per-id max(created_at). A card without an e-mail
+    * adds no vertex and no edge. The edges are ordered by their own
+    * columns; the `_ord` helper column older folds stored is dropped.
+    * Returns the vertex and the edge fold, each returning the schema it
+    * wrote: they share no output, so a caller runs them in either order
+    * or concurrently. Unlike the reference — which loses edges when the
+    * owner's own card arrives late (README.md:711-713) — the fold is
+    * order-independent.
+    */
+  def graphFold(spark: SparkSession, cards: DataFrame, vPath: String,
+                ePath: String): (() => StructType, () => StructType) =
+    (() => mergeLww(spark, GraphBuild.vertexRows(cards).filter(col("id").isNotNull),
+       vPath, Seq("id"), "created_at"),
+     () => mergeLww(spark, GraphBuild.edgeRows(cards), ePath,
+       Seq("src", "dst"), "weight", retired = Seq("_ord")))
 
   /** Replace the parquet table at `path` with `df` (which may itself be
     * derived from reading `path` — the stage write materializes before
@@ -150,15 +178,60 @@ object CardStream {
     readTable(spark, path, readSchema).getOrElse(fallbackSchema.limit(0))
 
   /** [[tableOrEmpty]] without the fallback: None when there is no table
-    * to read. */
+    * to read. Without `readSchema` the schema is the one a plain
+    * `spark.read.parquet` infers, taken without a Spark job where
+    * [[footerSchema]]'s rule applies; elsewhere Spark infers it, in a
+    * job. */
   private[graft] def readTable(spark: SparkSession, path: String,
                                 readSchema: Option[StructType] = None): Option[DataFrame] = {
     val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val live = new Path(path)
     val old = new Path(path + "__old")
     Seq(live, old).find(fs.exists).flatMap { p =>
-      try Some(readSchema.fold(spark.read)(spark.read.schema).parquet(p.toString))
+      val schema = readSchema.orElse(footerSchema(spark, fs, p))
+      try Some(schema.fold(spark.read)(spark.read.schema).parquet(p.toString))
       catch { case _: org.apache.spark.sql.AnalysisException => None }
+    }
+  }
+
+  /** The schema Spark's parquet inference gives the table directory
+    * `dir`: with `mergeSchema` off, Spark reads one footer — of the
+    * first data file by path — in a job, and takes the schema it stored
+    * there under `org.apache.spark.sql.parquet.row.metadata`. This reads
+    * that footer (row groups skipped) in this process, so no job runs.
+    * None — Spark infers — where the rule is not Spark's: `mergeSchema`
+    * on, subdirectories (partition columns), `_metadata` /
+    * `_common_metadata` summary files, a footer that cannot be read or
+    * that holds no Spark schema. Hidden names are skipped as Spark's
+    * file listing skips them. */
+  private def footerSchema(spark: SparkSession, fs: org.apache.hadoop.fs.FileSystem,
+                           dir: Path): Option[StructType] = {
+    import org.apache.parquet.HadoopReadOptions
+    import org.apache.parquet.format.converter.ParquetMetadataConverter
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    import org.apache.spark.sql.execution.datasources.parquet.ParquetReadSupport
+    def hidden(n: String): Boolean =
+      ((n.startsWith("_") && !n.contains("=")) || n.startsWith(".") ||
+        n.endsWith("._COPYING_")) &&
+        !(n.startsWith("_metadata") || n.startsWith("_common_metadata"))
+    if (spark.conf.get("spark.sql.parquet.mergeSchema", "false").toBoolean) None
+    else {
+      val visible = fs.listStatus(dir).filterNot(s => hidden(s.getPath.getName))
+      if (visible.exists(s => s.isDirectory || s.getPath.getName.startsWith("_"))) None
+      else visible.sortBy(_.getPath.toString).headOption.flatMap { file =>
+        val conf = spark.sparkContext.hadoopConfiguration
+        try {
+          val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(file, conf),
+            HadoopReadOptions.builder(conf)
+              .withMetadataFilter(ParquetMetadataConverter.SKIP_ROW_GROUPS).build())
+          val json = try reader.getFooter.getFileMetaData.getKeyValueMetaData
+              .get(ParquetReadSupport.SPARK_METADATA_KEY)
+            finally reader.close()
+          Option(json).map(j =>
+            org.apache.spark.sql.types.DataType.fromJson(j).asInstanceOf[StructType])
+        } catch { case scala.util.control.NonFatal(_) => None }
+      }
     }
   }
 
@@ -262,28 +335,16 @@ object CardStream {
       }
       .start()
 
-  /** Graph sink: vertex LWW merge + edge distinct merge
-    * (upsert_bizcard_to_graph_db.py:89-113). Unlike the reference —
-    * which loses edges when the owner's own card arrives late
-    * (README.md:711-713) — the merge is order-independent: vertices and
-    * edges are derived independently per batch and deduped cumulatively.
-    */
+  /** Graph sink: [[graphFold]] per micro-batch, vertices then edges. */
   def startGraphMerge(cards: DataFrame, vPath: String, ePath: String,
                       checkpoint: String): StreamingQuery =
     cards.writeStream
       .option("checkpointLocation", checkpoint)
       .outputMode(OutputMode.Update)
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        val withTs = batch
-        val (v, e) = GraphBuild.buildGraph(withTs)
-        // carry created_at for cross-batch LWW ordering
-        val vOrd = withTs
-          .withColumn("id", graft.functions.GraftFunctions.personId(col("email")))
-          .groupBy("id").agg(max("created_at").as("created_at"))
-        mergeLww(batch.sparkSession, v.join(vOrd, "id"), vPath,
-          Seq("id"), "created_at")
-        mergeLww(batch.sparkSession, e.withColumn("_ord", lit(0)), ePath,
-          Seq("src", "dst"), "_ord")
+        val (vertices, edges) = graphFold(batch.sparkSession, batch, vPath, ePath)
+        vertices()
+        edges()
         ()
       }
       .start()

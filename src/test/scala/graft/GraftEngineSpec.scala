@@ -5,7 +5,7 @@ import org.apache.spark.sql.{DataFrame, Encoders}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.api.GraftEngine
-import graft.model.{AlbumEntry, Schemas}
+import graft.model.{AlbumEntry, KnowsEdge, Schemas}
 import graft.operators.{AsOfJoin, Bpe, Dedup, Drift, EntityResolution, Eval, Events,
   Features, GraphAnalytics, Hybrid, Packing, Pca, Pq, Profile, Pymk, QualityLr, Sampling,
   Sketches, Stats, TextAnalysis, UrlOps}
@@ -274,6 +274,91 @@ class GraftEngineSpec extends AnyFunSuite with SparkSpec {
     // and no top-k read pinned a block (the shared session may still
     // hold other suites' checkpoints until they are collected)
     assert((spark.sparkContext.getPersistentRDDs.keySet -- pinnedBefore).isEmpty)
+  }
+
+  test("a fold after the first launches at most 8 jobs; a table read without a schema none") {
+    val e = new GraftEngine(spark, Files.createTempDirectory("graft_wh_budget").toString)
+    e.ingest(cards.filter(col("owner") =!= "pororo"))
+    // one shuffle and one write per table (2 jobs each under AQE): no
+    // schema-inference job, no batch dedup before the LWW window
+    val foldJobs = captured(e.ingest(cards))._1.size
+    assert(foldJobs <= 8, foldJobs)
+    for (path <- Seq(e.searchPath, e.vertexPath, e.edgePath, e.albumPath)) {
+      var read: Option[DataFrame] = None
+      assert(captured { read = CardStream.readTable(spark, path) }._1.isEmpty, path)
+      assert(read.map(_.schema) == Some(spark.read.parquet(path).schema), path)
+    }
+  }
+
+  test("a table with partition directories or a summary file is read as Spark infers it") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft_footer").toString
+    val rows = Seq(("a", 1, "x"), ("b", 2, "y")).toDF("k", "n", "p")
+    rows.write.partitionBy("p").parquet(s"$dir/parted")
+    val parted = CardStream.readTable(spark, s"$dir/parted").get
+    assert(parted.schema == spark.read.parquet(s"$dir/parted").schema)
+    assert(parted.schema.fieldNames.toSeq == Seq("k", "n", "p"))
+    // Spark takes the schema of `_common_metadata` before any data
+    // file's footer; here the two disagree
+    rows.write.parquet(s"$dir/summary")
+    Seq("z").toDF("other").write.parquet(s"$dir/elsewhere")
+    val foreign = new java.io.File(s"$dir/elsewhere").listFiles()
+      .filter(_.getName.endsWith(".parquet")).head.toPath
+    Files.copy(foreign, java.nio.file.Paths.get(s"$dir/summary/_common_metadata"))
+    val summary = CardStream.readTable(spark, s"$dir/summary").get
+    assert(summary.schema == spark.read.parquet(s"$dir/summary").schema)
+    assert(summary.schema.fieldNames.toSeq == Seq("other"))
+    // with mergeSchema on, Spark merges every file's schema
+    rows.drop("p").write.parquet(s"$dir/merged")
+    rows.drop("p").withColumn("extra", lit(1)).write.mode("append").parquet(s"$dir/merged")
+    assert(CardStream.readTable(spark, s"$dir/merged").get.schema ==
+      spark.read.parquet(s"$dir/merged").schema)
+    spark.conf.set("spark.sql.parquet.mergeSchema", "true")
+    try {
+      val merged = CardStream.readTable(spark, s"$dir/merged").get
+      assert(merged.schema == spark.read.parquet(s"$dir/merged").schema)
+      assert(merged.schema.fieldNames.toSeq == Seq("k", "n", "extra"))
+    } finally spark.conf.unset("spark.sql.parquet.mergeSchema")
+  }
+
+  test("a fold stores the edges with KnowsEdge's columns, also over edges stored with _ord") {
+    val knows = Encoders.product[KnowsEdge].schema.fieldNames.toSeq
+    val e = new GraftEngine(spark, Files.createTempDirectory("graft_wh_edges").toString)
+    e.ingest(cards)
+    assert(e.edges.columns.toSeq == knows)
+    assert(spark.read.parquet(e.edgePath).columns.toSeq == knows)
+    // a warehouse whose edges an older fold wrote with its `_ord` helper
+    val wh = Files.createTempDirectory("graft_wh_ord").toString
+    val (_, oldEdges) = graft.operators.GraphBuild.buildGraph(CardStream.validated(cards))
+    CardStream.mergeLww(spark, oldEdges.withColumn("_ord", lit(0)), s"$wh/edges",
+      Seq("src", "dst"), "_ord")
+    assert(spark.read.parquet(s"$wh/edges").columns.contains("_ord"))
+    val legacy = new GraftEngine(spark, wh)
+    assert(legacy.edges.columns.toSeq == knows)
+    val before = sortedRows(legacy.edges)
+    legacy.ingest(cards.limit(3))
+    assert(legacy.edges.columns.toSeq == knows)
+    assert(spark.read.parquet(s"$wh/edges").columns.toSeq == knows)
+    assert(sortedRows(legacy.edges) == before)
+  }
+
+  test("a column an external mergeLww adds survives the engine's next fold") {
+    val e = new GraftEngine(spark, Files.createTempDirectory("graft_wh_extfold").toString)
+    e.ingest(cards.filter(col("owner") =!= "pororo"))
+    val extra = CardStream.validated(cards).limit(1)
+      .withColumn("doc_id", lit("ext-1"))
+      .withColumn("note", lit("external"))
+    CardStream.mergeLww(spark, extra, e.searchPath, Seq("doc_id"), "created_at")
+    val tagged = e.vertices.limit(1).withColumn("tag", lit("vip"))
+    CardStream.mergeLww(spark, tagged, e.vertexPath, Seq("id"), "created_at")
+    e.ingest(cards)
+    e.refresh()
+    val notes = e.searchTable.filter(col("note").isNotNull)
+      .select("doc_id", "note").collect().map(r => r.getString(0) -> r.getString(1))
+    assert(notes.toSeq == Seq("ext-1" -> "external"))
+    assert(e.searchTable.count() == 12)
+    assert(e.vertices.filter(col("tag") === "vip").count() == 1)
+    assert(e.vertices.count() == 6)
   }
 
   test("the pymk memo keys on the name as the anchor lookup matches it") {

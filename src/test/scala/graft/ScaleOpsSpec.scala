@@ -85,6 +85,29 @@ class ScaleOpsSpec extends AnyFunSuite with SparkSpec {
     assert(caps.keySet == Set(1L, 3L) && caps(1L) == 1)
   }
 
+  test("c4Clean: banned strings match under a Turkish default locale") {
+    import graft.operators.TextAnalysis
+    val docs = Seq(
+      (1L, "one two three four five.\nenable javascript to view this."),
+      (2L, "this page runs javascript code now.\nand it has a second line.")
+    ).toDF("doc_id", "text")
+    val default = java.util.Locale.getDefault
+    java.util.Locale.setDefault(java.util.Locale.forLanguageTag("tr"))
+    try {
+      // the JVM lowers "JavaScrIpt" to "javascrıpt" here; Spark's lower
+      // gives the text "javascript"
+      assert("JavaScrIpt".toLowerCase != "javascript")
+      val lines = TextAnalysis.c4Clean(docs, "doc_id", "text",
+          bannedLine = Seq("JavaScrIpt"), bannedDoc = Nil)
+        .collect().map(r => r.getLong(0) -> r.getInt(2)).toMap
+      assert(lines == Map(1L -> 1, 2L -> 1))
+      val pages = TextAnalysis.c4Clean(docs, "doc_id", "text",
+          bannedLine = Nil, bannedDoc = Seq("JavaScrIpt"))
+        .collect().map(_.getLong(0)).toSeq
+      assert(pages.isEmpty)
+    } finally java.util.Locale.setDefault(default)
+  }
+
   test("parseUrl: userinfo/port/query stripping, longest-suffix domain") {
     import graft.operators.UrlOps
     val cases = Seq(
