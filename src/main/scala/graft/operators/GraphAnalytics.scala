@@ -18,8 +18,61 @@ import org.apache.spark.sql.functions._
   * String md5-8 vertex ids are mapped to GraphX's Long VertexId via
   * xxhash64 (collision-free in practice at 8-hex-char id space, and
   * deterministic so results are reproducible across runs).
+  *
+  * Iteration: the DataFrame fixpoint operators run on [[Fixpoint]],
+  * the one copy of the loop policy.
+  *  - Cadence: `Fixpoint.rounds` chains a fixed round count lazily and
+  *    cuts lineage with an eager `localCheckpoint` every `every`
+  *    rounds and on the last round (per-round materialization costs
+  *    ~3 jobs a round — pure fixed overhead on a small graph).
+  *    `Fixpoint.converge` checkpoints every round, because its exit
+  *    test needs each round's statistic, which rides the checkpoint
+  *    job as an `Observation` (one job a round, not checkpoint + count).
+  *  - Release: the kernel unpersists each state it checkpointed as
+  *    soon as the successor is materialized, so a query pins its fixed
+  *    inputs plus the returned state, not one checkpoint per cadence
+  *    step. It never releases the caller's `init` (a fixed input such
+  *    as kCore's vertex set) nor the state it returns.
+  *  - Exit: the caller passes `done(prev, cur)` over consecutive
+  *    statistics — "unchanged" for the monotone peels (kCore,
+  *    coreness, kTruss: a round that changes the count changes the
+  *    set, and an unchanged set fixes every later round, so skipped
+  *    rounds are no-ops the unrolled oracles replay identically),
+  *    "no label moved" for CC, "empty" for MIS — bounded by the round
+  *    budget.
+  *  - Trap: the state must be the only frame that outlives its round.
+  *    Operators whose output still reads earlier rounds keep those
+  *    frames off the kernel: [[randomWalks]] and [[node2vecWalks]]
+  *    union every step, [[hyperBall]] reads every round's registers,
+  *    [[betweennessSampled]] every BFS level, and
+  *    [[maximalIndependentSet]] every round's winners (its active set
+  *    is the kernel state).
+  * `localCheckpoint` (not `persist`) so unreleased blocks belong to the
+  * RDD and the ContextCleaner frees them when the result is dropped; on
+  * a cluster this becomes checkpoint-to-table (local blocks don't
+  * survive executor loss).
   */
 object GraphAnalytics {
+
+  /** The simple undirected view: self-loops dropped, each edge once as
+    * its canonical (u, v) = (least, greatest) pair. */
+  private[graft] def simpleEdges(edges: DataFrame): DataFrame =
+    edges.filter(col("src") =!= col("dst"))
+      .select(least(col("src"), col("dst")).as("u"),
+        greatest(col("src"), col("dst")).as("v"))
+      .distinct()
+
+  /** Per-vertex degree (id, `name`) of a canonical (u, v) edge set. */
+  private def simpleDegrees(canon: DataFrame, name: String): DataFrame =
+    canon.select(col("u").as("id")).unionAll(canon.select(col("v").as("id")))
+      .groupBy("id").agg(count(lit(1)).as(name))
+
+  /** A canonical (u, v) edge set as symmetric adjacency (from, to) —
+    * both orientations of every edge, under the caller's names. */
+  private[graft] def bothWays(canon: DataFrame, from: String,
+                              to: String): DataFrame =
+    canon.select(col("u").as(from), col("v").as(to))
+      .unionAll(canon.select(col("v").as(from), col("u").as(to)))
 
   /** Build a GraphX graph from (vertices, edges) DataFrames with string
     * ids. Returns the graph plus the id↔hash mapping DataFrame for
@@ -125,8 +178,7 @@ object GraphAnalytics {
     * Scale: one aggregateMessages (edge-partition-local combine, the
     * map-side-combine analogue) + one vertex join per round; each
     * round's graph is cached and the previous unpersisted, so lineage
-    * stays flat (the RDD-world version of pageRankDF's
-    * materialization cadence).
+    * stays flat (the RDD-world version of the [[Fixpoint]] cadence).
     */
   def pageRankMicros(vertices: DataFrame, edges: DataFrame,
                      iters: Int = 10): DataFrame = {
@@ -163,66 +215,57 @@ object GraphAnalytics {
     * plans and — unlike the GraphX RDD path — SQL-expressible for the
     * DuckDB oracle (qX_pagerank_df).
     *
-    * Scale shape: `contribs` (edges with precomputed 1/outdeg share) is
+    * Scale shape: `contribs` (edges with their source's out-degree) is
     * materialized once; each iteration joins it to the current ranks on
     * `src` (narrow if edges are bucketed by src) and reduces on `dst`
     * (map-side partial sums first — the hub-skew absorber at 100 TB).
-    *
-    * Materialization cadence: iterations are chained LAZILY (the plan
-    * grows linearly — one join + one agg per round) and only every
-    * `materializeEvery` rounds is the frontier cut with an eager
-    * `localCheckpoint`. Per-iteration materialization (persist + count)
-    * costs ~3 Spark jobs per round and is pure fixed overhead on a
-    * small graph — it was 104.7 s vs 2.4 s for the GraphX twin on the
-    * same sf0.1 graph; batching K rounds per job removes ~(K−1)/K of
-    * it. `localCheckpoint` (not `persist`) so the blocks belong to the
-    * RDD, not the cache manager: they are released by the
-    * ContextCleaner when the result DataFrame is dropped — no
-    * unpersist() bookkeeping leaks. On a cluster this becomes
-    * checkpoint-to-table every `materializeEvery` rounds (local
-    * checkpoint blocks don't survive executor loss).
+    * Rounds run on the [[Fixpoint]] cadence, a lineage cut every 5.
     */
+  def pageRankDF(edges: DataFrame, iters: Int = 10,
+                 damping: Double = 0.85): DataFrame =
+    normalizeToV(powerIteration(edges.select(col("src"), col("dst")),
+      count(lit(1)).as("outdeg"), col("rank") / col("outdeg"), lit(1.0),
+      lit(1.0 - damping), iters, damping))
+
   /** One power-iteration round: join current ranks into the contrib
-    * edges on src, reduce per dst (map-side partial sums — the
-    * hub-skew absorber), left-join back onto the full vertex set.
-    * Exposed for plan-shape regression tests. */
+    * edges on src, reduce each dst's `msg` (map-side partial sums —
+    * the hub-skew absorber), left-join back onto the full vertex set
+    * as `reset + d·msum`. Exposed for plan-shape regression tests. */
   private[graft] def prStep(contribs: DataFrame, verts: DataFrame,
-                            ranks: DataFrame, damping: Double): DataFrame = {
+                            ranks: DataFrame, msg: Column, reset: Column,
+                            damping: Double): DataFrame = {
     val msgs = contribs
       .join(ranks.withColumnRenamed("id", "src"), "src")
       .groupBy(col("dst").as("id"))
-      .agg(sum(col("rank") / col("outdeg")).as("msum"))
+      .agg(sum(msg).as("msum"))
     verts.join(msgs, Seq("id"), "left")
       .select(col("id"),
-        (lit(1.0 - damping) + lit(damping) * coalesce(col("msum"), lit(0.0)))
-          .as("rank"))
+        (reset + lit(damping) * coalesce(col("msum"), lit(0.0))).as("rank"))
   }
 
-  def pageRankDF(edges: DataFrame, iters: Int = 10,
-                 damping: Double = 0.85,
-                 materializeEvery: Int = 5): DataFrame = {
-    val e = edges.select(col("src"), col("dst"))
-    val outDeg = e.groupBy("src").agg(count(lit(1)).as("outdeg"))
-    // carry outdeg (divide per term, rank/d) rather than a precomputed
-    // 1/d reciprocal: a*(1/d) and a/d differ in the last float ulp, and
-    // the DuckDB oracle computes rank/d — keep the arithmetic identical
-    val contribs = e.join(outDeg, "src")
-      .select(col("src"), col("dst"), col("outdeg"))
+  /** The PageRank family's power-iteration core: `e` (src, dst, …)
+    * joined with its per-source `out` aggregate is the contrib table,
+    * materialized once with the vertex set; ranks start at `rank0` and
+    * take `iters` [[prStep]] rounds of `msg` and `reset`. The message
+    * divides per term (`rank / outdeg`, never `rank · (1/outdeg)`): the
+    * two differ in the last float ulp and the oracles divide. */
+  private def powerIteration(e: DataFrame, out: Column, msg: Column,
+                             rank0: Column, reset: Column, iters: Int,
+                             damping: Double): DataFrame = {
+    val outs = e.groupBy("src").agg(out)
+    val contribs = e.join(outs, "src")
+      .select((e.columns ++ outs.columns.tail).map(col).toSeq: _*)
       .localCheckpoint(true)
     val verts = e.select(col("src").as("id"))
       .unionAll(e.select(col("dst").as("id"))).distinct()
       .localCheckpoint(true)
-    var ranks = verts.withColumn("rank", lit(1.0))
-    for (i <- 1 to iters) {
-      val next = prStep(contribs, verts, ranks, damping)
-      // cut lineage every K rounds, and always on the last round so the
-      // normalization agg and the returned DataFrame both read the
-      // materialized blocks instead of re-running the tail iterations
-      ranks = if (i % materializeEvery == 0 || i == iters)
-        next.localCheckpoint(true) else next
-    }
-    // GraphX's normalization: rescale so Σrank = |V| (two scalars to
-    // the driver — constant-size at any graph scale)
+    Fixpoint.rounds(verts.withColumn("rank", rank0), iters, 5)(
+      prStep(contribs, verts, _, msg, reset, damping))
+  }
+
+  /** GraphX's normalization: rescale so Σrank = |V| (two scalars to
+    * the driver — constant-size at any graph scale). */
+  private def normalizeToV(ranks: DataFrame): DataFrame = {
     val agg = ranks.agg(count(lit(1)).as("n"), sum(col("rank")).as("s")).head()
     val (n, s) = (agg.getLong(0), agg.getDouble(1))
     ranks.select(col("id"),
@@ -236,46 +279,19 @@ object GraphAnalytics {
     * ignores (upsert_bizcard_to_graph_db.py:104-109,
     * README.md:359-364) — this is the centrality that actually uses
     * it. Same fixed-iteration determinism, dangling handling, final
-    * Σrank = |V| rescale, and materialization cadence (lazy chaining,
-    * eager localCheckpoint every `materializeEvery` rounds) as
-    * [[pageRankDF]]; one keyed shuffle per iteration with map-side
-    * partial sums absorbing hub skew. Integer weights keep
-    * `rank·w/wout` a two-op IEEE expression identical across engines
-    * (oracle-checked, qX_pagerank_weighted).
+    * Σrank = |V| rescale and power-iteration core as [[pageRankDF]].
+    * Integer weights keep `rank·w/wout` a two-op IEEE expression
+    * identical across engines (oracle-checked, qX_pagerank_weighted).
     *
     * @param edges (src, dst, w) — positive weights; multiplicity
     *              counts from [[graft.queries.GraphQueries.derivedEdgesWeighted]]
     *              in the gate.
     */
   def pageRankWeightedDF(edges: DataFrame, iters: Int = 10,
-                         damping: Double = 0.85,
-                         materializeEvery: Int = 5): DataFrame = {
-    val e = edges.select(col("src"), col("dst"), col("w"))
-    val outW = e.groupBy("src").agg(sum(col("w")).as("wout"))
-    val contribs = e.join(outW, "src")
-      .select(col("src"), col("dst"), col("w"), col("wout"))
-      .localCheckpoint(true)
-    val verts = e.select(col("src").as("id"))
-      .unionAll(e.select(col("dst").as("id"))).distinct()
-      .localCheckpoint(true)
-    var ranks = verts.withColumn("rank", lit(1.0))
-    for (i <- 1 to iters) {
-      val msgs = contribs
-        .join(ranks.withColumnRenamed("id", "src"), "src")
-        .groupBy(col("dst").as("id"))
-        .agg(sum(col("rank") * col("w") / col("wout")).as("msum"))
-      val next = verts.join(msgs, Seq("id"), "left")
-        .select(col("id"),
-          (lit(1.0 - damping) + lit(damping) * coalesce(col("msum"), lit(0.0)))
-            .as("rank"))
-      ranks = if (i % materializeEvery == 0 || i == iters)
-        next.localCheckpoint(true) else next
-    }
-    val agg = ranks.agg(count(lit(1)).as("n"), sum(col("rank")).as("s")).head()
-    val (n, s) = (agg.getLong(0), agg.getDouble(1))
-    ranks.select(col("id"),
-      round(col("rank") * lit(n) / lit(s), 6).as("rank"))
-  }
+                         damping: Double = 0.85): DataFrame =
+    normalizeToV(powerIteration(edges.select(col("src"), col("dst"), col("w")),
+      sum(col("w")).as("wout"), col("rank") * col("w") / col("wout"),
+      lit(1.0), lit(1.0 - damping), iters, damping))
 
   /** Connected components (undirected) — community seed for the social
     * graph. */
@@ -295,37 +311,18 @@ object GraphAnalytics {
     * ([[Pymk.recommend]] is exactly the 2-walk term of this series) —
     * recommendation strength with multi-hop evidence folded in. No
     * final rescale (the teleport vector already fixes total mass).
-    * Same dataflow and materialization cadence as [[pageRankDF]]
-    * (one keyed shuffle per round, lazy chaining, localCheckpoint
-    * every K rounds); SQL-expressible, oracle-checked (qX_ppr).
+    * Same power-iteration core as [[pageRankDF]] (one keyed shuffle
+    * per round); SQL-expressible, oracle-checked (qX_ppr).
     */
   def personalizedPageRankDF(edges: DataFrame, anchor: Column,
-                             iters: Int = 10, damping: Double = 0.85,
-                             materializeEvery: Int = 5): DataFrame = {
-    val e = edges.select(col("src"), col("dst"))
-    val outDeg = e.groupBy("src").agg(count(lit(1)).as("outdeg"))
-    val contribs = e.join(outDeg, "src")
-      .select(col("src"), col("dst"), col("outdeg"))
-      .localCheckpoint(true)
-    val verts = e.select(col("src").as("id"))
-      .unionAll(e.select(col("dst").as("id"))).distinct()
-      .localCheckpoint(true)
-    val reset = when(col("id") === anchor, lit(1.0 - damping)).otherwise(lit(0.0))
-    var ranks = verts.withColumn("rank",
-      when(col("id") === anchor, lit(1.0)).otherwise(lit(0.0)))
-    for (i <- 1 to iters) {
-      val msgs = contribs
-        .join(ranks.withColumnRenamed("id", "src"), "src")
-        .groupBy(col("dst").as("id"))
-        .agg(sum(col("rank") / col("outdeg")).as("msum"))
-      val next = verts.join(msgs, Seq("id"), "left")
-        .select(col("id"),
-          (reset + lit(damping) * coalesce(col("msum"), lit(0.0))).as("rank"))
-      ranks = if (i % materializeEvery == 0 || i == iters)
-        next.localCheckpoint(true) else next
-    }
-    ranks.select(col("id"), round(col("rank"), 6).as("rank"))
-  }
+                             iters: Int = 10,
+                             damping: Double = 0.85): DataFrame =
+    powerIteration(edges.select(col("src"), col("dst")),
+        count(lit(1)).as("outdeg"), col("rank") / col("outdeg"),
+        when(col("id") === anchor, lit(1.0)).otherwise(lit(0.0)),
+        when(col("id") === anchor, lit(1.0 - damping)).otherwise(lit(0.0)),
+        iters, damping)
+      .select(col("id"), round(col("rank"), 6).as("rank"))
 
   /** Connected components in pure DataFrame ops — min-label
     * propagation to convergence: every vertex starts labeled with its
@@ -344,14 +341,12 @@ object GraphAnalytics {
     * distance to its component minimum HALVES per round — O(log
     * diameter) rounds instead of O(diameter), the same guarantee the
     * alternating large-star/small-star algorithm buys, at one extra
-    * keyed join per round. Convergence is detected every `checkEvery`
-    * rounds by a per-row changed flag computed INSIDE the block's one
-    * checkpoint job (a final round that changed nothing proves the
-    * fixpoint — tighter than comparing across the block), read back
-    * as a limit-1 scan of the checkpointed blocks
-    * ([[pageRankDF]]'s materialization-cadence invariant: chain
-    * lazily, cut lineage with eager localCheckpoint at the check,
-    * never materialize per round).
+    * keyed join per round. Rounds chain lazily in blocks of two, one
+    * [[Fixpoint]] round each: the block's changed-row count (its last
+    * round against its pre-round label) rides the block's one
+    * checkpoint job, and a final round that changed nothing proves the
+    * fixpoint (the round operator is deterministic and monotone —
+    * tighter than comparing across the block).
     *
     * Safety of the jump: label values are always vertex ids from the
     * SAME component (min-propagation only moves ids along edges, and
@@ -362,37 +357,21 @@ object GraphAnalytics {
     *
     * @return (id, comp) — comp = min vertex id of the component.
     */
-  def connectedComponentsDF(edges: DataFrame, checkEvery: Int = 2,
+  def connectedComponentsDF(edges: DataFrame,
                             maxRounds: Int = 60): DataFrame = {
-    val canon = edges.filter(col("src") =!= col("dst"))
-      .select(least(col("src"), col("dst")).as("u"),
-        greatest(col("src"), col("dst")).as("v"))
-      .distinct()
-    val adj = canon.select(col("u").as("from"), col("v").as("to"))
-      .unionAll(canon.select(col("v").as("from"), col("u").as("to")))
-      .localCheckpoint(true)
+    val adj = bothWays(simpleEdges(edges), "from", "to").localCheckpoint(true)
     // initial labels chain lazily into block 1 (the distinct's
     // exchange is reused within the block plan) — no separate
     // materialization job
-    var labels = adj.select(col("from").as("id")).distinct()
+    val labels = adj.select(col("from").as("id")).distinct()
       .withColumn("comp", col("id"))
-    var rounds = 0
-    var converged = false
-    while (!converged && rounds < maxRounds) {
-      var cur = labels
-      for (r <- 1 to checkEvery) {
-        // the block's LAST round carries its pre-round label along, so
-        // the changed flag lands inside the block's one checkpoint job
-        // and convergence is a limit-1 scan of the checkpointed blocks
-        // — no separate next-vs-labels join job. Checking the FINAL
-        // round alone is a fixpoint test (the round operator is
-        // deterministic and monotone: a round that changes nothing
-        // proves labels are fixed), and it is TIGHTER than the old
-        // block-start comparison — a diameter-d component converges
-        // one whole block sooner.
-        val last = r == checkEvery
-        val capture = if (last) Seq(col("comp").as("pc")) else Nil
-        val carry = if (last) Seq(col("pc")) else Nil
+    val (fixed, _, _) = Fixpoint.converge(labels, 0L,
+        count(when(col("_chg"), lit(1))), (maxRounds + 1) / 2) { (state, _) =>
+      var cur = state.select(col("id"), col("comp"))
+      for (r <- 1 to 2) {
+        // the block's last round carries its pre-round label (pc)
+        val capture = if (r == 2) Seq(col("comp").as("pc")) else Nil
+        val carry = if (r == 2) Seq(col("pc")) else Nil
         val msgs = adj
           .join(cur.select(col("id").as("to"), col("comp").as("nc")), "to")
           .groupBy(col("from").as("id"))
@@ -407,21 +386,9 @@ object GraphAnalytics {
           .select(col("id") +: carry :+
             least(col("comp"), coalesce(col("pcomp"), col("comp"))).as("comp"): _*)
       }
-      // the changed-row count rides the block's ONE checkpoint job as
-      // an observed metric (exact; count > 0 ⟺ some label moved) —
-      // the separate filter+isEmpty probe was a whole extra job per
-      // block, and on gate-scale graphs the fixed job cost IS the
-      // loop's cost (the mergeAdditive lesson applied to the CC loop)
-      val chgObs = org.apache.spark.sql.Observation()
-      val next = cur
-        .select(col("id"), col("comp"), (col("comp") < col("pc")).as("_chg"))
-        .observe(chgObs, count(when(col("_chg"), lit(1))).as("nchg"))
-        .localCheckpoint(true)
-      converged = chgObs.get("nchg").asInstanceOf[Long] == 0L
-      labels = next.select(col("id"), col("comp"))
-      rounds += checkEvery
-    }
-    labels
+      cur.select(col("id"), col("comp"), (col("comp") < col("pc")).as("_chg"))
+    } ((_, changed) => changed == 0L)
+    fixed.select(col("id"), col("comp"))
   }
 
   /** Deterministic random-walk corpus over the simple undirected graph
@@ -451,12 +418,7 @@ object GraphAnalytics {
     */
   def randomWalks(edges: DataFrame, walksPerVertex: Int = 2,
                   length: Int = 4, seed: Long = 7L): DataFrame = {
-    val canon = edges.filter(col("src") =!= col("dst"))
-      .select(least(col("src"), col("dst")).as("u"),
-        greatest(col("src"), col("dst")).as("v"))
-      .distinct()
-    val adj = canon.select(col("u").as("from"), col("v").as("to"))
-      .unionAll(canon.select(col("v").as("from"), col("u").as("to")))
+    val adj = bothWays(simpleEdges(edges), "from", "to")
     val adjIdx = adj.withColumn("idx",
         row_number().over(Window.partitionBy(col("from"))
           .orderBy(col("to"))) - 1)
@@ -529,13 +491,9 @@ object GraphAnalytics {
     // zero (ANSI throws); 1/1000th keeps every neighbor reachable
     val wRet = math.max(1L, math.round(1000.0 / p))
     val wOut = math.max(1L, math.round(1000.0 / q))
-    val canon = edges.filter(col("src") =!= col("dst"))
-      .select(least(col("src"), col("dst")).as("u"),
-        greatest(col("src"), col("dst")).as("v"))
-      .distinct()
+    val canon = simpleEdges(edges)
       .localCheckpoint(true)
-    val adj = canon.select(col("u").as("from"), col("v").as("to"))
-      .unionAll(canon.select(col("v").as("from"), col("u").as("to")))
+    val adj = bothWays(canon, "from", "to")
     val adjIdx = adj.withColumn("idx",
         row_number().over(Window.partitionBy(col("from"))
           .orderBy(col("to"))) - 1)
@@ -738,37 +696,27 @@ object GraphAnalytics {
     * adjacency on the neighbor side, count (vertex, label) pairs with
     * map-side partial counts (the hub absorber), then a bounded-heap
     * top-1 per vertex ([[TopK.grouped]] — no window sort of the full
-    * label-count table). Lazy chaining + eager localCheckpoint every
-    * `materializeEvery` rounds ([[pageRankDF]]'s cadence invariant).
+    * label-count table). [[Fixpoint]] cadence, a lineage cut every 2.
     *
     * @return (id, lbl) — community label per vertex of the edge view.
     */
-  def labelPropagationDF(edges: DataFrame, rounds: Int = 4,
-                         materializeEvery: Int = 2): DataFrame = {
-    val canon = edges.filter(col("src") =!= col("dst"))
-      .select(least(col("src"), col("dst")).as("u"),
-        greatest(col("src"), col("dst")).as("v"))
-      .distinct()
-    val adj = canon.select(col("u").as("from"), col("v").as("to"))
-      .unionAll(canon.select(col("v").as("from"), col("u").as("to")))
+  def labelPropagationDF(edges: DataFrame, rounds: Int = 4): DataFrame = {
+    val adj = bothWays(simpleEdges(edges), "from", "to")
       .localCheckpoint(true)
-    var labels = adj.select(col("from").as("id")).distinct()
+    val labels = adj.select(col("from").as("id")).distinct()
       .withColumn("lbl", col("id"))
       .localCheckpoint(true)
-    for (i <- 1 to rounds) {
+    Fixpoint.rounds(labels, rounds, 2) { labels =>
       val counted = adj
         .join(labels.select(col("id").as("to"), col("lbl")), "to")
         .groupBy(col("from").as("id"), col("lbl"))
         .agg(count(lit(1)).as("c"))
       // top-1 by (count desc, label asc): negate the count for the
       // smallest-first heap; every vertex of adj has >= 1 neighbor
-      val next = TopK.grouped(counted, Seq("id"),
+      TopK.grouped(counted, Seq("id"),
           struct((-col("c")).as("_nc"), col("lbl").as("_l")), 1)
         .select(col("id"), col("best._l").as("lbl"))
-      labels = if (i % materializeEvery == 0 || i == rounds)
-        next.localCheckpoint(true) else next
     }
-    labels
   }
 
   /** One-level synchronous Louvain local moving (Blondel et al. 2008,
@@ -794,19 +742,14 @@ object GraphAnalytics {
     * @return (id, community) — canonical min-member label, ordered.
     */
   def louvainSync(edges: DataFrame, rounds: Int = 2): DataFrame = {
-    val canon = edges.filter(col("src") =!= col("dst"))
-      .select(least(col("src"), col("dst")).as("u"),
-        greatest(col("src"), col("dst")).as("v"))
-      .distinct()
-    val adj = canon.select(col("u").as("from"), col("v").as("to"))
-      .unionAll(canon.select(col("v").as("from"), col("u").as("to")))
-      .localCheckpoint(true)
+    // 2m: each undirected edge counted twice
+    val (adj, m2) = Fixpoint.observed(bothWays(simpleEdges(edges), "from", "to"),
+      count(lit(1)))
     val deg = adj.groupBy(col("from").as("id"))
       .agg(count(lit(1)).as("k"))
       .localCheckpoint(true)
-    val m2 = adj.count() // 2m: each undirected edge counted twice
-    var com = deg.select(col("id"), col("id").as("c0"))
-    for (_ <- 1 to rounds) {
+    val init = deg.select(col("id"), col("id").as("c0"))
+    val com = Fixpoint.rounds(init, rounds, 1) { com =>
       val tot = com.join(deg, "id").groupBy(col("c0").as("c"))
         .agg(sum(col("k")).as("tot"))
         .localCheckpoint(true) // read for candidates AND the own term
@@ -832,9 +775,8 @@ object GraphAnalytics {
         .filter(-col("mv.nd") > 0)
       val best = TopK.grouped(moves, Seq("id"), col("mv"), 1)
         .select(col("id"), col("best.tc").as("c_new"))
-      com = com.join(best, Seq("id"), "left")
+      com.join(best, Seq("id"), "left")
         .select(col("id"), coalesce(col("c_new"), col("c0")).as("c0"))
-        .localCheckpoint(true)
     }
     val canonLbl = com.groupBy(col("c0"))
       .agg(min(col("id")).as("community"))
@@ -855,13 +797,7 @@ object GraphAnalytics {
     *         transitivity_micros) — triangle_incidences = 3T.
     */
   def transitivity(edges: DataFrame): DataFrame = {
-    val canon = edges.filter(col("src") =!= col("dst"))
-      .select(least(col("src"), col("dst")).as("u"),
-        greatest(col("src"), col("dst")).as("v"))
-      .distinct()
-    val deg = canon.select(col("u").as("id"))
-      .unionAll(canon.select(col("v").as("id")))
-      .groupBy("id").agg(count(lit(1)).as("deg"))
+    val deg = simpleDegrees(simpleEdges(edges), "deg")
     val wedges = deg.agg(
       sum((col("deg") * (col("deg") - 1) / lit(2)).cast("long")).as("w"))
     val tri = triangleCountsDF(edges)
@@ -889,10 +825,7 @@ object GraphAnalytics {
     *         giant_frac_micros), one row per rate, ordered.
     */
   def percolation(edges: DataFrame, rates: Seq[Double]): DataFrame = {
-    val canon = edges.filter(col("src") =!= col("dst"))
-      .select(least(col("src"), col("dst")).as("u"),
-        greatest(col("src"), col("dst")).as("v"))
-      .distinct()
+    val canon = simpleEdges(edges)
       .localCheckpoint(true) // re-filtered once per rate
     val verts = canon.select(col("u").as("id"))
       .unionAll(canon.select(col("v").as("id"))).distinct()
@@ -953,45 +886,25 @@ object GraphAnalytics {
     * @return (id, coreness) over the simple undirected view, ordered.
     */
   def corenessHIndex(edges: DataFrame, rounds: Int = 4): DataFrame = {
-    val canon = edges.filter(col("src") =!= col("dst"))
-      .select(least(col("src"), col("dst")).as("u"),
-        greatest(col("src"), col("dst")).as("v"))
-      .distinct()
-    val adj = canon.select(col("u").as("f"), col("v").as("t"))
-      .unionAll(canon.select(col("v").as("f"), col("u").as("t")))
-      .localCheckpoint(true)
-    // Fixpoint early exit (r16, the kCore pattern): the iterated
-    // h-index is POINTWISE NON-INCREASING from the degree init (H is
-    // monotone in its inputs, so hᵏ ≤ hᵏ⁻¹ pointwise by induction —
-    // Lü et al. 2016), and the vertex set is constant — therefore an
-    // unchanged Σh PROVES an unchanged vector, and every later round
-    // is a no-op the unrolled oracle replays identically. The sum
-    // rides each round's existing checkpoint job as an Observation.
-    def obsSum(df: DataFrame): (DataFrame, () => Long) = {
-      val o = org.apache.spark.sql.Observation()
-      (df.observe(o, coalesce(sum(col("h")), lit(0L)).as("s")),
-        () => o.get("s").asInstanceOf[Long])
-    }
-    val (h0, s0) = obsSum(adj.groupBy(col("f").as("id"))
-      .agg(count(lit(1)).as("h")))
-    var h = h0.localCheckpoint(true)
-    var hSum = s0()
-    var converged = false
-    for (_ <- 1 to rounds if !converged) {
+    // Σh⁰ = Σ degree = |adj|: the count rides adj's checkpoint, and h⁰
+    // chains lazily into round 1
+    val (adj, degSum) = Fixpoint.observed(bothWays(simpleEdges(edges), "f", "t"),
+      count(lit(1)))
+    val h0 = adj.groupBy(col("f").as("id")).agg(count(lit(1)).as("h"))
+    // exit on an unchanged Σh: the iterated h-index is POINTWISE
+    // NON-INCREASING from the degree init (H is monotone in its inputs,
+    // so hᵏ ≤ hᵏ⁻¹ pointwise by induction — Lü et al. 2016) over a
+    // constant vertex set, so an unchanged sum proves an unchanged vector
+    val (h, _, _) = Fixpoint.converge(h0, degSum,
+        coalesce(sum(col("h")), lit(0L)), rounds) { (h, _) =>
       val nbr = adj.join(h.select(col("id").as("t"), col("h").as("hv")), "t")
       // BOUNDED per-vertex window: one vertex's neighbor list
       val w = Window.partitionBy(col("f"))
         .orderBy(desc("hv"), col("t"))
-      val (hn, sn) = obsSum(nbr.withColumn("r", row_number().over(w))
+      nbr.withColumn("r", row_number().over(w))
         .groupBy(col("f").as("id"))
-        .agg(max(least(col("r"), col("hv"))).as("h")))
-      val prev = h
-      h = hn.localCheckpoint(true)
-      val s = sn()
-      converged = s == hSum
-      hSum = s
-      releaseCheckpoint(prev) // superseded round's blocks
-    }
+        .agg(max(least(col("r"), col("hv"))).as("h"))
+    } (_ == _)
     h.select(col("id"), col("h").as("coreness")).orderBy(col("id"))
   }
 
@@ -1005,57 +918,17 @@ object GraphAnalytics {
     * short-diameter social graphs converges in a handful of rounds —
     * the spec asserts the gate configuration reaches its fixpoint.
     * Per round: one induced-degree aggregation (map-side partial
-    * counts) + one semi join — O(rounds) keyed shuffles.
+    * counts) + one semi join — O(rounds) keyed shuffles. It is
+    * [[kCoreConverged]]'s loop with `maxRounds = rounds`, which also
+    * stops on an empty survivor set: peeling only REMOVES vertices, so
+    * an unchanged or empty survivor count fixes every later round,
+    * and the skipped rounds are no-ops the unrolled oracle replays to
+    * the same table.
     *
     * @return (id, in_core) for every vertex of the edge view.
     */
-  def kCore(edges: DataFrame, k: Int, rounds: Int = 8,
-            materializeEvery: Int = 4): DataFrame = {
-    val canon = edges.filter(col("src") =!= col("dst"))
-      .select(least(col("src"), col("dst")).as("u"),
-        greatest(col("src"), col("dst")).as("v"))
-      .distinct()
-    val adj = canon.select(col("u").as("from"), col("v").as("to"))
-      .unionAll(canon.select(col("v").as("from"), col("u").as("to")))
-      .localCheckpoint(true)
-    val verts = adj.select(col("from").as("id")).distinct()
-      .localCheckpoint(true)
-    var core = verts
-    // FIXPOINT EARLY EXIT (the kTruss argument): peeling only REMOVES
-    // vertices, so an unchanged count proves an unchanged set, and
-    // every later round recomputes the identical induced degrees and
-    // removes nothing — the remaining rounds are provable no-ops that
-    // the unrolled oracle replays to the same table. Each round is
-    // eager with its survivor count riding the checkpoint job as an
-    // observed metric; superseded rounds release their blocks (the
-    // kTruss hygiene). On the short-diameter gate graphs this skips
-    // more than half the fixed `rounds`; at scale a skipped round is
-    // a full induced-degree shuffle saved.
-    var prevN = -1L
-    var i = 0
-    while (i < rounds && prevN != 0L) {
-      i += 1
-      // induced degree: only edges whose BOTH endpoints survive
-      val alive = adj
-        .join(core.select(col("id").as("from")), "from")
-        .join(core.select(col("id").as("to")), "to")
-      val nObs = org.apache.spark.sql.Observation()
-      val next = alive.groupBy(col("from").as("id"))
-        .agg(count(lit(1)).as("deg"))
-        .filter(col("deg") >= k)
-        .select("id")
-        .observe(nObs, count(lit(1)).as("n"))
-        .localCheckpoint(true)
-      val n = nObs.get("n").asInstanceOf[Long]
-      val prevCore = core
-      core = next
-      if (prevCore ne verts) releaseCheckpoint(prevCore)
-      if (n == prevN) i = rounds // fixpoint: later rounds are no-ops
-      prevN = n
-    }
-    verts.join(core.withColumn("in_core", lit(true)), Seq("id"), "left")
-      .select(col("id"), coalesce(col("in_core"), lit(false)).as("in_core"))
-  }
+  def kCore(edges: DataFrame, k: Int, rounds: Int = 8): DataFrame =
+    peel(edges, k, rounds)((prev, n) => n == prev || n == 0L)._1
 
   /** [[kCore]]'s converge-and-verify mode: peel until a round removes
     * no vertex (the true k-core fixpoint), up to `maxRounds`. The
@@ -1064,11 +937,11 @@ object GraphAnalytics {
     * graphs whose peeling is deeper than its round budget — general
     * callers should use this form and check the flag. Peeling is
     * monotone (the survivor set only shrinks), so "this round removed
-    * nothing" IS the fixpoint test, one count per round on the
-    * already-materialized survivor set.
+    * nothing" IS the fixpoint test, one count per round riding the
+    * round's checkpoint job.
     *
     * @return (membership as in [[kCore]], converged, rounds) —
-    *         `converged` false only if `maxRounds` blocks elapsed while
+    *         `converged` false only if `maxRounds` rounds elapsed while
     *         vertices were still falling out; `rounds` = peel
     *         iterations executed, INCLUDING the fixpoint-confirming one
     *         (the first round that removes nothing), so it is directly
@@ -1076,43 +949,32 @@ object GraphAnalytics {
     *         |c_i| = |c_{i-1}|.
     */
   def kCoreConverged(edges: DataFrame, k: Int,
-                     maxRounds: Int = 64): (DataFrame, Boolean, Int) = {
-    val canon = edges.filter(col("src") =!= col("dst"))
-      .select(least(col("src"), col("dst")).as("u"),
-        greatest(col("src"), col("dst")).as("v"))
-      .distinct()
-    val adj = canon.select(col("u").as("from"), col("v").as("to"))
-      .unionAll(canon.select(col("v").as("from"), col("u").as("to")))
+                     maxRounds: Int = 64): (DataFrame, Boolean, Int) =
+    peel(edges, k, maxRounds)(_ == _)
+
+  /** The k-core peel on [[Fixpoint.converge]]: each round keeps the
+    * survivors with ≥ k edges to other survivors, until
+    * `done(prevCount, count)` or `maxRounds`. */
+  private def peel(edges: DataFrame, k: Int, maxRounds: Int)
+                  (done: (Long, Long) => Boolean): (DataFrame, Boolean, Int) = {
+    val adj = bothWays(simpleEdges(edges), "from", "to")
       .localCheckpoint(true)
-    val verts = adj.select(col("from").as("id")).distinct()
-      .localCheckpoint(true)
-    var core = verts
-    var prev = core.count()
-    var stable = false
-    var round = 0
-    while (!stable && round < maxRounds) {
-      val alive = adj
-        .join(core.select(col("id").as("from")), "from")
-        .join(core.select(col("id").as("to")), "to")
-      // eager per round: the fixpoint test needs this round's count
-      // anyway — it rides the checkpoint job as an observed metric
-      // (exact), so a round is ONE job, not checkpoint + count
-      val nObs = org.apache.spark.sql.Observation()
-      core = alive.groupBy(col("from").as("id"))
-        .agg(count(lit(1)).as("deg"))
-        .filter(col("deg") >= k)
-        .select("id")
-        .observe(nObs, count(lit(1)).as("n"))
-        .localCheckpoint(true)
-      val n = nObs.get("n").asInstanceOf[Long]
-      stable = n == prev
-      prev = n
-      round += 1
-    }
+    val (verts, n) = Fixpoint.observed(adj.select(col("from").as("id")).distinct(),
+      count(lit(1)))
+    val (core, converged, rounds) =
+      Fixpoint.converge(verts, n, count(lit(1)), maxRounds) { (core, _) =>
+        // induced degree: only edges whose BOTH endpoints survive
+        adj.join(core.select(col("id").as("from")), "from")
+          .join(core.select(col("id").as("to")), "to")
+          .groupBy(col("from").as("id"))
+          .agg(count(lit(1)).as("deg"))
+          .filter(col("deg") >= k)
+          .select("id")
+      } (done)
     val membership = verts
       .join(core.withColumn("in_core", lit(true)), Seq("id"), "left")
       .select(col("id"), coalesce(col("in_core"), lit(false)).as("in_core"))
-    (membership, stable, round)
+    (membership, converged, rounds)
   }
 
   /** Exact per-vertex triangle counts over the simple undirected graph,
@@ -1136,15 +998,10 @@ object GraphAnalytics {
     *         triangle-free vertices.
     */
   def triangleCountsDF(edges: DataFrame): DataFrame = {
-    val canon = edges.filter(col("src") =!= col("dst"))
-      .select(least(col("src"), col("dst")).as("u"),
-        greatest(col("src"), col("dst")).as("v"))
-      .distinct()
+    val canon = simpleEdges(edges)
     val verts = canon.select(col("u").as("id"))
       .unionAll(canon.select(col("v").as("id"))).distinct()
-    val deg = canon.select(col("u").as("id"))
-      .unionAll(canon.select(col("v").as("id")))
-      .groupBy("id").agg(count(lit(1)).as("deg"))
+    val deg = simpleDegrees(canon, "deg")
     // attach both endpoint degrees, orient low-(deg,id) → high-(deg,id)
     // (struct comparison is lexicographic — ties broken by id, total order)
     val withDeg = canon
@@ -1195,13 +1052,7 @@ object GraphAnalytics {
     * @return (id, deg, n_tri, coeff) for every vertex of the edge view.
     */
   def clusteringCoefficientDF(edges: DataFrame): DataFrame = {
-    val canon = edges.filter(col("src") =!= col("dst"))
-      .select(least(col("src"), col("dst")).as("u"),
-        greatest(col("src"), col("dst")).as("v"))
-      .distinct()
-    val deg = canon.select(col("u").as("id"))
-      .unionAll(canon.select(col("v").as("id")))
-      .groupBy("id").agg(count(lit(1)).as("deg"))
+    val deg = simpleDegrees(simpleEdges(edges), "deg")
     triangleCountsDF(edges).join(deg, "id")
       .select(col("id"), col("deg"), col("n_tri"),
         when(col("deg") >= 2,
@@ -1233,10 +1084,7 @@ object GraphAnalytics {
     * @return zero-support canonical edges (u, v) ordered.
     */
   def weakTies(edges: DataFrame): DataFrame = {
-    val e = edges.filter(col("src") =!= col("dst"))
-      .select(least(col("src"), col("dst")).as("u"),
-        greatest(col("src"), col("dst")).as("v"))
-      .distinct()
+    val e = simpleEdges(edges)
       .localCheckpoint(true) // reused: support pass + anti join
     // supported = edges with >=1 triangle, via the degree-ORIENTED
     // enumeration ([[kTrussSupport]]): the unoriented both-endpoint
@@ -1264,22 +1112,20 @@ object GraphAnalytics {
     */
   def katzMicros(edges: DataFrame, rounds: Int): DataFrame = {
     val adj = Pymk.undirected(edges).distinct().localCheckpoint(true)
-    var x = adj.select(col("from").as("id")).distinct()
+    val x0 = adj.select(col("from").as("id")).distinct()
       .withColumn("katz_micros", lit(1000000L))
       .localCheckpoint(true)
-    for (i <- 1 to rounds) {
+    Fixpoint.rounds(x0, rounds, 2) { x =>
       val in = adj
         .join(x.select(col("id").as("from"), col("katz_micros").as("xv")),
           "from")
         .groupBy(col("to").as("id")).agg(sum(col("xv")).as("s"))
-      val next = x.select(col("id"))
+      x.select(col("id"))
         .join(in, Seq("id"), "left")
         .select(col("id"),
           (lit(1000000L) + floor(coalesce(col("s"), lit(0L)) / lit(8)))
             .cast("long").as("katz_micros"))
-      x = if (i % 2 == 0 || i == rounds) next.localCheckpoint(true) else next
-    }
-    x.orderBy("id")
+    }.orderBy("id")
   }
 
   /** k-truss decomposition membership (Cohen 2008) by synchronous
@@ -1310,64 +1156,36 @@ object GraphAnalytics {
     * DOCUMENTED approximation (support undercounts at capped
     * vertices); the default is exact, and after orientation the cap
     * is belt-and-braces (out-degree is already √m-bounded).
-    * Checkpoint per round keeps lineage flat.
+    * Rounds run on [[Fixpoint.converge]].
     *
     * @return surviving canonical edges (u, v, sup) ordered.
     */
   def kTruss(edges: DataFrame, k: Int, rounds: Int,
              maxOutDegree: Int = Int.MaxValue): DataFrame = {
     require(k >= 3, "k-truss needs k >= 3")
-    var e = edges.filter(col("src") =!= col("dst"))
-      .select(least(col("src"), col("dst")).as("u"),
-        greatest(col("src"), col("dst")).as("v"))
-      .distinct()
-      .localCheckpoint(true)
-    // reported sup = the support that JUSTIFIED survival (computed
-    // over the round-(rounds−1) edge set) — one triangle pass per
-    // round, none extra for reporting; at a fixpoint it equals the
-    // final-set support exactly
-    var lastSup: DataFrame = null
-    // FIXPOINT EARLY EXIT: a round that removes nothing fixes every
-    // later round — the surviving set determines degrees, orientation,
-    // the md5-capped out-list sample, and therefore the support
-    // EXACTLY, so round r+1 recomputes byte-identical sup over the
-    // identical set and removes nothing again. Sound for the capped
-    // path too (the hash sample is a pure function of the surviving
-    // list), and the bounded-rounds oracle replays the unchanged
-    // rounds to the same table. The |E| count per round runs over the
-    // freshly checkpointed edge blocks — noise against one avoided
-    // triangle enumeration (sf1000 measured ~400 s/round).
-    var prevN = e.count()
-    var r = 0
-    var fixed = false
-    while (r < rounds && !fixed) {
-      r += 1
-      val (supRaw, oriented) = kTrussSupportWithOriented(e, maxOutDegree)
-      val sup = supRaw
-        .localCheckpoint(true) // reused: peel filter + reported sup
-      // each round's inputs are superseded the moment its successors
-      // materialize — without the releases, peak storage is
-      // rounds × |E| of checkpoint blocks (measured: heap death on
-      // the 600M-edge synthetic slice; a cluster would waste the same
-      // multiple of executor memory). Each release walks ITS OWN
-      // frame's RDD lineage to the persisted blocks, so a concurrent
-      // caller's checkpoints on the shared context are never touched.
-      releaseCheckpoint(oriented) // dead once sup is materialized
-      val prevE = e
-      // the surviving-edge count rides the checkpoint job as an
-      // observed metric — one job per round, not checkpoint + count
-      val nObs = org.apache.spark.sql.Observation()
-      e = e.join(sup.filter(col("sup") >= k - 2), Seq("u", "v"), "left_semi")
-        .observe(nObs, count(lit(1)).as("n"))
-        .localCheckpoint(true)
-      val n = nObs.get("n").asInstanceOf[Long]
-      releaseCheckpoint(prevE) // superseded by the new e
-      if (lastSup != null) releaseCheckpoint(lastSup) // reassigned below
-      lastSup = sup
-      fixed = n == prevN
-      prevN = n
-    }
-    e.join(lastSup, Seq("u", "v")).orderBy("u", "v")
+    // The state is the surviving edges WITH the support that justified
+    // their survival (computed over the previous round's set): every
+    // triangle's three edges come from that set, so the survivors are
+    // exactly the support rows with sup ≥ k−2 — one checkpoint a round,
+    // and at a fixpoint the reported sup is the final set's support.
+    // Exit on an unchanged |E|: the surviving set determines degrees,
+    // orientation, the md5-capped out-list sample and therefore the
+    // support EXACTLY, so a round that removes nothing fixes every
+    // later round (sound for the capped path too — the hash sample is
+    // a pure function of the surviving list).
+    val (e0, n0) = Fixpoint.observed(simpleEdges(edges), count(lit(1)))
+    // the round's oriented-list checkpoint, dead once its round's state
+    // is materialized (without the releases, peak storage is rounds ×
+    // |E| of blocks — measured: heap death on the 600M-edge slice)
+    var oriented: Option[DataFrame] = None
+    val (truss, _, _) = Fixpoint.converge(e0, n0, count(lit(1)), rounds) { (e, _) =>
+      oriented.foreach(releaseCheckpoint)
+      val (sup, o) = kTrussSupportWithOriented(e.select("u", "v"), maxOutDegree)
+      oriented = Some(o)
+      sup.filter(col("sup") >= k - 2)
+    } (_ == _)
+    oriented.foreach(releaseCheckpoint)
+    truss.orderBy("u", "v")
   }
 
   /** Unpersist the checkpoint blocks backing `df`: walk the physical
@@ -1404,9 +1222,7 @@ object GraphAnalytics {
     * release it per round via [[releaseCheckpoint]]. */
   private[graft] def kTrussSupportWithOriented(
       e: DataFrame, maxOutDegree: Int): (DataFrame, DataFrame) = {
-    val deg = e.select(col("u").as("id"))
-      .unionAll(e.select(col("v").as("id")))
-      .groupBy("id").agg(count(lit(1)).as("deg"))
+    val deg = simpleDegrees(e, "deg")
     val withDeg = e
       .join(deg.select(col("id").as("u"), col("deg").as("du")), "u")
       .join(deg.select(col("id").as("v"), col("deg").as("dv")), "v")
@@ -1606,18 +1422,15 @@ object GraphAnalytics {
       .localCheckpoint(true) // reused every relaxation round
     val spark = edges.sparkSession
     import spark.implicits._
-    var dist = sources.toDF("s")
+    val dist0 = sources.toDF("s")
       .select(col("s"), col("s").as("v"), lit(0L).as("d"))
       .localCheckpoint(true)
-    for (i <- 1 to rounds) {
+    Fixpoint.rounds(dist0, rounds, 2) { dist =>
       val relaxed = dist.join(adj.withColumnRenamed("src", "v"), "v")
         .select(col("s"), col("dst").as("v"), (col("d") + col("w")).as("d"))
-      val next = dist.unionByName(relaxed)
+      dist.unionByName(relaxed)
         .groupBy("s", "v").agg(min(col("d")).as("d"))
-      dist = if (i % 2 == 0 || i == rounds) next.localCheckpoint(true)
-      else next
-    }
-    dist.orderBy(col("s"), col("v"))
+    }.orderBy(col("s"), col("v"))
   }
 
   /** Shared multi-source truncated BFS from the hash-spread source
@@ -1632,7 +1445,7 @@ object GraphAnalytics {
     *         distances checkpointed for iterative callers.
     */
   private[graft] def hashSpreadBfs(edges: DataFrame, numSources: Int,
-                                   maxDepth: Int, materializeEvery: Int = 2)
+                                   maxDepth: Int)
       : (DataFrame, DataFrame, DataFrame) = {
     val adj = Pymk.undirected(edges).distinct()
       .localCheckpoint(true) // reused every BFS round
@@ -1643,17 +1456,15 @@ object GraphAnalytics {
       .limit(numSources)
       .select(col("id").as("s"))
     // sources ⊆ verts by construction — init directly, no identity join
-    var dist = sources
+    val dist0 = sources
       .select(col("s"), col("s").as("v"), lit(0).as("d"))
       .localCheckpoint(true)
-    for (i <- 1 to maxDepth) {
+    val dist = Fixpoint.rounds(dist0, maxDepth, 2) { dist =>
       val expanded = dist
         .join(adj.withColumnRenamed("from", "v"), "v")
         .select(col("s"), col("to").as("v"), (col("d") + 1).as("d"))
-      val next = dist.unionByName(expanded)
+      dist.unionByName(expanded)
         .groupBy("s", "v").agg(min(col("d")).as("d"))
-      dist = if (i % materializeEvery == 0 || i == maxDepth)
-        next.localCheckpoint(true) else next
     }
     (adj, verts, dist)
   }
@@ -1687,13 +1498,7 @@ object GraphAnalytics {
     *         avg_deg_milli, max_deg).
     */
   def graphSummary(edges: DataFrame): DataFrame = {
-    val canon = edges.filter(col("src") =!= col("dst"))
-      .select(least(col("src"), col("dst")).as("u"),
-        greatest(col("src"), col("dst")).as("v"))
-      .distinct()
-    val deg = canon.select(col("u").as("id"))
-      .unionAll(canon.select(col("v").as("id")))
-      .groupBy("id").agg(count(lit(1)).as("d"))
+    val deg = simpleDegrees(simpleEdges(edges), "d")
     deg.agg(count(lit(1)).as("n_vertices"), sum(col("d")).as("d2"),
         max(col("d")).as("max_deg"))
       .select(col("n_vertices"), (col("d2") / lit(2)).cast("long")
@@ -1717,13 +1522,7 @@ object GraphAnalytics {
     *         ratio_micros).
     */
   def friendshipParadox(edges: DataFrame): DataFrame = {
-    val canon = edges.filter(col("src") =!= col("dst"))
-      .select(least(col("src"), col("dst")).as("u"),
-        greatest(col("src"), col("dst")).as("v"))
-      .distinct()
-    val deg = canon.select(col("u").as("id"))
-      .unionAll(canon.select(col("v").as("id")))
-      .groupBy("id").agg(count(lit(1)).as("d"))
+    val deg = simpleDegrees(simpleEdges(edges), "d")
     deg.agg(count(lit(1)).as("n"), sum(col("d")).as("sd"),
         sum(col("d") * col("d")).as("sd2"))
       .select(col("n").as("n_vertices"),
@@ -1746,13 +1545,7 @@ object GraphAnalytics {
     * @return one row (n_vertices, sum_deg, gini_micros).
     */
   def degreeGini(edges: DataFrame): DataFrame = {
-    val canon = edges.filter(col("src") =!= col("dst"))
-      .select(least(col("src"), col("dst")).as("u"),
-        greatest(col("src"), col("dst")).as("v"))
-      .distinct()
-    val deg = canon.select(col("u").as("id"))
-      .unionAll(canon.select(col("v").as("id")))
-      .groupBy("id").agg(count(lit(1)).as("d"))
+    val deg = simpleDegrees(simpleEdges(edges), "d")
     val (ranked, n) = Packing.globalRank(
       deg.select(col("d"), col("id")), Seq("d", "id"))
     ranked.agg(sum(col("d")).as("sd"),
@@ -1803,13 +1596,9 @@ object GraphAnalytics {
     * @return one row (m, n_comms, q_micros).
     */
   def modularity(edges: DataFrame, communities: DataFrame): DataFrame = {
-    val e = edges.filter(col("src") =!= col("dst"))
-      .select(least(col("src"), col("dst")).as("u"),
-        greatest(col("src"), col("dst")).as("v"))
-      .distinct()
+    val e = simpleEdges(edges)
     val lab = communities.select(col("id"), col("lbl"))
-    val deg = e.select(col("u").as("id")).unionAll(e.select(col("v").as("id")))
-      .groupBy("id").agg(count(lit(1)).as("deg"))
+    val deg = simpleDegrees(e, "deg")
     val mRow = e.agg(count(lit(1)).as("m"))
     val dByC = deg.join(lab, "id")
       .groupBy(col("lbl")).agg(sum(col("deg")).as("d_c"))
@@ -1849,14 +1638,10 @@ object GraphAnalytics {
     */
   def conductance(edges: DataFrame,
                   communities: DataFrame): DataFrame = {
-    val e = edges.filter(col("src") =!= col("dst"))
-      .select(least(col("src"), col("dst")).as("u"),
-        greatest(col("src"), col("dst")).as("v"))
-      .distinct().localCheckpoint(true)
+    val e = simpleEdges(edges).localCheckpoint(true)
     val lab = communities.select(col("id"), col("lbl"))
     val mRow = e.agg(count(lit(1)).as("m"))
-    val deg = e.select(col("u").as("id")).unionAll(e.select(col("v").as("id")))
-      .groupBy("id").agg(count(lit(1)).as("deg"))
+    val deg = simpleDegrees(e, "deg")
     val vol = deg.join(lab, "id")
       .groupBy(col("lbl")).agg(sum(col("deg")).as("vol"))
     val boundary = e
@@ -1902,14 +1687,10 @@ object GraphAnalytics {
     */
   def conductanceMulti(edges: DataFrame,
                        communities: DataFrame): DataFrame = {
-    val e = edges.filter(col("src") =!= col("dst"))
-      .select(least(col("src"), col("dst")).as("u"),
-        greatest(col("src"), col("dst")).as("v"))
-      .distinct().localCheckpoint(true)
+    val e = simpleEdges(edges).localCheckpoint(true)
     val lab = communities.select(col("id"), col("lbl"), col("assignment"))
     val mRow = e.agg(count(lit(1)).as("m"))
-    val deg = e.select(col("u").as("id")).unionAll(e.select(col("v").as("id")))
-      .groupBy("id").agg(count(lit(1)).as("deg"))
+    val deg = simpleDegrees(e, "deg")
     val vol = deg.join(lab, "id")
       .groupBy(col("assignment"), col("lbl")).agg(sum(col("deg")).as("vol"))
     val boundary = e
@@ -1951,13 +1732,7 @@ object GraphAnalytics {
     * @return (bin, n_vertices, min_deg, max_deg) ordered by bin.
     */
   def degreeHistogram(edges: DataFrame): DataFrame = {
-    val canon = edges.filter(col("src") =!= col("dst"))
-      .select(least(col("src"), col("dst")).as("u"),
-        greatest(col("src"), col("dst")).as("v"))
-      .distinct()
-    canon.select(col("u").as("id"))
-      .unionAll(canon.select(col("v").as("id")))
-      .groupBy("id").agg(count(lit(1)).as("d"))
+    simpleDegrees(simpleEdges(edges), "d")
       .groupBy((length(bin(col("d"))) - 1).cast("long").as("bin"))
       .agg(count(lit(1)).as("n_vertices"), min(col("d")).as("min_deg"),
         max(col("d")).as("max_deg"))
@@ -1998,12 +1773,7 @@ object GraphAnalytics {
     * @return one row (n_diag_pairs, c4_count).
     */
   def c4Count(edges: DataFrame): DataFrame = {
-    val canon = edges.filter(col("src") =!= col("dst"))
-      .select(least(col("src"), col("dst")).as("u"),
-        greatest(col("src"), col("dst")).as("v"))
-      .distinct()
-    val adj = canon.select(col("u").as("mid"), col("v").as("nb"))
-      .unionAll(canon.select(col("v").as("mid"), col("u").as("nb")))
+    val adj = bothWays(simpleEdges(edges), "mid", "nb")
       .localCheckpoint(true)
     val codeg = adj.select(col("mid"), col("nb").as("a"))
       .join(adj.select(col("mid"), col("nb").as("c")), "mid")
@@ -2069,12 +1839,7 @@ object GraphAnalytics {
     require(maxDegree >= 2, "a wedge needs two sampled neighbors")
     require(unit >= 1L && unit <= 3000000000L,
       "unit must be positive and unit^2 must fit a long")
-    val canon = edges.filter(col("src") =!= col("dst"))
-      .select(least(col("src"), col("dst")).as("u"),
-        greatest(col("src"), col("dst")).as("v"))
-      .distinct()
-    val adj = canon.select(col("u").as("from"), col("v").as("to"))
-      .unionAll(canon.select(col("v").as("from"), col("u").as("to")))
+    val adj = bothWays(simpleEdges(edges), "from", "to")
       .localCheckpoint(true) // reused: degrees + the sampled wedge sides
     val samp = capNeighbors(adj, maxDegree)
     // HT weight per middle, integer `unit`s; s(s−1)/(d(d−1)) is the
@@ -2149,10 +1914,8 @@ object GraphAnalytics {
     *         excluded) and how many sources reached it.
     */
   def harmonicCentrality(edges: DataFrame, numSources: Int = 8,
-                         maxDepth: Int = 4,
-                         materializeEvery: Int = 2): DataFrame = {
-    val (_, verts, dist) =
-      hashSpreadBfs(edges, numSources, maxDepth, materializeEvery)
+                         maxDepth: Int = 4): DataFrame = {
+    val (_, verts, dist) = hashSpreadBfs(edges, numSources, maxDepth)
     val contrib = dist
       .filter(col("s") =!= col("v") && col("d") > 0)
       .withColumn("hm", round(lit(1e6) / col("d")).cast("long"))
@@ -2254,6 +2017,20 @@ object GraphAnalytics {
       .orderBy(col("id"))
   }
 
+  /** The HITS-family half-round normalization: `raw` (key, raw)
+    * L1-scaled to Σ = 1e6 INTEGER MICROS (`round(raw·1e6/Σraw)`, the
+    * total a 1-row broadcast) over every `key` of `verts`, absent keys
+    * 0 — as `(key, out)`. */
+  private def microsNormalize(raw: DataFrame, verts: DataFrame, key: String,
+                              out: String): DataFrame =
+    verts.join(
+        raw.crossJoin(broadcast(raw.agg(
+            coalesce(sum(col("raw")), lit(0L)).as("tot"))))
+          .select(col(key),
+            round(col("raw") * lit(1e6) / col("tot")).cast("long").as(out)),
+        Seq(key), "left")
+      .select(col(key), coalesce(col(out), lit(0L)).as(out))
+
   /** HITS hubs & authorities (Kleinberg 1999) on the DIRECTED edge
     * view — the link-analysis complement to PageRank: a good hub
     * points at good authorities, a good authority is pointed at by
@@ -2268,8 +2045,8 @@ object GraphAnalytics {
     *
     * 100 TB shape: per round two edge-keyed joins + two vertex folds
     * + two 1-row total broadcasts; every intermediate is
-    * localCheckpointed so the round-over-round plan stays flat (X18
-    * cadence) and the edge list is scanned from materialized blocks.
+    * localCheckpointed so the round-over-round plan stays flat and the
+    * edge list is scanned from materialized blocks.
     *
     * @return (id, hub_micros, auth_micros) for every vertex.
     */
@@ -2280,15 +2057,6 @@ object GraphAnalytics {
     val verts = e.select(col("src").as("id"))
       .unionAll(e.select(col("dst").as("id"))).distinct()
       .localCheckpoint(true)
-    def normalize(raw: DataFrame, out: String): DataFrame =
-      verts.join(
-          raw.crossJoin(broadcast(raw.agg(
-              coalesce(sum(col("raw")), lit(0L)).as("tot"))))
-            .select(col("id"),
-              round(col("raw") * lit(1e6) / col("tot")).cast("long").as(out)),
-          Seq("id"), "left")
-        .select(col("id"), coalesce(col(out), lit(0L)).as(out))
-        .localCheckpoint(true)
     var h = verts.withColumn("h", lit(1000000L))
     var a = verts.withColumn("a", lit(0L))
     for (_ <- 1 to iters) {
@@ -2299,11 +2067,11 @@ object GraphAnalytics {
       val araw = e.join(h.withColumnRenamed("id", "src"), "src")
         .groupBy(col("dst").as("id")).agg(sum(col("h")).as("raw"))
         .localCheckpoint(true) // feeds both its own total and the rows
-      a = normalize(araw, "a")
+      a = microsNormalize(araw, verts, "id", "a").localCheckpoint(true)
       val hraw = e.join(a.withColumnRenamed("id", "dst"), "dst")
         .groupBy(col("src").as("id")).agg(sum(col("a")).as("raw"))
         .localCheckpoint(true)
-      h = normalize(hraw, "h")
+      h = microsNormalize(hraw, verts, "id", "h").localCheckpoint(true)
     }
     h.join(a, Seq("id"))
       .select(col("id"), col("h").as("hub_micros"), col("a").as("auth_micros"))
@@ -2352,15 +2120,6 @@ object GraphAnalytics {
     // laziness is a trap: with the normalized frames lazy too, every
     // raw double-read doubles the subtree and the plan grows
     // 2^rounds (measured 5.6 s vs 1.6 s at gate scale).
-    def normalize(raw: DataFrame, out: String): DataFrame =
-      verts.join(
-          raw.crossJoin(broadcast(raw.agg(
-              coalesce(sum(col("raw")), lit(0L)).as("tot"))))
-            .select(col("id"),
-              round(col("raw") * lit(1e6) / col("tot")).cast("long").as(out)),
-          Seq("id"), "left")
-        .select(col("id"), coalesce(col(out), lit(0L)).as(out))
-        .localCheckpoint(true)
     var h = verts.withColumn("h", lit(1000000L))
     var a = verts.withColumn("a", lit(0L))
     for (_ <- 1 to iters) {
@@ -2368,12 +2127,12 @@ object GraphAnalytics {
         .join(odeg, "src")
         .groupBy(col("dst").as("id"))
         .agg(sum(floor(col("h") / col("odeg")).cast("long")).as("raw"))
-      a = normalize(araw, "a")
+      a = microsNormalize(araw, verts, "id", "a").localCheckpoint(true)
       val hraw = e.join(a.withColumnRenamed("id", "dst"), "dst")
         .join(ideg, "dst")
         .groupBy(col("src").as("id"))
         .agg(sum(floor(col("a") / col("ideg")).cast("long")).as("raw"))
-      h = normalize(hraw, "h")
+      h = microsNormalize(hraw, verts, "id", "h").localCheckpoint(true)
     }
     h.join(a, Seq("id"))
       .select(col("id"), col("h").as("salsa_hub_micros"),
@@ -2420,13 +2179,7 @@ object GraphAnalytics {
     * @return one row (dmin, n_tail, sum_log_micros, alpha_micros).
     */
   def powerLawAlpha(edges: DataFrame, dmin: Int = 2): DataFrame = {
-    val canon = edges.filter(col("src") =!= col("dst"))
-      .select(least(col("src"), col("dst")).as("u"),
-        greatest(col("src"), col("dst")).as("v"))
-      .distinct()
-    val deg = canon.select(col("u").as("id"))
-      .unionAll(canon.select(col("v").as("id")))
-      .groupBy("id").agg(count(lit(1)).as("d"))
+    val deg = simpleDegrees(simpleEdges(edges), "d")
       .filter(col("d") >= dmin)
     deg.select(
         round(log(col("d") / (lit(dmin) - lit(0.5))) * lit(1e6))
@@ -2478,16 +2231,6 @@ object GraphAnalytics {
       .localCheckpoint(true)
     val adeg = be.groupBy(col("auth")).agg(count(lit(1)).as("ad"))
       .localCheckpoint(true)
-    def normalize(raw: DataFrame, verts: DataFrame, key: String,
-                  out: String): DataFrame =
-      verts.join(
-          raw.crossJoin(broadcast(raw.agg(
-              coalesce(sum(col("raw")), lit(0L)).as("tot"))))
-            .select(col(key),
-              round(col("raw") * lit(1e6) / col("tot")).cast("long").as(out)),
-          Seq(key), "left")
-        .select(col(key), coalesce(col(out), lit(0L)).as(out))
-        .localCheckpoint(true)
     var h = hubs.withColumn("h", lit(1000000L))
     var a = auths.withColumn("a", lit(0L))
     for (_ <- 1 to iters) {
@@ -2495,12 +2238,12 @@ object GraphAnalytics {
         .groupBy(col("auth"))
         .agg(sum(floor(col("h") / col("hd")).cast("long")).as("raw"))
         .localCheckpoint(true)
-      a = normalize(araw, auths, "auth", "a")
+      a = microsNormalize(araw, auths, "auth", "a").localCheckpoint(true)
       val hraw = be.join(a, "auth").join(adeg, "auth")
         .groupBy(col("hub"))
         .agg(sum(floor(col("a") / col("ad")).cast("long")).as("raw"))
         .localCheckpoint(true)
-      h = normalize(hraw, hubs, "hub", "h")
+      h = microsNormalize(hraw, hubs, "hub", "h").localCheckpoint(true)
     }
     a.filter(col("a") > 0L)
       .join(broadcast(hubs), a("auth") === hubs("hub"), "left_anti")
@@ -2522,13 +2265,8 @@ object GraphAnalytics {
     *         fewer than 2 rich vertices.
     */
   def richClub(edges: DataFrame, k: Int): DataFrame = {
-    val canon = edges.filter(col("src") =!= col("dst"))
-      .select(least(col("src"), col("dst")).as("u"),
-        greatest(col("src"), col("dst")).as("v"))
-      .distinct().localCheckpoint(true)
-    val rich = canon.select(col("u").as("id"))
-      .unionAll(canon.select(col("v").as("id")))
-      .groupBy("id").agg(count(lit(1)).as("d"))
+    val canon = simpleEdges(edges).localCheckpoint(true)
+    val rich = simpleDegrees(canon, "d")
       .filter(col("d") > k).select(col("id"))
       .localCheckpoint(true)
     canon
@@ -2552,36 +2290,22 @@ object GraphAnalytics {
     * `iters` rounds replay as unrolled CTEs in the DuckDB oracle).
     *
     * 100 TB shape per round: one edge-keyed join + one vertex fold +
-    * one 1-row total broadcast; intermediates localCheckpointed so the
-    * round-over-round plan stays flat (the X18 cadence).
+    * one 1-row total broadcast; rounds on the [[Fixpoint]] cadence
+    * with a lineage cut every round (the raw table is read twice).
     *
     * @return (id, eig_micros) for every vertex of the simple view.
     */
   def eigenvectorCentrality(edges: DataFrame, iters: Int = 3): DataFrame = {
-    val canon = edges.filter(col("src") =!= col("dst"))
-      .select(least(col("src"), col("dst")).as("u"),
-        greatest(col("src"), col("dst")).as("v"))
-      .distinct()
-    val adj = canon.select(col("u").as("f"), col("v").as("t"))
-      .unionAll(canon.select(col("v").as("f"), col("u").as("t")))
+    val adj = bothWays(simpleEdges(edges), "f", "t")
       .localCheckpoint(true)
     val verts = adj.select(col("f").as("id")).distinct()
       .localCheckpoint(true)
-    var x = verts.withColumn("x", lit(1000000L))
-    for (_ <- 1 to iters) {
+    Fixpoint.rounds(verts.withColumn("x", lit(1000000L)), iters, 1) { x =>
       val raw = adj.join(x.withColumnRenamed("id", "f"), "f")
         .groupBy(col("t").as("id")).agg(sum(col("x")).as("raw"))
         .localCheckpoint(true) // feeds both the total and the rows
-      x = verts.join(
-          raw.crossJoin(broadcast(raw.agg(
-              coalesce(sum(col("raw")), lit(0L)).as("tot"))))
-            .select(col("id"),
-              round(col("raw") * lit(1e6) / col("tot")).cast("long").as("x")),
-          Seq("id"), "left")
-        .select(col("id"), coalesce(col("x"), lit(0L)).as("x"))
-        .localCheckpoint(true)
-    }
-    x.select(col("id"), col("x").as("eig_micros")).orderBy(col("id"))
+      microsNormalize(raw, verts, "id", "x")
+    }.select(col("id"), col("x").as("eig_micros")).orderBy(col("id"))
   }
 
   /** Maximal independent set by Luby's algorithm (Luby 1986) with
@@ -2614,27 +2338,18 @@ object GraphAnalytics {
     * @return (id, in_mis) over every vertex of the simple view.
     */
   def maximalIndependentSet(edges: DataFrame, rounds: Int = 32): DataFrame = {
-    val canon = edges.filter(col("src") =!= col("dst"))
-      .select(least(col("src"), col("dst")).as("u"),
-        greatest(col("src"), col("dst")).as("v"))
-      .distinct()
-    val adj = canon.select(col("u").as("f"), col("v").as("t"))
-      .unionAll(canon.select(col("v").as("f"), col("u").as("t")))
+    val adj = bothWays(simpleEdges(edges), "f", "t")
       .localCheckpoint(true)
-    val vObs = org.apache.spark.sql.Observation()
-    val verts = adj.select(col("f").as("id")).distinct()
-      .observe(vObs, count(lit(1)).as("n"))
-      .localCheckpoint(true)
-    var active = verts
-    // the active count rides each round's existing checkpoint job as
-    // an observed metric — the convergence exit that makes the result
-    // maximal (not just `rounds`-round independent) without the old
-    // per-round limit-1 probe job
-    var activeN = vObs.get("n").asInstanceOf[Long]
+    val (verts, n) = Fixpoint.observed(adj.select(col("f").as("id")).distinct(),
+      count(lit(1)))
+    // every round's winners: the result reads them all, so they stay
+    // off the kernel, whose state is the active set
     var mis = verts.limit(0)
-    var r = 0
-    while (r < rounds && activeN > 0) {
-      r += 1
+    // exit on an empty active set — the exit that makes the result
+    // maximal, not just `rounds`-round independent; an empty graph runs
+    // no round (the kernel tests its exit after a round)
+    Fixpoint.converge(verts, n, count(lit(1)), if (n == 0L) 0 else rounds) {
+        (active, r) =>
       val pri = active.select(col("id"),
           struct(
             Sampling.md5Bucket(concat(lit(s"$r:"), col("id").cast("string")))
@@ -2652,14 +2367,9 @@ object GraphAnalytics {
       mis = mis.unionByName(winners)
       val dominated = adj.join(winners.withColumnRenamed("id", "f"), "f")
         .select(col("t").as("id"))
-      val aObs = org.apache.spark.sql.Observation()
-      active = active
-        .join(winners.unionByName(dominated).distinct(), Seq("id"),
-          "left_anti")
-        .observe(aObs, count(lit(1)).as("n"))
-        .localCheckpoint(true)
-      activeN = aObs.get("n").asInstanceOf[Long]
-    }
+      active.join(winners.unionByName(dominated).distinct(), Seq("id"),
+        "left_anti")
+    } ((_, left) => left == 0L)
     verts.join(mis.withColumn("in_mis", lit(true)), Seq("id"), "left")
       .select(col("id"), coalesce(col("in_mis"), lit(false)).as("in_mis"))
       .orderBy(col("id"))
@@ -2678,23 +2388,17 @@ object GraphAnalytics {
     * 100 TB shape per round: one edge-keyed join against the current
     * label table + one (vertex, label) count fold + one bounded
     * per-vertex argmax (label cardinality = #seed labels, small) —
-    * the X18 lazy-chain/localCheckpoint cadence.
+    * on the [[Fixpoint]] cadence, a lineage cut every round.
     *
     * @param seeds (id, label) — clamped ground truth.
     * @return (id, label) for every vertex reached within `rounds`.
     */
   def labelSpread(edges: DataFrame, seeds: DataFrame,
                   rounds: Int = 3): DataFrame = {
-    val canon = edges.filter(col("src") =!= col("dst"))
-      .select(least(col("src"), col("dst")).as("u"),
-        greatest(col("src"), col("dst")).as("v"))
-      .distinct()
-    val adj = canon.select(col("u").as("f"), col("v").as("t"))
-      .unionAll(canon.select(col("v").as("f"), col("u").as("t")))
+    val adj = bothWays(simpleEdges(edges), "f", "t")
       .localCheckpoint(true)
     val seed = seeds.select(col("id"), col("label")).localCheckpoint(true)
-    var cur = seed
-    for (_ <- 1 to rounds) {
+    Fixpoint.rounds(seed, rounds, 1) { cur =>
       val counts = adj
         .join(cur.select(col("id").as("t"), col("label")), "t")
         .groupBy(col("f").as("id"), col("label"))
@@ -2702,11 +2406,9 @@ object GraphAnalytics {
       val pick = TopK.grouped(counts, Seq("id"),
           struct((-col("cnt")).as("nc"), col("label").as("l")), 1)
         .select(col("id"), col("best.l").as("label"))
-      cur = seed.unionByName(
-          pick.join(seed.select(col("id")), Seq("id"), "left_anti"))
-        .localCheckpoint(true)
-    }
-    cur.orderBy(col("id"))
+      seed.unionByName(
+        pick.join(seed.select(col("id")), Seq("id"), "left_anti"))
+    }.orderBy(col("id"))
   }
 
   /** Connected components by alternating large-star / small-star
@@ -2764,8 +2466,7 @@ object GraphAnalytics {
     var r = 0
     while (!converged && r < maxRounds) {
       // large-star: centers see both orientations
-      val nbrs = e.select(col("u").as("f"), col("v").as("t"))
-        .unionAll(e.select(col("v").as("f"), col("u").as("t")))
+      val nbrs = bothWays(e, "f", "t")
       val mins = nbrs.groupBy("f").agg(least(min(col("t")), col("f")).as("m"))
       val e1 = nbrs.join(mins, "f")
         .where(col("t") > col("f"))

@@ -573,12 +573,8 @@ object Pymk {
     * @return (u, v, common, emb_micros) per canonical edge, ordered.
     */
   def edgeEmbeddedness(edges: DataFrame): DataFrame = {
-    val e = edges.filter(col("src") =!= col("dst"))
-      .select(least(col("src"), col("dst")).as("u"),
-        greatest(col("src"), col("dst")).as("v"))
-      .distinct()
-    val adj = e.select(col("u").as("f"), col("v").as("t"))
-      .unionAll(e.select(col("v").as("f"), col("u").as("t")))
+    val e = GraphAnalytics.simpleEdges(edges)
+    val adj = GraphAnalytics.bothWays(e, "f", "t")
     val deg = adj.groupBy(col("f").as("id")).agg(count(lit(1)).as("d"))
     val common = e
       .join(adj.select(col("f").as("u"), col("t").as("w1")), "u")

@@ -336,7 +336,7 @@ class MultimodalGraphXSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("connectedComponentsDF: long path needs many rounds; multi-component; == GraphX") {
-    // path 0-1-2-...-19 (diameter 19 > checkEvery, forces several
+    // path 0-1-2-...-19 (diameter 19 spans several two-round
     // convergence blocks) + a separate triangle {100,101,102} + an
     // isolated edge 200-201
     val path = (0L until 19L).map(i => (i, i + 1))

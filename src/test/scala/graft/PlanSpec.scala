@@ -116,8 +116,9 @@ class PlanSpec extends AnyFunSuite with SparkSpec {
     val contribs = e.join(e.groupBy("src").agg(count(lit(1)).as("outdeg")), "src")
     val verts = e.select(col("src").as("id"))
       .unionAll(e.select(col("dst").as("id"))).distinct()
-    val step = graft.operators.GraphAnalytics.prStep(
-      contribs, verts, verts.withColumn("rank", lit(1.0)), 0.85)
+    val step = graft.operators.GraphAnalytics.prStep(contribs, verts,
+      verts.withColumn("rank", lit(1.0)), col("rank") / col("outdeg"),
+      lit(1.0 - 0.85), 0.85)
     val p = step.queryExecution.executedPlan.toString()
     // hub-skew absorber: the per-dst reduce must map-side combine
     // (partial_sum) before its exchange, not ship raw contribution rows
