@@ -33,6 +33,19 @@ import org.apache.spark.sql.functions._
   *    inputs plus the returned state, not one checkpoint per cadence
   *    step. It never releases the caller's `init` (a fixed input such
   *    as kCore's vertex set) nor the state it returns.
+  *  - Scratch: a frame a round reads more than once (Louvain's
+  *    community totals, MIS priorities, a raw score table) goes through
+  *    the step's `round.cut`, never a `localCheckpoint` of its own. The
+  *    kernel releases it after the next state cut, the first point at
+  *    which nothing lazy reads it any more.
+  *  - Estimates: a kernel cut's size estimate is capped at
+  *    `spark.sql.defaultSizeInBytes` (what an RDD without statistics
+  *    reports). An inherited estimate is squared by every round that
+  *    joins the state twice, and a deep loop then spends minutes
+  *    multiplying `BigInt`s in planning. The cap keeps the planner's
+  *    choices (anything above the broadcast threshold is "large"); a
+  *    row-count estimate would broadcast small states instead, which
+  *    costs PageRank, CC and Katz one job more at gate scale.
   *  - Exit: the caller passes `done(prev, cur)` over consecutive
   *    statistics — "unchanged" for the monotone peels (kCore,
   *    coreness, kTruss: a round that changes the count changes the
@@ -46,7 +59,9 @@ import org.apache.spark.sql.functions._
   *    union every step, [[hyperBall]] reads every round's registers,
   *    [[betweennessSampled]] every BFS level, and
   *    [[maximalIndependentSet]] every round's winners (its active set
-  *    is the kernel state).
+  *    is the kernel state, its winners its own checkpoints).
+  *    [[ccTwoStar]] stays off too: its exit probes read the old and
+  *    the new edge set, so it releases each superseded set itself.
   * `localCheckpoint` (not `persist`) so unreleased blocks belong to the
   * RDD and the ContextCleaner frees them when the result is dropped; on
   * a cluster this becomes checkpoint-to-table (local blocks don't
@@ -260,7 +275,7 @@ object GraphAnalytics {
       .unionAll(e.select(col("dst").as("id"))).distinct()
       .localCheckpoint(true)
     Fixpoint.rounds(verts.withColumn("rank", rank0), iters, 5)(
-      prStep(contribs, verts, _, msg, reset, damping))
+      (ranks, _) => prStep(contribs, verts, ranks, msg, reset, damping))
   }
 
   /** GraphX's normalization: rescale so Σrank = |V| (two scalars to
@@ -706,7 +721,7 @@ object GraphAnalytics {
     val labels = adj.select(col("from").as("id")).distinct()
       .withColumn("lbl", col("id"))
       .localCheckpoint(true)
-    Fixpoint.rounds(labels, rounds, 2) { labels =>
+    Fixpoint.rounds(labels, rounds, 2) { (labels, _) =>
       val counted = adj
         .join(labels.select(col("id").as("to"), col("lbl")), "to")
         .groupBy(col("from").as("id"), col("lbl"))
@@ -749,16 +764,16 @@ object GraphAnalytics {
       .agg(count(lit(1)).as("k"))
       .localCheckpoint(true)
     val init = deg.select(col("id"), col("id").as("c0"))
-    val com = Fixpoint.rounds(init, rounds, 1) { com =>
-      val tot = com.join(deg, "id").groupBy(col("c0").as("c"))
-        .agg(sum(col("k")).as("tot"))
-        .localCheckpoint(true) // read for candidates AND the own term
+    val com = Fixpoint.rounds(init, rounds, 1) { (com, round) =>
+      // read for candidates AND the own term
+      val tot = round.cut(com.join(deg, "id").groupBy(col("c0").as("c"))
+        .agg(sum(col("k")).as("tot")))
       // k_{i,in}(c): edges from each vertex into each NEIGHBOR community
-      val kiin = adj
+      // (own term + move candidates)
+      val kiin = round.cut(adj
         .join(com.select(col("id").as("to"), col("c0").as("c")), "to")
         .groupBy(col("from").as("id"), col("c"))
-        .agg(count(lit(1)).as("kin"))
-        .localCheckpoint(true) // own term + move candidates
+        .agg(count(lit(1)).as("kin")))
       val base = com.join(deg, "id")
         .join(tot.select(col("c").as("c0"), col("tot").as("tot_own")), "c0")
         .join(kiin.select(col("id"), col("c").as("c0"),
@@ -1115,7 +1130,7 @@ object GraphAnalytics {
     val x0 = adj.select(col("from").as("id")).distinct()
       .withColumn("katz_micros", lit(1000000L))
       .localCheckpoint(true)
-    Fixpoint.rounds(x0, rounds, 2) { x =>
+    Fixpoint.rounds(x0, rounds, 2) { (x, _) =>
       val in = adj
         .join(x.select(col("id").as("from"), col("katz_micros").as("xv")),
           "from")
@@ -1174,17 +1189,12 @@ object GraphAnalytics {
     // later round (sound for the capped path too — the hash sample is
     // a pure function of the surviving list).
     val (e0, n0) = Fixpoint.observed(simpleEdges(edges), count(lit(1)))
-    // the round's oriented-list checkpoint, dead once its round's state
-    // is materialized (without the releases, peak storage is rounds ×
-    // |E| of blocks — measured: heap death on the 600M-edge slice)
-    var oriented: Option[DataFrame] = None
-    val (truss, _, _) = Fixpoint.converge(e0, n0, count(lit(1)), rounds) { (e, _) =>
-      oriented.foreach(releaseCheckpoint)
-      val (sup, o) = kTrussSupportWithOriented(e.select("u", "v"), maxOutDegree)
-      oriented = Some(o)
-      sup.filter(col("sup") >= k - 2)
+    // the oriented lists are round scratch: unreleased, peak storage is
+    // rounds × |E| of blocks (measured: heap death on the 600M-edge slice)
+    val (truss, _, _) = Fixpoint.converge(e0, n0, count(lit(1)), rounds) {
+      (e, round) => kTrussSupport(e.select("u", "v"), maxOutDegree, round.cut)
+        .filter(col("sup") >= k - 2)
     } (_ == _)
-    oriented.foreach(releaseCheckpoint)
     truss.orderBy("u", "v")
   }
 
@@ -1210,18 +1220,11 @@ object GraphAnalytics {
 
   /** One k-truss support round over a canonical (u, v) edge set: the
     * degree-oriented triangle enumeration + three edge-credits per
-    * triangle. Package-visible (un-checkpointed) so PlanSpec can pin
-    * the oriented shape. */
-  private[graft] def kTrussSupport(e: DataFrame,
-                                   maxOutDegree: Int): DataFrame =
-    kTrussSupportWithOriented(e, maxOutDegree)._1
-
-  /** [[kTrussSupport]] plus the handle of its internal oriented-list
-    * checkpoint (reused 3× inside one support pass, but dead the
-    * moment the support frame is materialized) — iterative callers
-    * release it per round via [[releaseCheckpoint]]. */
-  private[graft] def kTrussSupportWithOriented(
-      e: DataFrame, maxOutDegree: Int): (DataFrame, DataFrame) = {
+    * triangle. The oriented lists are read 3× (both wedge sides +
+    * closure) and go through `cut`, which [[kTruss]] makes round
+    * scratch. Package-visible so PlanSpec can pin the oriented shape. */
+  private[graft] def kTrussSupport(e: DataFrame, maxOutDegree: Int,
+      cut: DataFrame => DataFrame = _.localCheckpoint(true)): DataFrame = {
     val deg = simpleDegrees(e, "deg")
     val withDeg = e
       .join(deg.select(col("id").as("u"), col("deg").as("du")), "u")
@@ -1238,7 +1241,7 @@ object GraphAnalytics {
         .as("o"))
       .select(col("o.lo").as("lo"), col("o.hi").as("hi"),
         col("o.hikey").as("hikey"))
-    val oriented = (if (maxOutDegree == Int.MaxValue) oriented0
+    val oriented = cut(if (maxOutDegree == Int.MaxValue) oriented0
       else {
         // hash-spread out-list cap — the capNeighbors medicine on
         // the ORIENTED lists (deterministic, md5-portable)
@@ -1249,7 +1252,7 @@ object GraphAnalytics {
               col("hikey").as("_hikey")), maxOutDegree)
           .select(col("lo"), col("best._hi").as("hi"),
             col("best._hikey").as("hikey"))
-      }).localCheckpoint(true) // reused 3×: both wedge sides + closure
+      })
     val wedges = oriented.select(col("lo"), col("hi").as("b"),
         col("hikey").as("bkey"))
       .join(oriented.select(col("lo"), col("hi").as("c"),
@@ -1260,7 +1263,7 @@ object GraphAnalytics {
       oriented.select(col("lo").as("b"), col("hi").as("c")),
       Seq("b", "c"), "left_semi")
     // each triangle credits its three edges (back in canonical form)
-    val sup = triangles.select(explode(array(
+    triangles.select(explode(array(
         struct(least(col("a"), col("b")).as("u"),
           greatest(col("a"), col("b")).as("v")),
         struct(least(col("a"), col("c")).as("u"),
@@ -1269,7 +1272,6 @@ object GraphAnalytics {
           greatest(col("b"), col("c")).as("v")))).as("ed"))
       .select(col("ed.u").as("u"), col("ed.v").as("v"))
       .groupBy("u", "v").agg(count(lit(1)).as("sup"))
-    (sup, oriented)
   }
 
   /** Degree assortativity (Newman 2002): the Pearson correlation of
@@ -1425,7 +1427,7 @@ object GraphAnalytics {
     val dist0 = sources.toDF("s")
       .select(col("s"), col("s").as("v"), lit(0L).as("d"))
       .localCheckpoint(true)
-    Fixpoint.rounds(dist0, rounds, 2) { dist =>
+    Fixpoint.rounds(dist0, rounds, 2) { (dist, _) =>
       val relaxed = dist.join(adj.withColumnRenamed("src", "v"), "v")
         .select(col("s"), col("dst").as("v"), (col("d") + col("w")).as("d"))
       dist.unionByName(relaxed)
@@ -1459,7 +1461,7 @@ object GraphAnalytics {
     val dist0 = sources
       .select(col("s"), col("s").as("v"), lit(0).as("d"))
       .localCheckpoint(true)
-    val dist = Fixpoint.rounds(dist0, maxDepth, 2) { dist =>
+    val dist = Fixpoint.rounds(dist0, maxDepth, 2) { (dist, _) =>
       val expanded = dist
         .join(adj.withColumnRenamed("from", "v"), "v")
         .select(col("s"), col("to").as("v"), (col("d") + 1).as("d"))
@@ -2031,48 +2033,91 @@ object GraphAnalytics {
         Seq(key), "left")
       .select(col(key), coalesce(col(out), lit(0L)).as(out))
 
+  /** The hub/authority power iteration behind [[hits]], [[salsa]] and
+    * [[salsaPersonalized]]: `iters` rounds over the bipartite edges
+    * `be` (hub, auth) of `a ← Σ_{h→a} msg(h)` then `h ← Σ_{h→a} msg(a)`
+    * (new a within the round, the classic ordering), each half-round
+    * [[microsNormalize]]d over its side's vertex set (`hubs` (hub),
+    * `auths` (auth)). With `byDegree` a message is its sender's score
+    * split over the sender's edges, `floor(score / deg)` (SALSA's
+    * random-walk step); without, the score itself (HITS). Hubs start
+    * at 1e6 micros, authorities at 0.
+    *
+    * Checkpoints: `be` comes from [[bipartite]]; the state is one
+    * tagged frame (is_hub, id, m) of both sides, cut every round. The
+    * raw half-round tables stay lazy: their two readers (own total +
+    * rows) share one job, where AQE's ReusedExchange dedups the
+    * shallow join + fold over checkpointed inputs. The new authorities
+    * are round scratch: the hub half and the state both read them, and
+    * a lazy normalized frame read twice doubles its plan every round.
+    *
+    * @return (hub scores (id, h), authority scores (id, a)). */
+  private def hubAuthority(be: DataFrame, hubs: DataFrame, auths: DataFrame,
+                           byDegree: Boolean, iters: Int): (DataFrame, DataFrame) = {
+    // scores (from, s) → messages over be → (to, s) normalized over verts
+    def half(scores: DataFrame, from: String, to: String, verts: DataFrame) = {
+      val msg = if (byDegree) floor(col("s") / col(s"${from}_deg")).cast("long")
+        else col("s")
+      microsNormalize(be.join(scores, from).groupBy(col(to)).agg(sum(msg).as("raw")),
+        verts, to, "s")
+    }
+    def tagged(isHub: Boolean, scores: DataFrame) =
+      scores.select(lit(isHub).as("is_hub"), col(scores.columns.head).as("id"),
+        col("s").as("m"))
+    def side(state: DataFrame, isHub: Boolean, out: String) =
+      state.filter(col("is_hub") === isHub).select(col("id"), col("m").as(out))
+    val init = tagged(true, hubs.withColumn("s", lit(1000000L)))
+      .unionByName(tagged(false, auths.withColumn("s", lit(0L))))
+    val fixed = Fixpoint.rounds(init, iters, 1) { (state, round) =>
+      val h = side(state, isHub = true, "s").withColumnRenamed("id", "hub")
+      val a = round.cut(half(h, "hub", "auth", auths))
+      tagged(true, half(a, "auth", "hub", hubs)).unionByName(tagged(false, a))
+    }
+    (side(fixed, isHub = true, "h"), side(fixed, isHub = false, "a"))
+  }
+
+  /** Bipartite edges (hub, auth) for [[hubAuthority]], checkpointed
+    * (every half-round scans them); with `degrees` each edge also
+    * carries its hub's and its authority's degree (hub_deg, auth_deg),
+    * SALSA's message divisors. */
+  private def bipartite(be: DataFrame, degrees: Boolean): DataFrame =
+    (if (!degrees) be else be
+      .join(be.groupBy("hub").agg(count(lit(1)).as("hub_deg")), "hub")
+      .join(be.groupBy("auth").agg(count(lit(1)).as("auth_deg")), "auth"))
+      .localCheckpoint(true)
+
+  /** [[hits]]' and [[salsa]]'s graph: the distinct directed simple
+    * edges as [[bipartite]] (hub, auth), and their vertices (id). */
+  private def directedBipartite(edges: DataFrame,
+                                degrees: Boolean): (DataFrame, DataFrame) = {
+    val be = bipartite(edges.where(col("src") =!= col("dst"))
+      .select(col("src").as("hub"), col("dst").as("auth")).distinct(), degrees)
+    val verts = be.select(col("hub").as("id"))
+      .unionAll(be.select(col("auth").as("id"))).distinct()
+      .localCheckpoint(true)
+    (be, verts)
+  }
+
   /** HITS hubs & authorities (Kleinberg 1999) on the DIRECTED edge
     * view — the link-analysis complement to PageRank: a good hub
     * points at good authorities, a good authority is pointed at by
     * good hubs. `iters` rounds of the mutual recursion
-    * `a ← Eᵀh; h ← E a` (new-a within the round, the classic
-    * ordering), each half-round L1-normalized to Σ = 1e6 and rounded
-    * to INTEGER MICROS — the per-vertex sums are order-independent
-    * and the whole fixed-iteration computation replays as unrolled
-    * CTEs in the DuckDB oracle (the pageRankDF playbook, integer
-    * flavor). Vertices with no in-edges hold authority 0; no
-    * out-edges, hub 0.
+    * `a ← Eᵀh; h ← E a` on [[hubAuthority]], each half-round
+    * L1-normalized to Σ = 1e6 and rounded to INTEGER MICROS — the
+    * per-vertex sums are order-independent and the whole
+    * fixed-iteration computation replays as unrolled CTEs in the
+    * DuckDB oracle (the pageRankDF playbook, integer flavor). Vertices
+    * with no in-edges hold authority 0; no out-edges, hub 0.
     *
     * 100 TB shape: per round two edge-keyed joins + two vertex folds
-    * + two 1-row total broadcasts; every intermediate is
-    * localCheckpointed so the round-over-round plan stays flat and the
-    * edge list is scanned from materialized blocks.
+    * + two 1-row total broadcasts over the checkpointed edge list.
     *
     * @return (id, hub_micros, auth_micros) for every vertex.
     */
   def hits(edges: DataFrame, iters: Int = 3): DataFrame = {
-    val e = edges.select(col("src"), col("dst"))
-      .where(col("src") =!= col("dst")).distinct()
-      .localCheckpoint(true) // scanned twice per round
-    val verts = e.select(col("src").as("id"))
-      .unionAll(e.select(col("dst").as("id"))).distinct()
-      .localCheckpoint(true)
-    var h = verts.withColumn("h", lit(1000000L))
-    var a = verts.withColumn("a", lit(0L))
-    for (_ <- 1 to iters) {
-      // NOTE (r15): tried the salsa lazy-raw pattern here — measured
-      // NO job-count win and slightly more task time (the raw double
-      // read is not fully deduped in this shape); the eager raw
-      // checkpoints stay.
-      val araw = e.join(h.withColumnRenamed("id", "src"), "src")
-        .groupBy(col("dst").as("id")).agg(sum(col("h")).as("raw"))
-        .localCheckpoint(true) // feeds both its own total and the rows
-      a = microsNormalize(araw, verts, "id", "a").localCheckpoint(true)
-      val hraw = e.join(a.withColumnRenamed("id", "dst"), "dst")
-        .groupBy(col("src").as("id")).agg(sum(col("a")).as("raw"))
-        .localCheckpoint(true)
-      h = microsNormalize(hraw, verts, "id", "h").localCheckpoint(true)
-    }
+    val (be, verts) = directedBipartite(edges, degrees = false)
+    val (h, a) = hubAuthority(be, verts.select(col("id").as("hub")),
+      verts.select(col("id").as("auth")), byDegree = false, iters)
     h.join(a, Seq("id"))
       .select(col("id"), col("h").as("hub_micros"), col("a").as("auth_micros"))
       .orderBy(col("id"))
@@ -2095,45 +2140,15 @@ object GraphAnalytics {
     * micros, absorbing the floor loss, so the fixed `iters` rounds
     * replay as unrolled CTEs in the DuckDB oracle.
     *
-    * 100 TB shape: identical to [[hits]] — per round two edge-keyed
-    * joins + two vertex folds + two 1-row total broadcasts over the
-    * localCheckpointed distinct edge list; the degree tables are one
-    * extra keyed fold computed ONCE.
+    * 100 TB shape: identical to [[hits]]; both degrees ride the edge
+    * list's one checkpoint.
     *
     * @return (id, salsa_hub_micros, salsa_auth_micros) per vertex.
     */
   def salsa(edges: DataFrame, iters: Int = 3): DataFrame = {
-    val e = edges.select(col("src"), col("dst"))
-      .where(col("src") =!= col("dst")).distinct()
-      .localCheckpoint(true) // scanned twice per round + two degree folds
-    val verts = e.select(col("src").as("id"))
-      .unionAll(e.select(col("dst").as("id"))).distinct()
-      .localCheckpoint(true)
-    val odeg = e.groupBy(col("src")).agg(count(lit(1)).as("odeg"))
-      .localCheckpoint(true)
-    val ideg = e.groupBy(col("dst")).agg(count(lit(1)).as("ideg"))
-      .localCheckpoint(true)
-    // Two checkpoints per round (the normalized frames), not four:
-    // the RAW tables stay lazy — their two consumers (own total +
-    // rows) duplicate only a shallow join+agg over checkpointed
-    // inputs, which AQE ReusedExchange dedups at runtime. Deeper
-    // laziness is a trap: with the normalized frames lazy too, every
-    // raw double-read doubles the subtree and the plan grows
-    // 2^rounds (measured 5.6 s vs 1.6 s at gate scale).
-    var h = verts.withColumn("h", lit(1000000L))
-    var a = verts.withColumn("a", lit(0L))
-    for (_ <- 1 to iters) {
-      val araw = e.join(h.withColumnRenamed("id", "src"), "src")
-        .join(odeg, "src")
-        .groupBy(col("dst").as("id"))
-        .agg(sum(floor(col("h") / col("odeg")).cast("long")).as("raw"))
-      a = microsNormalize(araw, verts, "id", "a").localCheckpoint(true)
-      val hraw = e.join(a.withColumnRenamed("id", "dst"), "dst")
-        .join(ideg, "dst")
-        .groupBy(col("src").as("id"))
-        .agg(sum(floor(col("a") / col("ideg")).cast("long")).as("raw"))
-      h = microsNormalize(hraw, verts, "id", "h").localCheckpoint(true)
-    }
+    val (be, verts) = directedBipartite(edges, degrees = true)
+    val (h, a) = hubAuthority(be, verts.select(col("id").as("hub")),
+      verts.select(col("id").as("auth")), byDegree = true, iters)
     h.join(a, Seq("id"))
       .select(col("id"), col("h").as("salsa_hub_micros"),
         col("a").as("salsa_auth_micros"))
@@ -2223,31 +2238,13 @@ object GraphAnalytics {
     val hubs = fromUser.select(col("dst").as("hub"))
       .unionAll(fromUser.select(col("src").as("hub")))
       .distinct().localCheckpoint(true)
-    val be = und.join(broadcast(hubs), und("src") === hubs("hub"))
-      .select(col("hub"), col("dst").as("auth"))
-      .localCheckpoint(true) // scanned twice per round + two degree folds
+    val be = bipartite(und.join(broadcast(hubs), und("src") === hubs("hub"))
+      .select(col("hub"), col("dst").as("auth")), degrees = true)
     val auths = be.select(col("auth")).distinct().localCheckpoint(true)
-    val hdeg = be.groupBy(col("hub")).agg(count(lit(1)).as("hd"))
-      .localCheckpoint(true)
-    val adeg = be.groupBy(col("auth")).agg(count(lit(1)).as("ad"))
-      .localCheckpoint(true)
-    var h = hubs.withColumn("h", lit(1000000L))
-    var a = auths.withColumn("a", lit(0L))
-    for (_ <- 1 to iters) {
-      val araw = be.join(h, "hub").join(hdeg, "hub")
-        .groupBy(col("auth"))
-        .agg(sum(floor(col("h") / col("hd")).cast("long")).as("raw"))
-        .localCheckpoint(true)
-      a = microsNormalize(araw, auths, "auth", "a").localCheckpoint(true)
-      val hraw = be.join(a, "auth").join(adeg, "auth")
-        .groupBy(col("hub"))
-        .agg(sum(floor(col("a") / col("ad")).cast("long")).as("raw"))
-        .localCheckpoint(true)
-      h = microsNormalize(hraw, hubs, "hub", "h").localCheckpoint(true)
-    }
+    val (_, a) = hubAuthority(be, hubs, auths, byDegree = true, iters)
     a.filter(col("a") > 0L)
-      .join(broadcast(hubs), a("auth") === hubs("hub"), "left_anti")
-      .select(col("auth").as("id"), col("a").as("score_micros"))
+      .join(broadcast(hubs), a("id") === hubs("hub"), "left_anti")
+      .select(col("id"), col("a").as("score_micros"))
       .orderBy(col("score_micros").desc, col("id"))
       .limit(topK)
   }
@@ -2300,10 +2297,10 @@ object GraphAnalytics {
       .localCheckpoint(true)
     val verts = adj.select(col("f").as("id")).distinct()
       .localCheckpoint(true)
-    Fixpoint.rounds(verts.withColumn("x", lit(1000000L)), iters, 1) { x =>
-      val raw = adj.join(x.withColumnRenamed("id", "f"), "f")
-        .groupBy(col("t").as("id")).agg(sum(col("x")).as("raw"))
-        .localCheckpoint(true) // feeds both the total and the rows
+    Fixpoint.rounds(verts.withColumn("x", lit(1000000L)), iters, 1) { (x, round) =>
+      // the raw table feeds both the total and the rows
+      val raw = round.cut(adj.join(x.withColumnRenamed("id", "f"), "f")
+        .groupBy(col("t").as("id")).agg(sum(col("x")).as("raw")))
       microsNormalize(raw, verts, "id", "x")
     }.select(col("id"), col("x").as("eig_micros")).orderBy(col("id"))
   }
@@ -2349,13 +2346,13 @@ object GraphAnalytics {
     // maximal, not just `rounds`-round independent; an empty graph runs
     // no round (the kernel tests its exit after a round)
     Fixpoint.converge(verts, n, count(lit(1)), if (n == 0L) 0 else rounds) {
-        (active, r) =>
-      val pri = active.select(col("id"),
+        (active, round) =>
+      // read for centers AND neighbor side
+      val pri = round.cut(active.select(col("id"),
           struct(
-            Sampling.md5Bucket(concat(lit(s"$r:"), col("id").cast("string")))
-              .as("h"),
-            col("id").as("i")).as("p"))
-        .localCheckpoint(true) // read for centers AND neighbor side
+            Sampling.md5Bucket(
+              concat(lit(s"${round.index}:"), col("id").cast("string"))).as("h"),
+            col("id").as("i")).as("p")))
       val nbrMin = adj
         .join(pri.select(col("id").as("f"), col("p")), "f")
         .join(pri.select(col("id").as("t"), col("p").as("pt")), "t")
@@ -2398,7 +2395,7 @@ object GraphAnalytics {
     val adj = bothWays(simpleEdges(edges), "f", "t")
       .localCheckpoint(true)
     val seed = seeds.select(col("id"), col("label")).localCheckpoint(true)
-    Fixpoint.rounds(seed, rounds, 1) { cur =>
+    Fixpoint.rounds(seed, rounds, 1) { (cur, _) =>
       val counts = adj
         .join(cur.select(col("id").as("t"), col("label")), "t")
         .groupBy(col("f").as("id"), col("label"))
@@ -2490,6 +2487,8 @@ object GraphAnalytics {
       converged = nN == eN && nH == eH &&
         next.join(e, Seq("u", "v"), "left_anti").isEmpty &&
         e.join(next, Seq("u", "v"), "left_anti").isEmpty
+      // the probes were the last readers of e and e1
+      Seq(e, e1).foreach(releaseCheckpoint)
       e = next; eN = nN; eH = nH
       r += 1
     }

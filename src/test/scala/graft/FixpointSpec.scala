@@ -59,18 +59,18 @@ class FixpointSpec extends AnyFunSuite with SparkSpec {
     val init = spark.range(5).toDF("id")
     var out: DataFrame = null
     val pinned = pinnedBy {
-      out = Fixpoint.rounds(init, 7, 3)(_.select((col("id") + 1).as("id")))
+      out = Fixpoint.rounds(init, 7, 3)((s, _) => s.select((col("id") + 1).as("id")))
       assert(ids(out) == (7L to 11L))
     }
     // cuts at rounds 3, 6 and 7; the first two are released
     assert(pinned.size == 1, pinned)
-    assert(Fixpoint.rounds(init, 0, 3)(_.limit(0)) eq init)
+    assert(Fixpoint.rounds(init, 0, 3)((s, _) => s.limit(0)) eq init)
   }
 
   test("converge: caller's exit test, round count, init never released") {
     val (init, n) = Fixpoint.observed(spark.range(10).toDF("id"), count(lit(1)))
     assert(n == 10L)
-    val keepSmallAndEven = (s: DataFrame, _: Int) =>
+    val keepSmallAndEven = (s: DataFrame, _: Fixpoint.Round) =>
       s.filter(col("id") < 3 || col("id") % 2 === 0)
     var res: (DataFrame, Boolean, Int) = null
     val pinned = pinnedBy {
@@ -87,7 +87,7 @@ class FixpointSpec extends AnyFunSuite with SparkSpec {
     assert(!stopped && ran == 1)
     // the round index reaches the step; an "empty" exit stops at once
     val (_, emptied, r) = Fixpoint.converge(init, n, count(lit(1)), 10) {
-      (s, r) => s.filter(col("id") >= r * 4) } ((_, left) => left == 0L)
+      (s, r) => s.filter(col("id") >= r.index * 4) } ((_, left) => left == 0L)
     assert(emptied && r == 3) // 4..9, 8..9, none
   }
 
@@ -117,21 +117,36 @@ class FixpointSpec extends AnyFunSuite with SparkSpec {
     val path = (0L until 47L).map(i => (i, i + 1))
     val edges = (path ++ Seq((100L, 101L), (101L, 102L), (100L, 102L)))
       .toDF("src", "dst")
-    // fixed inputs + the returned state: (contribs, verts) for
-    // PageRank, (adj, initial labels / scores / vertex set) for LPA,
-    // Katz and k-core, adj alone for CC (its initial labels are lazy)
+    // each bound is the operator's fixed inputs + the returned state
     val cases = Seq[(String, Int, () => DataFrame)](
+      // contribs, verts + ranks
       ("pageRankDF", 3, () => GraphAnalytics.pageRankDF(edges, iters = 30)),
+      // adj, initial labels + labels
       ("labelPropagationDF", 3,
         () => GraphAnalytics.labelPropagationDF(edges, rounds = 20)),
+      // adj, initial scores + scores
       ("katzMicros", 3, () => GraphAnalytics.katzMicros(edges, rounds = 12)),
-      // 7 peel rounds on a 12-vertex path: each round's checkpoint keeps
-      // its plan's size estimate, squared by the next round's two joins,
-      // so a much longer peel spends minutes in planning
-      ("kCoreConverged", 3, () => GraphAnalytics.kCoreConverged(
-        (1L to 11L).map(i => (i, i + 1)).toDF("src", "dst"), k = 2)._1),
+      // adj, vertex set + survivors (24 peel rounds)
+      ("kCoreConverged", 3, () => GraphAnalytics.kCoreConverged(edges, k = 2)._1),
+      // adj + labels (the initial labels are lazy)
       ("connectedComponentsDF", 2,
-        () => GraphAnalytics.connectedComponentsDF(edges)))
+        () => GraphAnalytics.connectedComponentsDF(edges)),
+      // edge list, vertex set + tagged hub/authority state
+      ("hits", 3, () => GraphAnalytics.hits(edges, iters = 3)),
+      ("salsa", 3, () => GraphAnalytics.salsa(edges, iters = 3)),
+      // hubs, authorities, bipartite edges + state
+      ("salsaPersonalized", 4,
+        () => GraphAnalytics.salsaPersonalized(edges, lit(5L))),
+      // adj, degrees + communities
+      ("louvainSync", 3, () => GraphAnalytics.louvainSync(edges, rounds = 2)),
+      // adj, vertex set + active set, and one winner set per round (≤ 3)
+      ("maximalIndependentSet", 6,
+        () => GraphAnalytics.maximalIndependentSet(edges, rounds = 3)),
+      // adj, vertex set + scores
+      ("eigenvectorCentrality", 3,
+        () => GraphAnalytics.eigenvectorCentrality(edges, iters = 3)),
+      // vertex set + the last edge set
+      ("ccTwoStar", 2, () => GraphAnalytics.ccTwoStar(edges)))
     val over = cases.flatMap { case (name, bound, op) =>
       val pinned = pinnedBy(assert(op().collect().nonEmpty)).size
       if (pinned > bound) Some(s"$name pinned $pinned RDDs, bound $bound")
@@ -140,12 +155,37 @@ class FixpointSpec extends AnyFunSuite with SparkSpec {
     assert(over.isEmpty, over.mkString("; "))
   }
 
+  test("kernel cuts bound the state's size estimate") {
+    // each round joins the state twice, and a join multiplies its
+    // children's estimates: a cut that kept its plan's estimate would
+    // square it every round (24,428 digits after these 12 rounds)
+    val adj = (0L until 40L).flatMap(i => Seq((i, i + 1), (i + 1, i)))
+      .toDF("from", "to").localCheckpoint(true)
+    val (verts, n) = Fixpoint.observed(adj.select(col("from").as("id")).distinct(),
+      count(lit(1)))
+    val twoJoins = (s: DataFrame, _: Fixpoint.Round) =>
+      adj.join(s.select(col("id").as("from")), "from")
+        .join(s.select(col("id").as("to")), "to")
+        .groupBy(col("from").as("id")).agg(count(lit(1)).as("d"))
+        .select("id")
+    val (conv, _, r) =
+      Fixpoint.converge(verts, n, count(lit(1)), 12)(twoJoins)((_, _) => false)
+    assert(r == 12)
+    val cap = BigInt(Long.MaxValue) // spark.sql.defaultSizeInBytes, unset
+    for (state <- Seq(conv, Fixpoint.rounds(verts, 12, 1)(twoJoins))) {
+      val size = state.queryExecution.optimizedPlan.stats.sizeInBytes
+      val bounded = size <= cap
+      assert(bounded, s"estimate has ${size.toString.length} digits")
+    }
+  }
+
   test("ported operators run no more jobs than before the kernel") {
     val events = Tables.load(spark, sfDir, "events")
     val edges = graft.queries.GraphQueries.derivedEdges(events)
       .localCheckpoint(true)
-    // each operator's job count (result collected included) before the
-    // kernel, on this suite's session (local[4], 4 shuffle partitions)
+    // each operator's job count (result collected included) before it
+    // moved onto the kernel, on this suite's session (local[4], 4
+    // shuffle partitions)
     val budget = Seq[(String, Int, () => DataFrame)](
       ("pageRankDF", 35, () => GraphAnalytics.pageRankDF(edges, iters = 10)),
       ("kCore", 15, () => GraphAnalytics.kCore(edges, k = 25, rounds = 8)),
@@ -154,7 +194,15 @@ class FixpointSpec extends AnyFunSuite with SparkSpec {
       ("maximalIndependentSet", 34,
         () => GraphAnalytics.maximalIndependentSet(edges, rounds = 4)),
       ("connectedComponentsDF", 24,
-        () => GraphAnalytics.connectedComponentsDF(edges)))
+        () => GraphAnalytics.connectedComponentsDF(edges)),
+      ("hits", 64, () => GraphAnalytics.hits(edges, iters = 3)),
+      ("salsa", 62, () => GraphAnalytics.salsa(edges, iters = 3)),
+      ("salsaPersonalized", 90,
+        () => GraphAnalytics.salsaPersonalized(edges, lit(1L), iters = 3, topK = 10)),
+      // 48 to 50 jobs before the kernel, varying with AQE stage timing
+      ("louvainSync", 50, () => GraphAnalytics.louvainSync(edges, rounds = 2)),
+      ("eigenvectorCentrality", 34,
+        () => GraphAnalytics.eigenvectorCentrality(edges, iters = 3)))
     for ((name, before, op) <- budget) {
       val jobs = jobsOf(op().collect())
       assert(jobs <= before, s"$name ran $jobs jobs, $before before the kernel")
