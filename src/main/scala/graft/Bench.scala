@@ -15,8 +15,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
+    val cpus = Routing.cpus
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
@@ -67,9 +66,10 @@ object Bench {
     } catch { case _: Throwable => org.json4s.JNothing }
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_queries.json")
     val prevArtifact = parseArtifact(outPath)
-    // the committed per-query DuckDB annotation map (also drives the
-    // small-session routing below)
-    val prevDuck: Map[String, Double] = numMap(prevArtifact \ "duckdb")
+    // the committed per-query DuckDB annotation map, the previous
+    // run's routing and its SF dir (they drive the small-session
+    // routing below)
+    val prior = Routing.Prior.of(prevArtifact)
     // Regression-adjudication base: the SAME BOX's previous-round
     // artifact (BENCH_r{N}.json, highest N in cwd — the driver's own
     // prior run), NOT the committed quiet-box map: r13 logged 74
@@ -103,59 +103,14 @@ object Bench {
     // (duck ≥ 0.3 s) keep the full 32-way session: their joins fan
     // out compute that AQE's byte-based sizing cannot see. Unannotated
     // gates conservatively stay on the main session.
-    val small = spark.newSession()
-    small.conf.set("spark.sql.shuffle.partitions", "4")
-    small.conf.set("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-    small.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "4m")
-    // scheduling-bound gates keep coarse scans (the 16m main-session
-    // split sizing would triple their scan task count for nothing)
-    small.conf.set("spark.sql.files.maxPartitionBytes", "128m")
-    // AQE OFF here: on these gates every exchange materialization is
-    // its own job + a replan, and the per-job driver floor (~50-150 ms)
-    // IS the gate's cost — measured A/B at sf0.1: qX_woe 2.29→0.80 s
-    // (14→8 jobs), qX_norm_stats 1.26→0.55 s, qX_hits 3.05→1.55 s.
-    // Results are partition-count-independent by construction (every
-    // gate is DuckDB-hash-gated via Verify), and the 4-partition fixed
-    // fan-out these gates lose coalescing on is tiny by definition
-    // (< 0.25 s of oracle work). The full-parallelism session keeps
-    // AQE: its gates have real data where coalescing/skew-splitting
-    // pay. SPARK_GRAFT_SMALL_CONF=k=v;… overrides for A/B runs.
-    small.conf.set("spark.sql.adaptive.enabled", "false")
-    sys.env.get("SPARK_GRAFT_SMALL_CONF").foreach(_.split(';').foreach { kv =>
-      val Array(k, v) = kv.split("=", 2); small.conf.set(k, v)
-    })
-    // Routing guards (mirrors QTime's): the duck annotations were
-    // measured at the artifact's recorded SF dir — against any OTHER
-    // dir (a big synthetic SF sweep) they say nothing about Spark-side
-    // compute, and a 4-partition wedge stage at sf1000 is an OOM, so a
-    // dir mismatch disables routing entirely. SPARK_GRAFT_SMALL=0
-    // forces everything onto the main session for A/B runs.
-    val prevSf: Option[String] = prevArtifact \ "sf" match {
-      case org.json4s.JString(s) => Some(s)
-      case _                     => None
-    }
-    val prevRoutedSmall: Set[String] = prevArtifact \ "routed_small" match {
-      case org.json4s.JArray(xs) =>
-        xs.collect { case org.json4s.JString(s) => s }.toSet
-      case _ => Set.empty
-    }
-    val routingEnabled = prevSf.forall(_ == sfDir) &&
+    val small = Routing.smallSession(spark)
+    // Routing guards (Routing.routesSmall): a dir mismatch disables
+    // routing entirely; SPARK_GRAFT_SMALL=0 forces everything onto
+    // the main session for A/B runs.
+    val routingEnabled = prior.matches(sfDir) &&
       !sys.env.get("SPARK_GRAFT_SMALL").contains("0")
-    // Hysteresis: < 0.25 s of oracle work routes small, ≥ 0.35 s stays
-    // on the 32-way session, and the 0.25–0.35 band keeps whichever
-    // side the previous run used (annotation refreshes move straddling
-    // gates' duck times across any single cutoff run-to-run — r14 lost
-    // 4+ s to one such flap). The band falls back to the old 0.3
-    // cutoff when no routing was recorded yet.
-    def routesSmall(name: String): Boolean = routingEnabled &&
-      !Routing.ComputeDense(name) &&
-      (prevDuck.get(name) match {
-        case Some(d) if d < 0.25 => true
-        case Some(d) if d < 0.35 =>
-          if (prevRoutedSmall.nonEmpty) prevRoutedSmall.contains(name)
-          else d < 0.3
-        case _ => false
-      })
+    def routesSmall(name: String): Boolean =
+      routingEnabled && Routing.routesSmall(name, prior, sfDir)
 
     val names = SparkEntry.queries.keys.toSeq.sorted
     val routedSmall: Set[String] = names.filter(routesSmall).toSet
@@ -231,7 +186,7 @@ object Bench {
     // artifact from a ~2 KB log tail, and at 155 queries the full line is
     // ~4.5 KB — its head (and the "{"metric" anchor) is ALWAYS cut off, so
     // r7/r8 recorded parsed:null. The file is the lossless committed copy.
-    // (outPath/prevDuck/prevQueries were parsed before the warmup: the
+    // (outPath/prior/prevQueries were parsed before the warmup: the
     // duck map routes gates to the small session, and the regression
     // base is the same-box previous-round artifact.)
     // Regression tripwire: flag a query when this run is >1.5x its
@@ -309,7 +264,7 @@ object Bench {
       System.err.println(s"[bench] REGRESSION${if (rep) "" else " (not reproduced)"} " +
         s"$n: ${fmt(p)}s -> ${fmt(best)}s") }
     val nReproduced = regressions.count(_._7)
-    val duckKeep = prevDuck.view.filterKeys(SparkEntry.queries.keySet).toMap
+    val duckKeep = prior.duck.view.filterKeys(SparkEntry.queries.keySet).toMap
     val duckJson = if (duckKeep.isEmpty) ""
       else s""""duckdb":${qJson(duckKeep.toSeq.sortBy(_._1))},"""
     // persist this run's routing so the hysteresis band has a side to

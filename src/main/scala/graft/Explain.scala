@@ -37,7 +37,7 @@ object Explain {
       sfDir = names.remove(1)
     }
     if (names.isEmpty) names += "q1_agg"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = Routing.cpus
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)

@@ -9,8 +9,7 @@ import org.apache.spark.sql.SparkSession
 object QTime {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
+    val cpus = Routing.cpus
     // At the synthetic big-SF dirs (1B+ rows) 32 shuffle partitions
     // put ~35M rows in each reducer and the measurement drowns in
     // sort-spill — the opposite of how a real cluster would size the
@@ -57,44 +56,17 @@ object QTime {
       spark.sparkContext.getPersistentRDDs.values
         .foreach(_.unpersist(blocking = false))
     }
-    // mirror Bench's small-session routing (tiny-oracle gates run on a
-    // 4-shuffle-partition child session) so QTime numbers predict bench
-    // numbers; SPARK_GRAFT_SMALL=0|1 forces a side for A/B timing
-    val prevArtifact: org.json4s.JValue = try {
+    // Bench's small-session routing (Routing.routesSmall over the
+    // artifact Bench reads) so QTime numbers predict bench numbers;
+    // SPARK_GRAFT_SMALL=0|1 forces a side for A/B timing
+    val prior = Routing.Prior.of(try {
       val txt = new String(java.nio.file.Files.readAllBytes(
         java.nio.file.Paths.get(sys.env.getOrElse(
           "SPARK_GRAFT_BENCH_OUT", "bench_queries.json"))),
         java.nio.charset.StandardCharsets.UTF_8)
       org.json4s.jackson.JsonMethods.parse(txt)
-    } catch { case _: Throwable => org.json4s.JNothing }
-    val prevDuck: Map[String, Double] = prevArtifact \ "duckdb" match {
-      case org.json4s.JObject(fs) => fs.collect {
-        case (k, org.json4s.JDouble(v))  => k -> v
-        case (k, org.json4s.JInt(v))     => k -> v.toDouble
-        case (k, org.json4s.JDecimal(v)) => k -> v.toDouble
-      }.toMap
-      case _ => Map.empty
-    }
-    val prevRoutedSmall: Set[String] = prevArtifact \ "routed_small" match {
-      case org.json4s.JArray(xs) =>
-        xs.collect { case org.json4s.JString(s) => s }.toSet
-      case _ => Set.empty
-    }
-    val smallSession = spark.newSession()
-    smallSession.conf.set("spark.sql.shuffle.partitions", "4")
-    smallSession.conf.set(
-      "spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-    smallSession.conf.set(
-      "spark.sql.adaptive.advisoryPartitionSizeInBytes", "4m")
-    smallSession.conf.set("spark.sql.files.maxPartitionBytes", "128m")
-    // AQE off on the small session — mirrors Bench (per-job driver
-    // floor dominates these gates; see Bench for the A/B numbers)
-    smallSession.conf.set("spark.sql.adaptive.enabled", "false")
-    // A/B knob for small-session confs (e.g. SPARK_GRAFT_SMALL_CONF=
-    // "spark.sql.adaptive.enabled=true"): semicolon-separated k=v list
-    sys.env.get("SPARK_GRAFT_SMALL_CONF").foreach(_.split(';').foreach { kv =>
-      val Array(k, v) = kv.split("=", 2); smallSession.conf.set(k, v)
-    })
+    } catch { case _: Throwable => org.json4s.JNothing })
+    val smallSession = Routing.smallSession(spark)
     def sessionFor(name: String) = sys.env.get("SPARK_GRAFT_SMALL") match {
       case Some("1") => smallSession
       case Some("0") => spark
@@ -103,18 +75,7 @@ object QTime {
       // tiny-gate routing (a 4-partition wedge stage at sf1000 is the
       // exact OOM the 512 override exists to prevent)
       case _ if sys.env.contains("SPARK_GRAFT_SHUFFLE_PARTITIONS") => spark
-      // Bench's hysteresis, mirrored: < 0.25 small, ≥ 0.35 big, the
-      // band keeps the previous bench run's recorded side; the
-      // compute-dense opt-outs (Routing.ComputeDense) never go small
-      case _ if Routing.ComputeDense(name) => spark
-      case _ => prevDuck.get(name) match {
-        case Some(d) if d < 0.25 => smallSession
-        case Some(d) if d < 0.35 =>
-          if (prevRoutedSmall.nonEmpty) {
-            if (prevRoutedSmall.contains(name)) smallSession else spark
-          } else if (d < 0.3) smallSession else spark
-        case _ => spark
-      }
+      case _ => if (Routing.routesSmall(name, prior, sfDir)) smallSession else spark
     }
     // SPARK_GRAFT_PROFILE=1: count jobs/stages/tasks + summed task time
     // per timed pass — the tiny-gate floor is scheduler overhead, and

@@ -247,7 +247,7 @@ object Dedup {
     def hashed(df: DataFrame, id: String, out: String) = df.select(
       col(id), graft.functions.expr.TextExprs.hash_set(col("sh")).as(out))
     val out = cand
-      .repartition(graft.operators.Pymk.wedgePar(left))
+      .repartition(Wedge.wedgePar(left))
       .join(hashed(lsh, "lid", "sh1"), "lid")
       .join(hashed(rsh, "rid", "sh2"), "rid")
       .withColumn("inter", graft.functions.expr.TextExprs
@@ -390,7 +390,7 @@ object Dedup {
     // The verify is COMPUTE-dense (a near-dup-rich corpus yields ~50×
     // more candidates than survivors) — cost byte-based partition
     // sizing cannot see, so spread the pairs to cores right beneath
-    // the verify (the wedge-bag convention, Pymk.wedgePar); results
+    // the verify (the wedge-bag convention, Wedge.wedgePar); results
     // are partition-independent.
     // no broadcast hint: the corpus side is broadcast-sized only at
     // gate scale (AQE picks BHJ there by itself); at 100 TB these are
@@ -398,7 +398,7 @@ object Dedup {
     val shh = sh.select(col("id"),
       graft.functions.expr.TextExprs.hash_set(col("sh")).as("shh"))
     val withSh = cand
-      .repartition(graft.operators.Pymk.wedgePar(docs))
+      .repartition(Wedge.wedgePar(docs))
       .join(shh.select(col("id").as("id1"), col("shh").as("sh1")), "id1")
       .join(shh.select(col("id").as("id2"), col("shh").as("sh2")), "id2")
     // eager checkpoint + unpersist, the [[fuzzyJoin]] hygiene: the

@@ -21,7 +21,7 @@ import org.apache.spark.sql.functions._
   * design choice — the cost is Σ|block|², not |records|²) + a codegen
   * CASE-sum projection. Skewed blocks get the same medicine as hub
   * vertices: tighten the key or cap per-block membership
-  * ([[GraphAnalytics]]'s capNeighbors convention).
+  * (the [[Wedge.sample]] convention).
   */
 object EntityResolution {
 

@@ -62,6 +62,16 @@ import org.apache.spark.sql.functions._
   *    is the kernel state, its winners its own checkpoints).
   *    [[ccTwoStar]] stays off too: its exit probes read the old and
   *    the new edge set, so it releases each superseded set itself.
+  * Wedges: the all-pairs 2-hop scorers ([[adamicAdar]],
+  * [[linkPredictScores]], and [[Pymk.recommendAll]] with its capped and
+  * weighted twins) are one [[Wedge]] query each: the adjacency
+  * checkpointed once, a middle-keyed self-join over it or over its
+  * hash-spread hub sample, a < c halving, caller-given pair aggregates,
+  * the mirror and the direct-edge anti-join. The caller adds only its
+  * leg columns, aggregate and tail. [[c4CountSampled]] and [[kTruss]]'s
+  * out-list cap use the kernel's sampler ([[Wedge.sample]]) but keep
+  * their own enumeration: a 4-cycle diagonal needs no mirror nor
+  * anti-join, and a truss wedge is oriented, not symmetric.
   * `localCheckpoint` (not `persist`) so unreleased blocks belong to the
   * RDD and the ContextCleaner frees them when the result is dropped; on
   * a cluster this becomes checkpoint-to-table (local blocks don't
@@ -1167,7 +1177,7 @@ object GraphAnalytics {
     * Degrees re-derive per round from the shrinking edge set (support
     * is orientation-invariant, so re-orienting between rounds cannot
     * change the peel). `maxOutDegree` optionally caps each oriented
-    * out-list with the hash-spread [[capNeighbors]] sample — a
+    * out-list with the hash-spread [[Wedge.sample]] — a
     * DOCUMENTED approximation (support undercounts at capped
     * vertices); the default is exact, and after orientation the cap
     * is belt-and-braces (out-degree is already √m-bounded).
@@ -1241,18 +1251,8 @@ object GraphAnalytics {
         .as("o"))
       .select(col("o.lo").as("lo"), col("o.hi").as("hi"),
         col("o.hikey").as("hikey"))
-    val oriented = cut(if (maxOutDegree == Int.MaxValue) oriented0
-      else {
-        // hash-spread out-list cap — the capNeighbors medicine on
-        // the ORIENTED lists (deterministic, md5-portable)
-        val keyed = oriented0.withColumn("_hk",
-          Sampling.md5Bucket(concat_ws(":", col("lo"), col("hi"))))
-        TopK.grouped(keyed, Seq("lo"),
-            struct(col("_hk"), col("hi").as("_hi"),
-              col("hikey").as("_hikey")), maxOutDegree)
-          .select(col("lo"), col("best._hi").as("hi"),
-            col("best._hikey").as("hikey"))
-      })
+    // hash-spread out-list cap on the ORIENTED lists
+    val oriented = cut(Wedge.sample(oriented0, maxOutDegree, "lo", "hi"))
     val wedges = oriented.select(col("lo"), col("hi").as("b"),
         col("hikey").as("bkey"))
       .join(oriented.select(col("lo"), col("hi").as("c"),
@@ -1769,7 +1769,7 @@ object GraphAnalytics {
     * `C4 = ½·Σ_{a<c} C(codeg(a,c), 2)` over the wedge-join co-degree
     * table — one mid-keyed wedge join + one pair fold + one scalar
     * fold, the [[linkPredictionScores]] plan shape (hub wedges cost
-    * deg² per mid; cap upstream with [[capNeighbors]] when the graph
+    * deg² per mid; cap upstream with [[Wedge.sample]] when the graph
     * has unbounded hubs).
     *
     * @return one row (n_diag_pairs, c4_count).
@@ -1798,7 +1798,7 @@ object GraphAnalytics {
     * count DOWN; the fix is to keep the cap and weight what survives:
     *
     *   - each middle `z` enumerates wedges only over the md5-spread
-    *     `maxDegree`-neighbor sample S(z) of [[capNeighbors]] (so the
+    *     `maxDegree`-neighbor sample S(z) of [[Wedge.sample]] (so the
     *     wedge bag is ≤ |V|·maxDegree², flat in SF for fixed caps);
     *   - a wedge (a,z,c) with both corners in S(z) was kept with
     *     probability π_z = s(s−1)/(d(d−1)) under the hash-uniform
@@ -1843,7 +1843,7 @@ object GraphAnalytics {
       "unit must be positive and unit^2 must fit a long")
     val adj = bothWays(simpleEdges(edges), "from", "to")
       .localCheckpoint(true) // reused: degrees + the sampled wedge sides
-    val samp = capNeighbors(adj, maxDegree)
+    val samp = Wedge.sample(adj, maxDegree)
     // HT weight per middle, integer `unit`s; s(s−1)/(d(d−1)) is the
     // exact inclusion probability of any FIXED neighbor pair under a
     // uniform s-of-d sample, and the md5 rank order is hash-uniform.
@@ -1864,8 +1864,7 @@ object GraphAnalytics {
     // quiet 64 GiB box; data-sized 1024 ran clean) — no manual
     // SPARK_GRAFT_SHUFFLE_PARTITIONS override needed. Keyed by the
     // middle: the cap bounds any middle's rows, so no skew risk.
-    val wpar = Pymk.wedgeParSized(edges,
-      Pymk.estWedgeBagRows(adj, maxDegree))
+    val wpar = Wedge.wedgeParSized(adj, Wedge.estWedgeBagRows(adj, maxDegree))
     val wedges = samp.repartition(wpar, col("from"))
       .select(col("from").as("mid"), col("to").as("a"))
       .join(samp.select(col("from").as("mid"), col("to").as("c")), "mid")
@@ -2513,100 +2512,37 @@ object GraphAnalytics {
     * cannot witness a pair with a ≠ c, and are filtered before the
     * weight (ln 1 = 0 would divide by zero).
     *
-    * Scale shape, same guards as [[Pymk.recommendAll]]: one self-join
-    * keyed on the middle vertex (sparse A² — explicit round-robin
-    * repartition first, AQE sees only the small input and would
-    * under-parallelize the quadratic OUTPUT), aggregate per pair with
-    * map-side partial sums BEFORE the direct-edge anti join (removing
-    * whole keys commutes with the sum), bounded-heap per-anchor top-k
-    * instead of a window sort. Scores are rounded to 4 decimals before
-    * ranking so cross-engine float summation order can't flip ranks;
-    * ties break by candidate id.
+    * Plan: the [[Wedge]] kernel with the middle's discount joined onto
+    * its left leg, summed per pair, then a bounded-heap per-anchor
+    * top-k. `maxDegree` caps each middle's wedge sample; degrees,
+    * discounts and the anti-join stay exact. Scores are rounded to 4
+    * decimals before ranking so cross-engine float summation order
+    * can't flip ranks; ties break by candidate id.
     *
     * @return (anchor, rank, id, score), rank 1-based per anchor.
     */
-  /** Hash-spread per-middle neighbor cap for the wedge family — the
-    * hub guard. A power-law hub z emits deg(z)² wedge pairs: at 100×
-    * scale a 10⁶-degree vertex alone is ~10¹² pairs landing on one
-    * reducer key. Capping each middle's neighbor list at `maxDegree`
-    * bounds any single middle's contribution to maxDegree² while
-    * leaving the (overwhelmingly more numerous) sub-cap vertices
-    * EXACT. The sample is the [[Sampling.perKeyCap]] precedent: keep
-    * the `maxDegree` neighbors with the lowest (md5Bucket("z:n"), n) —
-    * deterministic, rerun-stable, md5-portable, and hash-spread (not
-    * top-by-id, which would bias wedges toward low ids). Bounded-heap
-    * top-k: the hub's reducer sees maxDegree rows of state, not a
-    * sorted deg(z).
-    */
-  private def capNeighbors(adj: DataFrame, maxDegree: Int): DataFrame =
-    if (maxDegree == Int.MaxValue) adj
-    else {
-      val keyed = adj.withColumn("_hk",
-        Sampling.md5Bucket(concat_ws(":", col("from"), col("to"))))
-      TopK.grouped(keyed, Seq("from"),
-          struct(col("_hk"), col("to").as("_to")), maxDegree)
-        .select(col("from"), col("best._to").as("to"))
-    }
-
   def adamicAdar(edges: DataFrame, k: Int,
                  maxDegree: Int = Int.MaxValue): DataFrame = {
-    // ONE materialization of the simple undirected view; the sizing
-    // agg then reads these blocks instead of paying its own scan +
-    // dedup of the raw edge view (r16: the old order — size first,
-    // checkpoint after — cost one full edge pass per gate)
-    val adj = Pymk.undirected(edges).distinct()
-      .localCheckpoint(true) // reused 5×: sizing, deg, both join sides, anti join
-    val wpar = Pymk.wedgeParSized(edges, Pymk.estWedgeBagRows(adj, maxDegree))
-    // wedge sides enumerate the (possibly capped) neighbor sample;
-    // degrees, discounts, and the direct-edge anti join stay EXACT on
-    // the full adjacency — the cap bounds wedge multiplicity only.
-    // The uncapped side re-spreads the checkpoint round-robin to wpar
-    // (the blocks carry the distinct agg's — possibly AQE-coalesced —
-    // partitioning; the explosive join needs the full fan-out), the
-    // capped side keeps the heap agg's keyed partitioning.
-    val wedgeAdj =
-      if (maxDegree == Int.MaxValue) adj.repartition(wpar)
-      else capNeighbors(adj, maxDegree)
-    val deg = adj.groupBy(col("from").as("z"))
-      .agg(count(lit(1)).as("deg"))
-      .filter(col("deg") >= 2)
-      // per-term INTEGER micro-units: float terms rounded to 6 decimals
-      // still summed in float order put 4 of 750 scores within an ulp
-      // of the 4-decimal rounding boundary (cross-engine mismatch,
-      // measured) — integer micros make the sum exact and
-      // order-independent; one double division at the end
-      .withColumn("w", round(lit(1e6) / log(col("deg"))).cast("long"))
-    // wedges a —z— c through every middle z, weighted by z's discount.
-    // Symmetry halving (the recommendAll trick, 2× the wedge agg): the
-    // distinct undirected adj is symmetric, so wedge (a,z,c) exists iff
-    // (c,z,a) does with the same w — score only a < c, mirror the
-    // aggregated pairs (10-20× smaller than the wedge bag) afterwards.
-    val par = wpar
-    // both wedge sides read the SAME sampled set S(z) (wedgeAdj is
-    // keyed by the middle as `from`; adj symmetry makes that the
-    // neighbor set in both roles)
-    val intoZ = wedgeAdj.select(col("from").as("z"), col("to").as("a"))
-      .join(deg.select(col("z"), col("w")), "z")
-    val outOfZ = wedgeAdj.select(col("from").as("z"), col("to").as("c"))
-    val half = intoZ.join(outOfZ, "z")
-      .filter(col("a") < col("c"))
-      // repartition on the agg key before summing: reducer-local hash
-      // maps stay cache-resident instead of every task spanning the
-      // full pair space (same rationale as recommendAll)
-      .repartition(par, col("a"), col("c"))
-      .groupBy(col("a"), col("c"))
-      .agg(round(sum(col("w")).cast("double") / lit(1e6), 4).as("score"))
-    val scored = half.select(explode(array(
-        struct(col("a"), col("c"), col("score")),
-        struct(col("c").as("a"), col("a").as("c"), col("score")))).as("p"))
-      .select(col("p.a").as("a"), col("p.c").as("c"), col("p.score").as("score"))
-    val direct = adj.select(col("from").as("a"), col("to").as("c"))
-    val cand = scored.join(direct, Seq("a", "c"), "left_anti")
+    val wedge = new Wedge(Pymk.undirected(edges).distinct(), maxDegree)
+    // per-term INTEGER micro-units: float terms rounded to 6 decimals
+    // still summed in float order put 4 of 750 scores within an ulp
+    // of the 4-decimal rounding boundary (cross-engine mismatch,
+    // measured) — integer micros make the sum exact and
+    // order-independent; one double division at the end
+    val discount = wedgeDegrees(wedge).filter(col("deg") >= 2)
+      .select(col("from"), round(lit(1e6) / log(col("deg"))).cast("long").as("w"))
+    val cand = wedge.pairs(Seq(col("l.w")),
+      Seq(round(sum(col("w")).cast("double") / lit(1e6), 4).as("score")),
+      _.join(discount, "from"))
     val sortKey = struct((-col("score")).as("_ns"), col("c").as("_c"))
     TopK.grouped(cand, Seq("a"), sortKey, k)
       .select(col("a").as("anchor"), col("rank"),
         col("best._c").as("id"), (-col("best._ns")).as("score"))
   }
+
+  /** Per-vertex degree (from, deg) of a wedge query's exact adjacency. */
+  private def wedgeDegrees(wedge: Wedge): DataFrame =
+    wedge.adj.groupBy(col("from")).agg(count(lit(1)).as("deg"))
 
   /** Link-prediction score family over the simple undirected graph —
     * the four classic local similarity indices, computed together in
@@ -2625,12 +2561,9 @@ object GraphAnalytics {
     * |V|² pairs is not a computation, it's a cross join; restricting pa
     * to the same candidates is the standard batch-PYMK practice).
     *
-    * Scale shape: one wedge self-join keyed on the middle vertex
-    * (explicit repartition first — AQE sees only the small input, not
-    * the quadratic output), `cn` and `ra` accumulated map-side in the
-    * SAME aggregate, a<c symmetry halving with the mirror applied to
-    * the aggregated pairs, degree join AFTER the direct-edge anti join
-    * (smallest frame), no window — the per-pair result needs no sort.
+    * Plan: the [[Wedge]] kernel with `cn` and `ra` in the SAME pair
+    * aggregate, then the degree joins on the anti-joined pairs (the
+    * smallest frame); no window — the per-pair result needs no sort.
     *
     * Ratios are INTEGER micro-units (the [[harmonicCentrality]]
     * convention): 4-decimal doubles land on decimal half-boundaries
@@ -2646,41 +2579,16 @@ object GraphAnalytics {
     */
   def linkPredictScores(edges: DataFrame,
                         maxDegree: Int = Int.MaxValue): DataFrame = {
-    // one materialization; sizing agg rides the checkpoint blocks —
-    // same rationale and leg spreading as adamicAdar (r16)
-    val adj = Pymk.undirected(edges).distinct()
-      .localCheckpoint(true) // reused 5x: sizing, deg, both wedge sides, anti join
-    val wpar = Pymk.wedgeParSized(edges, Pymk.estWedgeBagRows(adj, maxDegree))
-    // hub guard: wedge sides enumerate the capped neighbor sample;
-    // degrees/discounts/anti-join stay exact (see capNeighbors)
-    val wedgeAdj =
-      if (maxDegree == Int.MaxValue) adj.repartition(wpar)
-      else capNeighbors(adj, maxDegree)
-    // full degree table — ra discounts by it, jaccard/pa consume it;
-    // deg-1 middles witness no a!=c wedge, so no HAVING filter needed
-    val deg = adj.groupBy(col("from").as("z"))
-      .agg(count(lit(1)).as("deg"))
-      .withColumn("w", round(lit(1e6) / col("deg")).cast("long"))
-    val par = wpar
-    val intoZ = wedgeAdj.select(col("from").as("z"), col("to").as("a"))
-      .join(deg.select(col("z"), col("w")), "z")
-    val outOfZ = wedgeAdj.select(col("from").as("z"), col("to").as("c"))
-    val half = intoZ.join(outOfZ, "z")
-      .filter(col("a") < col("c"))
-      .repartition(par, col("a"), col("c"))
-      .groupBy(col("a"), col("c"))
-      .agg(count(lit(1)).as("cn"), sum(col("w")).as("ra_micros"))
-    val mirrored = half.select(explode(array(
-        struct(col("a"), col("c"), col("cn"), col("ra_micros")),
-        struct(col("c").as("a"), col("a").as("c"), col("cn"),
-          col("ra_micros")))).as("p"))
-      .select(col("p.a").as("a"), col("p.c").as("c"),
-        col("p.cn").as("cn"), col("p.ra_micros").as("ra_micros"))
-    val direct = adj.select(col("from").as("a"), col("to").as("c"))
-    val cand = mirrored.join(direct, Seq("a", "c"), "left_anti")
-    cand
-      .join(deg.select(col("z").as("a"), col("deg").as("deg_a")), "a")
-      .join(deg.select(col("z").as("c"), col("deg").as("deg_c")), "c")
+    val wedge = new Wedge(Pymk.undirected(edges).distinct(), maxDegree)
+    // deg-1 middles witness no a != c wedge, so no HAVING filter needed
+    val deg = wedgeDegrees(wedge)
+    val discount = deg.select(col("from"),
+      round(lit(1e6) / col("deg")).cast("long").as("w"))
+    wedge.pairs(Seq(col("l.w")),
+        Seq(count(lit(1)).as("cn"), sum(col("w")).as("ra_micros")),
+        _.join(discount, "from"))
+      .join(deg.select(col("from").as("a"), col("deg").as("deg_a")), "a")
+      .join(deg.select(col("from").as("c"), col("deg").as("deg_c")), "c")
       .select(col("a"), col("c"), col("cn"), col("ra_micros"),
         round(lit(1e6) * col("cn") /
           (col("deg_a") + col("deg_c") - col("cn")))

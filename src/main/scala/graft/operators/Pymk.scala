@@ -37,8 +37,11 @@ import graft.functions.expr.KeyWeightExpr
   *
   * Scale posture (100 TB): in the relational form ([[recommend]]) both
   * hops are equi-joins on the vertex id — shuffle-partitioned by key, no
-  * driver collection; the all-pairs variants keep that shape, which is
-  * the right plan when every anchor is served. The serving form
+  * driver collection. The all-pairs forms ([[recommendAll]], its capped
+  * and weighted twins) keep that shape, which is the right plan when
+  * every anchor is served: each is one [[Wedge]] query (the sparse A²
+  * plan, with its hub cap, stated once for them and the
+  * link-prediction scorers) plus a per-anchor top-k. The serving form
   * ([[recommendWithProps]]) is an eager point query: it collects the
   * anchor's friend bag (deg(anchor) entries), gathers the 2-hop
   * candidates in one scan with a hash probe per edge, and returns a
@@ -48,75 +51,6 @@ import graft.functions.expr.KeyWeightExpr
   * serving form a deg(anchor)-entry map.
   */
 object Pymk {
-
-  /** Partition count for explosive (quadratic-output) wedge bags. AQE
-    * sizes stages by INPUT bytes, so the wedge sites pin an explicit
-    * repartition; the right count is whichever is larger of the
-    * cluster's core count (scales with executors on a real cluster)
-    * and the session's configured `spark.sql.shuffle.partitions` (the
-    * data-sized knob — big-SF single-box runs raise it so a partition
-    * of the bag still fits in memory). Equal under the driver's
-    * local[32] / 32-partition config, so gate plans are unchanged.
-    * NOTE: the explicit repartition(n) is NOT AQE-coalesced, so a
-    * session left at the stock 200-partition default pays 200-task
-    * wedge stages on tiny inputs — perf-only, results unchanged;
-    * size the conf to the data (every harness session here does).
-    * A non-integer conf value (e.g. a platform's "auto") falls back
-    * to defaultParallelism with a warning — crashing every wedge
-    * operator over a sizing knob would be worse than a default. */
-  private[graft] def wedgePar(df: DataFrame): Int = {
-    val spark = df.sparkSession
-    val raw = spark.conf.get("spark.sql.shuffle.partitions")
-    val conf = scala.util.Try(raw.toInt).toOption match {
-      case Some(n) if n > 0 => n
-      case _ =>
-        System.err.println(s"[graft] spark.sql.shuffle.partitions='$raw' " +
-          "is not a positive integer; wedge sizing falls back to " +
-          s"defaultParallelism=${spark.sparkContext.defaultParallelism}")
-        spark.sparkContext.defaultParallelism
-    }
-    math.max(spark.sparkContext.defaultParallelism, conf)
-  }
-
-  /** Wedge-bag partition budget per task: the sf1000 c4 calibration —
-    * ~4M bag rows per task (512 partitions) OOM'd a 64 GiB/32-thread
-    * box on a quiet run, ~2M (1024 partitions) ran clean AND beat the
-    * loaded 512-partition runs. Wedge rows are two ids + agg-map
-    * state, so ~2M rows/task ≈ low hundreds of MB of execution
-    * memory. */
-  private[graft] val WedgeRowsPerTask = 2000000L
-
-  /** [[wedgePar]] sized to the DATA: an explosive operator that knows
-    * its wedge-bag row estimate (Σ min(deg, cap)² over the middle
-    * degree table — one cheap agg over a frame the operator already
-    * builds) partitions the bag so each task sees ~[[WedgeRowsPerTask]]
-    * rows, floored at the static [[wedgePar]] (small inputs keep their
-    * exact current plans — PlanSpec-pinned) and capped at 2^16. This
-    * removes the manual SPARK_GRAFT_SHUFFLE_PARTITIONS override big-SF
-    * sweeps needed: the estimate grows with the data, the conf does
-    * not. */
-  private[graft] def wedgeParSized(df: DataFrame, estBagRows: Long): Int = {
-    val static = wedgePar(df)
-    val byData = math.ceil(estBagRows.toDouble / WedgeRowsPerTask).toLong
-    math.max(static.toLong, math.min(byData, 1L << 16)).toInt
-  }
-
-  /** Σ min(deg, cap)² over an adjacency's `from` column — the wedge-bag
-    * row estimate behind [[wedgeParSized]] (exact for an uncapped
-    * middle join; an upper bound for a<c-halved ones — a ≤2× sizing
-    * overshoot is free, an undershoot is the OOM). One tiny agg + one
-    * driver scalar. Callers MUST pass the operator's CHECKPOINTED
-    * adjacency (r16): the estimate then costs one pass over already-
-    * materialized blocks instead of its own scan + dedup of the raw
-    * edge list, and the checkpoint is reused by every wedge leg — at
-    * 100 TB that is one full edge pass saved per gate, and the cross-
-    * pass memo the uncheckpointed form needed (r15, per-JVM) is gone. */
-  private[graft] def estWedgeBagRows(adj: DataFrame,
-                                     cap: Int = Int.MaxValue): Long = {
-    val d = least(count(lit(1)), lit(cap.toLong))
-    adj.groupBy(col("from")).agg((d * d).as("w2"))
-      .agg(coalesce(sum(col("w2")), lit(0L)).as("bag")).head().getLong(0)
-  }
 
   /** Undirected bag view of a directed edge list: out-edges ∪ in-edges.
     * Reference: `both('knows')` (neptune_recommend_bizcard.py:60-61);
@@ -309,85 +243,17 @@ object Pymk {
   /** All-pairs PYMK — recommendations for EVERY vertex in one pass: the
     * batch-serving shape at scale (precompute top-k for all users
     * nightly, serve point lookups), replacing per-anchor traversals
-    * with set-level joins.
+    * with set-level joins. The path count of [[recommend]] over the
+    * undirected bag, folded per (anchor, candidate) by the [[Wedge]]
+    * kernel (its plan and rationale are stated there), then a
+    * per-anchor bounded-heap top-k. Every stage is key-partitioned;
+    * nothing is collected to the driver.
     *
-    * Plan: adjacency ⋈ adjacency on the middle vertex (one shuffle
-    * keyed by vertex id — the sparse A² matmul), count per (anchor,
-    * candidate) FIRST (partial map-side agg collapses the quadratic
-    * path bag to the pair cardinality before anything else touches
-    * it), THEN anti-join out self/direct-friend pairs, then a
-    * per-anchor top-k window. Anti-join placement matters: filtering
-    * the aggregated pairs (|V|·avg-deg rows) instead of the raw path
-    * bag (Σ deg(m)² rows) is ~2× at sf0.1 and grows with skew —
-    * removing whole keys commutes with counting, so the result is
-    * identical. Every stage is key-partitioned; nothing is collected
-    * to the driver. Hub-vertex skew in the middle-vertex join is
-    * AQE-splittable (skew-join), or saltable via
-    * [[Skew.saltedInnerJoin]] when AQE is off.
+    * @return (anchor, id, score) top-`limit` per anchor by
+    *         (score desc, id asc).
     */
-  def recommendAll(edges: DataFrame, limit: Int): DataFrame = {
-    // ONE materialization of the undirected bag (r16): the sizing agg,
-    // both wedge legs and the anti-join side all read these blocks —
-    // the uncheckpointed form re-derived the upstream edge frame once
-    // per consumer (4 passes; ruinous when the caller's edge frame is
-    // itself an aggregation, e.g. the decayed-weight gates).
-    val adj = undirected(edges).localCheckpoint(true)
-    // The adjacency is small relative to its join OUTPUT (Σ deg²):
-    // AQE's partition coalescing sees only the input bytes and would
-    // shrink the stream side to ~1 partition, serializing the
-    // explosive join + partial agg. Pin full parallelism with an
-    // explicit round-robin repartition (round-robin, not keyed, so a
-    // hub vertex can't pin its whole neighborhood to one task).
-    // Sized to the estimated bag (Σ deg²) so big-SF runs need no
-    // manual partition override; small inputs keep the static count.
-    val par = wedgeParSized(edges, estWedgeBagRows(adj))
-    // Symmetry: the undirected bag contains (x,y) and (y,x) with equal
-    // multiplicity, so score(a,c) == score(c,a). Count only the a < c
-    // half of the path bag (HALF the shuffle + agg input) and mirror
-    // the counted pairs afterwards — the mirror is over the aggregated
-    // pair set, 10-20× smaller than the bag.
-    val hop2 = adj.repartition(par).as("h1")
-      .join(adj.as("h2"), col("h1.to") === col("h2.from"))
-      .select(col("h1.from").as("anchor"), col("h2.to").as("candidate"))
-      .filter(col("anchor") < col("candidate"))
-    val friendPairs = adj.select(col("from").as("anchor"), col("to").as("candidate"))
-      .distinct()
-    // Repartition the path bag on the aggregation key BEFORE counting:
-    // each reducer's hash map then holds only its own key range
-    // (cache-resident) instead of every task building a map over the
-    // full pair space — ~2× at sf0.1. Tradeoff vs map-side partial
-    // agg: this shuffles the raw bag (dup factor × more bytes); on a
-    // network-bound cluster flip to plain groupBy when the measured
-    // duplication factor is high — both shapes are one shuffle keyed
-    // on (anchor, candidate).
-    val half = hop2
-      .repartition(par, col("anchor"), col("candidate"))
-      .groupBy("anchor", "candidate")
-      .agg(count(lit(1)).as("score"))
-    // mirror via explode, NOT a self-union: a union would execute the
-    // aggregation subtree once per branch (only the exchange below it
-    // is reused); the explode emits both orientations in one pass over
-    // the counted pairs.
-    val scored = half
-      .select(explode(array(
-        struct(col("anchor"), col("candidate"), col("score")),
-        struct(col("candidate").as("anchor"), col("anchor").as("candidate"),
-          col("score")))).as("p"))
-      .select(col("p.anchor").as("anchor"), col("p.candidate").as("candidate"),
-        col("p.score").as("score"))
-      // no broadcast hint: friendPairs is the full edge list — tiny at
-      // test SF (AQE demotes to broadcast at runtime), far too big to
-      // pin as broadcast at 100 TB.
-      .join(friendPairs, Seq("anchor", "candidate"), "left_anti")
-    // top-k per anchor as a bounded-heap aggregate (TopK.grouped), not
-    // a window sort: O(limit) state per anchor, map-side partial heaps,
-    // and the final exchange carries ≤ limit·mappers rows per anchor —
-    // at 100 TB the window form would sort the full scored pair set.
-    // (score desc, candidate asc) via the negation idiom.
-    TopK.grouped(scored, Seq("anchor"),
-        struct((-col("score")).as("ns"), col("candidate").as("c")), limit)
-      .select(col("anchor"), col("best.c").as("id"), (-col("best.ns")).as("score"))
-  }
+  def recommendAll(edges: DataFrame, limit: Int): DataFrame =
+    recommendAllCapped(edges, limit, Int.MaxValue)
 
   /** [[recommendAll]]'s documented SCALE TWIN — the hub-capped form.
     *
@@ -397,170 +263,69 @@ object Pymk {
     * hubs) that is quadratic in scale factor. Measured: sf0.1 → sf1
     * (10× data) took qD1_pymk_all from 1.3 s to 238 s — correct, but
     * not a plan to run at 100 TB. This twin caps each MIDDLE vertex's
-    * neighbor list at `maxDegree` with the hash-spread deterministic
-    * sample of [[GraphAnalytics]]' wedge family (md5-portable,
-    * rerun-stable, oracle-replayable), so the wedge bag is bounded by
-    * |V|·maxDegree² regardless of hub growth; sub-cap vertices — the
-    * overwhelming majority on a power-law graph — contribute EXACTLY.
-    * Anti-join and output ranks stay exact over the full edge set.
-    * Cap ≥ max degree ⇒ identical to [[recommendAll]] (the cap≡exact
-    * contract, pinned in PymkPropertySpec).
-    *
-    * The middle-centric cap keeps score(a,c) == score(c,a) (both legs
-    * draw from the same sample(z)), so the a<c halving + mirror of the
-    * exact plan stays valid — an anchor-side cap would break symmetry.
+    * neighbor list at `maxDegree` with the [[Wedge.sample]] rule, so
+    * the wedge bag is bounded by |V|·maxDegree² regardless of hub
+    * growth; sub-cap vertices — the overwhelming majority on a
+    * power-law graph — contribute EXACTLY. Anti-join and output ranks
+    * stay exact over the full edge set. Cap ≥ max degree ⇒ identical
+    * to [[recommendAll]] (the cap≡exact contract, pinned in
+    * PymkPropertySpec).
     *
     * @return (anchor, id, score) top-`limit` per anchor by
     *         (score desc, id asc).
     */
   def recommendAllCapped(edges: DataFrame, limit: Int,
-                         maxDegree: Int): DataFrame = {
-    // one materialization feeds the sizing agg, the sampler and the
-    // anti-join side (see recommendAll)
-    val adjFull = undirected(edges).localCheckpoint(true)
-    val par = wedgeParSized(edges, estWedgeBagRows(adjFull, maxDegree))
-    // hash-spread per-middle sample: keep the maxDegree rows with the
-    // lowest (md5Bucket("z:n"), n) — bounded-heap, never a window sort
-    val keyed = adjFull.withColumn("_hk",
-      Sampling.md5Bucket(concat_ws(":", col("from"), col("to"))))
-    val samp = TopK.grouped(keyed, Seq("from"),
-        struct(col("_hk"), col("to").as("_to")), maxDegree)
-      .select(col("from"), col("best._to").as("to"))
-      .localCheckpoint(true) // both wedge legs
-    val hop2 = samp.repartition(par).as("h1")
-      .join(samp.as("h2"), col("h1.from") === col("h2.from"))
-      .select(col("h1.to").as("anchor"), col("h2.to").as("candidate"))
-      .filter(col("anchor") < col("candidate"))
-    val friendPairs = adjFull
-      .select(col("from").as("anchor"), col("to").as("candidate"))
-      .distinct()
-    val half = hop2
-      .repartition(par, col("anchor"), col("candidate"))
-      .groupBy("anchor", "candidate")
-      .agg(count(lit(1)).as("score"))
-    val scored = half
-      .select(explode(array(
-        struct(col("anchor"), col("candidate"), col("score")),
-        struct(col("candidate").as("anchor"), col("anchor").as("candidate"),
-          col("score")))).as("p"))
-      .select(col("p.anchor").as("anchor"), col("p.candidate").as("candidate"),
-        col("p.score").as("score"))
-      .join(friendPairs, Seq("anchor", "candidate"), "left_anti")
-    TopK.grouped(scored, Seq("anchor"),
-        struct((-col("score")).as("ns"), col("candidate").as("c")), limit)
-      .select(col("anchor"), col("best.c").as("id"), (-col("best.ns")).as("score"))
-  }
+                         maxDegree: Int): DataFrame =
+    topPerAnchor(new Wedge(undirected(edges), maxDegree)
+      .pairs(Nil, Seq(count(lit(1)).as("score"))), "score", limit)
 
   /** Weighted PYMK over a weighted edge frame (src, dst, w_micros) —
     * the recency-aware flagship: path score is
     * `Σ_paths ⌊w₁·w₂/1e6⌋` over 2-hop wedges, so feeding
     * [[Features.decayedCounts]] weights makes yesterday's mutual
-    * friend outrank last month's. Same plan skeleton as
-    * [[recommendAll]] (wedge join, anti join on direct edges,
-    * bounded-heap top-k); per-path flooring keeps every fold an exact
-    * integer (order-independent, oracle-replayable), with bias ≤
-    * #paths micro-units, identical in the oracle by construction.
+    * friend outrank last month's. [[recommendAll]] with the edge weight
+    * as a leg column (w₁·w₂ commutes, so the kernel's a < c halving
+    * holds); per-path flooring keeps every fold an exact integer
+    * (order-independent, oracle-replayable), with bias ≤ #paths
+    * micro-units, identical in the oracle by construction.
     *
     * @return (anchor, id, score_micros) top-`limit` per anchor by
     *         (score desc, id asc).
     */
-  def recommendAllWeighted(wEdges: DataFrame, limit: Int): DataFrame = {
-    // one materialization of the weighted bag: the caller's wEdges is
-    // typically itself an aggregation (decayed counts), and the
-    // uncheckpointed form re-ran it once per consumer — sizing agg,
-    // two wedge legs, anti-join side (measured 24 s → ~6 s of task
-    // time on the decayed gate at sf0.1)
-    val adj = wEdges.select(col("src").as("from"), col("dst").as("to"),
-        col("w_micros").as("w"))
-      .unionAll(wEdges.select(col("dst").as("from"), col("src").as("to"),
-        col("w_micros").as("w")))
-      .localCheckpoint(true)
-    val par = wedgeParSized(wEdges, estWedgeBagRows(adj))
-    // path weights are symmetric (w₁·w₂ commutes), so — like the
-    // unweighted flagship — fold only the anchor < candidate half of
-    // the wedge bag and mirror the AGGREGATED pairs (half the shuffle)
-    val hop2 = adj.repartition(par).as("h1")
-      .join(adj.as("h2"), col("h1.to") === col("h2.from"))
-      .filter(col("h1.from") < col("h2.to"))
-      .select(col("h1.from").as("anchor"), col("h2.to").as("candidate"),
-        floor(col("h1.w") * col("h2.w") / lit(1000000L)).cast("long")
-          .as("pw"))
-    val friendPairs = adj
-      .select(col("from").as("anchor"), col("to").as("candidate"))
-      .distinct()
-    val scored = hop2
-      .repartition(par, col("anchor"), col("candidate"))
-      .groupBy("anchor", "candidate")
-      .agg(sum(col("pw")).as("score_micros"))
-      .select(explode(array(
-        struct(col("anchor"), col("candidate"), col("score_micros")),
-        struct(col("candidate").as("anchor"), col("anchor").as("candidate"),
-          col("score_micros")))).as("p"))
-      .select(col("p.anchor").as("anchor"),
-        col("p.candidate").as("candidate"),
-        col("p.score_micros").as("score_micros"))
-      .join(friendPairs, Seq("anchor", "candidate"), "left_anti")
-    TopK.grouped(scored, Seq("anchor"),
-        struct((-col("score_micros")).as("ns"), col("candidate").as("c")),
-        limit)
-      .select(col("anchor"), col("best.c").as("id"),
-        (-col("best.ns")).as("score_micros"))
-      .orderBy(col("anchor"), desc("score_micros"), col("id"))
-  }
+  def recommendAllWeighted(wEdges: DataFrame, limit: Int): DataFrame =
+    recommendAllWeightedCapped(wEdges, limit, Int.MaxValue)
 
   /** [[recommendAllWeighted]]'s hub-capped scale twin — the
     * [[recommendAllCapped]] medicine on the weighted wedge bag (the
     * exact form timed out entirely at sf1 on the fixed-hub graph, the
     * same Θ(Σ deg(z)²) blowup as the unweighted flagship). Each
-    * middle's weighted neighbor list is sampled to `maxDegree` rows by
-    * the md5-spread rule; both wedge legs draw from the same sample, so
-    * the w₁·w₂ path score stays symmetric and the a<c halving + mirror
-    * stays valid; the direct-edge anti-join is exact over the full
-    * edge set. Cap ≥ max degree ≡ exact (PymkPropertySpec).
+    * middle's weighted neighbor list is sampled to `maxDegree` rows;
+    * the direct-edge anti-join is exact over the full edge set.
+    * Cap ≥ max degree ≡ exact (PymkPropertySpec).
     */
   def recommendAllWeightedCapped(wEdges: DataFrame, limit: Int,
                                  maxDegree: Int): DataFrame = {
-    // one materialization — see recommendAllWeighted
-    val adjFull = wEdges.select(col("src").as("from"), col("dst").as("to"),
+    val adj = wEdges.select(col("src").as("from"), col("dst").as("to"),
         col("w_micros").as("w"))
       .unionAll(wEdges.select(col("dst").as("from"), col("src").as("to"),
         col("w_micros").as("w")))
-      .localCheckpoint(true)
-    val par = wedgeParSized(wEdges, estWedgeBagRows(adjFull, maxDegree))
-    val keyed = adjFull.withColumn("_hk",
-      Sampling.md5Bucket(concat_ws(":", col("from"), col("to"))))
-    val samp = TopK.grouped(keyed, Seq("from"),
-        struct(col("_hk"), col("to").as("_to"), col("w").as("_w")), maxDegree)
-      .select(col("from"), col("best._to").as("to"), col("best._w").as("w"))
-      .localCheckpoint(true) // both wedge legs
-    val hop2 = samp.repartition(par).as("h1")
-      .join(samp.as("h2"), col("h1.from") === col("h2.from"))
-      .filter(col("h1.to") < col("h2.to"))
-      .select(col("h1.to").as("anchor"), col("h2.to").as("candidate"),
-        floor(col("h1.w") * col("h2.w") / lit(1000000L)).cast("long")
-          .as("pw"))
-    val friendPairs = adjFull
-      .select(col("from").as("anchor"), col("to").as("candidate"))
-      .distinct()
-    val scored = hop2
-      .repartition(par, col("anchor"), col("candidate"))
-      .groupBy("anchor", "candidate")
-      .agg(sum(col("pw")).as("score_micros"))
-      .select(explode(array(
-        struct(col("anchor"), col("candidate"), col("score_micros")),
-        struct(col("candidate").as("anchor"), col("anchor").as("candidate"),
-          col("score_micros")))).as("p"))
-      .select(col("p.anchor").as("anchor"),
-        col("p.candidate").as("candidate"),
-        col("p.score_micros").as("score_micros"))
-      .join(friendPairs, Seq("anchor", "candidate"), "left_anti")
-    TopK.grouped(scored, Seq("anchor"),
-        struct((-col("score_micros")).as("ns"), col("candidate").as("c")),
-        limit)
-      .select(col("anchor"), col("best.c").as("id"),
-        (-col("best.ns")).as("score_micros"))
+    val pathW = floor(col("l.w") * col("r.w") / lit(1000000L)).cast("long")
+    topPerAnchor(new Wedge(adj, maxDegree)
+        .pairs(Seq(pathW.as("pw")), Seq(sum(col("pw")).as("score_micros"))),
+        "score_micros", limit)
       .orderBy(col("anchor"), desc("score_micros"), col("id"))
   }
+
+  /** Top-`limit` candidates per anchor of the kernel's (a, c, `score`)
+    * pairs by (score desc, id asc), as (anchor, id, `score`): a
+    * bounded-heap aggregate (O(limit) state per anchor, map-side
+    * partial heaps) via the negation idiom, never a window sort. */
+  private def topPerAnchor(pairs: DataFrame, score: String,
+                           limit: Int): DataFrame =
+    TopK.grouped(pairs, Seq("a"),
+        struct((-col(score)).as("ns"), col("c").as("c")), limit)
+      .select(col("a").as("anchor"), col("best.c").as("id"),
+        (-col("best.ns")).as(score))
 
   /** Edge embeddedness — the Jaccard of the endpoints' neighborhoods,
     * the TIE-STRENGTH metric complementing [[GraphAnalytics.weakTies]]

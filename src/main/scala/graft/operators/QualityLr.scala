@@ -101,7 +101,7 @@ object QualityLr {
     val nObs = org.apache.spark.sql.Observation()
     val feats = labeled
       .select(col(textCol), col(labelCol))
-      .repartition(Pymk.wedgePar(labeled))
+      .repartition(Wedge.wedgePar(labeled))
       .select(
         graft.functions.expr.TextExprs
           .hashed_ngram_features(col(textCol), buckets).as("fs"),

@@ -1874,7 +1874,7 @@ object GraphQueries {
          |  CAST(sum(n * (n - 1)) / 4 AS BIGINT) AS c4_count
          |FROM codeg""".stripMargin,
     // Full replay of the HT-weighted wedge-sampled estimator: md5 rank
-    // sample per middle (capNeighbors' key), integer-micro HT weights
+    // sample per middle (Wedge.sample's key), integer-micro HT weights
     // d(d−1)·10⁶ div s(s−1), per-diagonal S²−Q in HUGEINT (the Spark
     // side's decimal(38,0)), global div 10¹² then div 4.
     "qX_c4_sampled" ->
@@ -2031,7 +2031,7 @@ object GraphQueries {
          |ORDER BY anchor, rank""".stripMargin,
     // rn<=16 md5-rank replay of the capped wedge sides; wz (discounts)
     // and the anti join read the FULL adjacency, exactly like the
-    // operator (capNeighbors bounds wedge multiplicity only).
+    // operator (Wedge.sample bounds wedge multiplicity only).
     "qX_adamic_adar_capped" ->
       s"""WITH edges AS ($EdgesSql),
          |adj AS MATERIALIZED (
@@ -2123,7 +2123,7 @@ object GraphQueries {
     // Replays the hub cap: per middle keep the 16 neighbors with the
     // lowest (md5_32("z:n"), n), enumerate wedges over the sample only,
     // degrees/discounts/anti-join on the full adjacency — exactly
-    // GraphAnalytics.capNeighbors + linkPredictScores(maxDegree = 16).
+    // Wedge.sample + linkPredictScores(maxDegree = 16).
     "qX_linkpred_capped" ->
       s"""WITH edges AS ($EdgesSql),
          |adj AS (
