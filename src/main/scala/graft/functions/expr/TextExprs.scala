@@ -1064,16 +1064,11 @@ object TextExprs {
     toColumn(SortedIntersectCountExpr(toExpr(a), toExpr(b)))
   def top_ngram_frac(c: Column, n: Int): Column = toColumn(TopNgramFracExpr(toExpr(c), n))
 
-  /** Register as SQL functions on a session. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("token_count",
-      es => TokenCountExpr(es.head), "scala_udf")
-    reg.createOrReplaceTempFunction("subword_count",
-      es => SubwordCountExpr(es.head), "scala_udf")
-    reg.createOrReplaceTempFunction("rolling_hash",
-      es => RollingHashExpr(es.head), "scala_udf")
-    reg.createOrReplaceTempFunction("simhash64",
-      es => SimHash64Expr(es.head), "scala_udf")
-  }
+  /** Register as SQL functions on a session: the
+    * [[graft.GraftExtensions.functions]] list. */
+  def register(spark: org.apache.spark.sql.SparkSession): Unit =
+    graft.GraftExtensions.functions.foreach { case (name, _, builder) =>
+      spark.sessionState.functionRegistry
+        .createOrReplaceTempFunction(name, builder, "scala_udf")
+    }
 }

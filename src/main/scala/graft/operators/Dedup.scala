@@ -20,6 +20,10 @@ import graft.functions.GraftFunctions.tokenize
   *  - SimHash reduces a document to one 64-bit word; near-dup search
   *    becomes a band-key self-join on 16-bit chunks (Hamming ≤ 3 ⇒
   *    at least one of 4 chunks equal — pigeonhole).
+  *
+  * Every pair miner here is a [[Blocks]] plan: block keys, the
+  * same-key pair join, a per-pair fold and, for the scale forms, the
+  * hashed-set verify; the plan's rationale is stated there once.
   */
 object Dedup {
 
@@ -54,45 +58,52 @@ object Dedup {
     )
   }
 
-  /** All-pairs n-gram Jaccard via a shingle-postings self-join:
-    * explode distinct shingles → join on shingle (id1 < id2) → count
-    * intersection → |A∪B| = |A|+|B|−|A∩B|. Exact but quadratic in
+  /** Docs with ≥ n tokens as (id, sh, n_sh): the distinct shingle set
+    * and its size. Docs below n tokens have no n-grams and are left
+    * out, on engine and oracle sides alike: `shingles` falls back to a
+    * whole-text shingle (and [""] for empty text) below n tokens, which
+    * would otherwise diverge from a SQL sliding window (whose
+    * out-of-range slots go NULL and drop the doc) and give every empty
+    * doc the same set. */
+  private def shingleSets(docs: DataFrame, idCol: String, textCol: String,
+                          n: Int, id: String = "id"): DataFrame =
+    docs.filter(size(tokenize(col(textCol))) >= n)
+      .select(col(idCol).as(id), shingles(col(textCol), n).as("sh"))
+      .withColumn("n_sh", size(col("sh")))
+
+  /** The exact shingle-overlap core of [[ngramJaccardPairs]] and
+    * [[containmentPairs]]: the shared-shingle self-join ([[Blocks.pairs]]),
+    * `count` per pair for |A∩B|, then `ratio(|A∩B|, |A|, |B|)` rounded
+    * to 4 decimals and kept at ≥ `min`. */
+  private def overlapPairs(docs: DataFrame, textCol: String, idCol: String,
+                           n: Int, score: String, min: Double)
+                          (ratio: (Column, Column, Column) => Column): DataFrame = {
+    val posts = shingleSets(docs, idCol, textCol, n)
+      .select(col("id"), col("n_sh"), explode(col("sh")).as("s"))
+    Blocks.pairs(posts, Seq("s"), "id", Seq("n_sh"))
+      .groupBy("a_id", "b_id", "a_n_sh", "b_n_sh")
+      .agg(count(lit(1)).as("inter"))
+      .select(col("a_id").as("id1"), col("b_id").as("id2"), round(ratio(
+        col("inter"), col("a_n_sh"), col("b_n_sh")), 4).as(score))
+      .filter(col(score) >= min)
+  }
+
+  /** All-pairs n-gram Jaccard `|A∩B| / |A∪B|` over distinct shingles,
+    * from the shingle-postings self-join. Exact but quadratic in
     * co-occurring docs — use as ground truth / verifier; LSH is the
     * scale path.
     */
   def ngramJaccardPairs(docs: DataFrame, textCol: String, idCol: String,
-                        n: Int, minJaccard: Double): DataFrame = {
-    // docs with < n tokens have no n-grams: exclude them up front, on
-    // BOTH engine and oracle sides — the [""] zero-token sentinel and
-    // the <n-token full-token fallback of `shingles` would otherwise
-    // diverge from a SQL sliding window (whose out-of-range slots go
-    // NULL and drop the doc)
-    val sh = docs
-      .filter(size(tokenize(col(textCol))) >= n)
-      .select(col(idCol).as("id"), shingles(col(textCol), n).as("sh"))
-      .withColumn("n_sh", size(col("sh")))
-    val posts = sh.select(col("id"), col("n_sh"), explode(col("sh")).as("s"))
-    val a = posts.select(col("id").as("id1"), col("n_sh").as("n1"), col("s"))
-    val b = posts.select(col("id").as("id2"), col("n_sh").as("n2"), col("s"))
-    a.join(b, Seq("s"))
-      .filter(col("id1") < col("id2"))
-      .groupBy("id1", "id2", "n1", "n2")
-      .agg(count(lit(1)).as("inter"))
-      .withColumn("jaccard",
-        round(col("inter").cast("double") /
-          (col("n1") + col("n2") - col("inter")), 4))
-      .filter(col("jaccard") >= minJaccard)
-      .select("id1", "id2", "jaccard")
-  }
+                        n: Int, minJaccard: Double): DataFrame =
+    overlapPairs(docs, textCol, idCol, n, "jaccard", minJaccard)(Blocks.jaccard)
 
   /** Asymmetric shingle containment (Broder 1997) — the near-dup
     * signal Jaccard structurally misses: a short document quoted
     * wholesale inside a long one has tiny Jaccard (the union is
     * dominated by the long doc) but containment
-    * `|A∩B| / min(|A|,|B|)` ≈ 1. Same shared-shingle equi-join and
-    * per-pair fold as [[ngramJaccardPairs]]; the score divides by
-    * the SMALLER shingle set, quantized to 4 decimals before the
-    * threshold (cross-engine replay).
+    * `|A∩B| / min(|A|,|B|)` ≈ 1. [[ngramJaccardPairs]]' plan with the
+    * SMALLER shingle set as the divisor, quantized to 4 decimals
+    * before the threshold (cross-engine replay).
     *
     * Scale note: the shared-shingle self-join is the ORACLE form — a
     * hot (stopword) shingle with document frequency f contributes f²
@@ -102,23 +113,9 @@ object Dedup {
     * @return (id1, id2, containment) for pairs ≥ `minContainment`.
     */
   def containmentPairs(docs: DataFrame, textCol: String, idCol: String,
-                       n: Int, minContainment: Double): DataFrame = {
-    val sh = docs
-      .filter(size(tokenize(col(textCol))) >= n)
-      .select(col(idCol).as("id"), shingles(col(textCol), n).as("sh"))
-      .withColumn("n_sh", size(col("sh")))
-    val posts = sh.select(col("id"), col("n_sh"), explode(col("sh")).as("s"))
-    val a = posts.select(col("id").as("id1"), col("n_sh").as("n1"), col("s"))
-    val b = posts.select(col("id").as("id2"), col("n_sh").as("n2"), col("s"))
-    a.join(b, Seq("s"))
-      .filter(col("id1") < col("id2"))
-      .groupBy("id1", "id2", "n1", "n2")
-      .agg(count(lit(1)).as("inter"))
-      .withColumn("containment",
-        round(col("inter").cast("double") / least(col("n1"), col("n2")), 4))
-      .filter(col("containment") >= minContainment)
-      .select("id1", "id2", "containment")
-  }
+                       n: Int, minContainment: Double): DataFrame =
+    overlapPairs(docs, textCol, idCol, n, "containment", minContainment)(
+      Blocks.containment)
 
   /** [[containmentPairs]]'s scale twin — df-capped candidates + exact
     * verify (the X2→X3 exact→banded pattern): candidate pairs come
@@ -127,48 +124,30 @@ object Dedup {
     * carries no pair-specific signal but contributes df² candidate
     * pairs; capping bounds the join at cap·Σdf, linear in corpus
     * size), then each candidate pair's containment is verified
-    * EXACTLY over the full shingle sets, so every emitted score is
-    * identical to [[containmentPairs]]'s (banded ⊆ exact, pinned by
-    * spec).
+    * EXACTLY over the full shingle sets ([[Blocks.verify]]), so every
+    * emitted score is identical to [[containmentPairs]]'s
+    * (banded ⊆ exact, pinned by spec).
     *
     * Recall contract: a pair is recovered iff it shares ≥1 shingle
     * with df ≤ maxDf — real quote-inclusion pairs share runs of
     * content shingles, which are rare by construction (the planted
     * qX_dedup_containment_recall gate pins this at SF data).
-    *
-    * 100 TB shape: posting df fold → capped equi-join (bounded) →
-    * distinct pair set → two id-keyed joins against the checkpointed
-    * shingle table for the exact intersection — every stage keyed,
-    * no global state.
     */
   def containmentPairsBanded(docs: DataFrame, textCol: String,
                              idCol: String, n: Int,
                              minContainment: Double,
                              maxDf: Int = 64): DataFrame = {
-    val sh = docs
-      .filter(size(tokenize(col(textCol))) >= n)
-      .select(col(idCol).as("id"), shingles(col(textCol), n).as("sh"))
-      .withColumn("n_sh", size(col("sh")))
-      .localCheckpoint(true) // feeds candidates AND the exact verify
+    // an eager checkpoint, not a persist: the planner sees its real
+    // size (small corpora plan broadcasts), and the result stays lazy,
+    // so a caller's id filter still prunes the candidates
+    val sh = shingleSets(docs, idCol, textCol, n).localCheckpoint(true)
     val posts = sh.select(col("id"), explode(col("sh")).as("s"))
     val rare = posts.groupBy("s").agg(count(lit(1)).as("df"))
       .filter(col("df") <= maxDf)
-    val capped = posts.join(rare.select("s"), Seq("s"))
-    val cand = capped.select(col("id").as("id1"), col("s"))
-      .join(capped.select(col("id").as("id2"), col("s")), Seq("s"))
-      .filter(col("id1") < col("id2"))
-      .select("id1", "id2").distinct()
-    val inter = cand
-      .join(posts.select(col("id").as("id1"), col("s")), Seq("id1"))
-      .join(posts.select(col("id").as("id2"), col("s")), Seq("id2", "s"))
-      .groupBy("id1", "id2").agg(count(lit(1)).as("inter"))
-    inter
-      .join(sh.select(col("id").as("id1"), col("n_sh").as("n1")), Seq("id1"))
-      .join(sh.select(col("id").as("id2"), col("n_sh").as("n2")), Seq("id2"))
-      .withColumn("containment",
-        round(col("inter").cast("double") / least(col("n1"), col("n2")), 4))
-      .filter(col("containment") >= minContainment)
-      .select("id1", "id2", "containment")
+    val cand = Blocks.pairs(posts.join(rare.select("s"), Seq("s")), Seq("s"), "id")
+      .select(col("a_id").as("id1"), col("b_id").as("id2")).distinct()
+    Blocks.verify(cand, sh, sh, "containment", minContainment)(
+      Blocks.containment)
   }
 
   /** Cross-corpus fuzzy join, EXACT form — record linkage between TWO
@@ -184,82 +163,41 @@ object Dedup {
   def fuzzyJoinExact(left: DataFrame, leftId: String, leftText: String,
                      right: DataFrame, rightId: String, rightText: String,
                      n: Int, minJaccard: Double): DataFrame = {
-    val l = left.filter(size(tokenize(col(leftText))) >= n)
-      .select(col(leftId).as("lid"), shingles(col(leftText), n).as("sh"))
-      .select(col("lid"), size(col("sh")).as("n1"), explode(col("sh")).as("s"))
-    val r = right.filter(size(tokenize(col(rightText))) >= n)
-      .select(col(rightId).as("rid"), shingles(col(rightText), n).as("sh"))
-      .select(col("rid"), size(col("sh")).as("n2"), explode(col("sh")).as("s"))
-    l.join(r, Seq("s"))
+    def side(df: DataFrame, id: String, text: String, out: String, sz: String) =
+      shingleSets(df, id, text, n, out)
+        .select(col(out), col("n_sh").as(sz), explode(col("sh")).as("s"))
+    side(left, leftId, leftText, "lid", "n1")
+      .join(side(right, rightId, rightText, "rid", "n2"), Seq("s"))
       .groupBy("lid", "rid", "n1", "n2")
       .agg(count(lit(1)).as("inter"))
-      .withColumn("jaccard",
-        round(col("inter").cast("double") /
-          (col("n1") + col("n2") - col("inter")), 4))
+      .select(col("lid"), col("rid"), round(Blocks.jaccard(
+        col("inter"), col("n1"), col("n2")), 4).as("jaccard"))
       .filter(col("jaccard") >= minJaccard)
-      .select("lid", "rid", "jaccard")
   }
 
   /** Cross-corpus fuzzy join, LSH-BLOCKED scale form: both sides
-    * MinHash-sign (native codegen signature), band into (band, key)
-    * buckets, equi-join the buckets (candidates = same-bucket
-    * cross-side pairs only), then exact-Jaccard verify the candidates
-    * — [[minhashLshPairs]]' plan with a left/right split instead of
-    * the id1 < id2 self-join. At 100 TB each side shuffles its
-    * banded postings once; no posting self-explosion, no cross
-    * product. Deterministic (hash-derived permutations), so recall
-    * against planted overlaps is a fixed, gateable number.
+    * MinHash-sign, band into (band, key) buckets, equi-join the
+    * buckets (candidates = same-bucket cross-side pairs only), then
+    * exact-Jaccard verify the candidates — [[minhashLshPairs]]' plan
+    * with a left/right split instead of the id1 < id2 self-join. At
+    * 100 TB each side shuffles its banded postings once; no posting
+    * self-explosion, no cross product. Deterministic (hash-derived
+    * permutations), so recall against planted overlaps is a fixed,
+    * gateable number. The verify checkpoints eagerly and releases
+    * both persisted shingle frames: the cross-corpus form is the "many
+    * corpus pairs in one session" shape.
     */
   def fuzzyJoin(left: DataFrame, leftId: String, leftText: String,
                 right: DataFrame, rightId: String, rightText: String,
                 n: Int = 3, k: Int = 64, bands: Int = 16,
                 minJaccard: Double = 0.5): DataFrame = {
-    def side(df: DataFrame, id: String, text: String, out: String) = {
-      // same sub-n-token exclusion as the exact form — `shingles`
-      // falls back to a whole-text shingle (and [""] for empty text)
-      // below n tokens, which would otherwise let short/empty docs
-      // into the LSH path the oracle excludes AND give every empty
-      // doc the same signature (an N×M candidate clique)
-      val sh = df.filter(size(tokenize(col(text))) >= n)
-        .select(col(id).as(out), shingles(col(text), n).as("sh"))
-        .persist()
-      val posts = sh
-        .select(col(out),
-          explode(lshBands(
-            graft.functions.expr.TextExprs.minhash_sig(col("sh"), k),
-            k, bands)).as("bk"))
-        .select(col(out), col("bk.band").as("band"), col("bk.key").as("key"))
-      (sh, posts)
-    }
-    val (lsh, lposts) = side(left, leftId, leftText, "lid")
-    val (rsh, rposts) = side(right, rightId, rightText, "rid")
-    val cand = lposts.join(rposts, Seq("band", "key"))
+    val lsh = shingleSets(left, leftId, leftText, n, "lid").persist()
+    val rsh = shingleSets(right, rightId, rightText, n, "rid").persist()
+    val cand = lshPosts(lsh, "lid", k, bands)
+      .join(lshPosts(rsh, "rid", k, bands), Seq("band", "key"))
       .select(col("lid"), col("rid")).distinct()
-    // eager localCheckpoint so both persisted shingle frames can be
-    // released before returning — unlike [[minhashLshPairs]] (whose
-    // persist lives only for the caller's single materialization),
-    // the cross-corpus form is the "many corpus pairs in one session"
-    // shape, where leaked cache blocks accumulate
-    // hashed-set verify, pairs spread BEFORE hydration — the
-    // minhashLshPairs shape: the pair exchange moves (lid, rid) only,
-    // the per-pair intersect is a primitive merge over sorted md5-64
-    // sets (HashSetExpr: set arithmetic identical to the strings)
-    def hashed(df: DataFrame, id: String, out: String) = df.select(
-      col(id), graft.functions.expr.TextExprs.hash_set(col("sh")).as(out))
-    val out = cand
-      .repartition(Wedge.wedgePar(left))
-      .join(hashed(lsh, "lid", "sh1"), "lid")
-      .join(hashed(rsh, "rid", "sh2"), "rid")
-      .withColumn("inter", graft.functions.expr.TextExprs
-        .sorted_intersect_count(col("sh1"), col("sh2")))
-      .withColumn("jaccard", round(col("inter").cast("double") /
-        (size(col("sh1")) + size(col("sh2")) - col("inter")), 4))
-      .filter(col("jaccard") >= minJaccard)
-      .select("lid", "rid", "jaccard")
-      .localCheckpoint(true)
-    lsh.unpersist()
-    rsh.unpersist()
-    out
+    Blocks.released(lsh, rsh)(
+      Blocks.verify(cand, lsh, rsh, "jaccard", minJaccard)(Blocks.jaccard))
   }
 
   /** Near-duplicate CLUSTERS from a pair list — the step every dedup
@@ -347,76 +285,35 @@ object Dedup {
         Sampling.md5Bucket(concat_ws("_", slice(sig, b * r + 1, lit(r)))).as("key")))
   }
 
+  /** (id, band, key) LSH postings of a (id, sh) shingle-set frame: the
+    * native codegen signature (MinHashSigExpr — the HOF formulation
+    * `minhashSignature(shingleHashes(sh), k)` is its executable spec),
+    * banded by [[lshBands]]. */
+  private def lshPosts(sh: DataFrame, id: String, k: Int, bands: Int): DataFrame =
+    sh.select(col(id), graft.functions.expr.TextExprs.minhash_sig(col("sh"), k).as("sig"))
+      .select(col(id), inline(lshBands(col("sig"), k, bands)))
+
   /** MinHash+LSH near-duplicate pairs, exact-verified.
     *
-    * Pipeline: shingle → signature (narrow) → band postings
-    * (explode, shuffle only (band,key,id)) → self-join per band key →
-    * distinct candidate pairs → exact Jaccard verification on just the
-    * candidates (semi-joined shingle arrays, intersect/union in-memory
-    * per pair via array functions — no postings blow-up).
+    * Pipeline: shingle → signature (narrow) → band postings (shuffle
+    * only (band, key, id)) → [[Blocks.pairs]] per band key → distinct
+    * candidate pairs → [[Blocks.verify]], exact Jaccard on just the
+    * candidates. The shingle arrays are persisted: candidate generation
+    * and both sides of the verify read them (recomputing the shingle +
+    * signature pipeline 4× dominated the un-cached runtime).
     */
   def minhashLshPairs(docs: DataFrame, textCol: String, idCol: String,
                       n: Int = 3, k: Int = 64, bands: Int = 16,
                       minJaccard: Double = 0.5): DataFrame = {
-    // persist the shingle arrays: reused by candidate generation and by
-    // both sides of the verification join — recomputing the shingle +
-    // signature pipeline 4× dominated the un-cached runtime.
     val sh = docs.select(col(idCol).as("id"), shingles(col(textCol), n).as("sh"))
       .filter(size(col("sh")) > 0)
       .persist()
-    // native codegen signature (MinHashSigExpr); the HOF formulation
-    // minhashSignature(shingleHashes(sh), k) is its executable spec
-    val sig = sh.select(col("id"),
-      graft.functions.expr.TextExprs.minhash_sig(col("sh"), k).as("sig"))
-    val posts = sig
-      .select(col("id"), explode(lshBands(col("sig"), k, bands)).as("bk"))
-      .select(col("id"), col("bk.band").as("band"), col("bk.key").as("key"))
-      .persist()
-    val cand = posts.as("a").join(posts.as("b"),
-        col("a.band") === col("b.band") && col("a.key") === col("b.key") &&
-          col("a.id") < col("b.id"))
-      .select(col("a.id").as("id1"), col("b.id").as("id2"))
+    val posts = lshPosts(sh, "id", k, bands).persist()
+    val cand = Blocks.pairs(posts, Seq("band", "key"), "id")
+      .select(col("a_id").as("id1"), col("b_id").as("id2"))
       .distinct()
-    // exact verification on candidates only, on the HASHED shingle
-    // sets: per doc one sorted distinct md5-64 array (hash_set — set
-    // arithmetic identical to the string sets, see HashSetExpr), so
-    //  (a) the pair exchange moves 16-byte (id1,id2) rows and the
-    //      heavy arrays attach AFTER it from a broadcast of the ~|docs|
-    //      hash table — heavy bytes never ride the pair shuffle
-    //      (previously both string-array sides were hydrated BEFORE
-    //      the repartition: ~|cand|·2·|sh| strings through the wire);
-    //  (b) the per-pair intersect is one primitive merge
-    //      (sorted_intersect_count) instead of a UTF8 hash table.
-    // The verify is COMPUTE-dense (a near-dup-rich corpus yields ~50×
-    // more candidates than survivors) — cost byte-based partition
-    // sizing cannot see, so spread the pairs to cores right beneath
-    // the verify (the wedge-bag convention, Wedge.wedgePar); results
-    // are partition-independent.
-    // no broadcast hint: the corpus side is broadcast-sized only at
-    // gate scale (AQE picks BHJ there by itself); at 100 TB these are
-    // sort-merge joins whose exchanges now carry 8-byte hashes
-    val shh = sh.select(col("id"),
-      graft.functions.expr.TextExprs.hash_set(col("sh")).as("shh"))
-    val withSh = cand
-      .repartition(Wedge.wedgePar(docs))
-      .join(shh.select(col("id").as("id1"), col("shh").as("sh1")), "id1")
-      .join(shh.select(col("id").as("id2"), col("shh").as("sh2")), "id2")
-    // eager checkpoint + unpersist, the [[fuzzyJoin]] hygiene: the
-    // persisted frames exist for THIS computation's reuse, not the
-    // session's lifetime — repeated calls (the streaming near-dup fold
-    // calls this every micro-batch) would otherwise accumulate cached
-    // blocks until the block manager evicts working-set data
-    val out = withSh
-      .withColumn("inter", graft.functions.expr.TextExprs
-        .sorted_intersect_count(col("sh1"), col("sh2")))
-      .withColumn("jaccard", round(col("inter").cast("double") /
-        (size(col("sh1")) + size(col("sh2")) - col("inter")), 4))
-      .filter(col("jaccard") >= minJaccard)
-      .select("id1", "id2", "jaccard")
-      .localCheckpoint(true)
-    sh.unpersist()
-    posts.unpersist()
-    out
+    Blocks.released(sh, posts)(
+      Blocks.verify(cand, sh, sh, "jaccard", minJaccard)(Blocks.jaccard))
   }
 
   // ------------------------------------------------------- embedding cosine
@@ -458,9 +355,8 @@ object Dedup {
     val sig = vecs.select(col(idCol).as("id"),
       Similarity.randomHyperplaneLsh(col(vecCol), m).as("bucket"))
     // one bucket per vector → a pair can match at most once → no dedup
-    val cand = sig.as("a").join(sig.as("b"),
-        col("a.bucket") === col("b.bucket") && col("a.id") < col("b.id"))
-      .select(col("a.id").as("id1"), col("b.id").as("id2"))
+    val cand = Blocks.pairs(sig, Seq("bucket"), "id")
+      .select(col("a_id").as("id1"), col("b_id").as("id2"))
     val v = vecs.select(col(idCol).as("id"), col(vecCol).as("v"))
     cand
       .join(v.select(col("id").as("id1"), col("v").as("v1")), "id1")
@@ -617,28 +513,20 @@ object Dedup {
     * [[graft.operators.Multimodal.imageDHash]] /
     * [[graft.operators.Multimodal.imagePHash]] (perceptual image
     * near-dup), and [[graft.operators.Multimodal.audioDHash]] (audio).
-    * Postings shuffle (chunk, key, id, hash) — `chunks` narrow rows
-    * per item — and the self-join touches only same-chunk-key buckets;
-    * at corpus scale that is the whole trick.
+    * Postings are (chunk, key, id, hash), `chunks` narrow rows per item
+    * ([[Blocks.chunks]]); the pair join touches only same-chunk-key
+    * buckets, and a pair sharing several chunks is counted once.
     * @param hashed two-column DataFrame: (id, hash) — bound
     *               POSITIONALLY, any column names. */
   def hammingBandPairs(hashed: DataFrame, maxDist: Int): DataFrame = {
-    val (chunks, width) = pigeonholeChunks(maxDist)
     require(hashed.columns.length == 2,
       s"need an (id, hash) frame, got ${hashed.columns.mkString(", ")}")
     val posts = hashed.select(col(hashed.columns(0)).as("id"),
         col(hashed.columns(1)).as("sh"))
-      .select(col("id"), col("sh"),
-        explode(transform(sequence(lit(0), lit(chunks - 1)),
-          c => struct(c.as("chunk"),
-            call_function("shiftrightunsigned", col("sh"), c * width)
-              .bitwiseAND(lit((1L << width) - 1)).as("key")))).as("ck"))
-      .select(col("id"), col("sh"), col("ck.chunk").as("chunk"), col("ck.key").as("key"))
-    posts.as("a").join(posts.as("b"),
-        col("a.chunk") === col("b.chunk") && col("a.key") === col("b.key") &&
-          col("a.id") < col("b.id"))
-      .select(col("a.id").as("id1"), col("b.id").as("id2"),
-        hamming64(col("a.sh"), col("b.sh")).as("dist"))
+      .select(col("id"), col("sh"), Blocks.chunks(col("sh"), maxDist))
+    Blocks.pairs(posts, Seq("chunk", "key"), "id", Seq("sh"))
+      .select(col("a_id").as("id1"), col("b_id").as("id2"),
+        hamming64(col("a_sh"), col("b_sh")).as("dist"))
       .distinct()
       .filter(col("dist") <= maxDist)
   }
@@ -647,36 +535,26 @@ object Dedup {
     * hash) sequences — the video face of [[hammingBandPairs]]: two
     * clips pair when at least `minMatchFrac` of their aligned frames
     * (same frame_no, the shared sampling cadence) land within
-    * `maxDist`. The band join adds frame_no to the pigeonhole chunk
-    * key, so candidates stay per-frame-bucketed (a clip with a million
-    * frames costs its frames, never frames²); per-pair agreement is
-    * one keyed aggregation.
+    * `maxDist`. frame_no joins the pigeonhole chunk key, so candidates
+    * stay per-frame-bucketed (a clip with a million frames costs its
+    * frames, never frames²); per-pair agreement is one keyed
+    * aggregation.
     * @param frameHashes DataFrame (id, frame_no, sh).
     * @return (id1, id2, matched, frac) — frac = matched aligned frames
     *         over the shorter clip's frame count, 4 decimals. */
   def frameHammingPairs(frameHashes: DataFrame, maxDist: Int,
                         minMatchFrac: Double): DataFrame = {
-    val (chunks, width) = pigeonholeChunks(maxDist)
     val src = frameHashes.select(col(frameHashes.columns(0)).as("id"),
       col(frameHashes.columns(1)).as("frame_no"),
       col(frameHashes.columns(2)).as("sh"))
     val counts = src.groupBy(col("id")).agg(count(lit(1)).as("nf"))
     val posts = src.select(col("id"), col("frame_no"), col("sh"),
-        explode(transform(sequence(lit(0), lit(chunks - 1)),
-          c => struct(c.as("chunk"),
-            call_function("shiftrightunsigned", col("sh"), c * width)
-              .bitwiseAND(lit((1L << width) - 1)).as("key")))).as("ck"))
-      .select(col("id"), col("frame_no"), col("sh"),
-        col("ck.chunk").as("chunk"), col("ck.key").as("key"))
-    val frameMatches = posts.as("a").join(posts.as("b"),
-        col("a.frame_no") === col("b.frame_no") &&
-          col("a.chunk") === col("b.chunk") && col("a.key") === col("b.key") &&
-          col("a.id") < col("b.id"))
-      .filter(bit_count(col("a.sh").bitwiseXOR(col("b.sh"))) <= maxDist)
-      .select(col("a.id").as("id1"), col("b.id").as("id2"),
-        col("a.frame_no").as("frame_no"))
+      Blocks.chunks(col("sh"), maxDist))
+    Blocks.pairs(posts, Seq("frame_no", "chunk", "key"), "id", Seq("sh"))
+      .filter(hamming64(col("a_sh"), col("b_sh")) <= maxDist)
+      .select(col("a_id").as("id1"), col("b_id").as("id2"),
+        col("a_frame_no").as("frame_no"))
       .distinct()
-    frameMatches
       .groupBy(col("id1"), col("id2"))
       .agg(count(lit(1)).as("matched"))
       .join(counts.select(col("id").as("id1"), col("nf").as("n1")), "id1")

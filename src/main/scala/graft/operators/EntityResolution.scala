@@ -17,52 +17,12 @@ import org.apache.spark.sql.functions._
   * agreement is null-safe equality, so every score is an exact
   * integer sum — full-SQL-oracle-able.
   *
-  * 100 TB shape: ONE equi-join on the blocking key (block sizes are a
-  * design choice — the cost is Σ|block|², not |records|²) + a codegen
-  * CASE-sum projection. Skewed blocks get the same medicine as hub
-  * vertices: tighten the key or cap per-block membership
+  * 100 TB shape: one [[Blocks.pairs]] join on the blocking key + a
+  * codegen CASE-sum projection. Skewed blocks get the same medicine as
+  * hub vertices: tighten the key or cap per-block membership
   * (the [[Wedge.sample]] convention).
   */
 object EntityResolution {
-
-  /** Self-dedup linkage: score all intra-block pairs (id1 < id2) of
-    * one record frame.
-    *
-    * @param comparisons (fieldCol, agreeMicros, disagreeMicros) per
-    *                    compared field; agreement is null-safe `<=>`.
-    * @param threshold   minimal total score to keep a pair.
-    * @return (id1, id2, score_micros) for linked pairs, ordered.
-    */
-  /** [[scorePairs]] with caller-supplied agreement PREDICATES — fuzzy
-    * linkage: a field agrees when the predicate over the pair's two
-    * values holds (NULL → disagree). The canonical use is
-    * Jaro–Winkler name matching
-    * (`(a, b) => round(jaro_winkler(a, b), 4) >= 0.9` — quantized
-    * BEFORE the threshold so the decision replays cross-engine),
-    * which links the typo'd duplicates exact equality misses.
-    * Same blocked one-equi-join shape as [[scorePairs]].
-    */
-  def scorePairsFuzzy(records: DataFrame, idCol: String, blockCol: String,
-                      comparisons: Seq[(String,
-                        (org.apache.spark.sql.Column,
-                         org.apache.spark.sql.Column) =>
-                          org.apache.spark.sql.Column, Long, Long)],
-                      threshold: Long): DataFrame = {
-    require(comparisons.nonEmpty, "at least one field comparison")
-    val fields = (Seq(idCol, blockCol) ++ comparisons.map(_._1)).distinct
-    val a = records.select(fields.map(c => col(c).as(s"a_$c")): _*)
-    val b = records.select(fields.map(c => col(c).as(s"b_$c")): _*)
-    val score = comparisons.map { case (f, pred, wa, wd) =>
-      when(coalesce(pred(col(s"a_$f"), col(s"b_$f")), lit(false)),
-        lit(wa)).otherwise(lit(wd))
-    }.reduce(_ + _)
-    a.join(b, col(s"a_$blockCol") === col(s"b_$blockCol") &&
-        col(s"a_$idCol") < col(s"b_$idCol"))
-      .select(col(s"a_$idCol").as("id1"), col(s"b_$idCol").as("id2"),
-        score.as("score_micros"))
-      .filter(col("score_micros") >= threshold)
-      .orderBy("id1", "id2")
-  }
 
   /** Golden-record selection — the survivorship step that closes the
     * linkage loop (match → cluster → merge): linked pairs become
@@ -94,31 +54,63 @@ object EntityResolution {
       .orderBy("cluster")
   }
 
+  /** Self-dedup linkage: score all intra-block pairs (id1 < id2) of
+    * one record frame.
+    *
+    * Static blocking refinement (Fellegi–Sunter weight arithmetic): a
+    * field whose DISAGREEMENT caps the total score below the threshold
+    * (wd_f + Σ_{g≠f} wa_g < threshold) must agree in every kept pair,
+    * so its null-safe equality joins the equi-key — the result set is
+    * provably unchanged while Σ|block|² collapses to
+    * Σ|block ∧ field|² (on the customer ER gates: nation-sized blocks
+    * → near-singleton (nation, acctbal) blocks, 18M → ~30k pairs).
+    *
+    * @param comparisons (fieldCol, agreeMicros, disagreeMicros) per
+    *                    compared field; agreement is null-safe `<=>`.
+    * @param threshold   minimal total score to keep a pair.
+    * @return (id1, id2, score_micros) for linked pairs, ordered.
+    */
   def scorePairs(records: DataFrame, idCol: String, blockCol: String,
                  comparisons: Seq[(String, Long, Long)],
                  threshold: Long): DataFrame = {
-    require(comparisons.nonEmpty, "at least one field comparison")
-    val fields = Seq(idCol, blockCol) ++ comparisons.map(_._1)
-    val a = records.select(fields.map(c => col(c).as(s"a_$c")): _*)
-    val b = records.select(fields.map(c => col(c).as(s"b_$c")): _*)
-    val score = comparisons.map { case (f, wa, wd) =>
-      when(col(s"a_$f") <=> col(s"b_$f"), lit(wa)).otherwise(lit(wd))
-    }.reduce(_ + _)
-    // Static blocking refinement (Fellegi–Sunter weight arithmetic):
-    // a field whose DISAGREEMENT caps the total score below the
-    // threshold (wd_f + Σ_{g≠f} wa_g < threshold) must agree in every
-    // kept pair, so its null-safe equality joins the equi-key — the
-    // result set is provably unchanged while Σ|block|² collapses to
-    // Σ|block ∧ field|² (on the customer ER gates: nation-sized blocks
-    // → near-singleton (nation, acctbal) blocks, 18M → ~30k pairs).
     val totalAgree = comparisons.map(_._2).sum
     val necessary = comparisons.collect {
       case (f, wa, wd) if totalAgree - wa + wd < threshold => f
     }
-    val blockKey = (col(s"a_$blockCol") === col(s"b_$blockCol")) +:
-      necessary.map(f => col(s"a_$f") <=> col(s"b_$f"))
-    a.join(b, blockKey.reduce(_ && _) &&
-        col(s"a_$idCol") < col(s"b_$idCol"))
+    linked(records, idCol, blockCol, comparisons.map { case (f, wa, wd) =>
+        (f, (a: Column, b: Column) => a <=> b, wa, wd) }, threshold,
+      necessary.map(f => col(s"a_$f") <=> col(s"b_$f")).foldLeft(lit(true))(_ && _))
+  }
+
+  /** [[scorePairs]] with caller-supplied agreement PREDICATES — fuzzy
+    * linkage: a field agrees when the predicate over the pair's two
+    * values holds (NULL → disagree). The canonical use is
+    * Jaro–Winkler name matching
+    * (`(a, b) => round(jaro_winkler(a, b), 4) >= 0.9` — quantized
+    * BEFORE the threshold so the decision replays cross-engine),
+    * which links the typo'd duplicates exact equality misses.
+    */
+  def scorePairsFuzzy(records: DataFrame, idCol: String, blockCol: String,
+                      comparisons: Seq[(String, (Column, Column) => Column,
+                        Long, Long)],
+                      threshold: Long): DataFrame =
+    linked(records, idCol, blockCol, comparisons.map { case (f, pred, wa, wd) =>
+      (f, (a: Column, b: Column) => coalesce(pred(a, b), lit(false)), wa, wd) },
+      threshold, lit(true))
+
+  /** The blocked pairs of `records` ([[Blocks.pairs]] on `blockCol`,
+    * also agreeing on `on`) whose Fellegi–Sunter sum — per comparison
+    * `agreeMicros` where its predicate holds, else `disagreeMicros` —
+    * reaches `threshold`: (id1, id2, score_micros), ordered. */
+  private def linked(records: DataFrame, idCol: String, blockCol: String,
+                     comparisons: Seq[(String, (Column, Column) => Column,
+                       Long, Long)],
+                     threshold: Long, on: Column): DataFrame = {
+    require(comparisons.nonEmpty, "at least one field comparison")
+    val score = comparisons.map { case (f, agree, wa, wd) =>
+      when(agree(col(s"a_$f"), col(s"b_$f")), lit(wa)).otherwise(lit(wd))
+    }.reduce(_ + _)
+    Blocks.pairs(records, Seq(blockCol), idCol, comparisons.map(_._1), on)
       .select(col(s"a_$idCol").as("id1"), col(s"b_$idCol").as("id2"),
         score.as("score_micros"))
       .filter(col("score_micros") >= threshold)
@@ -131,23 +123,17 @@ object EntityResolution {
     * OCR confusions are character-level substitutions, and `lev ≤ d`
     * is the classic typo-tolerance contract (`lev ≤ 1` catches one
     * flipped character, the exact failure that forks a person on
-    * md5(email) keys). Same blocked one-equi-join shape as
-    * [[scorePairs]] — a `lev ≤ d` pair on length-L strings shares all
+    * md5(email) keys). A `lev ≤ d` pair on length-L strings shares all
     * but ≤ d characters, so any substring-based block key longer than
-    * d positions from the end is (near-)complete; the candidate space
-    * is Σ block² not n².
+    * d positions from the end is (near-)complete.
     *
     * @return (id1, id2, dist) with id1 < id2 and dist ≤ maxDist,
     *         ordered.
     */
   def editDistancePairs(records: DataFrame, idCol: String,
                         blockCol: String, strCol: String,
-                        maxDist: Int): DataFrame = {
-    val fields = Seq(idCol, blockCol, strCol).distinct
-    val a = records.select(fields.map(c => col(c).as(s"a_$c")): _*)
-    val b = records.select(fields.map(c => col(c).as(s"b_$c")): _*)
-    a.join(b, col(s"a_$blockCol") === col(s"b_$blockCol") &&
-        col(s"a_$idCol") < col(s"b_$idCol"))
+                        maxDist: Int): DataFrame =
+    Blocks.pairs(records, Seq(blockCol), idCol, Seq(strCol))
       // length pre-filter: |len(a)−len(b)| > d implies lev > d —
       // skips the O(L²) DP on hopeless pairs
       .filter(abs(length(col(s"a_$strCol")) - length(col(s"b_$strCol")))
@@ -157,7 +143,6 @@ object EntityResolution {
           .as("dist"))
       .filter(col("dist") <= maxDist)
       .orderBy("id1", "id2")
-  }
 
   /** Blocking-quality report (Christen 2012's reduction ratio + pair
     * completeness) — the metrics that decide whether a blocking key is

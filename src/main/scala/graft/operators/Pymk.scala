@@ -391,8 +391,8 @@ object Pymk {
     * each similarity is ONE fixed IEEE expression floored to micros;
     * top-k ranks the QUANTIZED score with the item id as tiebreak.
     *
-    * 100 TB shape: distinct (user, item) projection, a user-keyed
-    * self-join for pairs whose cost is Σᵤ deg(u)² — bounded by
+    * 100 TB shape: distinct (user, item) projection, user-blocked
+    * [[Blocks.pairs]] whose cost is Σᵤ deg(u)² — bounded by
     * `userCap` (power users above the cap are dropped ENTIRELY, the
     * standard co-occurrence guard: their pairs are the quadratic
     * blowup and carry the least signal), two item-keyed degree
@@ -410,10 +410,9 @@ object Pymk {
         count(lit(1)).over(org.apache.spark.sql.expressions.Window
           .partitionBy("u")))
       .filter(col("_udeg") <= userCap).drop("_udeg")
-    val pairs = kept.select(col("u"), col("item").as("i"))
-      .join(kept.select(col("u"), col("item").as("j")), "u")
-      .filter(col("i") < col("j"))
-      .groupBy("i", "j").agg(count(lit(1)).as("co"))
+    val pairs = Blocks.pairs(kept, Seq("u"), "item")
+      .groupBy(col("a_item").as("i"), col("b_item").as("j"))
+      .agg(count(lit(1)).as("co"))
     val deg = kept.groupBy(col("item")).agg(count(lit(1)).as("d"))
     val sym = pairs.unionAll(
       pairs.select(col("j").as("i"), col("i").as("j"), col("co")))

@@ -619,11 +619,10 @@ object Similarity {
     * each cluster drop every point that has a near-identical neighbor
     * (cosine ≥ `threshold`) with a SMALLER id — the canonical survivor
     * of a duplicate family is its lowest id, matching the exact-dedup
-    * convention. The pairwise pass is confined to clusters — the whole
-    * point of clustering first: candidate pairs are |cluster|² per
-    * cell, not |corpus|², and the per-cluster self-join is one keyed
-    * shuffle on the cluster id (salt any mega-cluster before the join
-    * if a corpus degenerates into one cell).
+    * convention. The pairwise pass is [[Blocks.pairs]] with the cluster
+    * as the block key — the whole point of clustering first: candidate
+    * pairs are |cluster|² per cell, not |corpus|² (salt any
+    * mega-cluster if a corpus degenerates into one cell).
     *
     * @return (survivors (id, cluster), centroids (cid, cvec)) — the
     *         centroid table is [[ivfTopK]]-ready, so the same fit that
@@ -637,10 +636,9 @@ object Similarity {
     val withVec = points
       .select(col(idCol).as("id"), col(vecCol).as("vec"))
       .join(assigned.select(col("id"), col("cluster")), "id")
-    val dropped = withVec.alias("a").join(withVec.alias("b"),
-        col("a.cluster") === col("b.cluster") && col("a.id") < col("b.id"))
-      .filter(round(cosine(col("a.vec"), col("b.vec")), 4) >= threshold)
-      .select(col("b.id").as("id"))
+    val dropped = Blocks.pairs(withVec, Seq("cluster"), "id", Seq("vec"))
+      .filter(round(cosine(col("a_vec"), col("b_vec")), 4) >= threshold)
+      .select(col("b_id").as("id"))
       .distinct()
     val survivors = withVec.select(col("id"), col("cluster"))
       .join(dropped, Seq("id"), "left_anti")
@@ -795,12 +793,9 @@ object Similarity {
     val r = recs.select(col(qidCol).as("qid"), col(idCol).as("id"))
       .join(emb.select(col(embIdCol).as("id"), col(vecCol).as("v")), "id")
       .localCheckpoint(true) // both sides of the k-bounded pair join
-    r.select(col("qid"), col("id").as("id1"), col("v").as("v1"))
-      .join(r.select(col("qid"), col("id").as("id2"), col("v").as("v2")),
-        "qid")
-      .filter(col("id1") < col("id2"))
-      .select(col("qid"),
-        round(lit(1e6) * (lit(1.0) - round(cosine(col("v1"), col("v2")), 4)))
+    Blocks.pairs(r, Seq("qid"), "id", Seq("v"))
+      .select(col("a_qid").as("qid"),
+        round(lit(1e6) * (lit(1.0) - round(cosine(col("a_v"), col("b_v")), 4)))
           .cast("long").as("d"))
       .groupBy(col("qid"))
       .agg(count(lit(1)).as("n_pairs"),

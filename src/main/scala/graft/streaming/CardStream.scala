@@ -1,13 +1,13 @@
 package graft.streaming
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
 import graft.model.{ImageStatus, Schemas}
-import graft.operators.{GraphBuild, Parse}
+import graft.operators.{Blocks, GraphBuild, Parse}
 
 /** Structured Streaming shell of the ingest pipeline (SURVEY §3.1).
   *
@@ -756,14 +756,10 @@ object CardStream {
                 .as("bucket"))))
         .otherwise(array().cast(bkType)))
       .observe(postObs,
-        flatten(collect_set(transform(col("bks"),
-          b => b.getField("bucket")))).as("pbks"))
+        bucketWords(col("bks.bucket"), storeBuckets).as("pbks"))
       .localCheckpoint(true)
     // every driver-side bucket set below is ≤ storeBuckets longs
-    // (flatten-of-set-of-arrays can repeat a bucket across distinct
-    // arrays — dedup driver-side)
-    val postBuckets = postObs.get("pbks").asInstanceOf[Seq[Long]]
-      .distinct.sorted
+    val postBuckets = bucketsIn(postObs.get("pbks"))
     val posts = base
       .select(col(idCol).as("id"), explode(col("bks")).as("bk"))
       .select(col("id"), col("bk.band").as("band"), col("bk.key").as("key"),
@@ -778,10 +774,8 @@ object CardStream {
     // already-accepted doc). Testing in-batch-dropped docs against
     // history too is harmless: their drop is already decided, and the
     // final drop set is the union either way.
-    val inCand = posts.as("a").join(posts.as("b"),
-        col("a.band") === col("b.band") && col("a.key") === col("b.key") &&
-          col("b.id") < col("a.id"))
-      .select(col("a.id").as("id"), col("b.id").as("_oid"),
+    val inCand = Blocks.pairs(posts, Seq("band", "key"), "id")
+      .select(col("b_id").as("id"), col("a_id").as("_oid"),
         lit(true).as("_inbatch")).distinct()
     val histCand = posts.join(storedPosts, Seq("band", "key"))
       .select(col("id"), col("_oid"), lit(false).as("_inbatch")).distinct()
@@ -821,13 +815,11 @@ object CardStream {
         base(idCol) === col("_drop"), "left_anti")
       .observe(survObs, collect_set(col("bucket")).as("ibks"),
         count(lit(1)).as("n"),
-        flatten(collect_set(transform(col("bks"),
-          b => b.getField("bucket")))).as("pbks"))
+        bucketWords(col("bks.bucket"), storeBuckets).as("pbks"))
       .localCheckpoint(true) // reused: posting probe, data append
     val idBuckets = survObs.get("ibks").asInstanceOf[Seq[Long]].sorted
     val nSurvivors = survObs.get("n").asInstanceOf[Long]
-    val survPostBuckets = survObs.get("pbks").asInstanceOf[Seq[Long]]
-      .distinct.sorted
+    val survPostBuckets = bucketsIn(survObs.get("pbks"))
     // the surviving postings re-derive from the survivors' own arrays
     // — no posts ⋈ survivors join
     val newPosts = survivors
@@ -850,6 +842,26 @@ object CardStream {
       buckets = storeBuckets.toLong)
     nSurvivors
   }
+
+  /** The distinct values of an array<bigint> column over all rows
+    * (each in [0, storeBuckets)), as one aggregate of
+    * ⌈storeBuckets/64⌉ `bit_or` words: bit b of word w is bucket
+    * 64·w + b. An Observation of it ships storeBuckets bits to the
+    * driver whatever the batch size (a set of per-row arrays ships
+    * rows × bands longs); [[bucketsIn]] decodes it. */
+  private[graft] def bucketWords(buckets: Column, storeBuckets: Int): Column =
+    array((0 until (storeBuckets + 63) / 64).map(w => bit_or(aggregate(buckets,
+      lit(0L), (acc, b) => acc.bitwiseOR(when(shiftright(b, 6) === w,
+        call_function("shiftleft", lit(1L), b.bitwiseAND(63).cast("int")))
+        .otherwise(lit(0L)))))): _*)
+
+  /** The sorted buckets of a [[bucketWords]] value (null words, from
+    * no rows, are empty). */
+  private[graft] def bucketsIn(words: Any): Seq[Long] =
+    words.asInstanceOf[scala.collection.Seq[Any]].toSeq.zipWithIndex.flatMap {
+      case (w: Long, i) => (0 until 64).filter(b => (w >>> b & 1L) == 1L).map(64L * i + _)
+      case _ => Nil
+    }
 
   /** The accepted corpus of a [[nearDupSuppress]] store (the `data`
     * table in the caller's schema; store bucket column stripped). */
@@ -953,15 +965,8 @@ object CardStream {
     // pigeonhole chunk — 4×16-bit for maxDist ≤ 3, 8×8-bit beyond;
     // the store's chunking follows the suppressor's maxDist, so a
     // store must keep one maxDist for its lifetime)
-    val (nChunks, width) = Dedup.pigeonholeChunks(maxDist)
     def chunkPosts(df: DataFrame): DataFrame = df
-      .select(col("id"), col("sh"),
-        explode(transform(sequence(lit(0), lit(nChunks - 1)),
-          c => struct(c.as("chunk"),
-            call_function("shiftrightunsigned", col("sh"), c * width)
-              .bitwiseAND(lit((1L << width) - 1)).as("key")))).as("ck"))
-      .select(col("id"), col("sh"),
-        col("ck.chunk").as("chunk"), col("ck.key").as("key"))
+      .select(col("id"), col("sh"), Blocks.chunks(col("sh"), maxDist))
       .withColumn("bucket",
         pmod(xxhash64(col("chunk"), col("key")), lit(StoreBuckets.toLong)))
     // posting-bucket set rides the checkpoint job as an observed

@@ -806,6 +806,27 @@ class EventsDriftSpec extends AnyFunSuite with SparkSpec {
     assert(got.toSeq == Seq((1L, 2L, 3000000L), (4L, 5L, 3000000L)))
   }
 
+  test("entity resolution: a comparison on the block or id column is carried once") {
+    import graft.operators.EntityResolution
+    val recs = Seq((1L, "b1", "ann"), (2L, "b1", "ann"), (3L, "b1", "bo"),
+      (4L, "b2", "ann")).toDF("id", "blk", "name")
+    // the block field always agrees inside a block (+5); the id never
+    // does (-1): 1-2 score 5 + 5 - 1, 1-3 and 2-3 score 5 - 5 - 1
+    val got = EntityResolution.scorePairs(recs, "id", "blk",
+        Seq(("blk", 5L, -5L), ("name", 5L, -5L), ("id", 2L, -1L)), -1L)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+    assert(got.toSeq == Seq((1L, 2L, 9L), (1L, 3L, -1L), (2L, 3L, -1L)))
+    // with the threshold above the block field's disagreement, the
+    // block field is necessary and joins the key (the refined plan)
+    assert(EntityResolution.scorePairs(recs, "id", "blk",
+        Seq(("blk", 5L, -5L), ("name", 5L, -5L)), 10L)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq == Seq((1L, 2L)))
+    val fuzzy = EntityResolution.scorePairsFuzzy(recs, "id", "blk",
+        Seq(("blk", (a: org.apache.spark.sql.Column,
+          b: org.apache.spark.sql.Column) => a === b, 5L, -5L)), 5L)
+    assert(fuzzy.count() == 3L)
+  }
+
   test("scorePairs necessary-field blocking equals the block-only scan") {
     import graft.operators.EntityResolution
     val rnd = new scala.util.Random(23)

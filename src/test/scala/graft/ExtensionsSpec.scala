@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{AnalysisException, SparkSession}
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The config-driven extension packaging must give a PLAIN SQL session
@@ -10,10 +11,11 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class ExtensionsSpec extends AnyFunSuite {
 
-  test("spark.sql.extensions=graft.GraftExtensions resolves the native functions in SQL") {
-    // other suites share a default session WITHOUT the extension —
-    // getOrCreate would return it and bypass extension injection. Park
-    // the default, build an isolated session, restore afterwards.
+  /** Runs `body` on a session built with the extension. Other suites
+    * share a default session WITHOUT the extension — getOrCreate would
+    * return it and bypass extension injection. Park the default, build
+    * an isolated session, restore afterwards. */
+  private def withExtensions(body: SparkSession => Unit): Unit = {
     val prior = SparkSession.getDefaultSession
     SparkSession.clearDefaultSession()
     SparkSession.clearActiveSession()
@@ -24,7 +26,18 @@ class ExtensionsSpec extends AnyFunSuite {
       .config("spark.ui.enabled", "false")
       .config("spark.sql.shuffle.partitions", "2")
       .getOrCreate()
-    try {
+    try body(spark)
+    finally {
+      // do NOT spark.stop(): the SparkContext is shared process-wide
+      // with the other suites' session — just restore the default
+      SparkSession.clearActiveSession()
+      SparkSession.clearDefaultSession()
+      prior.foreach(SparkSession.setDefaultSession)
+    }
+  }
+
+  test("spark.sql.extensions=graft.GraftExtensions resolves the native functions in SQL") {
+    withExtensions { spark =>
       val r = spark.sql(
         """SELECT token_count('a b  c') AS t,
           |       subword_count('don''t-stop_2024') AS s,
@@ -48,7 +61,6 @@ class ExtensionsSpec extends AnyFunSuite {
       assert(spark.sql(
           "SELECT top_ngram_frac('a b a b a', CAST(2 AS BIGINT)) AS f")
         .collect().head.getDouble(0) == 0.5)
-      import org.apache.spark.sql.AnalysisException
       val nonFoldable = intercept[AnalysisException] {
         spark.sql("SELECT top_ngram_frac(x, token_count(x)) FROM VALUES ('a') t(x)")
       }
@@ -61,12 +73,35 @@ class ExtensionsSpec extends AnyFunSuite {
         spark.sql("SELECT top_ngram_frac('a b')")
       }
       assert(arity.getCondition == "WRONG_NUM_ARGS.WITHOUT_SUGGESTION")
-    } finally {
-      // do NOT spark.stop(): the SparkContext is shared process-wide
-      // with the other suites' session — just restore the default
-      SparkSession.clearActiveSession()
-      SparkSession.clearDefaultSession()
-      prior.foreach(SparkSession.setDefaultSession)
+    }
+  }
+
+  test("the one-argument functions reject a wrong argument count at analysis") {
+    withExtensions { spark =>
+      // no argument is not an empty-list crash, a second one is not dropped
+      for (q <- Seq("SELECT token_count()", "SELECT simhash64('a', 'b')",
+          "SELECT rolling_hash('a', 'b')", "SELECT subword_count()")) {
+        val e = intercept[AnalysisException](spark.sql(q).collect())
+        assert(e.getCondition == "WRONG_NUM_ARGS.WITHOUT_SUGGESTION", q)
+      }
+    }
+  }
+
+  test("TextExprs.register installs the same functions, top_ngram_frac included") {
+    withExtensions { spark =>
+      // a session whose registry lacks the functions
+      val plain = spark.newSession()
+      for (name <- Seq("token_count", "subword_count", "rolling_hash",
+          "simhash64", "top_ngram_frac"))
+        plain.sessionState.functionRegistry.dropFunction(FunctionIdentifier(name))
+      intercept[AnalysisException](plain.sql("SELECT top_ngram_frac('a b a b a', 2)"))
+      graft.functions.expr.TextExprs.register(plain)
+      val r = plain.sql("""SELECT top_ngram_frac('a b a b a', 2) AS f,
+          |       token_count('a b  c') AS t, subword_count('x-y') AS s""".stripMargin)
+        .collect().head
+      assert(r.getDouble(0) == 0.5 && r.getInt(1) == 3 && r.getInt(2) == 2)
+      val e = intercept[AnalysisException](plain.sql("SELECT token_count('a', 'b')"))
+      assert(e.getCondition == "WRONG_NUM_ARGS.WITHOUT_SUGGESTION")
     }
   }
 }

@@ -371,6 +371,30 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
     assert(CardStream.nearDupSurvivors(spark, dir).count() == 41)
   }
 
+  test("near-dup bucket words: the distinct bucket set in <= storeBuckets entries, not rows x bands") {
+    val rnd = new scala.util.Random(11)
+    for (storeBuckets <- Seq(64, 100)) {
+      // 2,000 docs x 16 bands, every bucket in [0, storeBuckets)
+      val rows = Seq.fill(2000)(Seq.fill(16)(rnd.nextInt(storeBuckets).toLong))
+      val bks = rows.toDF("b").select(
+        transform(col("b"), x => struct(x.as("bucket"))).as("bks"))
+      val words = bks.agg(CardStream.bucketWords(col("bks.bucket"), storeBuckets))
+        .head().get(0)
+      val got = CardStream.bucketsIn(words)
+      assert(got == rows.flatten.distinct.sorted, s"storeBuckets $storeBuckets")
+      assert(got.size <= storeBuckets)
+      // an Observation of it ships the same words
+      val obs = org.apache.spark.sql.Observation()
+      bks.observe(obs, CardStream.bucketWords(col("bks.bucket"), storeBuckets)
+        .as("w")).count()
+      assert(CardStream.bucketsIn(obs.get("w")) == got)
+    }
+    // no rows: every word is null, the set is empty
+    val none = Seq.empty[Seq[Long]].toDF("bks")
+      .agg(CardStream.bucketWords(col("bks"), 64)).head().get(0)
+    assert(CardStream.bucketsIn(none).isEmpty)
+  }
+
   test("streaming image dedup: re-encoded/rescaled dups dropped, replay fenced, buckets incremental") {
     import graft.operators.Multimodal
     import graft.operators.Multimodal.{MediaMeta, MediaRecord}
